@@ -1,16 +1,16 @@
 package perfbench
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.platform.JobManager
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import scala.collection.mutable
 
-/** What a workload shares with the harness: the session, the broker, its
-  * slice of the config, the tracer, and the sample and check ledgers.
+/** What a workload shares with the harness: the session, the broker, the
+  * tracer, and the sample and check ledgers.
   */
 final class Ctx(val spark: SparkSession, val work: java.io.File, val seed: Long,
-    val seconds: Int, val cfg: JsonNode, val trace: Trace, val nproc: Int) {
+    val seconds: Int, val trace: Trace, val nproc: Int) {
 
   val json = new ObjectMapper()
   val broker = new Broker(nproc)
@@ -25,15 +25,6 @@ final class Ctx(val spark: SparkSession, val work: java.io.File, val seed: Long,
   def add(metric: String, v: Double): Unit =
     samples.getOrElseUpdate(metric, mutable.ArrayBuffer()) += v
 
-  def int(k: String): Int = cfg.get(k).asInt()
-  def dbl(k: String): Double = cfg.get(k).asDouble()
-  def dbls(k: String): Seq[Double] = {
-    val b = Seq.newBuilder[Double]; cfg.get(k).forEach(n => b += n.asDouble()); b.result()
-  }
-  def strs(k: String): Seq[String] = {
-    val b = Seq.newBuilder[String]; cfg.get(k).forEach(n => b += n.asText()); b.result()
-  }
-
   /** One operation: counts as attempted; a throw or a false check counts
     * as failed and is remembered for the report.
     */
@@ -46,32 +37,6 @@ final class Ctx(val spark: SparkSession, val work: java.io.File, val seed: Long,
         failures += s"$what: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}"
         None
     }
-  }
-
-  /** Runs a platform verb that can fail transiently, up to three times.
-    * Live and stop-time snapshots walk a checkpoint while the state store
-    * may still delete an aborted batch's temp files, and the engine's own
-    * auto-savepoint treats such a failure as retryable. Each retry is
-    * counted in the report's notes and listed in its failures; the third
-    * failure propagates. Returns the result and the wall time of the
-    * attempt that succeeded.
-    */
-  def retrying[A](what: String)(f: => A): (A, Double) = {
-    var t0 = 0L
-    var result: Option[A] = None
-    var tries = 0
-    while (result.isEmpty) {
-      tries += 1
-      t0 = System.nanoTime()
-      try result = Some(f)
-      catch {
-        case e: Exception if tries < 3 =>
-          notes(s"retries.$what") = notes.getOrElse(s"retries.$what", 0.0) + 1
-          failures += s"retried $what: ${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").take(200)
-      }
-    }
-    (result.get, (System.nanoTime() - t0) / 1e6)
   }
 
   def check(what: String, ok: Boolean, detail: => String = ""): Unit = {

@@ -52,7 +52,10 @@ final class Generator(topic: Broker.Topic, keys: ZipfKeys,
   private def emit(createdMs: Long): Unit = {
     val k = keys.next()
     perKey(k) += 1
-    topic.parts(Math.floorMod(k, nParts)).append(render(nextId, k, createdMs))
+    // round-robin over partitions, as a producer without record keys
+    // spreads them: placing by key would put the hottest keys' share on
+    // whichever partitions the seed happens to give them
+    topic.parts((nextId % nParts).toInt).append(render(nextId, k, createdMs))
     nextId += 1
   }
 

@@ -12,32 +12,47 @@ import scala.collection.mutable
   * → fixed-rate feed → drain → savepoint → stop-with-savepoint → a
   * backlog arrives while it is down → restart-from-savepoint → first
   * result → catch-up → stop, with `listTask` and `querySavePointList10`
-  * reads between cycles. Scripts rotate in a seeded order. The check: each cycle's compacted sink, after
-  * the stop, savepoint and restore, equals what an uninterrupted run
-  * computes from the same events — no loss, no duplicates.
+  * reads between cycles. Scripts rotate in a seeded order. The check:
+  * each cycle's compacted sink, after the stop, savepoint and restore,
+  * equals what an uninterrupted run computes from the same events — no
+  * loss, no duplicates.
   */
 object JobLifecycle {
+
+  val Partitions = 2
+  val Keys = 1000
+  val ZipfS = 1.0
+  val TriggerMs = 100
+  val PreloadRows = 1000
+  val FeedRatePerS = 2000.0
+  val FeedMs = 800L
+  /** Whole rounds of every script run until `--seconds` is up, and at
+    * least this many.
+    */
+  val MinRounds = 3
+  val Scripts = Seq("keyed_agg", "tumble", "lookup_join")
+  /** Percentiles the start tail may report, highest first that keeps ten
+    * starts beyond it.
+    */
+  val TailCandidates = Seq(99.0, 95, 90, 75, 50)
 
   final case class Event(id: Long, k: Int, createdMs: Long)
 
   def run(c: Ctx): Unit = {
-    val parts = math.min(c.int("partitions"), c.nproc)
-    val triggerMs = c.int("trigger_ms")
-    val keys = c.int("keys")
+    val parts = math.min(Partitions, c.nproc)
     val dbUrl = s"jdbc:derby:${c.dir("derby")}/platform;create=true"
     val dimUrl = s"jdbc:derby:${c.dir("derby")}/dim;create=true"
-    loadDim(dimUrl, keys)
+    loadDim(dimUrl, Keys)
     val registry = new CountingRegistry(new JdbcJobRegistry(dbUrl), c.trace)
     val jm = new TimedJobManager(c.spark, c.dir("ckpt"), c.dir("savepoints"),
       Some(registry), c.trace)
     val api = new HttpApi(jm, c.spark)
     val client = new Client(s"http://127.0.0.1:${api.port}/api", c)
     try {
-      val scripts = c.strs("scripts")
       def script(kind: String, in: String, out: String): String = kind match {
-        case "keyed_agg" => c.keyedAggScript(in, out, triggerMs)
+        case "keyed_agg" => c.keyedAggScript(in, out, TriggerMs)
         case "tumble" =>
-          s"""SET table.exec.mini-batch.allow-latency = $triggerMs ms;
+          s"""SET table.exec.mini-batch.allow-latency = $TriggerMs ms;
              |${c.kafkaSource("ev", in, ", ts TIMESTAMP(3), WATERMARK FOR ts AS ts - INTERVAL '1' SECOND")}
              |${c.upsertSink("per_window", out, "w BIGINT, k BIGINT, n BIGINT, last_ms BIGINT", "w, k")}
              |INSERT INTO per_window
@@ -46,7 +61,7 @@ object JobLifecycle {
              |FROM ev GROUP BY TUMBLE(ts, INTERVAL '1' SECOND), k;
              |""".stripMargin
         case "lookup_join" =>
-          s"""SET table.exec.mini-batch.allow-latency = $triggerMs ms;
+          s"""SET table.exec.mini-batch.allow-latency = $TriggerMs ms;
              |${c.kafkaSource("ev", in)}
              |CREATE TABLE dim (id BIGINT, label VARCHAR) WITH (
              |  'connector' = 'jdbc', 'url' = '$dimUrl', 'table-name' = 'lc_dim',
@@ -62,6 +77,9 @@ object JobLifecycle {
       var cycleNo = 0
       var rounds = 0
       val perScript = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]]()
+      // latency rows of every feed, per script: one feed spans only a few
+      // batches, so its own percentiles would swing with their timing
+      val latRows = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]]()
       def fresh(): (String, String, Broker.Topic, Broker.Sink) = {
         cycleNo += 1
         val (in, out) = (s"lc${cycleNo}_in", s"lc${cycleNo}_out")
@@ -70,10 +88,10 @@ object JobLifecycle {
 
       def warm(kind: String): Unit = {
         val (in, out, topic, sink) = fresh()
-        val gen = new Generator(topic, new ZipfKeys(keys, c.dbl("zipf_s"), c.seed * 1000 + cycleNo),
+        val gen = new Generator(topic, new ZipfKeys(Keys, ZipfS, c.seed * 1000 + cycleNo),
           c.event)
         try {
-          gen.preload(c.int("preload_rows"))
+          gen.preload(PreloadRows)
           val t0 = System.currentTimeMillis()
           val id = client.call("start", "name" -> s"warm$cycleNo-$kind",
             "script" -> script(kind, in, out)).data.asText()
@@ -85,15 +103,14 @@ object JobLifecycle {
       def cycle(kind: String): Unit = {
         val (in, out, topic, sink) = fresh()
         val events = mutable.ArrayBuffer[Event]()
-        val gen = new Generator(topic, new ZipfKeys(keys, c.dbl("zipf_s"), c.seed * 1000 + cycleNo),
+        val gen = new Generator(topic, new ZipfKeys(Keys, ZipfS, c.seed * 1000 + cycleNo),
           (id, k, ms) => { events.synchronized(events += Event(id, k, ms)); c.event(id, k, ms) })
         def add(m: String, v: Double): Unit = {
           c.add(s"$m.samples", v)
           perScript.getOrElseUpdate(s"$kind.$m", mutable.ArrayBuffer()) += v
         }
         try {
-          val preload = c.int("preload_rows")
-          gen.preload(preload)
+          gen.preload(PreloadRows)
           val t0 = System.currentTimeMillis()
           val id = c.op("start") {
             val r = client.call("start", "name" -> s"lc$cycleNo-$kind",
@@ -107,30 +124,39 @@ object JobLifecycle {
             add("lifecycle.first_result_p50_ms", (first - t0).toDouble)
           }
           c.op("catch-up") {
-            c.awaitCommitted(jm, id, preload)
-            add("stream.catchup_rows_per_s", preload * 1000.0 /
+            c.awaitCommitted(jm, id, PreloadRows)
+            add("stream.catchup_rows_per_s", PreloadRows * 1000.0 /
               math.max(1L, System.currentTimeMillis() - t0))
           }
-          val feedMs = c.int("feed_ms").toLong
           val feedFrom = System.currentTimeMillis()
-          gen.startRate(c.dbl("feed_rate_per_s"))
-          Thread.sleep(feedMs)
+          gen.startRate(FeedRatePerS)
+          Thread.sleep(FeedMs)
           gen.pause()
           val feedUntil = System.currentTimeMillis()
-          c.op("drain") { c.awaitCommitted(jm, id, gen.generated) }
+          // both snapshots come once the job has processed everything fed
+          // so far, so they time the copy, not a batch in flight
+          c.op("drain") {
+            c.awaitCommitted(jm, id, gen.generated)
+            c.query(jm, id).processAllAvailable()
+          }
           c.op("savepoint") {
-            val (r, ms) = c.retrying("savepoint")(client.call("savepoint", "id" -> id))
-            add("lifecycle.savepoint_ms", ms)
+            val r = client.call("savepoint", "id" -> id)
+            add("lifecycle.savepoint_ms", r.ms)
             client.platformShare(r.ms, jm.lastCallMs)
           }
           c.op("stop with savepoint") {
-            val (r, ms) = c.retrying("stop_with_savepoint")(client.call("stop", "id" -> id))
-            add("lifecycle.stop_savepoint_p50_ms", ms)
+            val r = client.call("stop", "id" -> id)
+            add("lifecycle.stop_savepoint_p50_ms", r.ms)
             client.platformShare(r.ms, jm.lastCallMs)
+          }.getOrElse {
+            // a failed stop leaves the job RUNNING with its queries
+            // stopped; settle it and drop the rest of the cycle
+            c.op("stop after failed stop")(client.call("stop", "id" -> id, "savepoint" -> "false"))
+            return
           }
           // events that arrive while the job is down, for the restored
           // job to pick up
-          gen.preload(preload)
+          gen.preload(PreloadRows)
           val tr = System.currentTimeMillis()
           val id2 = c.op("restore") {
             val r = client.call("start", "id" -> id, "savepoint" -> "")
@@ -144,7 +170,7 @@ object JobLifecycle {
           }
           c.op("catch-up after restore") {
             c.awaitCommitted(jm, id2, gen.generated)
-            add("stream.catchup_rows_per_s", preload * 1000.0 /
+            add("stream.catchup_rows_per_s", PreloadRows * 1000.0 /
               math.max(1L, System.currentTimeMillis() - tr))
           }
           c.op("stop") {
@@ -153,21 +179,19 @@ object JobLifecycle {
           }
           c.op("listTask")(client.call("listTask"))
           c.op("querySavePointList10")(client.call("querySavePointList10", "id" -> id))
-          val lat = sink.latencies(feedFrom + triggerMs, feedUntil)
-          if (lat.nonEmpty) {
-            add("stream.lat_p50_ms", Stats.percentile(lat, 50))
-            add("stream.lat_p99_ms", Stats.percentile(lat, 99))
-          }
+          val lat = sink.latencies(feedFrom + TriggerMs, feedUntil)
+          lat.foreach(c.add("stream.lat_ms.samples", _))
+          latRows.getOrElseUpdate(kind, mutable.ArrayBuffer()) ++= lat
           c.notes("gen.late_ms_max") =
             math.max(c.notes.getOrElse("gen.late_ms_max", 0.0), gen.lateMsMaxSeen)
           val evs = events.synchronized(events.toVector)
-          check(c, kind, cycleNo, evs, sink.snapshot(c.json), keys)
+          check(c, kind, cycleNo, evs, sink.snapshot(c.json), Keys)
         } finally gen.close()
       }
 
       // set-up: each script once, start → first result → stop, so every
       // script's cold path is paid before timing starts
-      scripts.foreach { kind =>
+      Scripts.foreach { kind =>
         val t0 = System.nanoTime()
         warm(kind)
         c.add("setup.round_s", (System.nanoTime() - t0) / 1e9)
@@ -175,28 +199,32 @@ object JobLifecycle {
       c.heapMark()
       val rng = new java.util.Random(c.seed)
       val until = System.currentTimeMillis() + c.seconds * 1000L
-      // whole rounds of every script once, in a seeded order, until time
-      // is up, so each script contributes the same number of samples
-      while (System.currentTimeMillis() < until) {
-        scala.util.Random.javaRandomToRandom(rng).shuffle(scripts).foreach(cycle)
+      // whole rounds of every script once, in a seeded order, so each
+      // script contributes the same number of samples
+      while (rounds < MinRounds || System.currentTimeMillis() < until) {
+        scala.util.Random.javaRandomToRandom(rng).shuffle(Scripts).foreach(cycle)
         rounds += 1
       }
       c.heapMark()
       c.notes("lifecycle.rounds") = rounds
+      latRows.filter(_._2.nonEmpty).foreach { case (kind, rows) =>
+        perScript(s"$kind.stream.lat_p50_ms") = mutable.ArrayBuffer(Stats.percentile(rows.toSeq, 50))
+        perScript(s"$kind.stream.lat_p99_ms") = mutable.ArrayBuffer(Stats.percentile(rows.toSeq, 99))
+      }
       perScript.foreach { case (m, v) => c.notes(m) = Stats.median(v.toSeq) }
       // each metric's value: the geometric mean over scripts of each
       // script's median, so a script whose operations are slower (or
       // faster) weighs the same in every run
       val metrics = perScript.keys.map(_.split("\\.", 2)(1)).toSeq.distinct
       metrics.foreach { m =>
-        val meds = scripts.flatMap(k => perScript.get(s"$k.$m")).map(v => Stats.median(v.toSeq))
+        val meds = Scripts.flatMap(k => perScript.get(s"$k.$m")).map(v => Stats.median(v.toSeq))
         c.add(m, Stats.geoMean(meds))
       }
-      // the start tail: the highest configured percentile that still has
+      // the start tail: the highest candidate percentile that still has
       // enough samples beyond it, over every start of the run
       val starts = perScript.collect { case (m, v) if m.endsWith(".lifecycle.start_p50_ms") => v }
         .flatten.toSeq
-      Stats.tailPercentile(starts.size, c.dbls("tail_candidates")).foreach { p =>
+      Stats.tailPercentile(starts.size, TailCandidates).foreach { p =>
         c.notes("lifecycle.start_tail_pct") = p
         c.notes("lifecycle.start_tail_ms") = Stats.percentile(starts, p)
       }

@@ -1,12 +1,11 @@
 package perfbench
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point (launched by perfbench/run.py):
   *
   *   perfbench.Main --workload <stream_ingest|job_lifecycle> --seed <n>
-  *     --seconds <s> --trace <0|1> --config <config.json> --work <dir>
+  *     --seconds <s> --trace <0|1> --work <dir>
   *
   * Prints a report line (every metric as median, quartiles and sample
   * count, plus the host facts the numbers depend on), then, as the last
@@ -16,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Main {
 
   /** End-to-end metrics and their units: the ones that hold still across
-    * seeds on both workloads. The rest (catch-up rate, start, stop with
+    * seeds on both workloads. The rest (catch-up rate, stop with
     * savepoint, restore) appear in the report with their quartiles.
     */
   val EndToEnd: Seq[(String, String)] = Seq(
@@ -24,7 +23,10 @@ object Main {
     "peak_heap_mb" -> "MB",
     "stream.lat_p50_ms" -> "ms",
     "stream.lat_p99_ms" -> "ms",
+    "lifecycle.start_p50_ms" -> "ms",
     "lifecycle.first_result_p50_ms" -> "ms")
+
+  val Workloads = Seq("stream_ingest", "job_lifecycle")
 
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -33,8 +35,7 @@ object Main {
     val seconds = a("seconds").toInt
     val traced = a("trace") == "1"
     val work = new java.io.File(a("work"))
-    val cfgAll = new ObjectMapper().readTree(new java.io.File(a("config")))
-    require(cfgAll.has(workload), s"unknown workload $workload")
+    require(Workloads.contains(workload), s"unknown workload $workload")
     val nproc = Runtime.getRuntime.availableProcessors()
 
     val spark = SparkSession.builder()
@@ -52,7 +53,7 @@ object Main {
 
     val trace = new Trace
     if (traced) { trace.enabled = true; trace.install(spark) }
-    val c = new Ctx(spark, work, seed, seconds, cfgAll.get(workload), trace, nproc)
+    val c = new Ctx(spark, work, seed, seconds, trace, nproc)
     trace.lagProbe = () => c.broker.lagRows
     val wall0 = System.currentTimeMillis()
     try workload match {
@@ -82,7 +83,7 @@ object Main {
       "traced" -> traced.toString, "boot_s" -> JsonOut.num(bootS),
       "setup_rounds_s" -> rounds.map(JsonOut.num).mkString("[", ",", "]"))
     val units = EndToEnd.toMap ++ Seq(
-      "stream.catchup_rows_per_s" -> "rows/s", "lifecycle.start_p50_ms" -> "ms",
+      "stream.catchup_rows_per_s" -> "rows/s",
       "lifecycle.stop_savepoint_p50_ms" -> "ms", "lifecycle.restore_p50_ms" -> "ms")
     val summaries = c.samples.toSeq.map { case (m, v) =>
       val s = Stats.summary(v.toSeq)
@@ -116,11 +117,13 @@ object Main {
   }
 }
 
-/** The per-layer metrics of a traced run, in BENCHMARK.json order. */
+/** The per-layer metrics of a traced run, in BENCHMARK.json order, but
+  * for `trace.overhead_pct`: that one compares the traced run with an
+  * untraced run of the same seed, and run.py adds it.
+  */
 object Layers {
   def metrics(c: Ctx, wall0: Long, wall1: Long): Seq[(String, Double, String)] = {
     val t = c.trace
-    val wallMs = (wall1 - wall0).toDouble
     val batches = math.max(1.0, t.sum("microbatch.batches"))
     val fetches = c.broker.fetchRequests.get.toDouble
     Seq(
@@ -164,8 +167,7 @@ object Layers {
       ("exec.shuffle_write_bytes", t.sum("exec.shuffle_write_bytes"), "bytes"),
       ("exec.spill_bytes", t.sum("exec.spill_bytes"), "bytes"),
       ("exec.peak_exec_mem_bytes", t.sum("exec.peak_exec_mem_bytes"), "bytes"),
-      ("gen.late_ms_max", c.notes.getOrElse("gen.late_ms_max", 0.0), "ms"),
-      ("trace.overhead_pct", 100.0 * t.selfMs / math.max(1.0, wallMs), "%"))
+      ("gen.late_ms_max", c.notes.getOrElse("gen.late_ms_max", 0.0), "ms"))
   }
 }
 

@@ -6,15 +6,37 @@ import scala.collection.mutable
   * with COUNT(*) and MAX(created_ms) → upsert-kafka over REST), started
   * through `JobManager.start` and fed by an open-loop generator drawing
   * skewed keys. Phases: drain a preloaded backlog, hold one fixed rate,
-  * climb a rate ladder, then stop-with-savepoint and restore a few times
-  * under load. The check: each key's final `n` equals the number of
-  * events generated for it.
+  * climb a rate ladder, then stop-with-savepoint and restore cycles. The
+  * check: each key's final `n` equals the number of events generated for
+  * it.
   */
 object StreamIngest {
 
+  val Partitions = 4
+  val Keys = 100000
+  val ZipfS = 1.0
+  val TriggerMs = 1000
+  val SetupRounds = 3
+  val BacklogRows = 50000L
+  val FixedRatePerS = 10000.0
+  /** The rate ladder and the p99 a step must stay within to hold. Its
+    * first step is the fixed rate, held for `FixedShare` of `--seconds`;
+    * each further step takes an equal part of the rest. The savepoint
+    * cycles come after, a fixed number of them.
+    */
+  val LadderPerS = Seq(FixedRatePerS, 40000.0, 80000.0)
+  val P99LimitMs = 2500.0
+  val FixedShare = 0.6
+  /** Rows created in the first second at the fixed rate are left out of
+    * its latency: the job has just drained the backlog.
+    */
+  val SettleMs = 1000L
+  val SavepointCycles = 7
+  /** Rows that arrive while the job is down, for each restore to pick up. */
+  val RestoreBacklogRows = 5000L
+
   def run(c: Ctx): Unit = {
-    val parts = math.min(c.int("partitions"), c.nproc)
-    val triggerMs = c.int("trigger_ms")
+    val parts = math.min(Partitions, c.nproc)
     val jm = new TimedJobManager(c.spark, c.dir("ckpt"), c.dir("savepoints"),
       None, c.trace)
     def light(id: Long, k: Int, createdMs: Long): String =
@@ -22,14 +44,14 @@ object StreamIngest {
 
     // set-up rounds: the same job on a small topic, start → first result
     // → stop; the first round also pays the cold JVM and engine paths
-    val warm = (0 until c.int("setup_rounds")).map { i =>
+    val warm = (0 until SetupRounds).map { i =>
       val t0 = System.nanoTime()
       val in = c.broker.createTopic(s"warm${i}_in", parts)
-      val g = new Generator(in, new ZipfKeys(1000, 1.0, c.seed + i), light)
+      val g = new Generator(in, new ZipfKeys(1000, ZipfS, c.seed + i), light)
       g.preload(2000)
       g.close()
       val t1 = System.currentTimeMillis()
-      val id = jm.start(s"warm$i", c.keyedAggScript(s"warm${i}_in", s"warm${i}_out", triggerMs))
+      val id = jm.start(s"warm$i", c.keyedAggScript(s"warm${i}_in", s"warm${i}_out", TriggerMs))
       c.await("warm-up result")(c.broker.sink(s"warm${i}_out").firstPostAtOrAfter(t1))
       c.awaitCommitted(jm, id, 2000)
       jm.stop(id, false)
@@ -39,14 +61,12 @@ object StreamIngest {
 
     val topic = c.broker.createTopic("si_in", parts)
     val sink = c.broker.sink("si_out")
-    val gen = new Generator(topic,
-      new ZipfKeys(c.int("keys"), c.dbl("zipf_s"), c.seed), light)
-    val script = c.keyedAggScript("si_in", "si_out", triggerMs)
+    val gen = new Generator(topic, new ZipfKeys(Keys, ZipfS, c.seed), light)
+    val script = c.keyedAggScript("si_in", "si_out", TriggerMs)
     c.heapMark()
 
     // catch-up: a backlog loaded before the job starts
-    val backlog = c.int("backlog_rows").toLong
-    gen.preload(backlog)
+    gen.preload(BacklogRows)
     var id = ""
     val t0 = System.currentTimeMillis()
     c.op("start") {
@@ -59,7 +79,7 @@ object StreamIngest {
       c.add("lifecycle.first_result_p50_ms", (first - t0).toDouble)
     }
     c.op("catch-up") {
-      c.awaitCommitted(jm, id, backlog)
+      c.awaitCommitted(jm, id, BacklogRows)
       val q = c.query(jm, id)
       val drain = q.recentProgress.filter(_.numInputRows > 0)
       val rows = drain.map(_.numInputRows).sum
@@ -68,32 +88,23 @@ object StreamIngest {
     }
     c.heapMark()
 
+    // the ladder, its first step held longest for the fixed-rate latency
     val s = c.seconds * 1000L
-    val share = c.cfg.get("share")
-    // fixed rate: latency of rows whose newest event was created after
-    // the first trigger interval of the phase, in one-second slices
-    val fixedMs = (s * share.get("fixed").asDouble).toLong
-    val rate = c.dbl("fixed_rate_per_s")
-    val fixedFrom = System.currentTimeMillis()
-    gen.startRate(rate)
-    Thread.sleep(fixedMs)
-    val fixedUntil = System.currentTimeMillis()
-    // ladder
-    val ladder = c.dbls("ladder_per_s")
-    val stepMs = (s * share.get("ladder").asDouble / ladder.size).toLong
+    val fixedMs = (s * FixedShare).toLong
+    val stepMs = (s - fixedMs) / (LadderPerS.size - 1)
     val steps = mutable.ArrayBuffer[(Double, Long, Long, Long, Long)]()
     val q0 = c.query(jm, id)
     var climbing = true
-    ladder.foreach { r =>
+    LadderPerS.zipWithIndex.foreach { case (r, i) =>
       if (climbing) {
         val from = System.currentTimeMillis()
         val lag0 = gen.generated - c.committed(q0)
         gen.startRate(r)
-        Thread.sleep(stepMs)
+        Thread.sleep(if (i == 0) fixedMs else stepMs)
         val lag1 = gen.generated - c.committed(q0)
         steps += ((r, from, System.currentTimeMillis(), lag0, lag1))
         // a backlog many triggers deep will not clear inside this run
-        if (lag1 > r * triggerMs / 1000.0 * 8) climbing = false
+        if (lag1 > r * TriggerMs / 1000.0 * 8) climbing = false
       }
     }
     gen.pause()
@@ -101,48 +112,64 @@ object StreamIngest {
       c.awaitCommitted(jm, id, gen.generated, timeoutMs = 150000)
     }
     c.heapMark()
-    sliceLatencies(c, sink, fixedFrom + triggerMs, fixedUntil)
+    // the percentiles pool every row of the phase: a batch takes about a
+    // trigger interval or more, so a shorter slice would see only one or
+    // two batches and its percentile would swing with their phase
+    val (_, fixedFrom, fixedUntil, _, _) = steps.head
+    val lat = sink.latencies(fixedFrom + SettleMs, fixedUntil)
+    lat.foreach(c.add("stream.lat_ms.samples", _))
+    if (lat.nonEmpty) {
+      c.add("stream.lat_p50_ms", Stats.percentile(lat, 50))
+      c.add("stream.lat_p99_ms", Stats.percentile(lat, 99))
+    }
     val observed = steps.toSeq.map { case (r, from, until, lag0, lag1) =>
-      val l = sink.latencies(from + triggerMs, until)
+      val l = sink.latencies(from + TriggerMs, until)
       Stats.Step(r, if (l.isEmpty) Double.MaxValue else Stats.percentile(l, 99), lag0, lag1)
     }
-    c.notes("stream.sustained_rows_per_s") =
-      Stats.sustained(observed, c.dbl("p99_limit_ms"), triggerMs)
+    c.notes("stream.sustained_rows_per_s") = Stats.sustained(observed, P99LimitMs, TriggerMs)
     observed.foreach(st => c.notes(s"ladder.${st.offeredPerS.toLong}.p99_ms") = st.p99Ms)
 
-    // stop-with-savepoint → restore cycles, under the fixed rate
-    val cycles = c.int("savepoint_cycles")
-    val cycleMs = c.int("cycle_ms").toLong
-    gen.startRate(rate)
-    (0 until cycles).foreach { _ =>
-      Thread.sleep(cycleMs / 2)
-      c.op("stop with savepoint") {
-        val (_, ms) = c.retrying("stop_with_savepoint")(jm.stop(id, true))
-        c.add("lifecycle.stop_savepoint_p50_ms", ms)
-      }
-      Thread.sleep(cycleMs / 4)
-      val tr = System.currentTimeMillis()
-      c.op("restore") {
+    // stop-with-savepoint → restore cycles. Each stop comes once the job
+    // has processed everything fed so far, so it times the snapshot, not
+    // the wait for a batch in flight. A fixed backlog arrives while the
+    // job is down, so each restore starts into the same amount of work.
+    // The first result counts from the restored job's start, after the
+    // savepoint copy, which restore_p50_ms already holds: the copy grows
+    // with the checkpoint's file count, which varies with batch timing.
+    var cycles = 0
+    var live = true
+    while (live && cycles < SavepointCycles) {
+      cycles += 1
+      val stopped = c.op("stop with savepoint") {
+        // keyed aggregation runs no batch without new rows, so once every
+        // row is committed nothing writes to the checkpoint
+        c.awaitCommitted(jm, id, gen.generated)
+        jm.stop(id, true)
+        c.add("lifecycle.stop_savepoint_p50_ms", jm.lastCallMs)
+      }.isDefined
+      gen.preload(RestoreBacklogRows)
+      live = stopped && c.op("restore") {
         id = jm.restartFromSavepoint(id, None)
         c.add("lifecycle.restore_p50_ms", jm.lastCallMs)
         c.add("lifecycle.start_p50_ms", jm.lastStartMs)
-        val first = c.await("first result after restore")(sink.firstPostAtOrAfter(tr))
-        c.add("lifecycle.first_result_p50_ms", (first - tr).toDouble)
-      }
-      Thread.sleep(cycleMs / 2)
+        val ts = jm.lastStartAtMs
+        val first = c.await("first result after restore")(sink.firstPostAtOrAfter(ts))
+        c.add("lifecycle.first_result_p50_ms", (first - ts).toDouble)
+      }.isDefined
     }
-    gen.pause()
+    c.notes("stream.savepoint_cycles") = cycles
+    c.notes("gen.late_ms_max") = gen.lateMsMaxSeen
+    c.notes("gen.events") = gen.generated.toDouble
+    gen.close()
+    if (!live) return
     c.op("final drain") {
       c.awaitCommitted(jm, id, gen.generated, timeoutMs = 150000)
     }
-    c.notes("gen.late_ms_max") = gen.lateMsMaxSeen
-    c.notes("gen.events") = gen.generated.toDouble
     jm.stop(id, false)
-    gen.close()
     c.heapMark()
 
     // output check: every key's final count equals what was generated
-    val got = c.broker.sink("si_out").snapshot(c.json).values.map { n =>
+    val got = sink.snapshot(c.json).values.map { n =>
       n.get("k").asInt -> n.get("n").asLong
     }.toMap
     val want = gen.perKey.toMap
@@ -150,20 +177,5 @@ object StreamIngest {
       got.keySet.diff(want.keySet).size
     c.check("stream_ingest per-key counts", wrong == 0,
       s"$wrong of ${want.size} keys differ")
-  }
-
-  /** Event-to-sink latency per one-second slice of creation time: each
-    * slice contributes its own p50 and p99.
-    */
-  def sliceLatencies(c: Ctx, sink: Broker.Sink, from: Long, until: Long): Unit = {
-    var a = from
-    while (a + 1000 <= until) {
-      val l = sink.latencies(a, a + 1000)
-      if (l.nonEmpty) {
-        c.add("stream.lat_p50_ms", Stats.percentile(l, 50))
-        c.add("stream.lat_p99_ms", Stats.percentile(l, 99))
-      }
-      a += 1000
-    }
   }
 }

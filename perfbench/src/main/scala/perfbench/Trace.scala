@@ -9,16 +9,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
 
-/** Per-layer accounting for the traced run. Sums and sample lists keyed
-  * by metric name; every hook adds its own running time to `selfNs`, so
-  * the run can report what tracing cost.
+/** Per-layer accounting for the traced run: sums and sample lists keyed
+  * by metric name. What tracing costs is measured from outside, against an
+  * untraced run of the same seed (see run.py).
   */
 final class Trace {
   private val sums = mutable.HashMap[String, Double]().withDefaultValue(0.0)
   private val samples = mutable.HashMap[String, mutable.ArrayBuffer[Double]]()
   private val jobSpans = mutable.ArrayBuffer[(Long, Long)]()
   private val jobStarts = mutable.HashMap[Int, Long]()
-  @volatile private var selfNs = 0L
   @volatile var enabled = false
   /** Source rows appended but not yet fetched, sampled at each batch. */
   @volatile var lagProbe: () => Long = () => 0L
@@ -33,13 +32,6 @@ final class Trace {
   def medianOf(name: String): Double = synchronized {
     samples.get(name).filter(_.nonEmpty).map(s => Stats.median(s.toSeq)).getOrElse(0.0)
   }
-
-  /** Runs `f` as tracer work: its time counts as tracing overhead. */
-  def self[A](f: => A): A = {
-    val t0 = System.nanoTime()
-    try f finally { selfNs += System.nanoTime() - t0 }
-  }
-  def selfMs: Double = selfNs / 1e6
 
   /** Wall time of the window not covered by any Spark job. */
   def driverGapMs(fromMs: Long, untilMs: Long): Double = synchronized {
@@ -62,18 +54,18 @@ final class Trace {
     */
   def install(spark: SparkSession): Unit = {
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = self {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         Trace.this.synchronized(jobStarts(e.jobId) = e.time)
         add("exec.jobs", 1)
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = self {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         Trace.this.synchronized {
           jobStarts.remove(e.jobId).foreach(s => jobSpans += ((s, e.time)))
         }
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        self(add("exec.stages", 1))
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = self {
+        add("exec.stages", 1)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         add("exec.tasks", 1)
         val m = e.taskMetrics
         if (m != null) {
@@ -89,14 +81,14 @@ final class Trace {
     })
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(fn: String, qe: QueryExecution, durationNs: Long): Unit =
-        self(phases(qe))
+        phases(qe)
       override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        self(phases(qe))
+        phases(qe)
     })
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = self {
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
         add("microbatch.batches", 1)
         sample("sources.lag_rows", lagProbe().toDouble)
@@ -124,7 +116,7 @@ final class Trace {
   }
 
   /** Files and bytes of one savepoint directory. */
-  def savepointSize(path: String): Unit = self {
+  def savepointSize(path: String): Unit = {
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
     var (files, bytes) = (0, 0L)
     try walk.filter(java.nio.file.Files.isRegularFile(_)).forEach { f =>
@@ -136,10 +128,10 @@ final class Trace {
   }
 
   /** Side-timing of the gate layers on a script about to be started.
-    * These calls repeat what `JobManager.start` does inside, so they are
-    * tracer work, not part of the timed start.
+    * These calls repeat what `JobManager.start` does inside, outside the
+    * timed start.
     */
-  def gate(spark: SparkSession, script: String): Unit = self {
+  def gate(spark: SparkSession, script: String): Unit = {
     def ms[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       try f finally sample(name, (System.nanoTime() - t0) / 1e6)
@@ -164,6 +156,8 @@ final class TimedJobManager(spark: SparkSession, checkpointRoot: String,
 
   @volatile var lastCallMs = 0.0
   @volatile var lastStartMs = 0.0
+  /** Wall clock when the last start began (inside a restore, after the copy). */
+  @volatile var lastStartAtMs = 0L
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val r = f
@@ -173,6 +167,7 @@ final class TimedJobManager(spark: SparkSession, checkpointRoot: String,
   override def start(name: String, script0: String, batchMode: Boolean,
       autoRestart: Boolean, restoreCheckpoint: Option[String]): String = {
     if (trace.enabled) trace.gate(spark, script0)
+    lastStartAtMs = System.currentTimeMillis()
     val (id, ms) = timed(super.start(name, script0, batchMode, autoRestart,
       restoreCheckpoint))
     lastCallMs = ms
