@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,12 +21,15 @@ private[graft] final class TopKBuffer(val k: Int) {
   var filled = 0
 
   /** `true` iff (score, id) orders strictly before slot j. Scores are
-    * compared as the plain doubles the replaced window ordered by; ids
-    * are Long or UTF8String (one kind per aggregate instance).
+    * compared in the total order the replaced window sorts doubles by
+    * (`Double.compare`, but -0.0 == 0.0): NaN ranks above +Infinity, so
+    * a NaN score cannot tie with everything and make the top-k depend
+    * on input order. Ids are Long or UTF8String (one kind per aggregate
+    * instance).
     */
   private def beats(score: Double, id: Any, j: Int): Boolean = {
-    if (score > scores(j)) true
-    else if (score < scores(j)) false
+    val c = SQLOrderingUtil.compareDoubles(score, scores(j))
+    if (c != 0) c > 0
     else id match {
       case l: java.lang.Long =>
         l.longValue < ids(j).asInstanceOf[java.lang.Long].longValue

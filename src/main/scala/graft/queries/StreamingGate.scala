@@ -78,10 +78,12 @@ object StreamingGate extends QueryPack {
   private[queries] def drainParts(s: SparkSession, stagedDir: String): Int = {
     val bytes = try {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(stagedDir))
-        .iterator().asScala
-        .filter(f => java.nio.file.Files.isRegularFile(f))
-        .map(f => java.nio.file.Files.size(f)).sum
+      scala.util.Using.resource(
+          java.nio.file.Files.walk(java.nio.file.Paths.get(stagedDir))) {
+        _.iterator().asScala
+          .filter(f => java.nio.file.Files.isRegularFile(f))
+          .map(f => java.nio.file.Files.size(f)).sum
+      }
     } catch { case _: Throwable => Long.MaxValue }
     drainPartsForBytes(s, bytes)
   }

@@ -26,6 +26,10 @@ class ScriptRunner(spark: SparkSession,
     checkpointRoot: Option[String] = None,
     batchMode: Boolean = false) {
 
+  // every query the gate starts checkpoints through FileContext; on
+  // `file:` paths, write those checkpoints without forking chmod/readlink
+  graft.streaming.LocalCheckpointFs.install(spark)
+
   val registry: mutable.Map[String, TableSpec] = mutable.LinkedHashMap()
   private val sourcesInstantiated = mutable.Set[String]()
 

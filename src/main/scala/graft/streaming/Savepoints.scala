@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-import scala.jdk.CollectionConverters._
-import scala.util.Using
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Path,
+  Paths, SimpleFileVisitor, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 
 /** Savepoint manager — the reference's stop-with-savepoint / restore flow
   * (`JobStandaloneServerAOImpl.java:88-158`, `CommandUtil.java:117-137`)
@@ -44,12 +44,9 @@ object Savepoints {
     */
   def restore(savepointPath: String, newCheckpointDir: String): String = {
     val dst = Paths.get(newCheckpointDir)
-    if (Files.exists(dst)) {
-      Using.resource(Files.walk(dst)) { walk =>
-        walk.sorted(Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.delete)
-      }
-    }
+    if (Files.exists(dst))
+      Files.walkFileTree(dst, new TolerantWalk(_ => (),
+        Files.deleteIfExists(_), Files.deleteIfExists(_)))
     copyTree(Paths.get(savepointPath), dst)
     newCheckpointDir
   }
@@ -64,23 +61,39 @@ object Savepoints {
       .map(n => base.resolve(s"sp-$n").toString).toSeq
   }
 
-  private def copyTree(src: Path, dst: Path): Unit =
-    Using.resource(Files.walk(src)) { walk =>
-      walk.iterator().asScala.foreach { p =>
-        val target = dst.resolve(src.relativize(p).toString)
-        try {
-          if (Files.isDirectory(p)) Files.createDirectories(target)
-          else {
-            Files.createDirectories(target.getParent)
-            Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-          }
-        } catch {
-          // live-checkpoint snapshot (auto-savepoint of a RUNNING job):
-          // state compaction can delete a file between walk and copy —
-          // skip it; Spark's commit protocol keeps the snapshot usable
-          // (uncommitted batch files are ignored on restore)
-          case _: java.nio.file.NoSuchFileException => ()
-        }
-      }
+  private def copyTree(src: Path, dst: Path): Unit = {
+    def target(p: Path) = dst.resolve(src.relativize(p).toString)
+    Files.walkFileTree(src, new TolerantWalk(
+      d => Files.createDirectories(target(d)),
+      f => Files.copy(f, target(f), StandardCopyOption.REPLACE_EXISTING),
+      _ => ()))
+  }
+
+  /** Walks a tree that may change under it. A live-checkpoint snapshot
+    * (auto-savepoint of a RUNNING job) races Spark's own writers: state
+    * compaction and temp-file renames delete files and directories
+    * between the walk listing an entry and visiting or copying it. Such
+    * an entry is skipped; Spark's commit protocol keeps the snapshot
+    * usable (uncommitted batch files are ignored on restore).
+    */
+  private final class TolerantWalk(onDir: Path => Unit, onFile: Path => Unit,
+      afterDir: Path => Unit) extends SimpleFileVisitor[Path] {
+    private def vanished(e: IOException) = e.isInstanceOf[NoSuchFileException]
+
+    override def preVisitDirectory(d: Path,
+        a: BasicFileAttributes): FileVisitResult = {
+      onDir(d); FileVisitResult.CONTINUE
     }
+    override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+      try onFile(f) catch { case _: NoSuchFileException => () }
+      FileVisitResult.CONTINUE
+    }
+    override def visitFileFailed(f: Path, e: IOException): FileVisitResult =
+      if (vanished(e)) FileVisitResult.CONTINUE else throw e
+    override def postVisitDirectory(d: Path,
+        e: IOException): FileVisitResult = {
+      if (e != null && !vanished(e)) throw e
+      afterDir(d); FileVisitResult.CONTINUE
+    }
+  }
 }

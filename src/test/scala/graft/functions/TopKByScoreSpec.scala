@@ -62,6 +62,26 @@ class TopKByScoreSpec extends SparkSpec {
     assert(a.count(_._1 == 2L) == 1 && a.filter(_._1 == 2L).head._4 == 1)
   }
 
+  test("NaN and signed-zero scores keep a total order: agg == window, " +
+    "independent of input order") {
+    import spark.implicits._
+    // NaN sorts above +Infinity and -0.0 ties with 0.0 in the window's
+    // ordering; a comparison that lets NaN tie with every score makes
+    // the kept entries depend on the order rows arrive in
+    val scores = Seq(Double.NaN, 1.0, Double.PositiveInfinity, 0.0, -0.0,
+      Double.NaN, 2.0, Double.NegativeInfinity, 1.0, Double.NaN)
+    val rows = for (g <- 0L until 3L; (s, i) <- scores.zipWithIndex)
+      yield (g, (i * 7 + g * 3) % 10, s)
+    for (order <- Seq(rows, rows.reverse); k <- Seq(1, 2, 4, 6); parts <- Seq(1, 3)) {
+      val in = order.toDF("g", "id", "s").repartition(parts)
+      def norm(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2).toString, r.getInt(3)))
+        .sorted.toSeq
+      assert(norm(viaAgg(in, k).collect()) == norm(viaWindow(in, k).collect()),
+        s"k=$k parts=$parts")
+    }
+  }
+
   test("NULL score or id rows are skipped; plan shows a partial " +
     "aggregate below the exchange") {
     import spark.implicits._

@@ -34,6 +34,43 @@ class SavepointSpec extends SparkSpec {
     assert(next.endsWith("sp-11"), next)
   }
 
+  test("snapshot and restore skip entries that vanish mid-walk") {
+    // Spark renames and deletes checkpoint files and directories while a
+    // live job is snapshotted; a directory that disappears between the
+    // walk listing it and visiting it must be skipped, not fail the walk
+    val ckpt = Files.createTempDirectory("sp_churn_ckpt")
+    Files.createDirectories(ckpt.resolve("offsets"))
+    Files.writeString(ckpt.resolve("offsets/0"), "v1")
+    val root = Files.createTempDirectory("sp_churn_root").toString
+    @volatile var stop = false
+    val churn = new Thread(() => {
+      var i = 0
+      while (!stop) {
+        val d = ckpt.resolve(s"state-${i % 8}")
+        try {
+          Files.createDirectories(d.resolve("0"))
+          Files.writeString(d.resolve("0/1.delta"), "x")
+          Files.delete(d.resolve("0/1.delta"))
+          Files.delete(d.resolve("0"))
+          Files.delete(d)
+        } catch { case _: java.io.IOException => () }
+        i += 1
+      }
+    })
+    churn.start()
+    try {
+      for (_ <- 0 until 300) {
+        val sp = java.nio.file.Paths.get(
+          Savepoints.snapshot(ckpt.toString, root, "churn"))
+        assert(Files.readString(sp.resolve("offsets/0")) == "v1")
+        // restore over a copy the churn keeps no hold on
+        val restored = java.nio.file.Paths.get(
+          Savepoints.restore(sp.toString, s"$sp-restored"))
+        assert(Files.readString(restored.resolve("offsets/0")) == "v1")
+      }
+    } finally { stop = true; churn.join() }
+  }
+
   test("snapshot → restore resumes from saved offsets, no duplicates") {
     import spark.implicits._
     val srcDir = Files.createTempDirectory("sp_src").toString
