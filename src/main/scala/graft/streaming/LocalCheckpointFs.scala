@@ -40,38 +40,33 @@ private[streaming] class NioRawLocalFileSystem extends RawLocalFileSystem {
         permission.getOtherAction.SYMBOL))
   }
 
-  override def getFileLinkStatus(f: Path): FileStatus = {
-    val fi = linkStatus(f)
-    if (fi.isSymlink)
-      fi.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, fi.getPath,
-        fi.getSymlink))
-    fi
-  }
-
-  override def getLinkTarget(f: Path): Path = linkStatus(f).getSymlink
-
-  /** The stock (non-`stat`) link status: `readlink` replaced by NIO,
+  /** The stock (non-`stat`) link status with `readlink` replaced by NIO,
     * probing the same `File` it is handed — the path's string form,
     * scheme included, as stock Hadoop does.
     */
-  private def linkStatus(f: Path): FileStatus = {
+  override def getFileLinkStatus(f: Path): FileStatus = {
     val link = new File(f.toString).toPath
     val target =
       try if (Files.isSymbolicLink(link)) Files.readSymbolicLink(link).toString.trim
           else ""
       catch { case _: IOException => "" }
-    try {
-      val st = getFileStatus(f)
-      if (target.isEmpty) st
-      else new FileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
-        st.getModificationTime, st.getAccessTime, st.getPermission,
-        st.getOwner, st.getGroup, new Path(target), f)
-    } catch {
-      // a dangling link: File.exists is false for it
-      case _: FileNotFoundException if target.nonEmpty =>
-        new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "",
-          new Path(target), f)
-    }
+    val fi =
+      try {
+        val st = getFileStatus(f)
+        if (target.isEmpty) st
+        else new FileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
+          st.getModificationTime, st.getAccessTime, st.getPermission,
+          st.getOwner, st.getGroup, new Path(target), f)
+      } catch {
+        // a dangling link: File.exists is false for it
+        case _: FileNotFoundException if target.nonEmpty =>
+          new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "",
+            new Path(target), f)
+      }
+    if (fi.isSymlink)
+      fi.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, fi.getPath,
+        fi.getSymlink))
+    fi
   }
 }
 

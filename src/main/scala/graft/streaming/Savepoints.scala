@@ -43,11 +43,13 @@ object Savepoints {
     * its own checkpoint, like Flink's restore-from-savepoint.)
     */
   def restore(savepointPath: String, newCheckpointDir: String): String = {
+    val src = Paths.get(savepointPath)
+    require(Files.isDirectory(src), s"no savepoint at $savepointPath")
     val dst = Paths.get(newCheckpointDir)
     if (Files.exists(dst))
       Files.walkFileTree(dst, new TolerantWalk(_ => (),
         Files.deleteIfExists(_), Files.deleteIfExists(_)))
-    copyTree(Paths.get(savepointPath), dst)
+    copyTree(src, dst)
     newCheckpointDir
   }
 

@@ -71,6 +71,17 @@ class SavepointSpec extends SparkSpec {
     } finally { stop = true; churn.join() }
   }
 
+  test("restoring a missing savepoint fails and leaves no checkpoint") {
+    // a typo or a pruned savepoint must not turn into a fresh start that
+    // drops the job's state and offsets
+    val root = Files.createTempDirectory("sp_missing")
+    val dst = root.resolve("ckpt")
+    val e = intercept[IllegalArgumentException](
+      Savepoints.restore(root.resolve("sp-404").toString, dst.toString))
+    assert(e.getMessage.contains("sp-404"))
+    assert(!Files.exists(dst))
+  }
+
   test("snapshot → restore resumes from saved offsets, no duplicates") {
     import spark.implicits._
     val srcDir = Files.createTempDirectory("sp_src").toString
