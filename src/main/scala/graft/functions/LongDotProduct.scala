@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Exact integer dot product of two BIGINT arrays as a native Catalyst
   * expression with whole-stage codegen — the hot inner loop of every
@@ -198,7 +198,13 @@ object GraftFunctions {
         intLiteral(exprs(1), "heavy_hitters", "capacity"))
         .toAggregateExpression(), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", exprs => TopKByScore(exprs(0), exprs(1),
+      "topk_by_score", exprs => TopKByScore(exprs(0),
+        // INT / SMALLINT / TINYINT ids widen to the BIGINT path
+        exprs(1).dataType match {
+          case IntegerType | ShortType | ByteType =>
+            org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), LongType)
+          case _ => exprs(1)
+        },
         intLiteral(exprs(2), "topk_by_score", "k"))
         .toAggregateExpression(), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -67,7 +67,8 @@ private[graft] final class TopKBuffer(val k: Int) {
   * probes the shuffle drops from O(Σ df over query terms) rows to
   * O(k × partitions) per query. NULL scores and NULL ids are skipped
   * (the replaced windows never see them: scores are decimal sums over
-  * ≥1 row). Ids: BIGINT or STRING.
+  * ≥1 row). Ids: BIGINT or STRING; `topk_by_score` widens INT,
+  * SMALLINT and TINYINT ids to BIGINT where it is registered.
   */
 case class TopKByScore(
     score: Expression,

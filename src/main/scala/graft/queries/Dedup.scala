@@ -1550,19 +1550,19 @@ object Dedup extends QueryPack {
     // cut boilerplate runs, complementing the whole-doc (minhash) and
     // near-dup (simhash) families. Unlike the pair-based paths this is
     // O(corpus) end-to-end with NO pair expansion anywhere: positions →
-    // 60-bit gram hash (longs on the wire, not strings) → per-gram
-    // distinct-doc counts (map-side combined) → hash-keyed join back
-    // (reuses the agg's partitioning, output is one row per position by
-    // construction — a viral gram fans out linearly, never m²) → per-doc
-    // count. A hot gram cannot blow up any task, so no cap is needed.
+    // 60-bit gram hash (longs on the wire, not strings) → one row per
+    // (doc, gram) → per-gram distinct-doc count as `count(*) OVER
+    // (PARTITION BY h)` (one exchange, no join; output is one row per
+    // (doc, gram) by construction — a viral gram fans out linearly,
+    // never m²) → per-doc count. The window holds a hot gram's whole
+    // group in one task; the opt-in dfCap (see [[withGramDocCounts]])
+    // is the escape, and only that capped path uses a join-back.
     "q_dedup_substr" -> ((s, dir) => {
-      // ONE pass over the gram stream (r18), r19: the per-gram doc
-      // count moved from `count(*) OVER (PARTITION BY h)` — whose
-      // frame buffer held a hot gram's whole group in one task — to a
-      // map-side-combined groupBy + join-back whose (doc_id, h)
-      // exchange AQE reuses (see [[substrDupStats]] /
-      // [[withGramDocCounts]]; the optional stop-gram dfCap stays OFF
-      // here — exact semantics).
+      // ONE pass over the gram stream (r18). The per-gram doc count is
+      // the default `count(*) OVER (PARTITION BY h)` window (see
+      // [[substrDupStats]] / [[withGramDocCounts]]); the map-side-
+      // combined groupBy + join-back is used only under the optional
+      // stop-gram dfCap, which stays OFF here — exact semantics.
       Vec.ensureRegistered(s)
       substrDupStats(Tables.load(s, dir, "documents"))
     }),
@@ -1583,10 +1583,10 @@ object Dedup extends QueryPack {
       val docs = graft.Par.spread(
         Tables.load(s, dir, "documents").select($"doc_id", $"text"))
         .select($"doc_id", words($"text").as("w"))
-      // r18 collapsed this to one gram pass; r19 moved the per-gram
-      // doc count from the h-window to the map-side-combined
-      // groupBy + join-back (see [[substrDupStarts]] — same kernel
-      // notes as q_dedup_substr; dfCap stays OFF here). `starts`
+      // r18 collapsed this to one gram pass; the per-gram doc count is
+      // the default h-window, the groupBy + join-back only under the
+      // dfCap, which stays OFF here (see [[substrDupStarts]] — same
+      // kernel notes as q_dedup_substr). `starts`
       // order differs from row order but is consumed only by the
       // order-independent exists() below.
       val starts = substrDupStarts(

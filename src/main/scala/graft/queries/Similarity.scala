@@ -31,7 +31,7 @@ object Similarity extends QueryPack {
   // kernels (annBrute/annLsh/annIvf).
   private val K = 5
   private val NQueries = 8    // vec_id < 8 are the query vectors
-  private val NPlanes = 8
+  private[graft] val NPlanes = 8
   private val CentLo = 100    // vec_id in [100, 116) are IVF centroids
   private val CentN = 16
   private val NProbe = 4

@@ -47,22 +47,19 @@ package graft.sqlgate
   * accepts) rewrites first, via [[MatchRecognizeRewrite]] — see that
   * object's scaladoc for the supported subset and semantics.
   *
-  * The rewrites are plain-text: window calls carry only identifiers and
-  * INTERVAL literals (no nested parens), so regexes are exact here.
-  * Spark-native queries pass through untouched — every pattern is
-  * anchored on a Flink-only keyword.
+  * The rewrites are text rewrites through [[SqlLexer]]: window calls
+  * carry only identifiers and INTERVAL literals (no nested parens), so
+  * regexes are exact here, and a keyword inside a string literal or a
+  * comment is never rewritten. Spark-native queries pass through
+  * untouched — every pattern is anchored on a Flink-only keyword.
   */
 object FlinkSqlRewrite {
 
   private val Interval = """INTERVAL\s+'(\d+)'\s+(\w+)"""
 
   // boundary extractors first: TUMBLE_START contains the token TUMBLE
-  private val TumbleStartRe = """(?i)\bTUMBLE_START\s*\([^)]*\)""".r
-  private val TumbleEndRe = """(?i)\bTUMBLE_END\s*\([^)]*\)""".r
-  private val HopStartRe = """(?i)\bHOP_START\s*\([^)]*\)""".r
-  private val HopEndRe = """(?i)\bHOP_END\s*\([^)]*\)""".r
-  private val SessionStartRe = """(?i)\bSESSION_START\s*\([^)]*\)""".r
-  private val SessionEndRe = """(?i)\bSESSION_END\s*\([^)]*\)""".r
+  private val BoundaryRe =
+    """(?i)\b(TUMBLE|HOP|SESSION)_(START|END)\s*\([^)]*\)""".r
 
   private val TumbleRe =
     ("""(?i)\bTUMBLE\s*\(\s*([`\w.]+)\s*,\s*""" + Interval + """\s*\)""").r
@@ -207,24 +204,16 @@ object FlinkSqlRewrite {
     * Flink's f0 — rejected loudly instead).
     */
   private def rewriteLateralTable(sql: String): String = {
-    val m = LateralHeadRe.findFirstMatchIn(sql) match {
+    val m = SqlLexer.findFirst(sql, LateralHeadRe) match {
       case None => return sql
       case Some(mm) => mm
     }
     val outer = m.group(1) != ","
-    var i = m.end; var depth = 1
-    while (depth > 0 && i < sql.length) {
-      sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    require(depth == 0, "unbalanced parens in LATERAL TABLE: " +
+    val close = SqlLexer.closeParen(sql, m.end - 1)
+    require(close >= 0, "unbalanced parens in LATERAL TABLE: " +
       sql.substring(m.start).take(80))
-    val call = sql.substring(m.end, i - 1).trim
-    val rest = sql.substring(i)
+    val call = sql.substring(m.end, close).trim
+    val rest = sql.substring(close + 1)
     val tm = LateralTailRe.findFirstMatchIn(rest).getOrElse(
       throw new IllegalArgumentException(
         s"LATERAL TABLE($call) needs an alias: … AS a(c1[, c2…])"))
@@ -257,28 +246,28 @@ object FlinkSqlRewrite {
   private def rewriteWindows(sql: String): String = {
     var s = sql
     s = rewriteLateralTable(s)
-    s = TumbleTvfRe.replaceAllIn(s, m =>
+    def sub(re: scala.util.matching.Regex)(
+        f: java.util.regex.MatchResult => String): Unit =
+      s = SqlLexer.replaceAll(s, re)(f)
+    sub(TumbleTvfRe)(m =>
       tumbleTvf(m.group(1), m.group(2), micros(m.group(3), m.group(4))))
-    s = HopTvfRe.replaceAllIn(s, m =>
+    sub(HopTvfRe)(m =>
       hopTvf(m.group(1), m.group(2), micros(m.group(3), m.group(4)),
         micros(m.group(5), m.group(6))))
-    s = CumulateTvfRe.replaceAllIn(s, m =>
+    sub(CumulateTvfRe)(m =>
       cumulateTvf(m.group(1), m.group(2), micros(m.group(3), m.group(4)),
         micros(m.group(5), m.group(6))))
-    s = TumbleStartRe.replaceAllIn(s, "window.start")
-    s = TumbleEndRe.replaceAllIn(s, "window.end")
-    s = HopStartRe.replaceAllIn(s, "window.start")
-    s = HopEndRe.replaceAllIn(s, "window.end")
-    s = SessionStartRe.replaceAllIn(s, "session_window.start")
-    s = SessionEndRe.replaceAllIn(s, "session_window.end")
-    s = TumbleRe.replaceAllIn(s, m =>
+    sub(BoundaryRe)(m =>
+      (if (m.group(1).equalsIgnoreCase("SESSION")) "session_window"
+      else "window") + "." + m.group(2).toLowerCase(java.util.Locale.ROOT))
+    sub(TumbleRe)(m =>
       s"window(${m.group(1)}, '${dur(m.group(2), m.group(3))}')")
-    s = HopRe.replaceAllIn(s, m =>
+    sub(HopRe)(m =>
       s"window(${m.group(1)}, '${dur(m.group(4), m.group(5))}', " +
         s"'${dur(m.group(2), m.group(3))}')")
-    s = SessionRe.replaceAllIn(s, m =>
+    sub(SessionRe)(m =>
       s"session_window(${m.group(1)}, '${dur(m.group(2), m.group(3))}')")
-    s = SystemTimeRe.replaceAllIn(s, "")
+    sub(SystemTimeRe)(_ => "")
     s
   }
 }

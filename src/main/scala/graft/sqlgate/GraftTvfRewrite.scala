@@ -1,829 +1,396 @@
 package graft.sqlgate
 
-import org.apache.spark.sql.SparkSession
+import graft.multimodal.MediaOps
+import graft.operators.{HeavyHitters, PageRank, TableProfile}
+import graft.queries.{Dedup, Joins, Search, Similarity, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Gate-reachable LLM-pipeline operators as polymorphic table-valued
-  * functions — the statement-layer door into the dedup / ANN / text
-  * surface, spelled in the same `TABLE(F(TABLE src, DESCRIPTOR(col), …))`
-  * dialect as the Flink window TVFs the gate already accepts (so a
-  * reference-style script author uses one idiom for both):
+  * functions — the statement-layer door into the dedup / ANN / text /
+  * media surface, spelled in the same `TABLE(F(TABLE src,
+  * DESCRIPTOR(col), …))` dialect as the Flink window TVFs the gate
+  * already accepts (so a reference-style script author uses one idiom
+  * for both).
   *
-  *   - `TABLE(DEDUP_EXACT(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text)))`
-  *     → `(keep_id, n_copies)`: one survivor (min id) per identical
-  *     text — [[graft.queries.Dedup.exactGroups]].
-  *   - `TABLE(DEDUP_MINHASH_PAIRS(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(text)[, <jaccard>]))` → `(ida, idb, jacc)`: verified
-  *     near-dup pairs via MinHash+LSH —
-  *     [[graft.queries.Dedup.minhashVerifiedPairs]] (default
-  *     threshold 0.8).
-  *   - `TABLE(DEDUP_SIMHASH_PAIRS(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(text)[, <chunkWidth>]))` → `(ida, idb, hamming)`:
-  *     hamming≤3 near-dup pairs via corpus-sized SimHash chunk
-  *     blocking — [[graft.queries.Dedup.simhashVerifiedPairs]]
-  *     (chunkWidth defaults to [[graft.queries.Dedup.simhashChunkWidth]]
-  *     of the relation's row count).
-  *   - `TABLE(DEDUP_CROSS_PAIRS(TABLE incoming, TABLE corpus,
-  *     DESCRIPTOR(id), DESCRIPTOR(text)[, <threshold>]))` →
-  *     `(ida, idb, jacc)`: incremental cross-corpus near-dup pairs
-  *     (incoming id × corpus id, never corpus²) —
-  *     [[graft.queries.Dedup.minhashCrossPairs]].
-  *   - `TABLE(ANN_TOPK(TABLE corpus, TABLE queries, DESCRIPTOR(id),
-  *     DESCRIPTOR(vec)[, <k>]))` → `(qid, nid, cosine, rank)`: exact
-  *     cosine top-k of every query row against the corpus —
-  *     [[graft.queries.Similarity.annTopkOn]] (default k 5). Both
-  *     tables share the id/vector column names; CREATE VIEW carves
-  *     corpus/query sides out of one physical table.
-  *   - `TABLE(ANN_TOPK_LSH(TABLE corpus, TABLE queries, DESCRIPTOR(id),
-  *     DESCRIPTOR(vec)[, <k>[, <planes>]]))` → same columns, candidates
-  *     = hyperplane-bucket mates only (per-query scan |corpus|/2^planes)
-  *     — [[graft.queries.Similarity.annLshTopkOn]]. On a STREAMING
-  *     query side it routes to the stateless bucket-array index scan
-  *     ([[graft.queries.Similarity.annLshTopkStream]]); the corpus must
-  *     be bounded either way.
-  *   - `TABLE(ANN_TOPK_IVFPQ(TABLE corpus, TABLE queries,
-  *     DESCRIPTOR(id), DESCRIPTOR(vec)[, <nProbe>[, <cells>]]))` →
-  *     same columns,
-  *     the composed FAISS-shape tier: IVF cells route each query to its
-  *     nProbe nearest cells, the ADC scan reads only those cells' PQ
-  *     codes, survivors get an exact cosine re-rank —
-  *     [[graft.queries.Similarity.ivfPqTopkOn]]. With a trailing
-  *     `cells` count the coarse quantizer is FITTED at that size
-  *     (stride seeds + one Lloyd round, oracle-replayed — the
-  *     production √n sizing); otherwise cells/codebook come from the
-  *     corpus's deterministic seed windows. On a STREAMING query
-  *     side it probes a frozen per-cell index statelessly
-  *     ([[graft.queries.Similarity.ivfPqTopkStream]]); the corpus must
-  *     be bounded either way.
-  *   - `TABLE(TEXT_QUALITY(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text)))`
-  *     → `(id, mean_tok_len, stop_ratio, digit_ratio, quality_score)` —
-  *     [[graft.queries.TextAnalysis.qualityOn]].
-  *   - `TABLE(LANG_ID(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text)))`
-  *     → `(id, predicted)` — [[graft.queries.TextAnalysis.langidOn]].
-  *   - `TABLE(MEDIA_FEATURES(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(media)))` → `(id, fmt, ok, width, height, n_px,
-  *     r_sum, g_sum, b_sum)`: REAL image decode of a BINARY payload
-  *     column — [[graft.multimodal.MediaOps.imageFeatures]]. Stateless
-  *     per-row, so streaming relations route unchanged (decode at
-  *     ingest).
-  *   - `TABLE(MEDIA_VIDEO_FRAMES(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(media)[, <k>]))` → `(id, n_frames, frame_idx, ok,
-  *     width, height, r_sum, g_sum, b_sum)`: GFV1 video containers,
-  *     k uniform-stride frames seek-decoded per clip (default 3) —
-  *     [[graft.multimodal.MediaOps.videoFrameFeatures]]. Stateless
-  *     per-row like MEDIA_FEATURES.
-  *   - `TABLE(MEDIA_AUDIO(TABLE t, DESCRIPTOR(id), DESCRIPTOR(media)))`
-  *     → `(id, fmt, ok, channels, rate, frames, ch0_sum, ch1_sum,
-  *     peak)`: REAL WAV/PCM decode of a BINARY payload column —
-  *     [[graft.multimodal.MediaOps.audioFeatures]]. Stateless per-row
-  *     like MEDIA_FEATURES (streaming routes unchanged).
-  *   - `TABLE(MEDIA_RESIZE(TABLE t, DESCRIPTOR(id), DESCRIPTOR(media)
-  *     [, <factor>]))` → `(id, width, height, r_sum, g_sum, b_sum)`:
-  *     REAL decode + nearest-neighbor ÷factor downscale (default 2),
-  *     features of the RESIZED image —
-  *     [[graft.multimodal.MediaOps.resizeFeatures]]. Stateless per-row.
-  *   - `TABLE(DEDUP_PHASH_PAIRS(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(media)[, <maxHamming>]))` → `(id_a, id_b, hamming)`:
-  *     perceptual near-duplicate image pairs — REAL decode → 64-bit
-  *     dHash ([[graft.multimodal.MediaOps.dhashFeatures]]) → banded
-  *     hamming blocking + exact verify (default radius 3, the
-  *     pigeonhole-lossless bound) — [[graft.queries.Dedup.phashPairs]].
-  *     Whole-relation self-join: streaming rejected loudly.
-  *   - `TABLE(VIDEO_PHASH_PAIRS(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(media)[, <k>, <maxHamming>, <minMatches>]))` →
-  *     `(id_a, id_b, n_matched)`: video perceptual near-dup — sample
-  *     k frames per clip, dHash each, pair clips when ≥ minMatches
-  *     position-aligned frame hashes land within the radius (defaults
-  *     3, 3, 2) — [[graft.queries.Dedup.videoPhashPairs]].
-  *     Whole-relation self-join: streaming rejected loudly.
-  *   - `TABLE(DEDUP_PHASH_CROSS(TABLE incoming, TABLE corpus,
-  *     DESCRIPTOR(id), DESCRIPTOR(media)[, <maxHamming>]))` → same
-  *     columns (id_a = incoming, id_b = corpus): every cross pair
-  *     within the radius — the corpus freezes its banded hash index
-  *     once per version; the incoming side may STREAM (image near-dup
-  *     screening at ingest, stateless) —
-  *     [[graft.queries.Dedup.phashCrossPairs]].
-  *   - `TABLE(EMBED_ABTT(TABLE t, DESCRIPTOR(id), DESCRIPTOR(vec)
-  *     [, <rounds>]))` → `(vec_id, proj, residual)`: all-but-the-top
-  *     embedding cleanup (mean-center + dominant-direction removal,
-  *     integer-exact power-iteration fit, default 2 rounds) —
-  *     [[graft.queries.Similarity.allButTop]]. Whole-relation:
-  *     streaming rejected loudly.
-  *   - `TABLE(PAGERANK(TABLE edges, DESCRIPTOR(src), DESCRIPTOR(dst)
-  *     [, <iters>]))` → `(node, rank)`: scaled-integer PageRank power
-  *     iteration over the edge relation (domain-authority scoring) —
-  *     [[graft.operators.PageRank]] (default 3 rounds).
-  *   - `TABLE(FUZZY_JOIN(TABLE t, DESCRIPTOR(id), DESCRIPTOR(name)
-  *     [, <k>]))` → `(ida, idb, dist)`: all pairs within edit distance
-  *     k (default 1) via deletion-neighborhood blocking —
-  *     [[graft.queries.Joins.fuzzySelfJoin]].
-  *   - `TABLE(FUZZY_JOIN_CROSS(TABLE incoming, TABLE corpus,
-  *     DESCRIPTOR(id), DESCRIPTOR(name)[, <k>]))` → `(ida, idb,
-  *     dist)`: every (incoming, corpus) pair within edit distance k —
-  *     [[graft.queries.Joins.fuzzyCrossJoin]]. The incoming side may
-  *     STREAM (entity resolution at ingest): the corpus variant index
-  *     freezes once, each arriving row probes it statelessly; the
-  *     corpus must be bounded either way.
-  *   - `TABLE(DEDUP_EMBED_PAIRS(TABLE incoming, TABLE corpus,
-  *     DESCRIPTOR(id), DESCRIPTOR(vec)[, <threshold>[, <cells>]]))` →
-  *     `(ida, idb, cosine)`: cross-corpus SEMANTIC dedup — every
-  *     (incoming, corpus) pair sharing a centroid cell with cosine ≥
-  *     threshold (default 0.35) — [[graft.queries.Dedup
-  *     .embedCrossPairs]]. With a trailing `cells` count the corpus
-  *     FITS that many centroids (stride seeds + one Lloyd round,
-  *     [[graft.queries.Dedup.embedCrossPairsSized]]) — the measured
-  *     production sizing (√n cells keep the per-row scan √n); without
-  *     it, the fixed 16-cell deterministic window. The incoming side
-  *     may STREAM (embedding dedup at ingest): the corpus freezes its
-  *     cell index once, each arriving row assigns row-locally and
-  *     scans one cell; the corpus must be bounded either way.
-  *   - `TABLE(TEXT_KEYWORDS(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(text)[, <k>]))` → `(doc_id, term, weight, rank)`:
-  *     the k most corpus-distinctive terms per document by log-free
-  *     rational TF-IDF (default 3) —
-  *     [[graft.queries.Search.keywordsTfidf]]. Whole-relation (corpus
-  *     document frequencies): streaming rejected loudly.
-  *   - `TABLE(TEXT_SEARCH_BM25(TABLE queries, TABLE corpus,
-  *     DESCRIPTOR(qid), DESCRIPTOR(qtext), DESCRIPTOR(id),
-  *     DESCRIPTOR(text)[, <k>[, <dfCap>]]))` → `(qid, doc_id, score,
-  *     rank)`: BM25 top-k full-text retrieval (log-free rational idf,
-  *     k default 10; dfCap drops stop-grade terms with df > cap from
-  *     scoring — default uncapped) —
-  *     [[graft.queries.Search.bm25TopK]]. The QUERY side may stream
-  *     (contamination-lookup-at-ingest: frozen per-term posting index,
-  *     row-local scoring — [[graft.queries.Search.bm25TopKStream]]);
-  *     the corpus must be bounded either way, rejected loudly
-  *     otherwise.
-  *   - `TABLE(CONNECTED_COMPONENTS(TABLE edges, DESCRIPTOR(a),
-  *     DESCRIPTOR(b)))` → `(node, cluster, is_keeper)`: undirected
-  *     connected components by min-label propagation —
-  *     [[graft.queries.Dedup.connectedComponents]].
-  *   - `TABLE(DEDUP_JACCARD_PAIRS(TABLE t, DESCRIPTOR(id),
-  *     DESCRIPTOR(text)[, <thetaNum>, <thetaDen>]))` → `(ida, idb,
-  *     jacc)`: EXACT threshold Jaccard self-join over distinct 3-word
-  *     shingles via prefix filtering (theta default 3/5) —
-  *     [[graft.queries.Dedup.jaccardJoin]]. Whole-relation (global
-  *     token-frequency order): streaming rejected loudly.
-  *   - `TABLE(DEDUP_JACCARD_CROSS(TABLE incoming, TABLE corpus,
-  *     DESCRIPTOR(id), DESCRIPTOR(text)[, <thetaNum>, <thetaDen>]))`
-  *     → `(ida, idb, jacc)`: exact cross-corpus threshold Jaccard —
-  *     [[graft.queries.Dedup.jaccardJoinCross]]. The incoming side may
-  *     STREAM (frozen corpus prefix index, stateless row-local pair
-  *     dedup — [[graft.queries.Dedup.jaccardJoinCrossStream]]); the
-  *     corpus must be bounded either way.
-  *   - `TABLE(HEAVY_HITTERS(TABLE t, DESCRIPTOR(key), <k>
-  *     [, <capacity>]))` → `(key, cnt)`: the k exactly-heaviest keys —
-  *     bounded-state Misra-Gries candidate nomination, exact
-  *     candidate-only count, provable-exactness check with an honest
-  *     full fallback — [[graft.operators.HeavyHitters.exactTopK]].
-  *     Whole-relation: streaming rejected loudly (the library's
-  *     q_stream_heavy covers the streaming sketch route).
-  *   - `TABLE(PROFILE(TABLE t))` → `(col, n_rows, n_notnull, ndv,
-  *     min_s, max_s)`: schema-driven one-scan ANALYZE —
-  *     [[graft.operators.TableProfile.profile]]. Whole-relation.
-  *   - `TABLE(TEXT_BPE_MERGES(TABLE t, DESCRIPTOR(text)[, <rounds>]))`
-  *     → `(round, a, b, freq)`: BPE-style pair-merge trainer (default
-  *     4 rounds) — [[graft.queries.TextAnalysis.bpeMerges]].
-  *     Whole-relation iterative loop: streaming rejected loudly.
-  *   - `TABLE(TOKENIZE(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text)
-  *     [, <rounds>]))` → `(id, n_tokens, encoded)`: BPE fit-then-encode
-  *     — train the merge table on the relation, then encode every row
-  *     with it (token counts in real tokenizer units) —
-  *     [[graft.queries.TextAnalysis.bpeFitEncode]]. Whole-relation fit:
-  *     streaming rejected loudly.
-  *   - `TABLE(TOKENIZE(TABLE incoming, TABLE corpus, DESCRIPTOR(id),
-  *     DESCRIPTOR(text)[, <rounds>]))` → same columns, the
-  *     fit/transform split: merges train ONCE on the bounded corpus
-  *     (frozen per corpus version) and encode the incoming side, which
-  *     may STREAM — tokenize-at-ingest, stateless —
-  *     [[graft.queries.TextAnalysis.bpeEncodeWith]].
+  * Every TVF is one entry of [[Registry]]: its TABLE and DESCRIPTOR
+  * arguments, the trailing literals it accepts (type, default, and the
+  * counts it takes), the one TABLE seat that may be a streaming source,
+  * and the kernel it runs. The call parser, [[present]],
+  * [[sourceTables]], [[validateOnly]], [[rewriteTracking]], the
+  * malformed-call usage text and the streaming-rejection text are all
+  * read off that table, so adding a TVF takes one entry. Keywords are
+  * found through [[SqlLexer]]: a TVF name inside a string literal or a
+  * comment is data and is never rewritten or executed.
   *
-  * Same execution shape as [[MatchRecognizeRewrite]]: the operator runs
+  * Same execution shape as [[MatchRecognizeRewrite]]: the kernel runs
   * over `spark.table(src)`, the result registers as a tracked temp view
   * (dropped by ScriptRunner once the consuming statement is analyzed),
-  * and the view name splices into the statement text.
+  * and the view name replaces the `TABLE(F(…))` call in the statement.
   *
-  * Streaming sources: `DEDUP_EXACT` is the one operator here with
-  * well-defined incremental semantics, so on a STREAMING relation it
-  * routes to keyed first-arrival deduplication — Flink SQL's
-  * "Deduplication" pattern (`ROW_NUMBER() OVER (PARTITION BY key ORDER
-  * BY proctime) = 1`), Spark-native as streaming `dropDuplicates` over
-  * the descriptor columns, append mode. The emitted relation is the
-  * descriptor columns themselves (which PHYSICAL row arrives first is
+  * Streaming sources: a TVF whose entry names a streaming seat routes a
+  * streaming relation in that seat incrementally — `DEDUP_EXACT` as
+  * keyed first-arrival deduplication (Flink SQL's "Deduplication"
+  * pattern, Spark-native as streaming `dropDuplicates` over the
+  * descriptor columns, append mode: which PHYSICAL row arrives first is
   * racy under a parallel source, but the emitted KEY SET is
-  * deterministic and converges to batch `DISTINCT`); state holds one
-  * entry per key — bound it on unbounded corpora by watermarking the
-  * source and including the event-time column in the descriptors, or
-  * via `dropDuplicatesWithinWatermark` in the Scala API (StreamingSpec
-  * covers watermarked eviction). `TEXT_QUALITY` and `LANG_ID` are
-  * stateless per-row maps (a single select, no aggregation/join), so a
-  * streaming relation routes through the identical column expressions
-  * in append mode with zero state. `DEDUP_CROSS_PAIRS` streams its
-  * INCOMING side (the production crawl-shard cadence) against a frozen
-  * BOUNDED corpus —
-  * [[graft.queries.Dedup.minhashCrossPairsStream]]: a stateless
-  * stream-static band join against a once-materialized corpus index; a
-  * streaming corpus is rejected loudly (declare it with
-  * `'source.bounded' = 'true'`). Every OTHER operator aggregates or
-  * joins over the whole relation with no incremental contract, so a
-  * streaming source is rejected loudly by the `table()` guard rather
-  * than silently re-windowed.
+  * deterministic and converges to batch `DISTINCT`; bound its state by
+  * watermarking the source and including the event-time column in the
+  * descriptors), the stateless per-row maps (text quality, language id,
+  * media decodes) through the same column expressions with zero state,
+  * and the cross-corpus TVFs by probing an index frozen once from the
+  * BOUNDED other side, which their kernels check loudly. Every other
+  * seat aggregates or joins over the whole relation with no incremental
+  * contract, so a streaming source there is rejected loudly rather than
+  * silently re-windowed.
   */
 object GraftTvfRewrite {
 
-  private val Keyword =
-    """(?i)\b(?:DEDUP_(?:EXACT|MINHASH_PAIRS|SIMHASH_PAIRS|CROSS_PAIRS|EMBED_PAIRS|JACCARD_PAIRS|JACCARD_CROSS|PHASH_PAIRS|PHASH_CROSS)|VIDEO_PHASH_PAIRS|ANN_TOPK(?:_LSH|_IVFPQ)?|TEXT_QUALITY|TEXT_SEARCH_BM25|TEXT_KEYWORDS|LANG_ID|PAGERANK|FUZZY_JOIN(?:_CROSS)?|CONNECTED_COMPONENTS|MEDIA_FEATURES|MEDIA_VIDEO_FRAMES|MEDIA_AUDIO|MEDIA_RESIZE|EMBED_ABTT|HEAVY_HITTERS|PROFILE|TEXT_BPE_MERGES|TOKENIZE)\s*\(""".r
+  /** A trailing literal slot: integer-only (`0.5` is rejected) or
+    * decimal, and the value used when the call omits it (None: the
+    * kernel sizes it).
+    */
+  private[sqlgate] final case class Lit(name: String, int: Boolean,
+      default: Option[String])
+  private def int(name: String): Lit = Lit(name, int = true, None)
+  private def int(name: String, default: Int): Lit =
+    Lit(name, int = true, Some(default.toString))
+  private def num(name: String, default: Double): Lit =
+    Lit(name, int = false, Some(default.toString))
+
+  /** One parsed call handed to a kernel builder: the relations of its
+    * TABLE arguments, its DESCRIPTOR columns (backticks stripped) and
+    * its trailing literals with defaults filled in.
+    */
+  private[sqlgate] final case class Call(spark: SparkSession, tvf: Tvf,
+      t: Seq[DataFrame], d: Seq[String], lit: Seq[Option[String]]) {
+    def int(i: Int): Int = lit(i).get.toInt
+    def num(i: Int): Double = lit(i).get.toDouble
+    def opt(i: Int): Option[Int] = lit(i).map(_.toInt)
+  }
+
+  /** A TVF signature. `counts` lists the accepted numbers of trailing
+    * literals (default: any prefix of `lits`); `stream` is the index of
+    * the TABLE argument that may be a streaming source.
+    */
+  private[sqlgate] final case class Tvf(name: String, tables: Seq[String],
+      descriptors: Seq[String], lits: Seq[Lit] = Nil, counts: Seq[Int] = Nil,
+      stream: Option[Int] = None)(val build: Call => DataFrame) {
+    def arities: Seq[Int] = if (counts.nonEmpty) counts else 0 to lits.size
+    def usage: String = {
+      val cs = arities.sorted
+      val optional = cs.zip(cs.tail).map { case (a, b) =>
+        "[" + lits.slice(a, b).map(", " + _.name).mkString }
+      val args = tables.map("TABLE " + _) ++
+        descriptors.map(d => s"DESCRIPTOR($d)")
+      s"TABLE($name(${args.mkString(", ")}" +
+        lits.take(cs.head).map(", " + _.name).mkString +
+        optional.mkString + "]" * optional.size + "))"
+    }
+  }
+
+  /** `(id, media)` relation for the media kernels. The id descriptor is
+    * checked BEFORE the widening cast: a silent cast("long") would turn a
+    * string/decimal/NULL id into an opaque encoder error deep inside the
+    * kernel.
+    */
+  private def media(c: Call, df: DataFrame): DataFrame = {
+    val idType = df.schema.fields
+      .find(f => c.spark.sessionState.conf.resolver(f.name, c.d(0)))
+      .map(_.dataType)
+    import org.apache.spark.sql.types._
+    require(idType.exists(Seq(LongType, IntegerType, ShortType, ByteType)
+      .contains(_)),
+      s"media TVFs: id column '${c.d(0)}' must be an integer type " +
+        "(BIGINT/INT/SMALLINT/TINYINT); got " +
+        s"${idType.map(_.sql).getOrElse("no such column")}. Usage: " +
+        c.tvf.usage)
+    df.select(col(c.d(0)).cast("long").as("id"), col(c.d(1)).as("media"))
+  }
+
+  private val Text = Seq("id", "text")
+  private val Media = Seq("id", "media")
+  private val Vector = Seq("id", "vec")
+  private val Cross = Seq("incoming", "corpus")
+  private val Ann = Seq("corpus", "queries")
+  private val One = Seq("t")
+
+  /** Every graft TVF. Output columns and the kernel's own doc are on the
+    * kernel each entry names.
+    */
+  private[sqlgate] val Registry: Seq[Tvf] = Seq(
+    // (keep_id, n_copies): one survivor (min id) per identical text; a
+    // stream routes to keyed first-arrival dedup (see the object doc)
+    Tvf("DEDUP_EXACT", One, Text, stream = Some(0)) { c =>
+      if (c.t(0).isStreaming) c.t(0).select(c.d.map(col): _*).dropDuplicates(c.d)
+      else Dedup.exactGroups(c.t(0), c.d(0), c.d(1))
+    },
+    // (ida, idb, jacc): verified near-dup pairs via MinHash+LSH
+    Tvf("DEDUP_MINHASH_PAIRS", One, Text, Seq(num("threshold", 0.8)))(c =>
+      Dedup.minhashVerifiedPairs(c.t(0), c.d(0), c.d(1), c.num(0))),
+    // (ida, idb, hamming): hamming ≤ 3 pairs via SimHash chunk blocking;
+    // the chunk width defaults to one sized from the row count
+    Tvf("DEDUP_SIMHASH_PAIRS", One, Text, Seq(int("chunkWidth")))(c =>
+      Dedup.simhashVerifiedPairs(c.t(0), c.d(0), c.d(1), c.opt(0)
+        .getOrElse(Dedup.simhashChunkWidth(c.t(0).count())))),
+    // (ida, idb, jacc): incoming × corpus near-dup pairs, never corpus²
+    Tvf("DEDUP_CROSS_PAIRS", Cross, Text, Seq(num("threshold", 0.8)),
+        stream = Some(0)) { c =>
+      if (c.t(0).isStreaming) Dedup.minhashCrossPairsStream(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.num(0))
+      else Dedup.minhashCrossPairs(c.t(0), c.t(1), c.d(0), c.d(1), c.num(0))
+    },
+    // (ida, idb, cosine): semantic dedup within shared centroid cells;
+    // with `cells` the corpus fits that many centroids (the √n production
+    // sizing), without it the fixed 16-cell deterministic window
+    Tvf("DEDUP_EMBED_PAIRS", Cross, Vector,
+        Seq(num("threshold", 0.35), int("cells")), stream = Some(0)) { c =>
+      c.opt(1).fold(Dedup.embedCrossPairs(c.t(0), c.t(1), c.d(0), c.d(1),
+        c.num(0)))(cells => Dedup.embedCrossPairsSized(c.t(0), c.t(1),
+        c.d(0), c.d(1), cells, c.num(0)))
+    },
+    // (ida, idb, jacc): exact threshold Jaccard self-join over 3-word
+    // shingles via prefix filtering, theta = thetaNum / thetaDen
+    Tvf("DEDUP_JACCARD_PAIRS", One, Text,
+        Seq(int("thetaNum", 3), int("thetaDen", 5)), Seq(0, 2))(c =>
+      Dedup.jaccardJoin(Dedup.jaccardSets(c.t(0), c.d(0), c.d(1),
+        shingleN = 3), c.int(0), c.int(1))),
+    // (ida, idb, jacc): exact cross-corpus threshold Jaccard
+    Tvf("DEDUP_JACCARD_CROSS", Cross, Text,
+        Seq(int("thetaNum", 3), int("thetaDen", 5)), Seq(0, 2),
+        stream = Some(0)) { c =>
+      if (c.t(0).isStreaming) Dedup.jaccardJoinCrossStream(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.int(0), c.int(1))
+      else Dedup.jaccardJoinCross(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.int(0), c.int(1))
+    },
+    // (id_a, id_b, hamming): perceptual near-dup images (64-bit dHash,
+    // banded blocking + exact verify)
+    Tvf("DEDUP_PHASH_PAIRS", One, Media, Seq(int("maxHamming", 3)))(c =>
+      Dedup.phashPairs(MediaOps.dhashFeatures(media(c, c.t(0))), c.int(0))),
+    // (id_a, id_b, hamming): incoming × corpus image pairs within radius
+    Tvf("DEDUP_PHASH_CROSS", Cross, Media, Seq(int("maxHamming", 3)),
+        stream = Some(0))(c =>
+      Dedup.phashCrossPairs(c.t(0), c.t(1), c.d(0), c.d(1), c.int(0))),
+    // (id_a, id_b, n_matched): clips with ≥ minMatches position-aligned
+    // frame hashes within the radius, over k sampled frames
+    Tvf("VIDEO_PHASH_PAIRS", One, Media, Seq(int("k", 3),
+        int("maxHamming", 3), int("minMatches", 2)), Seq(0, 3))(c =>
+      Dedup.videoPhashPairs(media(c, c.t(0)), "id", "media", c.int(0),
+        c.int(1), c.int(2))),
+    // (qid, nid, cosine, rank): exact cosine top-k per query row
+    Tvf("ANN_TOPK", Ann, Vector, Seq(int("k", 5)))(c =>
+      Similarity.annTopkOn(c.t(0), c.t(1), c.d(0), c.d(1), c.int(0))),
+    // same columns; candidates are hyperplane-bucket mates only
+    Tvf("ANN_TOPK_LSH", Ann, Vector,
+        Seq(int("k", 5), int("planes", Similarity.NPlanes)),
+        stream = Some(1)) { c =>
+      if (c.t(1).isStreaming) Similarity.annLshTopkStream(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.int(0), c.int(1))
+      else Similarity.annLshTopkOn(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.int(0), c.int(1))
+    },
+    // same columns; IVF cells + PQ codes + exact re-rank, the quantizer
+    // FITTED at `cells` when given, else the deterministic seed windows
+    Tvf("ANN_TOPK_IVFPQ", Ann, Vector, Seq(int("nProbe", 4), int("cells")),
+        stream = Some(1)) { c =>
+      if (c.t(1).isStreaming) Similarity.ivfPqTopkStream(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.int(0), cells = c.opt(1))
+      else Similarity.ivfPqTopkOn(
+        c.t(0), c.t(1), c.d(0), c.d(1), c.int(0), cells = c.opt(1))
+    },
+    // (vec_id, proj, residual): all-but-the-top embedding cleanup
+    Tvf("EMBED_ABTT", One, Vector, Seq(int("rounds", 2)))(c =>
+      Similarity.allButTop(c.t(0), c.d(0), c.d(1), c.int(0))),
+    // (id, mean_tok_len, stop_ratio, digit_ratio, quality_score)
+    Tvf("TEXT_QUALITY", One, Text, stream = Some(0))(c =>
+      TextAnalysis.qualityOn(c.t(0), c.d(0), c.d(1))),
+    // (id, predicted)
+    Tvf("LANG_ID", One, Text, stream = Some(0))(c =>
+      TextAnalysis.langidOn(c.t(0), c.d(0), c.d(1))),
+    // (doc_id, term, weight, rank): the k most distinctive terms per
+    // document by log-free rational TF-IDF
+    Tvf("TEXT_KEYWORDS", One, Text, Seq(int("k", 3)))(c =>
+      Search.keywordsTfidf(c.t(0), c.d(0), c.d(1), c.int(0))),
+    // (qid, doc_id, score, rank): BM25 top-k; dfCap drops stop-grade
+    // terms (df > cap) from scoring
+    Tvf("TEXT_SEARCH_BM25", Seq("queries", "corpus"),
+        Seq("qid", "qtext", "id", "text"), Seq(int("k", 10), int("dfCap")),
+        stream = Some(0)) { c =>
+      val dfCap = c.lit(1).map(_.toLong)
+      if (c.t(0).isStreaming) Search.bm25TopKStream(c.t(0), c.t(1),
+        c.d(0), c.d(1), c.d(2), c.d(3), c.int(0), dfCap)
+      else Search.bm25TopK(c.t(0), c.t(1),
+        c.d(0), c.d(1), c.d(2), c.d(3), c.int(0), dfCap)
+    },
+    // (round, a, b, freq): BPE pair-merge trainer
+    Tvf("TEXT_BPE_MERGES", One, Seq("text"),
+        Seq(int("rounds", TextAnalysis.BpeRounds)))(c =>
+      TextAnalysis.bpeMerges(c.t(0), c.d(0), c.int(0))),
+    // (id, n_tokens, encoded): BPE fit on the relation, then encode it
+    Tvf("TOKENIZE", One, Text, Seq(int("rounds", TextAnalysis.BpeRounds)))(c =>
+      TextAnalysis.bpeFitEncode(c.t(0), c.d(0), c.d(1), c.int(0))),
+    // same columns: fit once on the bounded corpus, encode incoming
+    Tvf("TOKENIZE", Cross, Text, Seq(int("rounds", TextAnalysis.BpeRounds)),
+        stream = Some(0))(c =>
+      TextAnalysis.bpeEncodeWith(c.t(0), c.t(1), c.d(0), c.d(1), c.int(0))),
+    // (id, fmt, ok, width, height, n_px, r_sum, g_sum, b_sum): image decode
+    Tvf("MEDIA_FEATURES", One, Media, stream = Some(0))(c =>
+      MediaOps.imageFeatures(media(c, c.t(0))).toDF()),
+    // (id, n_frames, frame_idx, ok, width, height, r_sum, g_sum, b_sum):
+    // k uniform-stride frames per clip
+    Tvf("MEDIA_VIDEO_FRAMES", One, Media, Seq(int("k", 3)),
+        stream = Some(0))(c =>
+      MediaOps.videoFrameFeatures(media(c, c.t(0)), c.int(0)).toDF()),
+    // (id, fmt, ok, channels, rate, frames, ch0_sum, ch1_sum, peak)
+    Tvf("MEDIA_AUDIO", One, Media, stream = Some(0))(c =>
+      MediaOps.audioFeatures(media(c, c.t(0))).toDF()),
+    // (id, width, height, r_sum, g_sum, b_sum) of the ÷factor downscale
+    Tvf("MEDIA_RESIZE", One, Media, Seq(int("factor", 2)),
+        stream = Some(0))(c =>
+      MediaOps.resizeFeatures(media(c, c.t(0)), c.int(0)).toDF()),
+    // (node, rank): scaled-integer PageRank over the edge relation
+    Tvf("PAGERANK", Seq("edges"), Seq("src", "dst"), Seq(int("iters", 3)))(c =>
+      PageRank(c.t(0).select(col(c.d(0)).as("src"), col(c.d(1)).as("dst")),
+        c.int(0))),
+    // (node, cluster, is_keeper): undirected connected components
+    Tvf("CONNECTED_COMPONENTS", Seq("edges"), Seq("a", "b"))(c =>
+      Dedup.connectedComponents(c.t(0).select(c.d.map(col): _*))
+        .withColumnRenamed("doc_id", "node")),
+    // (ida, idb, dist): all pairs within edit distance k
+    Tvf("FUZZY_JOIN", One, Seq("id", "name"), Seq(int("k", 1)))(c =>
+      Joins.fuzzySelfJoin(c.t(0).select(col(c.d(0)).as("id"),
+        col(c.d(1)).as("name")), c.int(0)).select("ida", "idb", "dist")),
+    // (ida, idb, dist): every incoming × corpus pair within distance k
+    Tvf("FUZZY_JOIN_CROSS", Cross, Seq("id", "name"), Seq(int("k", 1)),
+        stream = Some(0)) { c =>
+      val Seq(in, corpus) = c.t.map(_.select(col(c.d(0)).as("id"),
+        col(c.d(1)).as("name")))
+      Joins.fuzzyCrossJoin(in, corpus, c.int(0))
+    },
+    // (key, cnt): the k exactly-heaviest keys; k is required
+    Tvf("HEAVY_HITTERS", One, Seq("key"), Seq(int("k"), int("capacity")),
+        Seq(1, 2)) { c =>
+      val k = c.int(0)
+      HeavyHitters.exactTopK(c.t(0).select(col(c.d(0)).as("key")), "key", k,
+        c.opt(1).getOrElse(math.max(256, 4 * k)))
+    },
+    // (col, n_rows, n_notnull, ndv, min_s, max_s): one-scan ANALYZE
+    Tvf("PROFILE", One, Nil)(c => TableProfile.profile(c.t(0))))
+
+  private val byName = Registry.groupBy(_.name)
   private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val Head =
-    """(?i)\bTABLE\s*\(\s*%s\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*"""
-  private val ExactRe = (Head.format("DEDUP_EXACT") + """\)\s*\)""").r
-  private val MinhashRe =
-    (Head.format("DEDUP_MINHASH_PAIRS") + """(?:,\s*([0-9.]+)\s*)?\)\s*\)""").r
-  private val SimhashRe =
-    (Head.format("DEDUP_SIMHASH_PAIRS") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  private val QualityRe = (Head.format("TEXT_QUALITY") + """\)\s*\)""").r
-  // TF-IDF keyword extraction: whole-relation (corpus df/N stats),
-  // optional per-doc k
-  private val KeywordsRe =
-    (Head.format("TEXT_KEYWORDS") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  private val LangIdRe = (Head.format("LANG_ID") + """\)\s*\)""").r
-  // whole-relation iterative graph score: optional round count
-  private val PageRankRe =
-    (Head.format("PAGERANK") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // deletion-neighborhood edit-distance self-join: optional k (1 or 2)
-  private val FuzzyRe =
-    (Head.format("FUZZY_JOIN") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // cross-corpus fuzzy match: TWO tables (incoming, corpus); the
-  // incoming side may stream (frozen corpus variant index)
-  private val FuzzyCrossRe =
-    ("""(?i)\bTABLE\s*\(\s*FUZZY_JOIN_CROSS\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // undirected connected components over an edge relation
-  private val CcRe = (Head.format("CONNECTED_COMPONENTS") + """\)\s*\)""").r
-  // ANN takes TWO table args (corpus, queries) before the descriptors
-  private val AnnRe =
-    ("""(?i)\bTABLE\s*\(\s*ANN_TOPK\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // bucketed variant: optional trailing k and hyperplane count
-  private val AnnLshRe =
-    ("""(?i)\bTABLE\s*\(\s*ANN_TOPK_LSH\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*""" +
-      """(?:,\s*(\d+)\s*(?:,\s*(\d+)\s*)?)?\)\s*\)""").r
-  // composed IVF+PQ tier: optional trailing nProbe; query side may
-  // stream (frozen-index probe), corpus must be bounded
-  private val AnnIvfPqRe =
-    ("""(?i)\bTABLE\s*\(\s*ANN_TOPK_IVFPQ\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*""" +
-      """(?:,\s*(\d+)\s*(?:,\s*(\d+)\s*)?)?\)\s*\)""").r
-  // cross-corpus dedup takes TWO table args (incoming, corpus)
-  private val CrossRe =
-    ("""(?i)\bTABLE\s*\(\s*DEDUP_CROSS_PAIRS\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*([0-9.]+)\s*)?\)\s*\)""").r
-  // cross-corpus SEMANTIC dedup: TWO tables (incoming, corpus); the
-  // incoming side may stream (frozen corpus cell index)
-  private val EmbedCrossRe =
-    ("""(?i)\bTABLE\s*\(\s*DEDUP_EMBED_PAIRS\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*""" +
-      """(?:,\s*([0-9.]+)\s*(?:,\s*(\d+)\s*)?)?\)\s*\)""").r
-  // BM25 full-text top-k: TWO tables (queries, corpus), FOUR
-  // descriptors (qid, qtext, id, text); whole-relation (posting index
-  // + per-query score agg), so both sides must be bounded
-  private val Bm25Re =
-    ("""(?i)\bTABLE\s*\(\s*TEXT_SEARCH_BM25\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*(\d+)\s*(?:,\s*(\d+)\s*)?)?\)\s*\)""").r
+  private val Keyword = ("""(?i)(\bTABLE\s*\(\s*)?\b(""" +
+    byName.keys.mkString("|") + """)\s*\(""").r
+  private val TableArg = """(?i)TABLE\s+([`\w.]+)""".r
+  private val DescriptorArg = """(?i)DESCRIPTOR\s*\(\s*([`\w]+)\s*\)""".r
+  private val IntLit = """\d+""".r
+  private val NumLit = """[0-9.]+""".r
 
-  // stateless per-row media decode (id + BINARY payload); optional k =
-  // frames sampled per clip for the video form
-  private val MediaFeaturesRe =
-    (Head.format("MEDIA_FEATURES") + """\)\s*\)""").r
-  private val MediaVideoRe =
-    (Head.format("MEDIA_VIDEO_FRAMES") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // stateless per-row WAV/PCM decode (same contract as MEDIA_FEATURES)
-  private val MediaAudioRe =
-    (Head.format("MEDIA_AUDIO") + """\)\s*\)""").r
-  // stateless per-row decode + nearest-neighbor ÷factor downscale;
-  // optional integer factor (default 2)
-  private val MediaResizeRe =
-    (Head.format("MEDIA_RESIZE") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // cross-corpus pHash dedup: TWO tables (incoming, corpus) — the
-  // corpus freezes its banded hash index, the incoming side may STREAM
-  // (stateless decode + hash + band probe); optional maxHamming
-  private val PhashCrossRe =
-    ("""(?i)\bTABLE\s*\(\s*DEDUP_PHASH_CROSS\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // perceptual-hash near-dup pairs: whole-relation banded self-join
-  // over per-image dHashes; optional maxHamming (default 3)
-  private val PhashRe =
-    (Head.format("DEDUP_PHASH_PAIRS") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // video perceptual near-dup: sample k frames per clip, dHash each,
-  // pair clips on a position-aligned majority vote; optional
-  // (k, maxHamming, minMatches), default (3, 3, 2)
-  private val VideoPhashRe =
-    (Head.format("VIDEO_PHASH_PAIRS") +
-      """(?:,\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*)?\)\s*\)""").r
-  // whole-relation embedding cleanup (corpus mean + power-iteration
-  // fit): optional round count
-  private val AbttRe =
-    (Head.format("EMBED_ABTT") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // exact prefix-filtered threshold Jaccard self-join (whole-relation:
-  // global token-frequency ordering); optional thetaNum, thetaDen
-  private val JaccardPairsRe =
-    (Head.format("DEDUP_JACCARD_PAIRS") +
-      """(?:,\s*(\d+)\s*,\s*(\d+)\s*)?\)\s*\)""").r
-  // exact heavy hitters: ONE descriptor (the key) + required k +
-  // optional sketch capacity; whole-relation (sketch + verify passes)
-  private val HeavyRe =
-    ("""(?i)\bTABLE\s*\(\s*HEAVY_HITTERS\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*(\d+)\s*""" +
-      """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // schema-driven one-scan ANALYZE: no descriptors, the whole relation
-  private val ProfileRe =
-    """(?i)\bTABLE\s*\(\s*PROFILE\s*\(\s*TABLE\s+([`\w.]+)\s*\)\s*\)""".r
-  // BPE pair-merge trainer: ONE descriptor (the text) + optional rounds;
-  // whole-relation iterative loop (driver-coordinated argmax per round)
-  private val BpeRe =
-    ("""(?i)\bTABLE\s*\(\s*TEXT_BPE_MERGES\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // cross-corpus tokenizer: TWO tables (incoming, corpus) — the merge
-  // table trains on the bounded corpus (frozen per version), the
-  // incoming side may STREAM (encode is a stateless K-replace chain)
-  private val TokenizeCrossRe =
-    ("""(?i)\bTABLE\s*\(\s*TOKENIZE\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // BPE fit-then-encode tokenizer: ONE descriptor pair (id, text) +
-  // optional rounds; whole-relation (the fit is K corpus scans)
-  private val TokenizeRe =
-    (Head.format("TOKENIZE") + """(?:,\s*(\d+)\s*)?\)\s*\)""").r
-  // cross-corpus exact Jaccard: TWO tables (incoming, corpus); the
-  // incoming side may stream (frozen corpus prefix index)
-  private val JaccardCrossRe =
-    ("""(?i)\bTABLE\s*\(\s*DEDUP_JACCARD_CROSS\s*\(\s*TABLE\s+([`\w.]+)\s*,\s*""" +
-      """TABLE\s+([`\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*,\s*""" +
-      """DESCRIPTOR\s*\(\s*([`\w]+)\s*\)\s*""" +
-      """(?:,\s*(\d+)\s*,\s*(\d+)\s*)?\)\s*\)""").r
+  /** A well-formed call `TABLE(NAME(…))` spanning `[start, end)`. */
+  private final case class Site(start: Int, end: Int, tvf: Tvf,
+      tables: Seq[String], descriptors: Seq[String], lits: Seq[String])
 
-  private def allRes = Seq(ExactRe, MinhashRe, SimhashRe, QualityRe,
-    KeywordsRe, LangIdRe, PageRankRe, FuzzyRe, CcRe, MediaFeaturesRe,
-    MediaVideoRe, MediaAudioRe, MediaResizeRe, PhashRe, VideoPhashRe, AbttRe,
-    JaccardPairsRe, HeavyRe, ProfileRe, BpeRe, TokenizeRe)
+  /** Every TVF keyword in code, left to right: the call it opens, or
+    * the keyword text when the call fits no entry of that name.
+    */
+  private def sites(sql: String): Seq[Either[String, Site]] =
+    SqlLexer.findAll(sql, Keyword).map { m =>
+      val open = m.end - 1
+      val close = SqlLexer.closeParen(sql, open)
+      val end = if (close < 0) -1 else sql.indexWhere(!_.isWhitespace, close + 1)
+      val site = for {
+        _ <- Option(m.group(1))
+        if end >= 0 && sql.charAt(end) == ')'
+        args = SqlLexer.splitTopLevel(sql.substring(open + 1, close))
+        s <- byName(m.group(2).toUpperCase(java.util.Locale.ROOT)).iterator
+          .flatMap(bind(_, args, m.start, end + 1)).nextOption()
+      } yield s
+      site.toRight(sql.substring(m.start(2), m.end))
+    }
+
+  /** The call `[start, end)` with `args` bound to `tvf`'s signature, if
+    * they fit it.
+    */
+  private def bind(tvf: Tvf, args: Seq[String], start: Int,
+      end: Int): Option[Site] = {
+    val (ts, rest) = args.splitAt(tvf.tables.size)
+    val (ds, ls) = rest.splitAt(tvf.descriptors.size)
+    val tables = ts.collect { case TableArg(t) => t }
+    val descriptors = ds.collect { case DescriptorArg(d) => d }
+    Option.when(tables.size == tvf.tables.size &&
+      descriptors.size == tvf.descriptors.size &&
+      tvf.arities.contains(ls.size) && ls.zip(tvf.lits).forall {
+        case (v, l) => (if (l.int) IntLit else NumLit).matches(v) })(
+      Site(start, end, tvf, tables, descriptors, ls))
+  }
+
+  /** Replace every call with `f(call)`; a malformed call is rejected
+    * loudly, before any call runs, instead of letting Spark fail on an
+    * unknown function.
+    */
+  private def rewrite(sql: String)(f: Site => String): String = {
+    val ss = sites(sql).map(_.fold(kw => throw new IllegalArgumentException(
+      s"malformed graft TVF near '$kw' — expected " +
+        byName(kw.takeWhile(_ != '(').trim.toUpperCase(java.util.Locale.ROOT))
+          .map(_.usage).mkString(" or ")), identity))
+    val out = new java.lang.StringBuilder
+    var last = 0
+    for (s <- ss) { out.append(sql, last, s.start).append(f(s)); last = s.end }
+    out.append(sql, last, sql.length).toString
+  }
+
+  /** Why a streaming relation in a seat not marked streamable fails. */
+  private[sqlgate] def streamingRejection(src: String): String =
+    "this graft TVF aggregates or joins over the whole relation and runs " +
+      s"in batch gate mode; '$src' is a streaming source (a silent " +
+      "re-windowing would change semantics — rejected loudly). Streaming " +
+      "sources route only through these TABLE seats: " +
+      Registry.flatMap(e => e.stream.map(i => s"${e.name}(TABLE ${e.tables(i)})"))
+        .mkString(", ")
 
   /** True iff the statement uses a graft TVF. */
-  def present(sql: String): Boolean = Keyword.findFirstIn(sql).isDefined
+  def present(sql: String): Boolean = SqlLexer.findFirst(sql, Keyword).isDefined
 
   /** Source table names (lower-cased) of every graft TVF in the
     * statement — the gate instantiates registry sources before the
     * session-aware rewrite resolves them (same contract as
     * [[MatchRecognizeRewrite.sourceTables]]).
     */
-  def sourceTables(sql: String): Set[String] = {
-    def clean(s: String) = s.replace("`", "").split('.').last
-      .toLowerCase(java.util.Locale.ROOT)
-    (allRes.flatMap(_.findAllMatchIn(sql).map(m => clean(m.group(1)))) ++
-      Seq(AnnRe, AnnLshRe, AnnIvfPqRe, CrossRe, FuzzyCrossRe, EmbedCrossRe,
-          Bm25Re, TokenizeCrossRe, JaccardCrossRe, PhashCrossRe)
-        .flatMap(_.findAllMatchIn(sql).flatMap(m =>
-          Seq(clean(m.group(1)), clean(m.group(2)))))).toSet
-  }
+  def sourceTables(sql: String): Set[String] =
+    sites(sql).flatMap(_.toOption.toSeq.flatMap(_.tables)).map(t =>
+      t.replace("`", "").split('.').last.toLowerCase(java.util.Locale.ROOT))
+      .toSet
 
   /** Session-aware rewrite; returns the new text plus the temp views it
-    * registered (track-and-drop like MatchRecognizeRewrite).
+    * registered (track-and-drop like MatchRecognizeRewrite). A streaming
+    * relation is accepted in the entry's streaming seat; when that seat
+    * streams, the other seats reach the kernel as they are (it checks
+    * them), otherwise each must be bounded.
     */
   def rewriteTracking(spark: SparkSession, sql: String): (String, Seq[String]) = {
     val created = Seq.newBuilder[String]
-    def rawTable(src: String): org.apache.spark.sql.DataFrame =
-      spark.table(src.replace("`", ""))
-    def table(src: String): org.apache.spark.sql.DataFrame = {
-      val df = rawTable(src)
-      require(!df.isStreaming,
-        s"this graft TVF aggregates or joins over the whole relation " +
-          s"and runs in batch gate mode; '$src' is a streaming source " +
-          "(a silent re-windowing would change semantics — rejected " +
-          "loudly). Only DEDUP_EXACT (keyed first-arrival dedup), the " +
-          "stateless per-row TVFs TEXT_QUALITY / LANG_ID / " +
-          "MEDIA_FEATURES / MEDIA_VIDEO_FRAMES / MEDIA_AUDIO / " +
-          "MEDIA_RESIZE, the incoming " +
-          "side of DEDUP_CROSS_PAIRS / FUZZY_JOIN_CROSS / " +
-          "DEDUP_EMBED_PAIRS and the query side of ANN_TOPK_LSH / " +
-          "ANN_TOPK_IVFPQ route streaming sources")
-      df
-    }
-    def view(df: org.apache.spark.sql.DataFrame): String = {
+    val out = rewrite(sql) { s =>
+      val raw = s.tables.map(t => spark.table(t.replace("`", "")))
+      val routed = s.tvf.stream.exists(raw(_).isStreaming)
+      for ((df, i) <- raw.zipWithIndex)
+        require(routed || s.tvf.stream.contains(i) || !df.isStreaming,
+          streamingRejection(s.tables(i)))
+      val lits = s.tvf.lits.zipWithIndex.map { case (l, i) =>
+        s.lits.lift(i).orElse(l.default) }
       val v = s"__graft_tvf_out_${viewCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(v)
+      s.tvf.build(Call(spark, s.tvf, raw, s.descriptors.map(_.replace("`", "")),
+        lits)).createOrReplaceTempView(v)
       created += v
       v
     }
-    def c2(m: scala.util.matching.Regex.Match, i: Int): String =
-      m.group(i).replace("`", "")
-    var out = ExactRe.replaceAllIn(sql, m => {
-      val df = rawTable(m.group(1))
-      if (df.isStreaming)
-        // streaming route: keyed first-arrival dedup over the descriptor
-        // columns (append mode — the one incremental contract here; see
-        // the object Scaladoc). One state entry per key, no shuffle
-        // beyond the key-hash exchange the state store requires.
-        view(df.select(c2(m, 2), c2(m, 3))
-          .dropDuplicates(Seq(c2(m, 2), c2(m, 3))))
-      else
-        view(graft.queries.Dedup.exactGroups(df, c2(m, 2), c2(m, 3)))
-    })
-    out = MinhashRe.replaceAllIn(out, m => {
-      val threshold = Option(m.group(4)).map(_.toDouble).getOrElse(0.8)
-      view(graft.queries.Dedup.minhashVerifiedPairs(
-        table(m.group(1)), c2(m, 2), c2(m, 3), threshold))
-    })
-    out = SimhashRe.replaceAllIn(out, m => {
-      val df = table(m.group(1))
-      val w = Option(m.group(4)).map(_.toInt)
-        .getOrElse(graft.queries.Dedup.simhashChunkWidth(df.count()))
-      view(graft.queries.Dedup.simhashVerifiedPairs(
-        df, c2(m, 2), c2(m, 3), w))
-    })
-    out = CrossRe.replaceAllIn(out, m => {
-      val threshold = Option(m.group(5)).map(_.toDouble).getOrElse(0.8)
-      val incDf = rawTable(m.group(1))
-      if (incDf.isStreaming)
-        // streaming incoming vs frozen corpus — the production crawl
-        // cadence: stateless stream-static band join against a
-        // once-materialized corpus index (the operator validates that
-        // the corpus side is bounded and rejects loudly otherwise)
-        view(graft.queries.Dedup.minhashCrossPairsStream(
-          incDf, rawTable(m.group(2)), c2(m, 3), c2(m, 4), threshold))
-      else
-        view(graft.queries.Dedup.minhashCrossPairs(
-          incDf, table(m.group(2)), c2(m, 3), c2(m, 4), threshold))
-    })
-    out = AnnRe.replaceAllIn(out, m => {
-      val k = Option(m.group(5)).map(_.toInt).getOrElse(5)
-      view(graft.queries.Similarity.annTopkOn(
-        table(m.group(1)), table(m.group(2)), c2(m, 3), c2(m, 4), k))
-    })
-    out = Bm25Re.replaceAllIn(out, m => {
-      val k = Option(m.group(7)).map(_.toInt).getOrElse(10)
-      // trailing dfCap: drop stop-grade terms (df > cap) from scoring —
-      // the hot-bucket discipline for corpus-sized posting lists
-      val dfCap = Option(m.group(8)).map(_.toLong)
-      val qDf = rawTable(m.group(1))
-      if (qDf.isStreaming)
-        // streaming query side vs frozen posting index — the
-        // contamination-lookup-at-ingest cadence; the kernel validates
-        // corpus bounded-ness and rejects loudly otherwise
-        view(graft.queries.Search.bm25TopKStream(
-          qDf, rawTable(m.group(2)),
-          c2(m, 3), c2(m, 4), c2(m, 5), c2(m, 6), k, dfCap))
-      else
-        view(graft.queries.Search.bm25TopK(
-          qDf, table(m.group(2)),
-          c2(m, 3), c2(m, 4), c2(m, 5), c2(m, 6), k, dfCap))
-    })
-    out = EmbedCrossRe.replaceAllIn(out, m => {
-      // incoming may STREAM (embedding dedup at ingest); the kernel
-      // validates corpus bounded-ness and rejects loudly otherwise.
-      // With a trailing cells count, the corpus fits that many
-      // centroids (stride seeds + one Lloyd round) — the measured
-      // production sizing; without it, the fixed 16-cell deterministic
-      // window (the small-corpus oracle contract)
-      val threshold = Option(m.group(5)).map(_.toDouble).getOrElse(0.35)
-      view(Option(m.group(6)).map(_.toInt) match {
-        case Some(cells) => graft.queries.Dedup.embedCrossPairsSized(
-          rawTable(m.group(1)), rawTable(m.group(2)),
-          c2(m, 3), c2(m, 4), cells, threshold)
-        case None => graft.queries.Dedup.embedCrossPairs(
-          rawTable(m.group(1)), rawTable(m.group(2)),
-          c2(m, 3), c2(m, 4), threshold)
-      })
-    })
-    out = AnnIvfPqRe.replaceAllIn(out, m => {
-      val nProbe = Option(m.group(5)).map(_.toInt).getOrElse(4)
-      // trailing cells: fit the coarse quantizer at that size (the
-      // production sizing) instead of the deterministic window
-      val cells = Option(m.group(6)).map(_.toInt)
-      val qDf = rawTable(m.group(2))
-      if (qDf.isStreaming)
-        // streaming query side vs frozen composed index — the
-        // embedding-dedup-at-ingest cadence; the kernel validates
-        // corpus bounded-ness and rejects loudly otherwise
-        view(graft.queries.Similarity.ivfPqTopkStream(
-          rawTable(m.group(1)), qDf, c2(m, 3), c2(m, 4), nProbe,
-          cells = cells))
-      else
-        view(graft.queries.Similarity.ivfPqTopkOn(
-          table(m.group(1)), qDf, c2(m, 3), c2(m, 4), nProbe,
-          cells = cells))
-    })
-    out = AnnLshRe.replaceAllIn(out, m => {
-      val k = Option(m.group(5)).map(_.toInt).getOrElse(5)
-      val planes = Option(m.group(6)).map(_.toInt)
-      val qDf = rawTable(m.group(2))
-      if (qDf.isStreaming) {
-        // streaming query side vs frozen corpus — the enrichment
-        // cadence (match arriving embeddings against a curated
-        // reference corpus); the kernel validates corpus bounded-ness
-        val corpusDf = rawTable(m.group(1))
-        view(planes.fold(graft.queries.Similarity.annLshTopkStream(
-          corpusDf, qDf, c2(m, 3), c2(m, 4), k))(p =>
-          graft.queries.Similarity.annLshTopkStream(
-            corpusDf, qDf, c2(m, 3), c2(m, 4), k, p)))
-      } else
-        view(planes.fold(graft.queries.Similarity.annLshTopkOn(
-          table(m.group(1)), qDf, c2(m, 3), c2(m, 4), k))(p =>
-          graft.queries.Similarity.annLshTopkOn(
-            table(m.group(1)), qDf, c2(m, 3), c2(m, 4), k, p)))
-    })
-    // TEXT_QUALITY / LANG_ID are stateless per-row maps (one select, no
-    // aggregation or join) — the streaming relation routes through the
-    // SAME column expressions the batch path uses, append mode, zero
-    // state. rawTable, not table(): the guard is only for operators
-    // whose semantics need the whole relation at once.
-    out = QualityRe.replaceAllIn(out, m => {
-      view(graft.queries.TextAnalysis.qualityOn(
-        rawTable(m.group(1)), c2(m, 2), c2(m, 3)))
-    })
-    out = KeywordsRe.replaceAllIn(out, m => {
-      val k = Option(m.group(4)).map(_.toInt).getOrElse(3)
-      // whole-relation (per-term document frequencies + corpus N):
-      // streaming rejected by table()
-      view(graft.queries.Search.keywordsTfidf(
-        table(m.group(1)), c2(m, 2), c2(m, 3), k))
-    })
-    out = LangIdRe.replaceAllIn(out, m => {
-      view(graft.queries.TextAnalysis.langidOn(
-        rawTable(m.group(1)), c2(m, 2), c2(m, 3)))
-    })
-    // MEDIA_FEATURES / MEDIA_VIDEO_FRAMES are stateless per-row decodes
-    // (narrow maps, no aggregation or join) — streaming relations route
-    // through the SAME operators, append mode, zero state (rawTable,
-    // like TEXT_QUALITY / LANG_ID). The operators take (id, media)
-    // column names; the descriptors rename into that contract.
-    def mediaCols(m: scala.util.matching.Regex.Match) = {
-      val df = rawTable(m.group(1))
-      val idName = c2(m, 2)
-      // validate the id descriptor BEFORE the widening cast: a silent
-      // cast("long") would turn a string/decimal/NULL id into an opaque
-      // encoder null-field error deep inside the operator; every other
-      // TVF route surfaces descriptor-contract violations loudly
-      val idType = df.schema.fields
-        .find(f => spark.sessionState.conf.resolver(f.name, idName))
-        .map(_.dataType)
-      val ok = idType.exists {
-        case org.apache.spark.sql.types.LongType |
-            org.apache.spark.sql.types.IntegerType |
-            org.apache.spark.sql.types.ShortType |
-            org.apache.spark.sql.types.ByteType => true
-        case _ => false
-      }
-      require(ok,
-        s"media TVFs (MEDIA_FEATURES / MEDIA_VIDEO_FRAMES / MEDIA_AUDIO / " +
-          s"MEDIA_RESIZE / DEDUP_PHASH_PAIRS): id column '$idName' must be " +
-          s"an integer type (BIGINT/INT/SMALLINT/TINYINT); got " +
-          s"${idType.map(_.sql).getOrElse("no such column")}. Usage: " +
-          "MEDIA_FEATURES(TABLE t, DESCRIPTOR(id_col), DESCRIPTOR(media_col))")
-      df.select(
-        org.apache.spark.sql.functions.col(idName).cast("long").as("id"),
-        org.apache.spark.sql.functions.col(c2(m, 3)).as("media"))
-    }
-    out = MediaFeaturesRe.replaceAllIn(out, m =>
-      view(graft.multimodal.MediaOps.imageFeatures(mediaCols(m)).toDF()))
-    out = MediaVideoRe.replaceAllIn(out, m => {
-      val k = Option(m.group(4)).map(_.toInt).getOrElse(3)
-      view(graft.multimodal.MediaOps
-        .videoFrameFeatures(mediaCols(m), k).toDF())
-    })
-    out = MediaAudioRe.replaceAllIn(out, m =>
-      // stateless per-row WAV/PCM decode — streaming routes unchanged
-      // (decode at ingest), exactly like MEDIA_FEATURES
-      view(graft.multimodal.MediaOps.audioFeatures(mediaCols(m)).toDF()))
-    out = MediaResizeRe.replaceAllIn(out, m => {
-      // stateless per-row decode + downscale — streaming routes too
-      val factor = Option(m.group(4)).map(_.toInt).getOrElse(2)
-      view(graft.multimodal.MediaOps
-        .resizeFeatures(mediaCols(m), factor).toDF())
-    })
-    out = PhashCrossRe.replaceAllIn(out, m => {
-      // corpus bounded-ness validated by the kernel; incoming may
-      // STREAM (stateless banded probe of the frozen index)
-      val maxHamming = Option(m.group(5)).map(_.toInt).getOrElse(3)
-      view(graft.queries.Dedup.phashCrossPairs(
-        rawTable(m.group(1)), rawTable(m.group(2)), c2(m, 3), c2(m, 4),
-        maxHamming))
-    })
-    out = PhashRe.replaceAllIn(out, m => {
-      // whole-relation banded self-join over per-image dHashes —
-      // batch only (table() guard); the per-row hash extraction is
-      // narrow but the pair stage aggregates the whole corpus
-      table(m.group(1))
-      val maxHamming = Option(m.group(4)).map(_.toInt).getOrElse(3)
-      view(graft.queries.Dedup.phashPairs(
-        graft.multimodal.MediaOps.dhashFeatures(mediaCols(m)), maxHamming))
-    })
-    out = VideoPhashRe.replaceAllIn(out, m => {
-      // clip-level banded self-join over sampled-frame dHashes with a
-      // position-aligned majority vote — batch only (table() guard);
-      // frame decode + hash are narrow, the vote is one aggregation
-      table(m.group(1))
-      val (k, mh, mm) =
-        (Option(m.group(4)), Option(m.group(5)), Option(m.group(6))) match {
-          case (Some(a), Some(b), Some(c)) => (a.toInt, b.toInt, c.toInt)
-          case _ => (3, 3, 2)
-        }
-      view(graft.queries.Dedup.videoPhashPairs(
-        mediaCols(m), "id", "media", k, mh, mm))
-    })
-    out = AbttRe.replaceAllIn(out, m => {
-      // whole-relation (corpus mean + covariance power iteration):
-      // streaming rejected by table()
-      val rounds = Option(m.group(4)).map(_.toInt).getOrElse(2)
-      view(graft.queries.Similarity.allButTop(
-        table(m.group(1)), c2(m, 2), c2(m, 3), rounds))
-    })
-    out = JaccardPairsRe.replaceAllIn(out, m => {
-      // whole-relation (global token-frequency ordering): batch only
-      // (table() guard). Same shingling contract as the library query.
-      val (num, den) = (Option(m.group(4)), Option(m.group(5))) match {
-        case (Some(n), Some(d)) => (n.toInt, d.toInt)
-        case _ => (3, 5)
-      }
-      // 3-word shingles — the minhash family's tokenization; 2-word
-      // shingles are non-selective on small vocabularies (SCALE.md r16)
-      val sets = graft.queries.Dedup.jaccardSets(
-        table(m.group(1)), c2(m, 2), c2(m, 3), shingleN = 3)
-      view(graft.queries.Dedup.jaccardJoin(sets, num, den))
-    })
-    out = JaccardCrossRe.replaceAllIn(out, m => {
-      val (num, den) = (Option(m.group(5)), Option(m.group(6))) match {
-        case (Some(n), Some(d)) => (n.toInt, d.toInt)
-        case _ => (3, 5)
-      }
-      val incDf = rawTable(m.group(1))
-      if (incDf.isStreaming)
-        // streaming incoming vs frozen corpus prefix index — stateless
-        // stream-static join; the operator validates the corpus side
-        view(graft.queries.Dedup.jaccardJoinCrossStream(
-          incDf, rawTable(m.group(2)), c2(m, 3), c2(m, 4), num, den))
-      else
-        view(graft.queries.Dedup.jaccardJoinCross(
-          incDf, table(m.group(2)), c2(m, 3), c2(m, 4), num, den))
-    })
-    out = HeavyRe.replaceAllIn(out, m => {
-      // whole-relation (sketch pass + exact verify with a control-plane
-      // sized candidate collect): batch only (table() guard)
-      val k = m.group(3).toInt
-      val cap = Option(m.group(4)).map(_.toInt)
-        .getOrElse(math.max(256, 4 * k))
-      val in = table(m.group(1)).select(
-        org.apache.spark.sql.functions.col(c2(m, 2)).as("key"))
-      view(graft.operators.HeavyHitters.exactTopK(in, "key", k, cap))
-    })
-    out = ProfileRe.replaceAllIn(out, m =>
-      // whole-relation (multi-distinct agg): batch only (table() guard)
-      view(graft.operators.TableProfile.profile(table(m.group(1)))))
-    out = BpeRe.replaceAllIn(out, m => {
-      // whole-relation iterative trainer — batch only (table() guard)
-      val rounds = Option(m.group(3)).map(_.toInt)
-        .getOrElse(graft.queries.TextAnalysis.BpeRounds)
-      view(graft.queries.TextAnalysis.bpeMerges(
-        table(m.group(1)), c2(m, 2), rounds))
-    })
-    out = TokenizeCrossRe.replaceAllIn(out, m => {
-      // fit on the bounded corpus (validated by the kernel), encode the
-      // incoming side — which may STREAM (stateless replace chain)
-      val rounds = Option(m.group(5)).map(_.toInt)
-        .getOrElse(graft.queries.TextAnalysis.BpeRounds)
-      view(graft.queries.TextAnalysis.bpeEncodeWith(
-        rawTable(m.group(1)), rawTable(m.group(2)), c2(m, 3), c2(m, 4),
-        rounds))
-    })
-    out = TokenizeRe.replaceAllIn(out, m => {
-      // whole-relation fit + narrow encode — batch only (table() guard)
-      val rounds = Option(m.group(4)).map(_.toInt)
-        .getOrElse(graft.queries.TextAnalysis.BpeRounds)
-      view(graft.queries.TextAnalysis.bpeFitEncode(
-        table(m.group(1)), c2(m, 2), c2(m, 3), rounds))
-    })
-    out = PageRankRe.replaceAllIn(out, m => {
-      // whole-relation power iteration — batch only (table() guard)
-      val iters = Option(m.group(4)).map(_.toInt).getOrElse(3)
-      val edges = table(m.group(1)).select(
-        org.apache.spark.sql.functions.col(c2(m, 2)).as("src"),
-        org.apache.spark.sql.functions.col(c2(m, 3)).as("dst"))
-      view(graft.operators.PageRank(edges, iters))
-    })
-    out = FuzzyRe.replaceAllIn(out, m => {
-      // whole-relation self-join — batch only (table() guard)
-      val k = Option(m.group(4)).map(_.toInt).getOrElse(1)
-      val in = table(m.group(1)).select(
-        org.apache.spark.sql.functions.col(c2(m, 2)).as("id"),
-        org.apache.spark.sql.functions.col(c2(m, 3)).as("name"))
-      view(graft.queries.Joins.fuzzySelfJoin(in, k)
-        .select("ida", "idb", "dist"))
-    })
-    out = FuzzyCrossRe.replaceAllIn(out, m => {
-      // incoming may STREAM (entity resolution at ingest); the kernel
-      // validates corpus bounded-ness and rejects loudly otherwise
-      val k = Option(m.group(5)).map(_.toInt).getOrElse(1)
-      def shaped(src: String) = rawTable(src).select(
-        org.apache.spark.sql.functions.col(c2(m, 3)).as("id"),
-        org.apache.spark.sql.functions.col(c2(m, 4)).as("name"))
-      view(graft.queries.Joins.fuzzyCrossJoin(
-        shaped(m.group(1)), shaped(m.group(2)), k))
-    })
-    out = CcRe.replaceAllIn(out, m => {
-      // whole-relation iterative label propagation — batch only
-      val edges = table(m.group(1)).select(
-        org.apache.spark.sql.functions.col(c2(m, 2)),
-        org.apache.spark.sql.functions.col(c2(m, 3)))
-      view(graft.queries.Dedup.connectedComponents(edges)
-        .withColumnRenamed("doc_id", "node"))
-    })
-    requireFullyRewritten(out)
     (out, created.result())
   }
 
-  /** Syntax-validation form: clauses are shape-checked and replaced by a
+  /** Syntax-validation form: calls are shape-checked and replaced by a
     * placeholder relation, nothing executes.
     */
-  def validateOnly(sql: String): String = {
-    val out = (allRes ++
-        Seq(CrossRe, AnnRe, AnnLshRe, AnnIvfPqRe, FuzzyCrossRe,
-          EmbedCrossRe, Bm25Re, JaccardCrossRe, TokenizeCrossRe,
-          PhashCrossRe))
-      .foldLeft(sql)((s, re) =>
-        re.replaceAllIn(s, _ => "__graft_tvf_validated"))
-    requireFullyRewritten(out)
-    out
-  }
-
-  /** A TVF keyword the regexes did NOT consume is a malformed call —
-    * reject loudly instead of letting Spark fail on an unknown TVF.
-    */
-  private def requireFullyRewritten(sql: String): Unit =
-    Keyword.findFirstIn(sql).foreach { kw =>
-      throw new IllegalArgumentException(
-        s"malformed graft TVF near '$kw' — expected " +
-          "TABLE(DEDUP_EXACT(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text))), " +
-          "TABLE(DEDUP_MINHASH_PAIRS(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(text)[, threshold])), " +
-          "TABLE(DEDUP_SIMHASH_PAIRS(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(text)[, chunkWidth])), " +
-          "TABLE(DEDUP_CROSS_PAIRS(TABLE incoming, TABLE corpus, " +
-          "DESCRIPTOR(id), DESCRIPTOR(text)[, threshold])), " +
-          "TABLE(ANN_TOPK(TABLE corpus, TABLE queries, DESCRIPTOR(id), " +
-          "DESCRIPTOR(vec)[, k])), " +
-          "TABLE(ANN_TOPK_LSH(TABLE corpus, TABLE queries, " +
-          "DESCRIPTOR(id), DESCRIPTOR(vec)[, k[, planes]])), " +
-          "TABLE(ANN_TOPK_IVFPQ(TABLE corpus, TABLE queries, " +
-          "DESCRIPTOR(id), DESCRIPTOR(vec)[, nProbe[, cells]])), " +
-          "TABLE(FUZZY_JOIN_CROSS(TABLE incoming, TABLE corpus, " +
-          "DESCRIPTOR(id), DESCRIPTOR(name)[, k])), " +
-          "TABLE(DEDUP_EMBED_PAIRS(TABLE incoming, TABLE corpus, " +
-          "DESCRIPTOR(id), DESCRIPTOR(vec)[, threshold[, cells]])), " +
-          "TABLE(TEXT_SEARCH_BM25(TABLE queries, TABLE corpus, " +
-          "DESCRIPTOR(qid), DESCRIPTOR(qtext), DESCRIPTOR(id), " +
-          "DESCRIPTOR(text)[, k[, dfCap]])), " +
-          "TABLE(TEXT_QUALITY(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text))), " +
-          "TABLE(TEXT_KEYWORDS(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(text)[, k])), " +
-          "TABLE(LANG_ID(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text))), " +
-          "TABLE(MEDIA_FEATURES(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(media))), " +
-          "TABLE(MEDIA_VIDEO_FRAMES(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(media)[, k])), " +
-          "TABLE(MEDIA_AUDIO(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(media))), " +
-          "TABLE(MEDIA_RESIZE(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(media)[, factor])), " +
-          "TABLE(DEDUP_PHASH_PAIRS(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(media)[, maxHamming])), " +
-          "TABLE(DEDUP_PHASH_CROSS(TABLE incoming, TABLE corpus, " +
-          "DESCRIPTOR(id), DESCRIPTOR(media)[, maxHamming])), " +
-          "TABLE(EMBED_ABTT(TABLE t, DESCRIPTOR(id), DESCRIPTOR(vec)" +
-          "[, rounds])), " +
-          "TABLE(PAGERANK(TABLE edges, DESCRIPTOR(src), DESCRIPTOR(dst)" +
-          "[, iters])), " +
-          "TABLE(FUZZY_JOIN(TABLE t, DESCRIPTOR(id), DESCRIPTOR(name)" +
-          "[, k])) " +
-          "TABLE(DEDUP_JACCARD_PAIRS(TABLE t, DESCRIPTOR(id), " +
-          "DESCRIPTOR(text)[, thetaNum, thetaDen])), " +
-          "TABLE(DEDUP_JACCARD_CROSS(TABLE incoming, TABLE corpus, " +
-          "DESCRIPTOR(id), DESCRIPTOR(text)[, thetaNum, thetaDen])), " +
-          "TABLE(HEAVY_HITTERS(TABLE t, DESCRIPTOR(key), k[, capacity])), " +
-          "TABLE(PROFILE(TABLE t)), " +
-          "TABLE(TEXT_BPE_MERGES(TABLE t, DESCRIPTOR(text)[, rounds])), " +
-          "TABLE(TOKENIZE(TABLE t, DESCRIPTOR(id), DESCRIPTOR(text)" +
-          "[, rounds])), " +
-          "TABLE(TOKENIZE(TABLE incoming, TABLE corpus, DESCRIPTOR(id), " +
-          "DESCRIPTOR(text)[, rounds])) " +
-          "or TABLE(CONNECTED_COMPONENTS(TABLE edges, DESCRIPTOR(a), " +
-          "DESCRIPTOR(b)))")
-    }
+  def validateOnly(sql: String): String =
+    rewrite(sql)(_ => "__graft_tvf_validated")
 }

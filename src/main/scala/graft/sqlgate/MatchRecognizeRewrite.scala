@@ -50,14 +50,14 @@ object MatchRecognizeRewrite {
   private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** True iff the statement contains a MATCH_RECOGNIZE clause. */
-  def present(sql: String): Boolean = Keyword.findFirstIn(sql).isDefined
+  def present(sql: String): Boolean = SqlLexer.findFirst(sql, Keyword).isDefined
 
   /** Source table names (lower-cased) of every MATCH_RECOGNIZE clause in
     * the statement — extracted textually so the gate can instantiate
     * registry sources BEFORE the session-aware rewrite resolves them.
     */
   def sourceTables(sql: String): Set[String] =
-    Keyword.findAllMatchIn(sql).flatMap { m =>
+    SqlLexer.findAll(sql, Keyword).flatMap { m =>
       val FromRe = """(?is).*\bFROM\s+([`\w.]+)\s*$""".r
       sql.substring(0, m.start) match {
         case FromRe(t) =>
@@ -112,7 +112,7 @@ object MatchRecognizeRewrite {
 
   private def rewriteWith(sql: String)(
       exec: (String, RowPatternSpec) => String): String =
-    Keyword.findFirstMatchIn(sql) match {
+    SqlLexer.findFirst(sql, Keyword) match {
       case None => sql
       case Some(m) =>
         val head = sql.substring(0, m.start)
@@ -124,23 +124,7 @@ object MatchRecognizeRewrite {
         }
         val open = sql.indexOf('(', m.end)
         require(open >= 0, "MATCH_RECOGNIZE requires a parenthesized block")
-        // paren scan skips single-quoted literals ('' = escaped quote), so
-        // a ')' inside a DEFINE string can't truncate the block
-        var depth = 0
-        var i = open
-        var close = -1
-        var inStr = false
-        while (i < sql.length && close < 0) {
-          val ch = sql.charAt(i)
-          if (inStr) { if (ch == '\'') inStr = false }
-          else ch match {
-            case '\'' => inStr = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
+        val close = SqlLexer.closeParen(sql, open)
         require(close > 0, "unbalanced parentheses in MATCH_RECOGNIZE block")
         val spec = parse(sql.substring(open + 1, close))
         val rel = exec(src.replace("`", ""), spec)
@@ -148,31 +132,12 @@ object MatchRecognizeRewrite {
         rewriteWith(prefix + rel + sql.substring(close + 1))(exec)
     }
 
-  /** Split on commas at paren depth 0, outside single-quoted literals. */
-  private def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    var inStr = false
-    for (i <- 0 until s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i).trim; start = i + 1
-        case _ =>
-      }
-    }
-    out += s.substring(start).trim
-    out.result().filter(_.nonEmpty)
-  }
+  private def splitTop(s: String): Seq[String] =
+    SqlLexer.splitTopLevel(s).filter(_.nonEmpty)
 
   private def find(re: scala.util.matching.Regex, s: String,
-      what: String): scala.util.matching.Regex.Match =
-    re.findFirstMatchIn(s).getOrElse(
+      what: String): java.util.regex.MatchResult =
+    SqlLexer.findFirst(s, re).getOrElse(
       throw new IllegalArgumentException(s"MATCH_RECOGNIZE: missing $what"))
 
   private val msPerUnit = Map(
@@ -181,11 +146,11 @@ object MatchRecognizeRewrite {
 
   /** Parse the clause body into a [[RowPatternSpec]]. */
   private[sqlgate] def parse(block: String): RowPatternSpec = {
-    if ("""(?i)\bALL\s+ROWS\s+PER\s+MATCH""".r.findFirstIn(block).isDefined)
+    if (SqlLexer.findFirst(block, """(?i)\bALL\s+ROWS\s+PER\s+MATCH""".r).isDefined)
       throw new IllegalArgumentException(
         "MATCH_RECOGNIZE: only ONE ROW PER MATCH is supported")
-    val skipPast = """(?i)\bAFTER\s+MATCH\s+SKIP\s+(PAST\s+LAST\s+ROW|TO\s+NEXT\s+ROW)|\bAFTER\s+MATCH\b""".r
-      .findFirstMatchIn(block) match {
+    val skipPast = SqlLexer.findFirst(block,
+      """(?i)\bAFTER\s+MATCH\s+SKIP\s+(PAST\s+LAST\s+ROW|TO\s+NEXT\s+ROW)|\bAFTER\s+MATCH\b""".r) match {
       case None => true // Flink's default is SKIP PAST LAST ROW
       case Some(m) => Option(m.group(1)) match {
         case Some(g) => g.toUpperCase(java.util.Locale.ROOT).startsWith("PAST")
@@ -206,8 +171,8 @@ object MatchRecognizeRewrite {
       block, "MEASURES").group(1)
     val patternTxt = find(
       """(?is)\bPATTERN\s*\(([^)]*)\)""".r, block, "PATTERN (…)").group(1)
-    val within = """(?is)\bWITHIN\s+INTERVAL\s+'(\d+)'\s+(\w+)""".r
-      .findFirstMatchIn(block).map { m =>
+    val within = SqlLexer.findFirst(block,
+      """(?is)\bWITHIN\s+INTERVAL\s+'(\d+)'\s+(\w+)""".r).map { m =>
         val u = m.group(2).toLowerCase(java.util.Locale.ROOT).stripSuffix("s")
         m.group(1).toLong * msPerUnit.getOrElse(u,
           throw new IllegalArgumentException(
@@ -240,16 +205,16 @@ object MatchRecognizeRewrite {
         // strip the variable's own prefix; reject cross-variable and
         // navigation references (not row-local)
         for (o <- defs.keys if o != name)
-          if (s"(?i)\\b$o\\.".r.findFirstIn(pred).isDefined)
+          if (SqlLexer.findFirst(pred, s"(?i)\\b$o\\.".r).isDefined)
             throw new IllegalArgumentException(
               s"MATCH_RECOGNIZE: DEFINE $name references $o — only " +
                 "row-local predicates are supported")
-        if ("""(?i)\b(?:FIRST|LAST|PREV|NEXT)\s*\(""".r
-            .findFirstIn(pred).isDefined)
+        if (SqlLexer.findFirst(pred,
+            """(?i)\b(?:FIRST|LAST|PREV|NEXT)\s*\(""".r).isDefined)
           throw new IllegalArgumentException(
             s"MATCH_RECOGNIZE: DEFINE $name uses navigation functions" +
               " — only row-local predicates are supported")
-        s"(?i)\\b$name\\.".r.replaceAllIn(pred, "")
+        SqlLexer.replaceAll(pred, s"(?i)\\b$name\\.".r)(_ => "")
       }
       PatternVar(name, minRep, maxRep, greedy, cond)
     }

@@ -58,7 +58,7 @@ object TableSpec {
     var watermark: Option[(String, String)] = None
     var pk: Seq[String] = Nil
 
-    splitTopLevel(body).map(_.trim).filter(_.nonEmpty).foreach {
+    SqlLexer.splitTopLevel(body).filter(_.nonEmpty).foreach {
       case WatermarkRe(col, n, unit) =>
         watermark = Some((col, s"$n ${unit.toLowerCase.stripSuffix("s")}s"))
       case PkRe(keys) =>
@@ -89,21 +89,4 @@ object TableSpec {
   /** Is this CREATE TABLE one of ours (has a WITH options clause)? */
   def isConnectorDdl(stmt: String): Boolean =
     CreateRe.findFirstMatchIn(stmt.trim.stripSuffix(";")).isDefined
-
-  /** Split on commas at paren/quote depth zero. */
-  private[sqlgate] def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val buf = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    for (c <- s) c match {
-      case '\'' => inQuote = !inQuote; buf.append(c)
-      case '(' if !inQuote => depth += 1; buf.append(c)
-      case ')' if !inQuote => depth -= 1; buf.append(c)
-      case ',' if depth == 0 && !inQuote => out += buf.toString; buf.clear()
-      case _ => buf.append(c)
-    }
-    if (buf.nonEmpty) out += buf.toString
-    out.result()
-  }
 }

@@ -62,6 +62,21 @@ class TopKByScoreSpec extends SparkSpec {
     assert(a.count(_._1 == 2L) == 1 && a.filter(_._1 == 2L).head._4 == 1)
   }
 
+  test("INT, SMALLINT and TINYINT ids widen to BIGINT: agg == window") {
+    import spark.implicits._
+    val rows = (0 until 200).map(i => (i % 5L, (i * 37) % 101, (i % 7) / 2.0))
+    val df = rows.toDF("g", "id", "s").dropDuplicates("g", "id")
+    for (t <- Seq("int", "smallint", "tinyint")) {
+      val in = df.withColumn("id", col("id").cast(t)).repartition(3)
+      val a = viaAgg(in, 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      val w = viaWindow(in, 3).collect()
+        .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getDouble(2),
+          r.getInt(3)))
+      assert(a.sorted.toSeq == w.sorted.toSeq && a.nonEmpty, t)
+    }
+  }
+
   test("NaN and signed-zero scores keep a total order: agg == window, " +
     "independent of input order") {
     import spark.implicits._

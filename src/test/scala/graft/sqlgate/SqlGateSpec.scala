@@ -139,7 +139,7 @@ class SqlGateSpec extends AnyFunSuite {
   }
 
   test("TableSpec: splitTopLevel respects parens and quotes") {
-    assert(TableSpec.splitTopLevel("a INT, b DECIMAL(10,5), c VARCHAR")
+    assert(SqlLexer.splitTopLevel("a INT, b DECIMAL(10,5), c VARCHAR")
       .map(_.trim) == Seq("a INT", "b DECIMAL(10,5)", "c VARCHAR"))
   }
 

@@ -1,0 +1,79 @@
+package graft.sqlgate
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Calls generated from each entry of [[GraftTvfRewrite.Registry]]: the
+  * argument forms every TVF accepts and rejects, its usage text and its
+  * streaming seat, checked for every TVF the table holds, including any
+  * added later.
+  */
+class TvfRegistrySpec extends AnyFunSuite {
+  import GraftTvfRewrite.{Registry, Tvf}
+
+  private def sql(name: String, args: Seq[String]) =
+    s"SELECT * FROM TABLE($name(${args.mkString(", ")}))"
+
+  /** The call with `n` trailing literals (sample values beyond the
+    * entry's own slots are integers).
+    */
+  private def args(e: Tvf, n: Int): Seq[String] =
+    e.tables.map("TABLE src_" + _) ++ e.descriptors.map(d => s"DESCRIPTOR($d)") ++
+      (0 until n).map(i => if (e.lits.lift(i).forall(_.int)) "7" else "0.5")
+
+  /** Whether some entry of the same name accepts `a` (TOKENIZE's
+    * one-table form is its two-table form minus a TABLE argument).
+    */
+  private def acceptedBySibling(e: Tvf, a: Seq[String]) =
+    Registry.exists(o => o.name == e.name && o.tables.size ==
+      a.count(_.startsWith("TABLE ")) && o.descriptors.size ==
+      a.count(_.startsWith("DESCRIPTOR")) && o.arities.contains(
+      a.count(x => !x.startsWith("TABLE ") && !x.startsWith("DESCRIPTOR"))))
+
+  private def assertMalformed(e: Tvf, a: Seq[String]): Unit = {
+    val call = sql(e.name, a)
+    val err = intercept[IllegalArgumentException](
+      GraftTvfRewrite.validateOnly(call))
+    assert(err.getMessage.contains("malformed graft TVF"), call)
+    assert(err.getMessage.contains(e.usage), call)
+    for (o <- Registry if o.name != e.name)
+      assert(!err.getMessage.contains(s"TABLE(${o.name}("), call)
+  }
+
+  test("the shortest and longest accepted call of every entry validate") {
+    for (e <- Registry; n <- Seq(e.arities.min, e.arities.max)) {
+      val call = sql(e.name, args(e, n))
+      assert(GraftTvfRewrite.validateOnly(call) ==
+        "SELECT * FROM __graft_tvf_validated", call)
+      assert(GraftTvfRewrite.sourceTables(call) ==
+        e.tables.map("src_" + _).toSet, call)
+    }
+  }
+
+  test("a missing argument, a literal count the entry does not take, or " +
+    "a decimal in an integer slot is malformed, with the TVF's usage") {
+    for (e <- Registry) {
+      val shortest = args(e, e.arities.min)
+      for (i <- shortest.indices) {
+        val dropped = shortest.patch(i, Nil, 1)
+        if (!acceptedBySibling(e, dropped)) assertMalformed(e, dropped)
+      }
+      for (n <- 0 to e.arities.max + 1 if !e.arities.contains(n)) {
+        val a = args(e, n)
+        if (!acceptedBySibling(e, a)) assertMalformed(e, a)
+      }
+      val longest = args(e, e.arities.max)
+      val fixed = e.tables.size + e.descriptors.size
+      for ((l, i) <- e.lits.zipWithIndex if l.int && i < e.arities.max)
+        assertMalformed(e, longest.updated(fixed + i, "0.5"))
+    }
+  }
+
+  test("the streaming rejection names exactly the streamable seats") {
+    val msg = GraftTvfRewrite.streamingRejection("s")
+    for (e <- Registry; (seat, i) <- e.tables.zipWithIndex) {
+      val named = ("\\b" + java.util.regex.Pattern.quote(
+        s"${e.name}(TABLE $seat)")).r.findFirstIn(msg).isDefined
+      assert(named == e.stream.contains(i), s"${e.name} TABLE $seat")
+    }
+  }
+}
