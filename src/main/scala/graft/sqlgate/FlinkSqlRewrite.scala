@@ -1,5 +1,7 @@
 package graft.sqlgate
 
+import org.apache.spark.sql.SparkSession
+
 /** Flink-SQL → Spark-SQL dialect rewrite for gate-script queries — the
   * surface a reference user's scripts actually exercise beyond what the
   * two parsers share (`docs/sql_demo/demo_4.md:77-84` TUMBLE,
@@ -45,7 +47,10 @@ package graft.sqlgate
   *
   * `MATCH_RECOGNIZE` (the SQL:2016 row-pattern clause Flink SQL also
   * accepts) rewrites first, via [[MatchRecognizeRewrite]] — see that
-  * object's scaladoc for the supported subset and semantics.
+  * object's scaladoc for the supported subset and semantics — and the
+  * graft TVFs next, via [[GraftTvfRewrite]]. Both become calls of
+  * session table functions ([[register]]), so the rewrite itself runs
+  * nothing and needs no session.
   *
   * The rewrites are text rewrites through [[SqlLexer]]: window calls
   * carry only identifiers and INTERVAL literals (no nested parens), so
@@ -133,54 +138,37 @@ object FlinkSqlRewrite {
         s"$ws + $size, $step)")
   }
 
-  /** Textual rewrite. MATCH_RECOGNIZE needs a session (its clause routes
-    * through [[graft.operators.RowPattern]]) — use the `(spark, sql)`
-    * overload; this one rejects it loudly rather than mis-rewriting.
+  /** The whole rewrite, session-free: MATCH_RECOGNIZE clauses first —
+    * their block may hold INTERVAL literals of its own (WITHIN) that
+    * must not be window-rewritten, and once it is a string literal the
+    * later passes skip it — then the graft TVF calls, then the
+    * window/dialect text rewrites. The MATCH_RECOGNIZE and graft TVF
+    * calls it leaves are session table functions: run the result in a
+    * session passed to [[register]].
     */
-  def apply(sql: String): String = {
-    require(!MatchRecognizeRewrite.present(sql) && !GraftTvfRewrite.present(sql),
-      "MATCH_RECOGNIZE / dedup TVFs require the session-aware rewrite: " +
-        "FlinkSqlRewrite(spark, sql)")
-    rewriteWindows(sql)
+  def apply(sql: String): String =
+    rewriteWindows(GraftTvfRewrite(MatchRecognizeRewrite(sql)))
+
+  /** Register, in `spark`, the session table functions the rewritten
+    * text calls: one per graft TVF name plus `graft_match_recognize`.
+    * Each builder runs its kernel when a statement calling it is
+    * analyzed. Re-registering replaces the previous builders.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.tableFunctionRegistry
+    (GraftTvfRewrite.functions(spark) :+ (MatchRecognizeRewrite.FunctionName ->
+      MatchRecognizeRewrite.function(spark) _)).foreach { case (name, build) =>
+      registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 
-  /** Full rewrite: row-pattern recognition first — its block may contain
-    * INTERVAL literals of its own (WITHIN) that must not be
-    * window-rewritten — then the window/dialect text rewrites.
-    */
-  def apply(spark: org.apache.spark.sql.SparkSession, sql: String): String =
-    applyTracking(spark, sql)._1
-
-  /** [[apply]] variant that also reports the MATCH_RECOGNIZE / dedup-TVF
-    * temp views registered during the rewrite — drop them after the
-    * consuming statement is analyzed (see
-    * MatchRecognizeRewrite.rewriteTracking).
-    */
-  def applyTracking(spark: org.apache.spark.sql.SparkSession,
-      sql: String): (String, Seq[String]) = {
-    val (s1, v1) = MatchRecognizeRewrite.rewriteTracking(spark, sql)
-    val (s2, v2) = GraftTvfRewrite.rewriteTracking(spark, s1)
-    (rewriteWindows(s2), v1 ++ v2)
-  }
-
-  /** True iff the statement needs registry sources instantiated BEFORE
-    * the session-aware rewrite (MATCH_RECOGNIZE / dedup TVFs execute
-    * their operator over `spark.table` during the rewrite itself).
-    */
-  def needsPreInstantiation(sql: String): Boolean =
-    MatchRecognizeRewrite.present(sql) || GraftTvfRewrite.present(sql)
-
-  /** Union of the source tables those clauses reference. */
-  def preInstantiationTables(sql: String): Set[String] =
-    MatchRecognizeRewrite.sourceTables(sql) ++ GraftTvfRewrite.sourceTables(sql)
-
-  /** Syntax-validation rewrite: MATCH_RECOGNIZE / dedup-TVF clauses are
-    * parsed (loud subset rejection, same errors as run time) but not
-    * executed.
+  /** Syntax-validation rewrite: [[apply]], except that a
+    * MATCH_RECOGNIZE clause (parsed, so the subset is checked) becomes
+    * the placeholder relation `__graft_mr_validated`.
     */
   def validate(sql: String): String =
-    rewriteWindows(GraftTvfRewrite.validateOnly(
-      MatchRecognizeRewrite.validateOnly(sql)))
+    rewriteWindows(GraftTvfRewrite(
+      MatchRecognizeRewrite.rewrite(sql)((_, _) => "__graft_mr_validated")))
 
   // Flink's UDTF invocation heads: cross (`FROM t, LATERAL TABLE(f(x))`)
   // and left-outer (`LEFT [OUTER] JOIN LATERAL TABLE(f(x)) … ON TRUE`).

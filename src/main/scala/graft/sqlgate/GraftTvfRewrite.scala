@@ -3,7 +3,9 @@ package graft.sqlgate
 import graft.multimodal.MediaOps
 import graft.operators.{HeavyHitters, PageRank, TableProfile}
 import graft.queries.{Dedup, Joins, Search, Similarity, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, FunctionTableSubqueryArgumentExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.functions.col
 
 /** Gate-reachable LLM-pipeline operators as polymorphic table-valued
@@ -16,17 +18,20 @@ import org.apache.spark.sql.functions.col
   * Every TVF is one entry of [[Registry]]: its TABLE and DESCRIPTOR
   * arguments, the trailing literals it accepts (type, default, and the
   * counts it takes), the one TABLE seat that may be a streaming source,
-  * and the kernel it runs. The call parser, [[present]],
-  * [[sourceTables]], [[validateOnly]], [[rewriteTracking]], the
-  * malformed-call usage text and the streaming-rejection text are all
-  * read off that table, so adding a TVF takes one entry. Keywords are
-  * found through [[SqlLexer]]: a TVF name inside a string literal or a
-  * comment is data and is never rewritten or executed.
+  * and the kernel it runs. The call parser, the normalization, the
+  * session table functions, the malformed-call usage text and the
+  * streaming-rejection text are all read off that table, so adding a TVF
+  * takes one entry. Keywords are found through [[SqlLexer]]: a TVF name
+  * inside a string literal or a comment is data and is never rewritten
+  * or executed.
   *
-  * Same execution shape as [[MatchRecognizeRewrite]]: the kernel runs
-  * over `spark.table(src)`, the result registers as a tracked temp view
-  * (dropped by ScriptRunner once the consuming statement is analyzed),
-  * and the view name replaces the `TABLE(F(…))` call in the statement.
+  * Execution is Spark's own: the text rewrite only normalizes the call
+  * to `F(TABLE(x), 'col', k)`, and each TVF name is a session table
+  * function (registered by [[FlinkSqlRewrite.register]]) whose builder
+  * runs the kernel over its `TABLE(x)` arguments when the statement is
+  * analyzed and returns the kernel's plan. Sources are resolved by the
+  * analyzer like any other relation; nothing is registered in the
+  * catalog.
   *
   * Streaming sources: a TVF whose entry names a streaming seat routes a
   * streaming relation in that seat incrementally — `DEDUP_EXACT` as
@@ -279,7 +284,6 @@ object GraftTvfRewrite {
     Tvf("PROFILE", One, Nil)(c => TableProfile.profile(c.t(0))))
 
   private val byName = Registry.groupBy(_.name)
-  private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val Keyword = ("""(?i)(\bTABLE\s*\(\s*)?\b(""" +
     byName.keys.mkString("|") + """)\s*\(""").r
@@ -326,20 +330,10 @@ object GraftTvfRewrite {
       Site(start, end, tvf, tables, descriptors, ls))
   }
 
-  /** Replace every call with `f(call)`; a malformed call is rejected
-    * loudly, before any call runs, instead of letting Spark fail on an
-    * unknown function.
-    */
-  private def rewrite(sql: String)(f: Site => String): String = {
-    val ss = sites(sql).map(_.fold(kw => throw new IllegalArgumentException(
-      s"malformed graft TVF near '$kw' — expected " +
-        byName(kw.takeWhile(_ != '(').trim.toUpperCase(java.util.Locale.ROOT))
-          .map(_.usage).mkString(" or ")), identity))
-    val out = new java.lang.StringBuilder
-    var last = 0
-    for (s <- ss) { out.append(sql, last, s.start).append(f(s)); last = s.end }
-    out.append(sql, last, sql.length).toString
-  }
+  private def malformed(name: String): IllegalArgumentException =
+    new IllegalArgumentException(s"malformed graft TVF near '$name' — " +
+      "expected " + byName(name.takeWhile(_ != '(').trim
+        .toUpperCase(java.util.Locale.ROOT)).map(_.usage).mkString(" or "))
 
   /** Why a streaming relation in a seat not marked streamable fails. */
   private[sqlgate] def streamingRejection(src: String): String =
@@ -350,47 +344,60 @@ object GraftTvfRewrite {
       Registry.flatMap(e => e.stream.map(i => s"${e.name}(TABLE ${e.tables(i)})"))
         .mkString(", ")
 
-  /** True iff the statement uses a graft TVF. */
-  def present(sql: String): Boolean = SqlLexer.findFirst(sql, Keyword).isDefined
-
-  /** Source table names (lower-cased) of every graft TVF in the
-    * statement — the gate instantiates registry sources before the
-    * session-aware rewrite resolves them (same contract as
-    * [[MatchRecognizeRewrite.sourceTables]]).
+  /** The session-free normalization: every call
+    * `TABLE(F(TABLE x, DESCRIPTOR(c), k))` becomes the session table
+    * function call `F(TABLE(x), 'c', k)`. A malformed call is rejected
+    * loudly, naming that TVF's usage, instead of letting Spark fail on
+    * an unknown function.
     */
-  def sourceTables(sql: String): Set[String] =
-    sites(sql).flatMap(_.toOption.toSeq.flatMap(_.tables)).map(t =>
-      t.replace("`", "").split('.').last.toLowerCase(java.util.Locale.ROOT))
-      .toSet
-
-  /** Session-aware rewrite; returns the new text plus the temp views it
-    * registered (track-and-drop like MatchRecognizeRewrite). A streaming
-    * relation is accepted in the entry's streaming seat; when that seat
-    * streams, the other seats reach the kernel as they are (it checks
-    * them), otherwise each must be bounded.
-    */
-  def rewriteTracking(spark: SparkSession, sql: String): (String, Seq[String]) = {
-    val created = Seq.newBuilder[String]
-    val out = rewrite(sql) { s =>
-      val raw = s.tables.map(t => spark.table(t.replace("`", "")))
-      val routed = s.tvf.stream.exists(raw(_).isStreaming)
-      for ((df, i) <- raw.zipWithIndex)
-        require(routed || s.tvf.stream.contains(i) || !df.isStreaming,
-          streamingRejection(s.tables(i)))
-      val lits = s.tvf.lits.zipWithIndex.map { case (l, i) =>
-        s.lits.lift(i).orElse(l.default) }
-      val v = s"__graft_tvf_out_${viewCounter.incrementAndGet()}"
-      s.tvf.build(Call(spark, s.tvf, raw, s.descriptors.map(_.replace("`", "")),
-        lits)).createOrReplaceTempView(v)
-      created += v
-      v
+  def apply(sql: String): String = {
+    val ss = sites(sql).map(_.fold(kw => throw malformed(kw), identity))
+    val out = new java.lang.StringBuilder
+    var last = 0
+    for (s <- ss) {
+      val args = s.tables.map(t => s"TABLE($t)") ++
+        s.descriptors.map(d => SqlLexer.quote(d.replace("`", ""))) ++ s.lits
+      out.append(sql, last, s.start)
+        .append(s.tvf.name).append(args.mkString("(", ", ", ")"))
+      last = s.end
     }
-    (out, created.result())
+    out.append(sql, last, sql.length).toString
   }
 
-  /** Syntax-validation form: calls are shape-checked and replaced by a
-    * placeholder relation, nothing executes.
+  /** The shape check alone: [[apply]], which runs nothing. */
+  def validateOnly(sql: String): String = apply(sql)
+
+  /** One session table function per TVF name (see [[build]]). */
+  private[sqlgate] def functions(spark: SparkSession)
+      : Seq[(String, Seq[Expression] => LogicalPlan)] =
+    byName.toSeq.map { case (name, entries) => name -> build(spark, entries) }
+
+  /** The builder of a normalized call: binds its arguments to the entry
+    * with that many TABLE arguments, fills the literal defaults, accepts
+    * a streaming relation only in the entry's streaming seat (when that
+    * seat streams, the other seats reach the kernel as they are — it
+    * checks them — otherwise each must be bounded), runs the kernel and
+    * returns its plan.
     */
-  def validateOnly(sql: String): String =
-    rewrite(sql)(_ => "__graft_tvf_validated")
+  private def build(spark: SparkSession, entries: Seq[Tvf])(
+      args: Seq[Expression]): LogicalPlan = {
+    val (tables, values) = args.partitionMap {
+      case t: FunctionTableSubqueryArgumentExpression => Left(t.plan)
+      case e => Right(String.valueOf(e.eval()))
+    }
+    val tvf = entries.find(e => e.tables.size == tables.size &&
+      e.arities.contains(values.size - e.descriptors.size))
+      .getOrElse(throw malformed(entries.head.name + "("))
+    val raw = tables.map(GraftSqlBridge.ofRows(spark, _))
+    val routed = tvf.stream.exists(raw(_).isStreaming)
+    for ((t, i) <- tables.zipWithIndex)
+      require(routed || tvf.stream.contains(i) || !raw(i).isStreaming,
+        streamingRejection(t match {
+          case SubqueryAlias(id, _) => id.name
+          case p => p.nodeName
+        }))
+    val (ds, ls) = values.splitAt(tvf.descriptors.size)
+    val lits = tvf.lits.zipWithIndex.map { case (l, i) => ls.lift(i).orElse(l.default) }
+    tvf.build(Call(spark, tvf, raw, ds, lits)).queryExecution.analyzed
+  }
 }

@@ -1,7 +1,9 @@
 package graft.sqlgate
 
 import graft.operators.{PatternMeasure, PatternVar, RowPattern, RowPatternSpec}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, FunctionTableSubqueryArgumentExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** `MATCH_RECOGNIZE` (SQL:2016 row-pattern recognition) gate dialect.
   *
@@ -11,12 +13,13 @@ import org.apache.spark.sql.SparkSession
   * row-pattern operator, so the gate parses the clause and routes the
   * source through [[graft.operators.RowPattern]] — a per-key
   * backtracking matcher with Flink-exact semantics on the supported
-  * subset — registering the result as a temp view and splicing the view
-  * name into the statement. (An earlier round rewrote to chained window
-  * minima, which silently emitted only the earliest match per key with
-  * relaxed contiguity; both deviations are gone — strict contiguity,
-  * every match emitted, SKIP PAST LAST ROW vs SKIP TO NEXT ROW
-  * distinguished.)
+  * subset. The clause becomes a call of the session table function
+  * `graft_match_recognize(TABLE(src), '<clause>')`, whose builder runs
+  * the matcher when the statement is analyzed. (An earlier round
+  * rewrote to chained window minima, which silently emitted only the
+  * earliest match per key with relaxed contiguity; both deviations are
+  * gone — strict contiguity, every match emitted, SKIP PAST LAST ROW vs
+  * SKIP TO NEXT ROW distinguished.)
   *
   * Supported subset (anything outside raises IllegalArgumentException —
   * the gate NEVER silently degrades semantics):
@@ -47,71 +50,23 @@ import org.apache.spark.sql.SparkSession
 object MatchRecognizeRewrite {
 
   private val Keyword = """(?i)\bMATCH_RECOGNIZE\b""".r
-  private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** True iff the statement contains a MATCH_RECOGNIZE clause. */
-  def present(sql: String): Boolean = SqlLexer.findFirst(sql, Keyword).isDefined
+  /** The session table function a clause is rewritten to. */
+  private[sqlgate] val FunctionName = "graft_match_recognize"
 
-  /** Source table names (lower-cased) of every MATCH_RECOGNIZE clause in
-    * the statement — extracted textually so the gate can instantiate
-    * registry sources BEFORE the session-aware rewrite resolves them.
+  /** The session-free rewrite: each `FROM src MATCH_RECOGNIZE (…)`
+    * becomes `FROM graft_match_recognize(TABLE(src), '…')`, any alias
+    * after the block kept. The clause is parsed here as well, so an
+    * out-of-subset script is rejected with the same loud errors
+    * pre-flight as at run time.
     */
-  def sourceTables(sql: String): Set[String] =
-    SqlLexer.findAll(sql, Keyword).flatMap { m =>
-      val FromRe = """(?is).*\bFROM\s+([`\w.]+)\s*$""".r
-      sql.substring(0, m.start) match {
-        case FromRe(t) =>
-          Some(t.replace("`", "").split('.').last
-            .toLowerCase(java.util.Locale.ROOT))
-        case _ => None
-      }
-    }.toSet
+  def apply(sql: String): String =
+    rewrite(sql)((src, block) =>
+      s"$FunctionName(TABLE($src), ${SqlLexer.quote(block)})")
 
-  /** Session-aware rewrite: execute each MATCH_RECOGNIZE clause through
-    * [[RowPattern]] over `spark.table(src)`, register the result as a
-    * temp view, and splice the view name into the statement text.
-    */
-  def apply(spark: SparkSession, sql: String): String =
-    rewriteTracking(spark, sql)._1
-
-  /** Like [[apply]], but also returns the names of the temp views the
-    * rewrite registered, so the caller can drop them once the consuming
-    * statement has been ANALYZED (Dataset construction resolves the view
-    * into the plan eagerly; after that the catalog entry is dead weight —
-    * leaving it would pin the source plan for the session's lifetime).
-    */
-  def rewriteTracking(spark: SparkSession, sql: String): (String, Seq[String]) = {
-    val created = Seq.newBuilder[String]
-    val out = rewriteWith(sql) { (src, spec0) =>
-      // gate knob for the backtracking failsafe: SET
-      // 'graft.match-recognize.step-budget' = '<n>' (ScriptRunner
-      // forwards graft.* keys into the session conf)
-      val spec = spec0.copy(stepBudget =
-        spark.conf.getOption("graft.match-recognize.step-budget")
-          .map(_.trim.toLong)
-          .getOrElse(graft.operators.RowPattern.DefaultStepBudget))
-      val srcDf = spark.table(src)
-      val result =
-        if (srcDf.isStreaming) RowPattern.streaming(srcDf, spec)
-        else RowPattern(srcDf, spec)
-      val view = s"__graft_mr_out_${viewCounter.incrementAndGet()}"
-      result.createOrReplaceTempView(view)
-      created += view
-      view
-    }
-    (out, created.result())
-  }
-
-  /** Syntax-validation form (no session, nothing executed): the clause
-    * is parsed — so out-of-subset scripts are rejected with the same
-    * loud errors pre-flight as at run time — and replaced by a
-    * placeholder relation so the surrounding statement parses.
-    */
-  def validateOnly(sql: String): String =
-    rewriteWith(sql)((_, _) => "__graft_mr_validated")
-
-  private def rewriteWith(sql: String)(
-      exec: (String, RowPatternSpec) => String): String =
+  /** Replace each clause, `FROM` kept, by `f(src, block)`. */
+  private[sqlgate] def rewrite(sql: String)(
+      f: (String, String) => String): String =
     SqlLexer.findFirst(sql, Keyword) match {
       case None => sql
       case Some(m) =>
@@ -126,11 +81,30 @@ object MatchRecognizeRewrite {
         require(open >= 0, "MATCH_RECOGNIZE requires a parenthesized block")
         val close = SqlLexer.closeParen(sql, open)
         require(close > 0, "unbalanced parentheses in MATCH_RECOGNIZE block")
-        val spec = parse(sql.substring(open + 1, close))
-        val rel = exec(src.replace("`", ""), spec)
-        // keep any `AS alias` that follows the block; recurse for safety
-        rewriteWith(prefix + rel + sql.substring(close + 1))(exec)
+        val block = sql.substring(open + 1, close)
+        parse(block)
+        rewrite(prefix + f(src, block) + sql.substring(close + 1))(f)
     }
+
+  /** The builder of `graft_match_recognize(TABLE(src), '<clause>')`:
+    * batch sources route through [[RowPattern.apply]], streaming ones
+    * through [[RowPattern.streaming]].
+    */
+  private[sqlgate] def function(spark: SparkSession)(
+      args: Seq[Expression]): LogicalPlan = args match {
+    case Seq(t: FunctionTableSubqueryArgumentExpression, block) =>
+      // gate knob for the backtracking failsafe: SET
+      // 'graft.match-recognize.step-budget' = '<n>' (ScriptRunner
+      // forwards graft.* keys into the session conf)
+      val spec = parse(String.valueOf(block.eval())).copy(stepBudget =
+        spark.conf.getOption("graft.match-recognize.step-budget")
+          .map(_.trim.toLong).getOrElse(RowPattern.DefaultStepBudget))
+      val src = GraftSqlBridge.ofRows(spark, t.plan)
+      (if (src.isStreaming) RowPattern.streaming(src, spec)
+      else RowPattern(src, spec)).queryExecution.analyzed
+    case _ => throw new IllegalArgumentException(
+      s"$FunctionName expects (TABLE(src), '<MATCH_RECOGNIZE block>')")
+  }
 
   private def splitTop(s: String): Seq[String] =
     SqlLexer.splitTopLevel(s).filter(_.nonEmpty)

@@ -13,8 +13,10 @@ import scala.collection.mutable
   *   other DDL / SHOW       → `spark.sql` (eager, like `tEnv.executeSql`)
   *   SELECT                 → rejected (parity: `LogPrint.java:54-58`)
   *   INSERT INTO sink query → build DataFrame from query with registry
-  *                            sources registered as temp views; start a
-  *                            streaming write or run a batch write
+  *                            sources registered as temp views (graft
+  *                            TVFs and MATCH_RECOGNIZE run as session
+  *                            table functions, see [[FlinkSqlRewrite]]);
+  *                            start a streaming write or run a batch write
   *   BEGIN STATEMENT SET/END→ no-op (sql-client compat)
   *
   * All INSERTs in one script form one statement set: built first, then
@@ -29,6 +31,8 @@ class ScriptRunner(spark: SparkSession,
   // every query the gate starts checkpoints through FileContext; on
   // `file:` paths, write those checkpoints without forking chmod/readlink
   graft.streaming.LocalCheckpointFs.install(spark)
+  // the graft TVFs and MATCH_RECOGNIZE the rewritten statements call
+  FlinkSqlRewrite.register(spark)
 
   val registry: mutable.Map[String, TableSpec] = mutable.LinkedHashMap()
   private val sourcesInstantiated = mutable.Set[String]()
@@ -74,7 +78,7 @@ class ScriptRunner(spark: SparkSession,
     case s if s.startsWith("spark.") => Some(s)
     // graft.* knobs (statement-set fusing is read from the script confs;
     // operator knobs like the MATCH_RECOGNIZE step budget are read from
-    // the session conf by the rewrites) pass through as-is
+    // the session conf by the table functions) pass through as-is
     case s if s.startsWith("graft.") => Some(s)
     case _ => None // unknown knobs accepted+ignored, like Flink's tolerant SET
   }
@@ -138,21 +142,7 @@ class ScriptRunner(spark: SparkSession,
             .stripSuffix(")").split(",").map(_.trim.replace("`", "")).toSeq)
           registry.get(sinkName) match {
             case Some(sink) =>
-              // MATCH_RECOGNIZE / dedup TVFs resolve their source DURING
-              // the rewrite (the operator runs over spark.table), so
-              // registry sources they reference must be instantiated first
-              if (FlinkSqlRewrite.needsPreInstantiation(m.group(4)))
-                instantiateRefs(FlinkSqlRewrite.preInstantiationTables(m.group(4)))
-              val (query0, mrViews) = FlinkSqlRewrite.applyTracking(spark, m.group(4))
-              instantiateSources(query0)
-              // keyed dims: distributed slice view per stmt (batch) or
-              // in-plan enrichment rewrite (streaming probe)
-              val (query, enrViews) = prepareKeyedDims(c.text, query0)
-              val df0 = spark.sql(query) // Dataset ctor analyzes eagerly:
-              // the MR/enrichment views are resolved into df0's plan —
-              // drop them so long-lived sessions don't accumulate
-              // catalog entries
-              (mrViews ++ enrViews).foreach(spark.catalog.dropTempView)
+              val (query, df0) = prepare(m.group(4))
               val df = renameForSink(df0, colList, sink)
               inserts += Insert(sink, df, overwrite, query, colList)
             case None if spark.catalog.tableExists(sinkName) =>
@@ -162,28 +152,9 @@ class ScriptRunner(spark: SparkSession,
               // sources it becomes a continuous `writeStream.toTable` —
               // the catalog.md flow (kafka source streaming into a
               // hive-dialect table), which the eager path cannot run.
-              if (batchMode) {
-                if (FlinkSqlRewrite.needsPreInstantiation(c.text))
-                  instantiateRefs(
-                    FlinkSqlRewrite.preInstantiationTables(c.text),
-                    forceBatch = true)
-                val (rewritten0, mrViews) =
-                  FlinkSqlRewrite.applyTracking(spark, c.text)
-                instantiateSources(rewritten0, forceBatch = true)
-                val (rewritten, enrViews) =
-                  prepareKeyedDims(c.text, rewritten0)
-                spark.sql(rewritten)
-                (mrViews ++ enrViews).foreach(spark.catalog.dropTempView)
-              } else {
-                if (FlinkSqlRewrite.needsPreInstantiation(m.group(4)))
-                  instantiateRefs(
-                    FlinkSqlRewrite.preInstantiationTables(m.group(4)))
-                val (q20, mrViews) =
-                  FlinkSqlRewrite.applyTracking(spark, m.group(4))
-                instantiateSources(q20)
-                val (q2, enrViews) = prepareKeyedDims(c.text, q20)
-                val df0 = spark.sql(q2)
-                (mrViews ++ enrViews).foreach(spark.catalog.dropTempView)
+              if (batchMode) prepare(c.text)
+              else {
+                val (_, df0) = prepare(m.group(4))
                 if (df0.isStreaming) {
                   require(!overwrite,
                     s"INSERT OVERWRITE into catalog table $sinkName is " +
@@ -209,8 +180,9 @@ class ScriptRunner(spark: SparkSession,
                   }
                   catalogInserts += ((sinkName, renamed))
                 } else
-                  // sources turned out batch (e.g. filesystem): eager
-                  spark.sql(FlinkSqlRewrite(spark, c.text))
+                  // sources turned out batch (e.g. filesystem): run the
+                  // INSERT eagerly over the query already prepared
+                  insertInto(c.text, df0)
               }
             case None =>
               throw new IllegalArgumentException(
@@ -226,20 +198,10 @@ class ScriptRunner(spark: SparkSession,
           // session-level no-op (SURVEY §2.2).
           shown += s"ok: ${c.command.name}"
         case SqlCommand.CreateView =>
-          // view bodies are queries in the reference dialect too; CREATE
-          // VIEW analyzes eagerly, so registry sources it reads must be
-          // temp views first (e.g. views carving corpus/query sides for
-          // the ANN_TOPK TVF). Rewrite BEFORE instantiateSources: the
-          // latter PARSES the query to collect table refs, and a view
-          // body containing a graft TVF (composition scripts chain
-          // TVF → view → TVF) is only Spark-parseable after the
-          // rewrite. Registry sources a TVF consumes are covered by
-          // the preInstantiation pass, which is text-based.
-          if (FlinkSqlRewrite.needsPreInstantiation(c.text))
-            instantiateRefs(FlinkSqlRewrite.preInstantiationTables(c.text))
-          val rewrittenView = FlinkSqlRewrite(spark, c.text)
-          instantiateSources(rewrittenView)
-          spark.sql(rewrittenView)
+          // view bodies are queries in the reference dialect too, and
+          // CREATE VIEW analyzes eagerly (e.g. views carving corpus/query
+          // sides for the ANN_TOPK TVF)
+          prepare(c.text)
         case _ =>
           // remaining DDL (CREATE DATABASE, USE, DROP, ALTER, plain
           // CREATE TABLE) goes straight to Spark, like tEnv.executeSql.
@@ -281,6 +243,33 @@ class ScriptRunner(spark: SparkSession,
         throw e
     }
     RunResult(started.toSeq, shown.toSeq, confs.toMap)
+  }
+
+  /** The one statement-preparation path: rewrite the statement (graft
+    * TVFs and MATCH_RECOGNIZE become session table function calls),
+    * instantiate the registry sources it reads, prepare its keyed dims,
+    * and analyze it — an INSERT or CREATE VIEW runs here, a query only
+    * builds its DataFrame, table function kernels run once. Returns the
+    * text Spark analyzed and its DataFrame; the keyed-dim enrichment
+    * views are resolved into that plan and dropped, so long-lived
+    * sessions do not accumulate catalog entries.
+    */
+  private def prepare(text: String): (String, DataFrame) = {
+    val rewritten = FlinkSqlRewrite(text)
+    instantiateSources(rewritten)
+    val (stmt, enrViews) = prepareKeyedDims(text, rewritten)
+    val df = spark.sql(stmt)
+    enrViews.foreach(spark.catalog.dropTempView)
+    (stmt, df)
+  }
+
+  /** Run `insert` (an INSERT statement) with `query` as its query. */
+  private def insertInto(insert: String, query: DataFrame): Unit = {
+    val stmt = spark.sessionState.sqlParser.parsePlan(FlinkSqlRewrite(insert))
+      .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement]
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      stmt.copy(query = query.queryExecution.analyzed))
+    ()
   }
 
   /** Flink INSERT maps the query output to the sink schema by POSITION,
@@ -559,34 +548,33 @@ class ScriptRunner(spark: SparkSession,
 
   /** Exact table references of a query: parse (not analyze) the SQL and
     * collect `UnresolvedRelation` names, traversing expression subqueries
-    * too. Names inside string literals or comments can't false-positive
-    * (the old word-boundary regex did), and backtick-quoted names with
-    * special characters resolve exactly.
+    * (`TABLE(x)` table function arguments among them) and CTE
+    * definitions too. Names inside string literals or comments can't
+    * false-positive (the old word-boundary regex did), and
+    * backtick-quoted names with special characters resolve exactly.
     */
   private def referencedTables(query: String): Set[String] = {
-    val plan = spark.sessionState.sqlParser.parsePlan(query)
-    plan.collectWithSubqueries {
-      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-        r.multipartIdentifier.last.toLowerCase(java.util.Locale.ROOT)
-    }.toSet
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+    def refs(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
+      case r: UnresolvedRelation =>
+        Seq(r.multipartIdentifier.last.toLowerCase(java.util.Locale.ROOT))
+      case w: UnresolvedWith => w.cteRelations.flatMap(c => refs(c._2))
+    }.flatten
+    refs(spark.sessionState.sqlParser.parsePlan(query)).toSet
   }
 
   /** Register every referenced registry table as a temp view so the
     * INSERT's SELECT resolves source tables through the registry.
     */
-  private def instantiateSources(query: String,
-      forceBatch: Boolean = false): Unit =
-    instantiateRefs(referencedTables(query), forceBatch)
-
-  private def instantiateRefs(refs: Set[String],
-      forceBatch: Boolean = false): Unit = {
+  private def instantiateSources(query: String): Unit = {
+    val refs = referencedTables(query)
     registry.foreach { case (name, spec) =>
       if (refs.contains(name.toLowerCase(java.util.Locale.ROOT)) &&
         !sourcesInstantiated.contains(name) && !isSinkOnly(spec)) {
         val df =
           if (isLookupDim(spec)) lookupDimView(name, spec)
-          else Some(Connectors.source(spark, spec,
-            streaming = !batchMode && !forceBatch))
+          else Some(Connectors.source(spark, spec, streaming = !batchMode))
         // keyed lookup dims register no view here — their key-covering
         // slice is built per statement by [[prepareKeyedDims]]
         df.foreach(_.createOrReplaceTempView(name))

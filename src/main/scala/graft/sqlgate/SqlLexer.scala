@@ -10,19 +10,25 @@ import scala.util.matching.Regex
   * keyword search and replacement of [[GraftTvfRewrite]],
   * [[FlinkSqlRewrite]] and [[MatchRecognizeRewrite]] goes through here,
   * so a keyword inside a literal or comment is data and is never
-  * rewritten.
+  * rewritten; [[SqlSplitter]] finds statement ends the same way.
   *
   * Every operation assumes its input starts outside any literal or
   * comment (a whole statement, or a slice cut at a code position).
   */
 object SqlLexer {
 
-  /** `code(i)` is true iff `sql(i)` lies outside every literal, quoted
-    * identifier and comment (their delimiters included).
+  /** Character classes of [[classify]]. */
+  private[sqlgate] final val Code: Byte = 0
+  private[sqlgate] final val Quoted: Byte = 1
+  private[sqlgate] final val Comment: Byte = 2
+
+  /** The class of each character of `sql`: [[Quoted]] inside a literal
+    * or quoted identifier, [[Comment]] inside a comment (delimiters
+    * included), [[Code]] elsewhere.
     */
-  private def codeMask(sql: String): Array[Boolean] = {
+  private[sqlgate] def classify(sql: String): Array[Byte] = {
     val n = sql.length
-    val code = Array.fill(n)(true)
+    val cls = new Array[Byte](n)
     def at(j: Int) = if (j < n) sql.charAt(j) else '\u0000'
     var i = 0
     while (i < n) {
@@ -37,10 +43,10 @@ object SqlLexer {
             else if (c == q && at(i + 1) == q) i += 2
             else { open = c != q; i += 1 }
           }
-          true
+          Quoted
         case '-' if at(i + 1) == '-' =>
           while (i < n && at(i) != '\n') i += 1
-          true
+          Comment
         case '/' if at(i + 1) == '*' =>
           var depth = 0
           do {
@@ -48,13 +54,22 @@ object SqlLexer {
             else if (sql.startsWith("*/", i)) { depth -= 1; i += 2 }
             else i += 1
           } while (depth > 0 && i < n)
-          true
-        case _ => i += 1; false
+          Comment
+        case _ => i += 1; Code
       }
-      if (span) java.util.Arrays.fill(code, start, math.min(i, n), false)
+      if (span != Code) java.util.Arrays.fill(cls, start, math.min(i, n), span)
     }
-    code
+    cls
   }
+
+  /** `code(i)` is true iff `sql(i)` lies outside every literal, quoted
+    * identifier and comment (their delimiters included).
+    */
+  private def codeMask(sql: String): Array[Boolean] = classify(sql).map(_ == Code)
+
+  /** `s` as a single-quoted string literal (backslash escapes). */
+  def quote(s: String): String =
+    "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
   /** Every match of `re` that starts in code, left to right and
     * non-overlapping. A match starting inside a literal or comment is

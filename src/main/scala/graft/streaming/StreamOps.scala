@@ -28,15 +28,6 @@ object StreamOps {
         col("window.end").as("wend") +:
         keys.map(col) :+ col("n") :+ col("sum_value"): _*)
 
-  /** Hopping window counts (HOP of demo_5). */
-  def hoppingAgg(df: DataFrame, tsCol: String, delay: String,
-      size: String, slide: String, keys: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), size, slide) +: keys.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("wstart") +:
-        keys.map(col) :+ col("n"): _*)
-
   /** Session window agg (Flink session windows; Spark session_window). */
   def sessionAgg(df: DataFrame, tsCol: String, delay: String,
       gap: String, keys: Seq[String]): DataFrame =

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the classic Column ⇄ Expression converters, which are
   * `private[sql]` in Spark 4. The public path for custom expressions is
@@ -14,6 +15,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * touches non-public BEHAVIOR — it only converts between the two
   * public-facing types.
   *
+  * The same seam turns a logical plan into a DataFrame: a session table
+  * function's builder receives each `TABLE(x)` argument as a plan, and
+  * the gate's table functions (`graft.sqlgate.FlinkSqlRewrite.register`)
+  * run their DataFrame kernels over it.
+  *
   * VERSION PIN: verified against Spark 4.1.2, where the converters live
   * at `org.apache.spark.sql.classic.ExpressionUtils` (moved there from
   * `Column.apply`/`Column.expr` in the 4.0 classic/connect split). This
@@ -25,4 +31,6 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

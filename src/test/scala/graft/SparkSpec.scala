@@ -22,5 +22,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")
+    // statements rewritten by the gate call its session table functions
+    graft.sqlgate.FlinkSqlRewrite.register(spark)
   }
 }

@@ -91,8 +91,11 @@ class FlinkSqlRewriteSpec extends AnyFunSuite {
     val out = FlinkSqlRewrite.validate(mr)
     assert(!out.toUpperCase.contains("MATCH_RECOGNIZE"))
     assert(out.contains("FROM __graft_mr_validated"))
-    // the textual-only overload refuses MR loudly instead of mis-rewriting
-    intercept[IllegalArgumentException](FlinkSqlRewrite(mr))
+    // the run-time rewrite calls the session table function instead, and
+    // refuses loudly a clause it cannot rewrite
+    assert(FlinkSqlRewrite(mr).contains("FROM graft_match_recognize(TABLE(ev), '"))
+    intercept[IllegalArgumentException](FlinkSqlRewrite(
+      mr.replace("FROM ev", "FROM (SELECT * FROM ev)")))
   }
 
   test("MATCH_RECOGNIZE parses quantifiers, gaps, WITHIN, skip modes") {

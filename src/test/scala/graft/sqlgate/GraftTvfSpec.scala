@@ -298,11 +298,10 @@ class GraftTvfSpec extends SparkSpec {
       .createOrReplaceTempView("tok_incoming_stream")
     // the rewrite must accept a streaming incoming side (encode is a
     // stateless replace chain) and produce a streaming relation
-    val (out, views) = GraftTvfRewrite.rewriteTracking(spark,
+    val out = spark.sql(FlinkSqlRewrite(
       "SELECT * FROM TABLE(TOKENIZE(TABLE tok_incoming_stream, " +
-        "TABLE tok_corpus, DESCRIPTOR(doc_id), DESCRIPTOR(text), 2))")
-    assert(views.size == 1 && spark.table(views.head).isStreaming)
-    views.foreach(spark.catalog.dropTempView)
+        "TABLE tok_corpus, DESCRIPTOR(doc_id), DESCRIPTOR(text), 2))"))
+    assert(out.isStreaming)
     GraftTvfRewrite.validateOnly(
       "SELECT * FROM TABLE(TOKENIZE(TABLE t, DESCRIPTOR(id), " +
         "DESCRIPTOR(text), 3))")
@@ -321,9 +320,9 @@ class GraftTvfSpec extends SparkSpec {
     spark.readStream.schema(schema).parquet(staged.toString)
       .createOrReplaceTempView("tvf_ph_streaming")
     val e = intercept[Exception] {
-      GraftTvfRewrite.rewriteTracking(spark,
+      spark.sql(FlinkSqlRewrite(
         "SELECT * FROM TABLE(DEDUP_PHASH_PAIRS(TABLE tvf_ph_streaming, " +
-          "DESCRIPTOR(id), DESCRIPTOR(media)))")
+          "DESCRIPTOR(id), DESCRIPTOR(media)))"))
     }
     assert(e.getMessage.contains("streaming"))
   }
@@ -375,9 +374,9 @@ class GraftTvfSpec extends SparkSpec {
     Seq(("a", Array[Byte](1, 2, 3))).toDF("sid", "media")
       .createOrReplaceTempView("tvf_bad_media")
     val e = intercept[IllegalArgumentException] {
-      GraftTvfRewrite.rewriteTracking(spark,
+      spark.sql(FlinkSqlRewrite(
         "SELECT * FROM TABLE(MEDIA_FEATURES(TABLE tvf_bad_media, " +
-          "DESCRIPTOR(sid), DESCRIPTOR(media)))")
+          "DESCRIPTOR(sid), DESCRIPTOR(media)))"))
     }
     assert(e.getMessage.contains("must be an integer type"), e.getMessage)
     assert(e.getMessage.contains("STRING"), e.getMessage)
@@ -418,7 +417,7 @@ class GraftTvfSpec extends SparkSpec {
     val schema = spark.read.parquet(evDir).schema
     spark.readStream.schema(schema).parquet(evDir)
       .createOrReplaceTempView("ev_stream_tvf")
-    val (rewritten, views) = GraftTvfRewrite.rewriteTracking(spark,
+    val rewritten = FlinkSqlRewrite(
       "SELECT user_id, event_type FROM TABLE(DEDUP_EXACT(" +
         "TABLE ev_stream_tvf, DESCRIPTOR(user_id), " +
         "DESCRIPTOR(event_type)))")
@@ -443,7 +442,6 @@ class GraftTvfSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == want && got.nonEmpty)
     } finally {
-      views.foreach(spark.catalog.dropTempView)
       spark.catalog.dropTempView("ev_stream_tvf")
     }
   }

@@ -47,7 +47,7 @@ class MatchRecognizeSpec extends SparkSpec {
 
   private def run(sql: String): Seq[(Long, Long, Long, Long, Double)] = {
     ev.createOrReplaceTempView("ev")
-    spark.sql(FlinkSqlRewrite(spark, sql))
+    spark.sql(FlinkSqlRewrite(sql))
       .orderBy("user_id", "a_t")
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000,
@@ -89,9 +89,9 @@ class MatchRecognizeSpec extends SparkSpec {
     val sql = clause
       .replace("FROM ev ", "FROM ev_ov ")
       .replace("PATTERN (A B+ C)", "PATTERN (A G* B+ C)")
-    val past = spark.sql(FlinkSqlRewrite(spark, sql)).collect()
+    val past = spark.sql(FlinkSqlRewrite(sql)).collect()
     assert(past.length == 1) // x@1 match consumes through z@4
-    val next = spark.sql(FlinkSqlRewrite(spark,
+    val next = spark.sql(FlinkSqlRewrite(
       sql.replace("SKIP PAST LAST ROW", "SKIP TO NEXT ROW"))).collect()
     assert(next.length == 2) // x@1 and x@2 both anchor a match
   }
@@ -112,7 +112,7 @@ class MatchRecognizeSpec extends SparkSpec {
         |  PATTERN (A G* B)
         |  DEFINE A AS A.kind = 'x', B AS B.kind = 'y'
         |)""".stripMargin
-    def bts(sql: String) = spark.sql(FlinkSqlRewrite(spark, sql))
+    def bts(sql: String) = spark.sql(FlinkSqlRewrite(sql))
       .collect().map(_.getTimestamp(1).getTime / 1000).toSeq
     assert(bts(base) == Seq(3L)) // greedy
     assert(bts(base.replace("PATTERN (A G* B)",
@@ -150,7 +150,7 @@ class MatchRecognizeSpec extends SparkSpec {
         |  DEFINE A AS A.kind = 'x', B AS B.kind = 'y' AND B.v > 0,
         |    C AS C.kind = 'z'
         |)""".stripMargin
-    val rows = spark.sql(FlinkSqlRewrite(spark, sql)).collect()
+    val rows = spark.sql(FlinkSqlRewrite(sql)).collect()
     assert(rows.length == 1)
     assert(rows(0).getTimestamp(1).getTime / 1000 == 3L) // y@2 skipped
     assert(rows(0).getTimestamp(2).getTime / 1000 == 3L)
@@ -170,7 +170,7 @@ class MatchRecognizeSpec extends SparkSpec {
         |  DEFINE A AS A.kind = 'x', C AS C.kind = 'z'
         |)""".stripMargin
     val e = intercept[Exception] {
-      spark.sql(FlinkSqlRewrite(spark, sql)).collect()
+      spark.sql(FlinkSqlRewrite(sql)).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
@@ -197,8 +197,8 @@ class MatchRecognizeSpec extends SparkSpec {
       .toDF("user_id", "t", "kind", "__graft_mr_c0")
     bad.createOrReplaceTempView("ev_bad")
     val e = intercept[IllegalArgumentException] {
-      FlinkSqlRewrite(spark, clause.replace("FROM ev ", "FROM ev_bad ")
-        .replace("C.v AS z_v", "C.kind AS z_v"))
+      spark.sql(FlinkSqlRewrite(clause.replace("FROM ev ", "FROM ev_bad ")
+        .replace("C.v AS z_v", "C.kind AS z_v")))
     }
     assert(e.getMessage.contains("__graft_mr_"))
   }
@@ -225,7 +225,7 @@ class MatchRecognizeSpec extends SparkSpec {
     spark.conf.set("graft.match-recognize.step-budget", "20000")
     try {
       val e = intercept[Throwable] {
-        spark.sql(FlinkSqlRewrite(spark, sql)).collect()
+        spark.sql(FlinkSqlRewrite(sql)).collect()
       }
       def chain(t: Throwable): String =
         if (t == null) "" else Option(t.getMessage).getOrElse("") + chain(t.getCause)
@@ -233,7 +233,7 @@ class MatchRecognizeSpec extends SparkSpec {
     } finally spark.conf.unset("graft.match-recognize.step-budget")
     // default budget (~1e9/key): the same ~10M-step pattern completes
     // with zero matches instead of tripping the failsafe
-    assert(spark.sql(FlinkSqlRewrite(spark, sql)).count() == 0)
+    assert(spark.sql(FlinkSqlRewrite(sql)).count() == 0)
   }
 
   // --- streaming MATCH_RECOGNIZE (RowPattern.streaming) ---
@@ -347,7 +347,7 @@ class MatchRecognizeSpec extends SparkSpec {
         |  PATTERN (A B+ C) WITHIN INTERVAL '10' SECOND
         |  DEFINE A AS A.kind = 'x', B AS B.kind = 'y', C AS C.kind = 'z'
         |)""".stripMargin
-    val df = spark.sql(FlinkSqlRewrite(spark, sql))
+    val df = spark.sql(FlinkSqlRewrite(sql))
     assert(df.isStreaming)
     val q = df.writeStream.format("memory").queryName("mr_stream_g")
       .outputMode("append").start()
@@ -361,8 +361,8 @@ class MatchRecognizeSpec extends SparkSpec {
     } finally q.stop()
     // the same clause WITHOUT a WITHIN bound must be rejected loudly
     val e = intercept[IllegalArgumentException] {
-      FlinkSqlRewrite(spark, sql.replace(
-        " WITHIN INTERVAL '10' SECOND", ""))
+      spark.sql(FlinkSqlRewrite(sql.replace(
+        " WITHIN INTERVAL '10' SECOND", "")))
     }
     assert(e.getMessage.contains("WITHIN"))
   }

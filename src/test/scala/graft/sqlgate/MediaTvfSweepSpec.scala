@@ -121,9 +121,9 @@ class MediaTvfSweepSpec extends SparkSpec {
     Seq((1L, MediaFixture.encodeVideo(3L))).toDF("id", "media")
       .createOrReplaceTempView("sweep_kbound")
     val e = intercept[Exception] {
-      GraftTvfRewrite.rewriteTracking(spark,
+      spark.sql(FlinkSqlRewrite(
         "SELECT * FROM TABLE(MEDIA_VIDEO_FRAMES(TABLE sweep_kbound, " +
-          "DESCRIPTOR(id), DESCRIPTOR(media), 0))")
+          "DESCRIPTOR(id), DESCRIPTOR(media), 0))"))
     }
     assert(e.getMessage.contains("k"))
   }

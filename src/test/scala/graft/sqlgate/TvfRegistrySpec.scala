@@ -1,14 +1,15 @@
 package graft.sqlgate
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Calls generated from each entry of [[GraftTvfRewrite.Registry]]: the
   * argument forms every TVF accepts and rejects, its usage text and its
   * streaming seat, checked for every TVF the table holds, including any
   * added later.
   */
-class TvfRegistrySpec extends AnyFunSuite {
+class TvfRegistrySpec extends graft.SparkSpec {
   import GraftTvfRewrite.{Registry, Tvf}
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableValuedFunction}
+  import org.apache.spark.sql.catalyst.expressions.FunctionTableSubqueryArgumentExpression
 
   private def sql(name: String, args: Seq[String]) =
     s"SELECT * FROM TABLE($name(${args.mkString(", ")}))"
@@ -42,10 +43,14 @@ class TvfRegistrySpec extends AnyFunSuite {
   test("the shortest and longest accepted call of every entry validate") {
     for (e <- Registry; n <- Seq(e.arities.min, e.arities.max)) {
       val call = sql(e.name, args(e, n))
-      assert(GraftTvfRewrite.validateOnly(call) ==
-        "SELECT * FROM __graft_tvf_validated", call)
-      assert(GraftTvfRewrite.sourceTables(call) ==
-        e.tables.map("src_" + _).toSet, call)
+      val fn = spark.sessionState.sqlParser.parsePlan(GraftTvfRewrite(call))
+        .collectFirst { case f: UnresolvedTableValuedFunction => f }
+      assert(fn.exists(f => f.name == Seq(e.name) && f.functionArgs.size ==
+        e.tables.size + e.descriptors.size + n), call)
+      assert(fn.get.functionArgs.collect {
+        case t: FunctionTableSubqueryArgumentExpression =>
+          t.plan.asInstanceOf[UnresolvedRelation].name
+      } == e.tables.map("src_" + _), call)
     }
   }
 
@@ -75,5 +80,14 @@ class TvfRegistrySpec extends AnyFunSuite {
         s"${e.name}(TABLE $seat)")).r.findFirstIn(msg).isDefined
       assert(named == e.stream.contains(i), s"${e.name} TABLE $seat")
     }
+  }
+
+  test("a runner registers every entry name as a session table function") {
+    val functions = spark.sessionState.tableFunctionRegistry
+    for (name <- Registry.map(_.name).distinct)
+      functions.dropFunction(FunctionIdentifier(name))
+    new ScriptRunner(spark)
+    for (e <- Registry)
+      assert(functions.functionExists(FunctionIdentifier(e.name)), e.name)
   }
 }
