@@ -317,7 +317,10 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
       case e: NoSuchElementException =>
         reply(ex, 404, success = false,
           Option(e.getMessage).getOrElse("not found"), "null")
-      case e @ (_: IllegalArgumentException | _: IllegalStateException) =>
+      // a script Spark cannot parse or analyze (ParseException is an
+      // AnalysisException) is the client's error, like a failed check
+      case e @ (_: IllegalArgumentException | _: IllegalStateException |
+          _: org.apache.spark.sql.AnalysisException) =>
         reply(ex, 400, success = false,
           Option(e.getMessage).getOrElse("bad request"), "null")
       case e: Throwable =>

@@ -1,6 +1,13 @@
 package graft.sqlgate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.LocalTempView
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
+  AttributeMap, Cast, EqualTo, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement,
+  Join, LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.streaming.StreamingQuery
 import scala.collection.mutable
 
@@ -15,8 +22,12 @@ import scala.collection.mutable
   *   INSERT INTO sink query → build DataFrame from query with registry
   *                            sources registered as temp views (graft
   *                            TVFs and MATCH_RECOGNIZE run as session
-  *                            table functions, see [[FlinkSqlRewrite]]);
+  *                            table functions, see [[FlinkSqlRewrite]];
+  *                            joins of keyed lookup dims are bound on the
+  *                            analyzed plan, see [[bindKeyedJoins]]);
   *                            start a streaming write or run a batch write
+  *   CREATE TEMPORARY VIEW  → the prepared, bound query registered as a
+  *                            temp view (analyzed once, not kept as text)
   *   BEGIN STATEMENT SET/END→ no-op (sql-client compat)
   *
   * All INSERTs in one script form one statement set: built first, then
@@ -146,43 +157,42 @@ class ScriptRunner(spark: SparkSession,
               val df = renameForSink(df0, colList, sink)
               inserts += Insert(sink, df, overwrite, query, colList)
             case None if spark.catalog.tableExists(sinkName) =>
-              // catalog (managed/Hive) table sink. In batch runner mode
-              // (or with batch-only sources) this is the demo_batch.md
-              // eager Spark SQL INSERT; in streaming mode with streaming
+              // catalog (managed/Hive) table sink. Over batch sources (the
+              // batch runner, or batch-only sources) this is the
+              // demo_batch.md eager Spark SQL INSERT; over streaming
               // sources it becomes a continuous `writeStream.toTable` —
               // the catalog.md flow (kafka source streaming into a
               // hive-dialect table), which the eager path cannot run.
-              if (batchMode) prepare(c.text)
+              val insert = parse(FlinkSqlRewrite(c.text))
+                .asInstanceOf[InsertIntoStatement]
+              val df0 = analyze(insert.query)
+              if (!df0.isStreaming)
+                GraftSqlBridge.ofRows(spark,
+                  insert.copy(query = df0.queryExecution.analyzed))
               else {
-                val (_, df0) = prepare(m.group(4))
-                if (df0.isStreaming) {
-                  require(!overwrite,
-                    s"INSERT OVERWRITE into catalog table $sinkName is " +
-                      "not supported on the streaming path")
-                  val declared = spark.table(sinkName).columns.toSeq
-                  def arityErr(what: String, names: Seq[String]) =
-                    throw new IllegalArgumentException(
-                      s"INSERT INTO $sinkName: query produces " +
-                        s"${df0.columns.length} columns " +
-                        s"(${df0.columns.mkString(", ")}) but $what has " +
-                        s"${names.size} (${names.mkString(", ")}) — " +
-                        "streaming catalog INSERT maps columns " +
-                        "positionally; the counts must match")
-                  val renamed = colList match {
-                    case Some(cs) =>
-                      if (cs.size != df0.columns.length)
-                        arityErr("the INSERT column list", cs)
-                      df0.toDF(cs: _*)
-                    case None =>
-                      if (declared.size != df0.columns.length)
-                        arityErr(s"sink table $sinkName", declared)
-                      df0.toDF(declared: _*)
-                  }
-                  catalogInserts += ((sinkName, renamed))
-                } else
-                  // sources turned out batch (e.g. filesystem): run the
-                  // INSERT eagerly over the query already prepared
-                  insertInto(c.text, df0)
+                require(!overwrite,
+                  s"INSERT OVERWRITE into catalog table $sinkName is " +
+                    "not supported on the streaming path")
+                val declared = spark.table(sinkName).columns.toSeq
+                def arityErr(what: String, names: Seq[String]) =
+                  throw new IllegalArgumentException(
+                    s"INSERT INTO $sinkName: query produces " +
+                      s"${df0.columns.length} columns " +
+                      s"(${df0.columns.mkString(", ")}) but $what has " +
+                      s"${names.size} (${names.mkString(", ")}) — " +
+                      "streaming catalog INSERT maps columns " +
+                      "positionally; the counts must match")
+                val renamed = colList match {
+                  case Some(cs) =>
+                    if (cs.size != df0.columns.length)
+                      arityErr("the INSERT column list", cs)
+                    df0.toDF(cs: _*)
+                  case None =>
+                    if (declared.size != df0.columns.length)
+                      arityErr(s"sink table $sinkName", declared)
+                    df0.toDF(declared: _*)
+                }
+                catalogInserts += ((sinkName, renamed))
               }
             case None =>
               throw new IllegalArgumentException(
@@ -197,11 +207,7 @@ class ScriptRunner(spark: SparkSession,
           // Spark catalogs are configured, not created by DDL; accept as
           // session-level no-op (SURVEY §2.2).
           shown += s"ok: ${c.command.name}"
-        case SqlCommand.CreateView =>
-          // view bodies are queries in the reference dialect too, and
-          // CREATE VIEW analyzes eagerly (e.g. views carving corpus/query
-          // sides for the ANN_TOPK TVF)
-          prepare(c.text)
+        case SqlCommand.CreateView => createView(c.text)
         case _ =>
           // remaining DDL (CREATE DATABASE, USE, DROP, ALTER, plain
           // CREATE TABLE) goes straight to Spark, like tEnv.executeSql.
@@ -245,31 +251,47 @@ class ScriptRunner(spark: SparkSession,
     RunResult(started.toSeq, shown.toSeq, confs.toMap)
   }
 
-  /** The one statement-preparation path: rewrite the statement (graft
-    * TVFs and MATCH_RECOGNIZE become session table function calls),
-    * instantiate the registry sources it reads, prepare its keyed dims,
-    * and analyze it — an INSERT or CREATE VIEW runs here, a query only
-    * builds its DataFrame, table function kernels run once. Returns the
-    * text Spark analyzed and its DataFrame; the keyed-dim enrichment
-    * views are resolved into that plan and dropped, so long-lived
-    * sessions do not accumulate catalog entries.
+  /** The one query-preparation path: rewrite the query (graft TVFs and
+    * MATCH_RECOGNIZE become session table function calls) and
+    * [[analyze]] it. Only queries come here, so no statement ever runs
+    * over a keyed dim's unbound placeholder. Returns the text Spark
+    * analyzed and its bound DataFrame.
     */
-  private def prepare(text: String): (String, DataFrame) = {
-    val rewritten = FlinkSqlRewrite(text)
-    instantiateSources(rewritten)
-    val (stmt, enrViews) = prepareKeyedDims(text, rewritten)
-    val df = spark.sql(stmt)
-    enrViews.foreach(spark.catalog.dropTempView)
-    (stmt, df)
+  private def prepare(query: String): (String, DataFrame) = {
+    val rewritten = FlinkSqlRewrite(query)
+    (rewritten, analyze(parse(rewritten)))
   }
 
-  /** Run `insert` (an INSERT statement) with `query` as its query. */
-  private def insertInto(insert: String, query: DataFrame): Unit = {
-    val stmt = spark.sessionState.sqlParser.parsePlan(FlinkSqlRewrite(insert))
-      .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement]
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-      stmt.copy(query = query.queryExecution.analyzed))
-    ()
+  private def parse(text: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(text)
+
+  /** Instantiate the registry sources a parsed query reads, analyze it
+    * (table function kernels run here, once) and bind its keyed lookup
+    * joins.
+    */
+  private def analyze(parsed: LogicalPlan): DataFrame = {
+    instantiateSources(referencedTables(parsed))
+    bindKeyedJoins(GraftSqlBridge.ofRows(spark, parsed))
+  }
+
+  /** CREATE [OR REPLACE] TEMPORARY VIEW registers the view's analyzed,
+    * bound plan: Spark keeps a SQL temp view as text and re-analyzes it
+    * at every reference, which would re-run its table function builders
+    * each time and could not hold a keyed join's binding. Other views
+    * are Spark's.
+    */
+  private def createView(stmt: String): Unit = {
+    val rewritten = FlinkSqlRewrite(stmt)
+    parse(rewritten) match {
+      case v: CreateViewCommand if v.viewType == LocalTempView =>
+        val body = analyze(v.plan)
+        val df =
+          if (v.userSpecifiedColumns.isEmpty) body
+          else body.toDF(v.userSpecifiedColumns.map(_._1): _*)
+        if (v.replace) df.createOrReplaceTempView(v.name.table)
+        else df.createTempView(v.name.table)
+      case _ => spark.sql(rewritten); ()
+    }
   }
 
   /** Flink INSERT maps the query output to the sink schema by POSITION,
@@ -425,7 +447,7 @@ class ScriptRunner(spark: SparkSession,
       else None
     }
     if (plans.exists(_.isEmpty)) return None
-    val srcSets = ins.map(i => referencedTables(i.query)
+    val srcSets = ins.map(i => referencedTables(parse(i.query))
       .filter(sourcesInstantiated.map(_.toLowerCase(java.util.Locale.ROOT))))
     srcSets.flatten.distinct match {
       case Seq(one) if srcSets.forall(_ == Set(one)) =>
@@ -546,42 +568,38 @@ class ScriptRunner(spark: SparkSession,
       "left_semi")
   }
 
-  /** Exact table references of a query: parse (not analyze) the SQL and
-    * collect `UnresolvedRelation` names, traversing expression subqueries
+  /** Exact table references of a parsed (not analyzed) query: the
+    * `UnresolvedRelation` names, traversing expression subqueries
     * (`TABLE(x)` table function arguments among them) and CTE
     * definitions too. Names inside string literals or comments can't
     * false-positive (the old word-boundary regex did), and
     * backtick-quoted names with special characters resolve exactly.
     */
-  private def referencedTables(query: String): Set[String] = {
+  private def referencedTables(parsed: LogicalPlan): Set[String] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
     def refs(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
       case r: UnresolvedRelation =>
         Seq(r.multipartIdentifier.last.toLowerCase(java.util.Locale.ROOT))
       case w: UnresolvedWith => w.cteRelations.flatMap(c => refs(c._2))
     }.flatten
-    refs(spark.sessionState.sqlParser.parsePlan(query)).toSet
+    refs(parsed).toSet
   }
 
   /** Register every referenced registry table as a temp view so the
-    * INSERT's SELECT resolves source tables through the registry.
+    * query resolves source tables through the registry.
     */
-  private def instantiateSources(query: String): Unit = {
-    val refs = referencedTables(query)
+  private def instantiateSources(refs: Set[String]): Unit =
     registry.foreach { case (name, spec) =>
       if (refs.contains(name.toLowerCase(java.util.Locale.ROOT)) &&
         !sourcesInstantiated.contains(name) && !isSinkOnly(spec)) {
         val df =
           if (isLookupDim(spec)) lookupDimView(name, spec)
-          else Some(Connectors.source(spark, spec, streaming = !batchMode))
-        // keyed lookup dims register no view here — their key-covering
-        // slice is built per statement by [[prepareKeyedDims]]
-        df.foreach(_.createOrReplaceTempView(name))
+          else Connectors.source(spark, spec, streaming = !batchMode)
+        df.createOrReplaceTempView(name)
         sourcesInstantiated += name
       }
     }
-  }
 
   /** A JDBC table with any `lookup.*` option is a lookup dimension
     * (demo_3.md:66-78) — always the BATCH side of a temporal join,
@@ -612,23 +630,19 @@ class ScriptRunner(spark: SparkSession,
     }
   }
 
-  /** Instantiate a lookup dim. Returns the snapshot-strategy DataFrame
-    * to register as the dim's temp view, or None for the keyed strategy
-    * (whose view is a per-statement key-covering slice built by
-    * [[prepareKeyedDims]]). Strategy resolution follows the reference's
-    * lookup contract (`demo_3.md:66-78` — `lookup.cache.max-rows`
-    * bounds the CACHE, not the dim): an explicit
-    * `lookup.cache.strategy` = 'snapshot' | 'keyed' wins; otherwise a
-    * dim that fits the cache bound is snapshot-cached whole, and one
-    * that exceeds it routes to the [[graft.streaming.JdbcKeyedLookup]]
-    * point-query path instead of fail-fasting.
+  /** Instantiate a lookup dim: the DataFrame to register as the dim's
+    * temp view. Strategy resolution follows the reference's lookup
+    * contract (`demo_3.md:66-78` — `lookup.cache.max-rows` bounds the
+    * CACHE, not the dim): an explicit `lookup.cache.strategy` =
+    * 'snapshot' | 'keyed' wins; otherwise a dim that fits the cache
+    * bound is snapshot-cached whole, and one that exceeds it routes to
+    * the [[graft.streaming.JdbcKeyedLookup]] point-query path instead of
+    * fail-fasting. A keyed dim's view is an empty placeholder with its
+    * declared schema: queries resolve against it, and
+    * [[bindKeyedJoins]] replaces each join reading it.
     */
-  private def lookupDimView(name: String, spec: TableSpec)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val ttlMs = spec.options.get("lookup.cache.ttl")
-      .flatMap(parseFlinkDuration).getOrElse(10000L)
-    val maxRows = spec.options.get("lookup.cache.max-rows")
-      .map(_.trim.toLong).getOrElse(1000000L)
+  private def lookupDimView(name: String, spec: TableSpec): DataFrame = {
+    val (ttlMs, maxRows, _, _) = lookupCfg(spec)
     val df = Connectors.source(spark, spec, streaming = false)
     val keyed = spec.options.get("lookup.cache.strategy")
       .map(_.trim.toLowerCase(java.util.Locale.ROOT)) match {
@@ -647,8 +661,12 @@ class ScriptRunner(spark: SparkSession,
           df.limit(probe).count() > maxRows
         }
     }
-    if (keyed) { keyedDims(name) = spec; None }
-    else {
+    if (keyed) {
+      keyedDims(name) = spec
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        spec.schema)
+    } else {
       val dim = new graft.streaming.TtlCachedDim(df, ttlMs, maxRows)
       lookupDims(name) = dim
       ScriptRunner.trackDimHolder(this)
@@ -658,15 +676,15 @@ class ScriptRunner(spark: SparkSession,
       lookupRefresher.scheduleWithFixedDelay(
         () => try dim.maybeRefresh() catch { case _: Throwable => () },
         period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
-      Some(df)
+      df
     }
   }
 
-  // keyed-strategy dims awaiting per-statement slicing; the point-query
-  // caches serving them live in [[graft.streaming.ExecutorLookupCaches]]
-  // — per-executor-JVM LRU+TTL caches shared by the batch slice path,
-  // the streaming enrichment path, and the Scala API, surviving across
-  // statements (and runners) by construction
+  // keyed-strategy dims, by name; the point-query caches serving them
+  // live in [[graft.streaming.ExecutorLookupCaches]] — per-executor-JVM
+  // LRU+TTL caches shared by the batch slice path, the streaming
+  // enrichment path, and the Scala API, surviving across statements
+  // (and runners) by construction
   private val keyedDims = mutable.Map[String, TableSpec]()
 
   /** Per-dim lookup stats (probed/fetched/hits/evictions) aggregated
@@ -689,30 +707,7 @@ class ScriptRunner(spark: SparkSession,
       }
     }
 
-  // the demo_3 temporal-join shape a keyed dim is reachable through:
-  //   JOIN <dim> FOR SYSTEM_TIME AS OF <x> [AS] <alias> ON <a> = <b>
-  private val TemporalJoinRe =
-    ("""(?i)\bJOIN\s+`?(\w+)`?\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+""" +
-      """[`\w.]+(?:\s+AS)?\s+(\w+)\s+ON\s+([`\w.]+)\s*=\s*([`\w.]+)""").r
-  // derived-table / expression aliases: `) [AS] alias` — the binds
-  // FromAliasRe cannot see (it stops at the opening parenthesis)
-  private val ParenAliasRe = """(?i)\)\s*(?:AS\s+)?`?(\w+)`?""".r
-  // FROM/JOIN clause alias pairs, for resolving the probe-side table
-  private val FromAliasRe =
-    ("""(?i)\b(?:FROM|JOIN)\s+`?(\w+)`?""" +
-      """(?:\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+[`\w.]+)?""" +
-      """(?:\s+AS)?(?:\s+(\w+))?""").r
-  private val SqlKeywords = Set("on", "where", "group", "join", "left",
-    "right", "inner", "outer", "full", "cross", "order", "limit",
-    "union", "select", "for", "having", "as")
-
-  /** One parsed temporal join of a keyed-strategy dim. */
-  private final case class KeyedJoin(alias: String, dimCol: String,
-      streamQual: String, streamCol: String, streamTable: String,
-      leftJoin: Boolean, lhsText: String, rhsText: String,
-      extraConjunct: Boolean)
-
-  /** (ttlMs, maxRows, retries, inListChunk) for a keyed lookup dim.
+  /** (ttlMs, maxRows, retries, inListChunk) for a lookup dim.
     * 'lookup.in-list-chunk' sizes the per-point-query `IN (…)` list —
     * databases pay a superlinear plan cost in IN-list arity (measured
     * on Derby: 100-key lists are ~8x cheaper per key than 500), so
@@ -726,379 +721,135 @@ class ScriptRunner(spark: SparkSession,
     spec.options.get("lookup.max-retries").map(_.trim.toInt).getOrElse(3),
     spec.options.get("lookup.in-list-chunk").map(_.trim.toInt).getOrElse(500))
 
-  private def dimKeyType(name: String, spec: TableSpec, dimCol: String)
-      : org.apache.spark.sql.types.DataType =
-    spec.schema.find(_.name == dimCol).getOrElse(
-      throw new IllegalArgumentException(
-        s"keyed lookup dim $name: ON references dim column '$dimCol' " +
-          s"which is not in the declared schema " +
-          s"(${spec.schema.fieldNames.mkString(", ")})")).dataType
-
-  private def parseKeyedJoin(name: String, stmtText: String,
-      m: scala.util.matching.Regex.Match,
-      aliasOf: Map[String, String]): KeyedJoin = {
-    val alias = m.group(2)
-    val dimQuals = Set(alias.toLowerCase(java.util.Locale.ROOT),
-      name.toLowerCase(java.util.Locale.ROOT))
-    def split(c: String): (String, String) = {
-      val parts = c.replace("`", "").split('.')
-      require(parts.length == 2,
-        s"keyed lookup dim $name: ON columns must be qualified (got '$c')")
-      (parts(0).toLowerCase(java.util.Locale.ROOT), parts(1))
+  /** The keyed dim whose placeholder view `p` reads, under any aliases. */
+  private def keyedDimOf(p: LogicalPlan): Option[(String, TableSpec)] =
+    p match {
+      case SubqueryAlias(_, child) => keyedDimOf(child)
+      case v: View if v.isTempView =>
+        keyedDims.find(_._1.equalsIgnoreCase(v.desc.identifier.table))
+      case _ => None
     }
-    val (lq, lc) = split(m.group(3))
-    val (rq, rc) = split(m.group(4))
-    val (dimCol, streamQual, streamCol) =
-      if (dimQuals(lq) && !dimQuals(rq)) (lc, rq, rc)
-      else if (dimQuals(rq) && !dimQuals(lq)) (rc, lq, lc)
-      else throw new IllegalArgumentException(
-        s"keyed lookup dim $name: exactly one side of the ON equality " +
-          s"must be the dim ('${m.group(3)}' = '${m.group(4)}', dim " +
-          s"alias $alias)")
-    val streamTable = aliasOf.getOrElse(streamQual,
-      throw new IllegalArgumentException(
-        s"keyed lookup dim $name: cannot resolve probe-side qualifier " +
-          s"'$streamQual' to a FROM/JOIN table"))
-    // the whole prefix, not a fixed window: `LEFT\n  OUTER\n  JOIN`
-    // spread across lines must still read as a left join (a missed LEFT
-    // silently drops unmatched stream rows under how="inner")
-    val before = stmtText.substring(0, m.start)
-    val leftJoin =
-      """(?i)\bLEFT\s+(?:OUTER\s+)?$""".r.findFirstIn(before).isDefined
-    val extra = """(?i)^\s*AND\b""".r
-      .findFirstIn(stmtText.substring(m.end)).isDefined
-    KeyedJoin(alias, dimCol, streamQual, streamCol, streamTable, leftJoin,
-      m.group(3).replace("`", ""), m.group(4).replace("`", ""), extra)
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(a, b) => conjuncts(a) ++ conjuncts(b)
+    case other => Seq(other)
   }
 
-  /** Prepare every keyed-strategy dim the statement references, in two
-    * shapes depending on the probe side:
-    *
-    * BATCH probe: build the dim's key-covering slice as a DISTRIBUTED
-    * DataFrame ([[graft.streaming.LookupJoin.dimSlice]]) — the probe
-    * side's distinct keys flow through per-executor LRU+TTL point-query
-    * caches inside `mapPartitions`, so neither the key set nor the dim
-    * rows are ever materialized on the driver — and register it as the
-    * dim's temp view; the statement then joins the slice exactly like a
-    * snapshot dim, but the database only ever saw the probed keys. A
-    * statement joining one dim on SEVERAL key columns unions per-column
-    * slices, anti-joining away rows an earlier column's key set already
-    * covers — dim-row multiplicity is exact (genuine duplicate dim rows
-    * survive; a full-row value-dedup would collapse them).
-    *
-    * STREAMING probe (demo_3's actual shape — a stream enriched from an
-    * oversized JDBC dim, `demo_3.md:94-109`): the temporal join is
-    * rewritten INTO the streaming plan as a stateless per-partition
-    * enrichment ([[graft.streaming.LookupJoin.enrichKeyedPartitions]]):
-    * the probe stream's view is replaced by an enriched view carrying
-    * the dim's columns under collision-proof names, dim-qualifier
-    * references are rewritten to them, and the join clause is deleted
-    * from the SQL. Each micro-batch's rows are point-query-enriched on
-    * the executors through the same per-executor caches — Flink's
-    * processing-time lookup semantics — while downstream aggregation
-    * still runs as a NATIVE streaming aggregate under the query's
-    * checkpoint (no per-batch re-planning, no state re-derivation).
-    *
-    * Returns the (possibly rewritten) query text plus the enrichment
-    * views to drop once the statement is analyzed.
+  /** (dim name, spec, dim key column, probe expression) of a join the
+    * binder serves: inner or LEFT, a keyed dim's placeholder on the
+    * right, and an ON conjunct `probe = dim.key` whose probe reads the
+    * left side only.
     */
-  private def prepareKeyedDims(stmtText: String, query: String)
-      : (String, Seq[String]) = {
-    if (keyedDims.isEmpty) return (query, Nil)
-    val joins = TemporalJoinRe.findAllMatchIn(stmtText).toSeq
-    val aliasOf: Map[String, String] = FromAliasRe.findAllMatchIn(stmtText)
-      .flatMap { m =>
-        val table = m.group(1)
-        val alias = Option(m.group(2))
-          .filterNot(a => SqlKeywords(a.toLowerCase(java.util.Locale.ROOT)))
-        Seq(table.toLowerCase(java.util.Locale.ROOT) -> table) ++
-          alias.map(_.toLowerCase(java.util.Locale.ROOT) -> table)
-      }.toMap
-    var outQuery = query
-    val createdViews = Seq.newBuilder[String]
-    // streaming probes CHAIN: a second dim of the same statement must
-    // enrich the already-enriched view, and the FROM rewrite must
-    // target whatever name the probe table currently has in the text
-    val curView = mutable.Map[String, String]()
-    keyedDims.foreach { case (name, spec) =>
-      val referenced = ("""(?i)\b""" + java.util.regex.Pattern.quote(name) +
-        """\b""").r.findFirstIn(stmtText).isDefined
-      val ms = joins.filter(_.group(1).equalsIgnoreCase(name))
-      if (ms.isEmpty && referenced)
-        throw new IllegalArgumentException(
-          s"keyed lookup dim $name is only reachable through the " +
-            "temporal-join shape `JOIN " + name + " FOR SYSTEM_TIME AS " +
-            "OF <col> AS d ON s.k = d.k` (demo_3.md:94-109); plain " +
-            "references cannot be served by point queries")
-      if (ms.nonEmpty) {
-        val infos = ms.map(m => parseKeyedJoin(name, stmtText, m, aliasOf))
-        def probeDf(i: KeyedJoin) = spark.table(curView.getOrElse(
-          i.streamTable.toLowerCase(java.util.Locale.ROOT), i.streamTable))
-        val streamingProbes = infos.map(i => probeDf(i).isStreaming)
-        if (streamingProbes.exists(identity)) {
-          require(streamingProbes.forall(identity),
-            s"keyed lookup dim $name: a statement mixing streaming and " +
-              "batch probe sides for one dim is not supported")
-          infos.foreach { i =>
-            val (q2, v) = rewriteStreamingKeyedJoin(outQuery, name, spec, i,
-              curView)
-            outQuery = q2
-            createdViews += v
-          }
-        } else registerKeyedSliceView(name, spec, infos)
+  private def lookupOf(j: Join)
+      : Option[(String, TableSpec, String, Expression)] =
+    (j.joinType, j.condition, keyedDimOf(j.right)) match {
+      case (Inner | LeftOuter, Some(cond), Some((name, spec))) =>
+        val dimCols = j.right.output.map(_.exprId)
+          .zip(spec.schema.fieldNames).toMap
+        def probe(dim: Expression, p: Expression) = dim match {
+          case a: Attribute if dimCols.contains(a.exprId) &&
+              p.deterministic && p.references.subsetOf(j.left.outputSet) =>
+            Some((name, spec, dimCols(a.exprId), p))
+          case _ => None
+        }
+        conjuncts(cond).view.flatMap {
+          case EqualTo(l, r) => probe(l, r).orElse(probe(r, l))
+          case _ => None
+        }.headOption
+      case _ => None
+    }
+
+  /** Bind every join that reads a keyed dim (see [[bindJoin]]) on the
+    * analyzed plan of `df`, subqueries included. A placeholder left
+    * unbound — a plain scan of the dim, the dim on a join's left, a
+    * RIGHT or FULL join, an ON without a probe equality — fails, naming
+    * the dim: point queries can only serve a probe.
+    */
+  private def bindKeyedJoins(df: DataFrame): DataFrame = {
+    def placeholders(p: LogicalPlan) = p.collectWithSubqueries {
+      case v: View if keyedDimOf(v).isDefined => keyedDimOf(v).get._1
+    }
+    def bind(p: LogicalPlan): LogicalPlan =
+      p.transformUpWithNewOutput {
+        case j: Join if lookupOf(j).isDefined => bindJoin(j)
+      }.transformAllExpressions {
+        case s: SubqueryExpression => s.withNewPlan(bind(s.plan))
       }
+    val analyzed = df.queryExecution.analyzed
+    if (placeholders(analyzed).isEmpty) return df
+    val bound = bind(analyzed)
+    placeholders(bound).headOption.foreach { name =>
+      throw new IllegalArgumentException(
+        s"keyed lookup dim $name is only reachable through the " +
+          s"temporal-join shape `[LEFT] JOIN $name [FOR SYSTEM_TIME AS " +
+          "OF <col>] AS d ON s.k = d.k` (demo_3.md:94-109), with the dim " +
+          "on the right of an inner or LEFT join; other references " +
+          "cannot be served by point queries")
     }
-    (outQuery, createdViews.result())
+    GraftSqlBridge.ofRows(spark, bound)
   }
 
-  /** The BATCH keyed shape: one distributed key-covering slice view per
-    * dim per statement (see [[prepareKeyedDims]]).
+  /** Replace one keyed lookup join. Columns map by position, never by
+    * name, and the probe is cast to the dim key's type (JDBC hands back
+    * e.g. java.lang.Long; an uncast Integer probe would miss by runtime
+    * equality and silently empty the join).
+    *
+    * STREAMING left (demo_3's actual shape — a stream enriched from an
+    * oversized JDBC dim, `demo_3.md:94-109`): the join becomes a
+    * stateless per-partition enrichment of the left side
+    * ([[graft.streaming.LookupJoin.enrichKeyedPartitions]]). Each
+    * micro-batch's rows are point-query-enriched on the executors
+    * through per-executor caches — Flink's processing-time lookup
+    * semantics — while downstream aggregation still runs as a native
+    * streaming aggregate under the query's checkpoint.
+    *
+    * BATCH left: the join reads this join's own distributed key-covering
+    * slice ([[graft.streaming.LookupJoin.dimSlice]]) instead — the left
+    * side's distinct probe keys flow through the same caches inside
+    * `mapPartitions`, so neither the key set nor the dim rows are ever
+    * materialized on the driver, and the full ON clause still applies.
     */
-  private def registerKeyedSliceView(name: String, spec: TableSpec,
-      infos: Seq[KeyedJoin]): Unit = {
-    import org.apache.spark.sql.functions.col
+  private def bindJoin(j: Join): (LogicalPlan, Seq[(Attribute, Attribute)]) = {
+    val (name, spec, dimKey, probe) = lookupOf(j).get
     val (ttlMs, maxRows, retries, inChunk) = lookupCfg(spec)
-    // distinct probe keys per dim key column, cast to the DIM key's
-    // type first (JDBC hands back e.g. java.lang.Long; an uncast
-    // Integer probe would miss by runtime equality and silently empty
-    // the join)
-    val byCol: Seq[(String, DataFrame)] =
-      infos.groupBy(_.dimCol).toSeq.sortBy(_._1).map { case (dimCol, is) =>
-        val kt = dimKeyType(name, spec, dimCol)
-        dimCol -> is.map { i =>
-          spark.table(i.streamTable)
-            .select(col(i.streamCol).cast(kt).as("k"))
-            .where(col("k").isNotNull)
-        }.reduce(_ union _).distinct()
-      }
-    // 'lookup.keys-per-batch' is OPT-IN: the slice is distributed, so
-    // there is no driver bound left to protect — the option remains as
-    // an explicit cache-thrash guard (a probe set far past the cache
-    // bound refetches every statement), enforced with one bounded count
-    spec.options.get("lookup.keys-per-batch").map(_.trim.toLong)
-      .foreach { maxKeys =>
-        byCol.foreach { case (c, keys) =>
-          val probe = math.min(maxKeys + 1, Int.MaxValue.toLong).toInt
-          val n = keys.limit(probe).count()
+    val key = Cast(probe, spec.schema(dimKey).dataType)
+    val (url, table) = (spec.options("url"), spec.options("table-name"))
+    if (j.left.isStreaming) {
+      require(conjuncts(j.condition.get).size == 1,
+        s"keyed lookup dim $name: the streaming point-query path supports " +
+          "a single-equality ON (the demo_3 shape); move additional " +
+          "predicates to the WHERE clause")
+      val probed = GraftSqlBridge.ofRows(spark,
+        Project(j.left.output :+ Alias(key, "__graft_probe")(), j.left))
+      val enriched = graft.streaming.LookupJoin.enrichKeyedPartitions(
+        url, spec.options, table, "__graft_probe", dimKey, spec.schema,
+        if (j.joinType == Inner) "inner" else "left", maxRows, ttlMs,
+        retries, inListChunk = inChunk)(probed).queryExecution.analyzed
+      val out = enriched.output.patch(j.left.output.size, Nil, 1)
+      (Project(out, enriched), j.output.zip(out))
+    } else {
+      val keys = GraftSqlBridge.ofRows(spark,
+        Project(Seq(Alias(key, "k")()), j.left))
+      // 'lookup.keys-per-batch' is OPT-IN: the slice is distributed, so
+      // there is no driver bound left to protect — the option remains
+      // as an explicit cache-thrash guard (a probe set far past the
+      // cache bound refetches every statement), one bounded count
+      spec.options.get("lookup.keys-per-batch").map(_.trim.toLong)
+        .foreach { maxKeys =>
+          val n = keys.where("k IS NOT NULL").distinct()
+            .limit(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt).count()
           require(n <= maxKeys,
             s"keyed lookup dim $name: statement probes $n distinct " +
-              s"keys on '$c' (> $maxKeys 'lookup.keys-per-batch'); " +
+              s"keys on '$dimKey' (> $maxKeys 'lookup.keys-per-batch'); " +
               "raise the bound or pre-aggregate the probe side")
         }
-      }
-    val slices = byCol.zipWithIndex.map { case ((dimCol, keys), i) =>
-      var s = graft.streaming.LookupJoin.dimSlice(keys,
-        spec.options("url"), spec.options, spec.options("table-name"),
-        dimCol, spec.schema, maxRows, ttlMs, retries,
-        inListChunk = inChunk)
-      // a dim row matching probed keys of SEVERAL columns must appear
-      // ONCE in the view (as in a snapshot view): rows whose
-      // earlier-column value was probed are exactly the rows that
-      // earlier slice already fetched — anti-join them away. Preserves
-      // genuine duplicate dim rows (a full-row value-dedup would not).
-      byCol.take(i).foreach { case (prevCol, prevKeys) =>
-        s = s.join(prevKeys.withColumnRenamed("k", "__graft_gk"),
-          s(prevCol) === col("__graft_gk"), "left_anti")
-      }
-      s
+      val slice = graft.streaming.LookupJoin.dimSlice(keys, url,
+        spec.options, table, dimKey, spec.schema, maxRows, ttlMs, retries,
+        inListChunk = inChunk).queryExecution.analyzed
+      val dimToSlice = j.right.output.zip(slice.output)
+      (j.copy(right = slice).rewriteAttrs(AttributeMap(dimToSlice)),
+        dimToSlice)
     }
-    slices.reduce(_ union _).createOrReplaceTempView(name)
-  }
-
-  private val enrCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val EnrPrefix = "__graft_dim_"
-
-  /** The STREAMING keyed shape: splice a per-partition point-query
-    * enrichment into the streaming plan and rewrite the statement text
-    * around it (see [[prepareKeyedDims]]). Returns the rewritten query
-    * and the enriched view's name.
-    */
-  private def rewriteStreamingKeyedJoin(query: String, name: String,
-      spec: TableSpec, i: KeyedJoin,
-      curView: mutable.Map[String, String]): (String, String) = {
-    import org.apache.spark.sql.functions.col
-    import java.util.regex.Pattern.quote
-    import scala.util.matching.Regex.quoteReplacement
-    require(!i.extraConjunct,
-      s"keyed lookup dim $name: the streaming point-query path supports " +
-        "a single-equality ON (the demo_3 shape); move additional " +
-        "predicates to the WHERE clause")
-    val (ttlMs, maxRows, retries, inChunk) = lookupCfg(spec)
-    val kt = dimKeyType(name, spec, i.dimCol)
-    val lkey = i.streamTable.toLowerCase(java.util.Locale.ROOT)
-    val prevName = curView.getOrElse(lkey, i.streamTable)
-    val stream = spark.table(prevName)
-    require(!stream.columns.contains("__graft_probe_k"),
-      s"keyed lookup dim $name: probe source carries the reserved " +
-        "'__graft_probe_k' column")
-    // a chained enrichment legitimately carries the PREVIOUS dim's
-    // prefixed columns; only a raw source with the prefix is a clash
-    if (!curView.contains(lkey))
-      require(!stream.columns.exists(_.startsWith(EnrPrefix)),
-        s"keyed lookup dim $name: probe source carries reserved " +
-          s"'$EnrPrefix*' columns")
-    val how = if (i.leftJoin) "left" else "inner"
-    // hidden probe column: carries the stream key CAST to the dim key
-    // type (runtime-equality contract of the executor-side lookup)
-    // without changing the visible column's type
-    val probed = stream.withColumn("__graft_probe_k",
-      col(i.streamCol).cast(kt))
-    val enriched0 = graft.streaming.LookupJoin.enrichKeyedPartitions(
-      spec.options("url"), spec.options, spec.options("table-name"),
-      "__graft_probe_k", i.dimCol, spec.schema, how, maxRows, ttlMs,
-      retries, inListChunk = inChunk)(probed)
-      .drop("__graft_probe_k")
-    // collision-proof dim column names: d.col references rewrite to
-    // these, so a dim column sharing a stream column's name keeps its
-    // OWN values (incl. NULL-extension under a left join)
-    val renames = spec.schema.fieldNames
-      .map(c => c -> s"$EnrPrefix${i.alias}_$c").toMap
-    val outNames = stream.columns ++ spec.schema.fieldNames.map(renames)
-    val enriched = enriched0.toDF(outNames.toIndexedSeq: _*)
-    val v = s"__graft_keyed_enr_${enrCounter.incrementAndGet()}"
-    enriched.createOrReplaceTempView(v)
-
-    // 1) delete the temporal join clause (FlinkSqlRewrite has already
-    // stripped FOR SYSTEM_TIME from `query`; keep it optional anyway)
-    def colRef(qc: String): String = {
-      val Array(q, c) = qc.split('.')
-      "`?" + quote(q) + "`?\\s*\\.\\s*`?" + quote(c) + "`?"
-    }
-    val joinRe = ("(?i)(?:LEFT\\s+(?:OUTER\\s+)?)?JOIN\\s+`?" +
-      quote(name) + "`?\\s+(?:FOR\\s+SYSTEM_TIME\\s+AS\\s+OF\\s+" +
-      "[`\\w.]+\\s+)?(?:AS\\s+)?" + quote(i.alias) + "\\s+ON\\s+" +
-      colRef(i.lhsText) + "\\s*=\\s*" + colRef(i.rhsText)).r
-    require(joinRe.findFirstIn(query).isDefined,
-      s"keyed lookup dim $name: cannot locate the temporal join of " +
-        s"'$name' (alias ${i.alias}) in the rewritten statement text")
-    var out = joinRe.replaceFirstIn(query, " ")
-
-    // the dim's own join clause is now gone; the textual rewrites below
-    // cannot scope identifiers, so two conflicts must fail loudly with
-    // the fix named rather than silently rewriting the wrong scope:
-    //  - another FROM/JOIN binding the DIM alias (an unrelated
-    //    subquery's `FROM other_tab d`) — its `d.col` references would
-    //    be clobbered by the qualifier rewrite;
-    //  - more than one FROM/JOIN binding the PROBE qualifier (a
-    //    subquery re-selecting from the probe table under the same
-    //    alias) — the enrichment would attach to whichever occurrence
-    //    comes first textually, not necessarily the joined one.
-    val probeQualLower = i.streamQual.toLowerCase(java.util.Locale.ROOT)
-    var probeQualBinds = 0
-    FromAliasRe.findAllMatchIn(out).foreach { fm =>
-      val boundAlias = Option(fm.group(2))
-        .filterNot(a => SqlKeywords(a.toLowerCase(java.util.Locale.ROOT)))
-      if (boundAlias.exists(_.equalsIgnoreCase(i.alias)) ||
-          fm.group(1).equalsIgnoreCase(i.alias))
-        throw new IllegalArgumentException(
-          s"keyed lookup dim $name: alias '${i.alias}' is also bound " +
-            "by another FROM/JOIN in the statement; the streaming " +
-            "point-query rewrite is textual and cannot scope qualified " +
-            "references — rename the dim alias or the conflicting one")
-      // step 3 below rewrites `<dimTableName>.col` references too, so
-      // a FROM/JOIN binding the dim's TABLE NAME (an unrelated relation
-      // aliased as the dim name, or a plain scan of it) would have its
-      // qualified references silently clobbered — reject it like the
-      // alias clash. A remaining `JOIN <dim> FOR SYSTEM_TIME …` of the
-      // SAME dim under another alias is legitimate (a later iteration
-      // rewrites it); FromAliasRe consumed its SYSTEM_TIME clause, so
-      // it is recognizable in the matched text and skipped.
-      val pendingTemporal =
-        fm.matched.toUpperCase(java.util.Locale.ROOT).contains("SYSTEM_TIME")
-      if (!pendingTemporal &&
-          (boundAlias.exists(_.equalsIgnoreCase(name)) ||
-            fm.group(1).equalsIgnoreCase(name)))
-        throw new IllegalArgumentException(
-          s"keyed lookup dim $name: the dim's table name is also bound " +
-            "by another FROM/JOIN in the statement; the streaming " +
-            "point-query rewrite is textual and cannot scope qualified " +
-            "references — rename the conflicting relation or its alias")
-      val effQual = boundAlias.getOrElse(fm.group(1))
-        .toLowerCase(java.util.Locale.ROOT)
-      if (effQual == probeQualLower) probeQualBinds += 1
-    }
-    // derived tables bind aliases too — `(SELECT …) d` in ANY scope —
-    // and FromAliasRe cannot see through the parenthesis, so a nested
-    // subquery aliased as the dim would have its qualified references
-    // silently rewritten to the enriched columns (and resolved from the
-    // OUTER scope — wrong values, no error). Scan the `) [AS] alias`
-    // form directly. SELECT-list expression aliases match this shape
-    // too (`SUM(x) d`); a collision there rejects loudly as well — the
-    // safe direction for a textual rewrite, fixed by renaming either.
-    ParenAliasRe.findAllMatchIn(out).foreach { pm =>
-      val a = pm.group(1)
-      if (!SqlKeywords(a.toLowerCase(java.util.Locale.ROOT))) {
-        if (a.equalsIgnoreCase(i.alias) || a.equalsIgnoreCase(name))
-          throw new IllegalArgumentException(
-            s"keyed lookup dim $name: '${a}' is also bound or aliased " +
-              "after a parenthesized expression or derived table " +
-              "elsewhere in the statement; the streaming point-query " +
-              "rewrite is textual and cannot scope qualified " +
-              "references — rename the dim alias or the conflicting one")
-        if (a.equalsIgnoreCase(i.streamQual)) probeQualBinds += 1
-      }
-    }
-    if (probeQualBinds > 1)
-      throw new IllegalArgumentException(
-        s"keyed lookup dim $name: probe qualifier '${i.streamQual}' is " +
-          "bound by more than one FROM/JOIN (or derived-table alias) " +
-          "in the statement (e.g. a subquery re-selecting from the " +
-          "probe table under the same alias); the streaming " +
-          "point-query rewrite cannot tell the scopes apart — give " +
-          "the subquery's relation a different alias")
-
-    // 2) probe table reference → enriched view, keeping (or minting)
-    // the alias so stream-side qualified references keep resolving.
-    // (?!\w) guards the table-name end: without it a probe table that
-    // is a PREFIX of another identifier (flink_test_3 vs
-    // flink_test_3_dim — the demo_3 names!) would match inside it.
-    // Only the occurrence whose EFFECTIVE qualifier (alias, or the bare
-    // table name when un-aliased) is the ON clause's probe qualifier is
-    // rewritten: a statement referencing the stream table twice (a
-    // self-join `FROM s AS x JOIN s AS a2 … ON a2.k = d.k`) must attach
-    // the enrichment to a2's relation, not to the first textual match —
-    // the wrong occurrence would key the point queries off x's rows and
-    // leave a2 un-enriched, silently wrong with no error
-    val probeRe = ("(?i)\\b(FROM|JOIN)\\s+`?" + quote(prevName) +
-      "`?(?!\\w)((\\s+AS)?\\s+(\\w+))?").r
-    val wantQual = i.streamQual.toLowerCase(java.util.Locale.ROOT)
-    var replaced = false
-    out = probeRe.replaceSomeIn(out, mm => {
-      val cand = Option(mm.group(4))
-        .filterNot(a => SqlKeywords(a.toLowerCase(java.util.Locale.ROOT)))
-      val effQual = cand.getOrElse(prevName)
-        .toLowerCase(java.util.Locale.ROOT)
-      if (replaced || effQual != wantQual) None
-      else {
-        replaced = true
-        val (alias, trailer) = Option(mm.group(4)) match {
-          case Some(a) if cand.isDefined => (a, "")
-          case Some(a) => (i.streamQual, " " + a) // keyword: emit it back
-          case None => (i.streamQual, "")
-        }
-        Some(quoteReplacement(
-          mm.group(1) + " " + v + " AS " + alias + trailer))
-      }
-    })
-    require(replaced,
-      s"keyed lookup dim $name: cannot locate probe table '$prevName' " +
-        s"under qualifier '${i.streamQual}' in the statement")
-
-    // 3) dim-qualified references → the renamed enriched columns
-    spec.schema.fieldNames.foreach { c =>
-      val r = ("(?i)\\b(?:" + quote(i.alias) + "|" + quote(name) +
-        ")\\s*\\.\\s*`?" + quote(c) + "`?").r
-      out = r.replaceAllIn(out, quoteReplacement(renames(c)))
-    }
-    ("(?i)\\b" + quote(i.alias) + "\\s*\\.").r.findFirstIn(out).foreach {
-      _ =>
-        throw new IllegalArgumentException(
-          s"keyed lookup dim $name: statement references " +
-            s"${i.alias}.<col> not in the declared dim schema " +
-            s"(${spec.schema.fieldNames.mkString(", ")})")
-    }
-    curView(lkey) = v
-    (out, v)
   }
 
   /** Release runner-held resources (lookup-dim cache + TTL scheduler).

@@ -168,6 +168,20 @@ class HttpApiSpec extends SparkSpec {
     assert(s == 400 && b.contains("validation failed"), b)
   }
 
+  test("a script the analyzer rejects is a 400, not a 500") {
+    val src = Files.createTempDirectory("api_bad_src").toString
+    val out = Files.createTempDirectory("api_bad_out").toString
+    spark.range(0, 3).toDF("id").coalesce(1).write.mode("append").parquet(src)
+    val unknownColumn = fsScript(src, out)
+      .replace("SELECT id FROM src", "SELECT no_such_col FROM src")
+    val unknownTable = fsScript(src, out)
+      .replace("FROM src", "FROM no_such_table")
+    Seq(unknownColumn, unknownTable).zipWithIndex.foreach { case (sc, i) =>
+      val (s, b) = post("start", "name" -> s"bad_analysis_$i", "script" -> sc)
+      assert(s == 400 && b.contains("\"success\":false"), s"$s $b")
+    }
+  }
+
   test("unknown verb is a 404 with a RestResult body") {
     val (s, b) = post("definitelyNotAVerb")
     assert(s == 404 && b.contains("\"success\":false"), b)

@@ -894,54 +894,64 @@ class DemoGateSpec extends SparkSpec {
 
   test("a statement re-binding the dim alias in another scope is " +
     "rejected loudly, not silently rewritten") {
-    // the textual qualifier rewrite cannot scope `d.col`: an unrelated
-    // subquery aliasing a DIFFERENT table as d would get its references
-    // clobbered — the gate must name the conflict instead
+    // an unrelated subquery aliasing a DIFFERENT table as d: its d.label
+    // is that table's column, not the dim's — the binder works on the
+    // analyzed plan, so each reference keeps its own scope
     val url = derby("shdim")
     val c = DriverManager.getConnection(url)
     try {
       val st = c.createStatement()
       st.execute("CREATE TABLE sh_dim (id BIGINT PRIMARY KEY, " +
         "label VARCHAR(24))")
-      st.execute("INSERT INTO sh_dim VALUES (1, 'one')")
+      st.execute("INSERT INTO sh_dim VALUES (1, 'one'), (2, 'two')")
     } finally c.close()
+    val other = jsonDir(Seq("""{"label": 1}"""))
     val broker = new graft.sources.StubBroker("sh_topic", 1)
     val runner = new ScriptRunner(spark,
       checkpointRoot = Some(Files.createTempDirectory("sh_ckpt").toString))
     try {
       broker.append(0, "null", """{"k":1,"v":1.0}""")
-      val e = intercept[IllegalArgumentException] {
-        runner.run(
-          s"""create table sh_src (k BIGINT, v DOUBLE) with (
-             |  'connector' = 'kafka', 'topic' = 'sh_topic',
-             |  'rest.endpoint' = '${broker.endpoint}',
-             |  'scan.startup.mode' = 'earliest-offset',
-             |  'format' = 'json'
-             |);
-             |create table sh_dim (id BIGINT, label VARCHAR) with (
-             |  'connector' = 'jdbc', 'url' = '$url',
-             |  'table-name' = 'sh_dim',
-             |  'lookup.cache.ttl' = '60 s',
-             |  'lookup.cache.strategy' = 'keyed'
-             |);
-             |CREATE TABLE sh_sink (k BIGINT, label STRING)
-             |WITH ('connector' = 'memory');
-             |INSERT INTO sh_sink
-             |SELECT f.k, d.label FROM sh_src f
-             |JOIN sh_dim FOR SYSTEM_TIME AS OF f.k AS d ON f.k = d.id
-             |WHERE f.k IN (SELECT d.label FROM sh_other d);
-             |""".stripMargin)
-      }
-      assert(e.getMessage.contains("also bound"), e.getMessage)
+      broker.append(0, "null", """{"k":2,"v":2.0}""")
+      val res = runner.run(
+        s"""create table sh_src (k BIGINT, v DOUBLE) with (
+           |  'connector' = 'kafka', 'topic' = 'sh_topic',
+           |  'rest.endpoint' = '${broker.endpoint}',
+           |  'scan.startup.mode' = 'earliest-offset',
+           |  'format' = 'json'
+           |);
+           |create table sh_dim (id BIGINT, label VARCHAR) with (
+           |  'connector' = 'jdbc', 'url' = '$url',
+           |  'table-name' = 'sh_dim',
+           |  'lookup.cache.ttl' = '60 s',
+           |  'lookup.cache.strategy' = 'keyed'
+           |);
+           |create table sh_other (label BIGINT) with (
+           |  'connector' = 'filesystem', 'path' = '$other',
+           |  'format' = 'json', 'source.bounded' = 'true'
+           |);
+           |CREATE TABLE sh_sink (k BIGINT, label STRING)
+           |WITH ('connector' = 'memory');
+           |INSERT INTO sh_sink
+           |SELECT f.k, d.label FROM sh_src f
+           |JOIN sh_dim FOR SYSTEM_TIME AS OF f.k AS d ON f.k = d.id
+           |WHERE f.k IN (SELECT d.label FROM sh_other d);
+           |""".stripMargin)
+      val q = res.queries.head
+      try {
+        q.processAllAvailable()
+        val seen = spark.table("sh_sink").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSet
+        // sh_other holds label 1: only k=1 passes the IN, enriched from
+        // the dim (a dim-scoped d.label would compare k to 'one'/'two')
+        assert(seen == Set((1L, "one")), seen.toString)
+      } finally q.stop()
     } finally { runner.close(); broker.stop() }
   }
 
   test("a statement binding the PROBE qualifier twice is rejected " +
     "loudly, not enriched at the first textual occurrence") {
-    // a subquery re-selecting from the probe table under the same alias
-    // precedes the main FROM textually; attaching the enrichment there
-    // would leave the joined relation un-enriched after its join clause
-    // was deleted — reject with the fix named instead
+    // the subquery re-selects from the STREAMING probe table under the
+    // same alias: Spark itself rejects a streaming IN-subquery
     val url = derby("sh2dim")
     val c = DriverManager.getConnection(url)
     try {
@@ -955,7 +965,7 @@ class DemoGateSpec extends SparkSpec {
       checkpointRoot = Some(Files.createTempDirectory("sh2_ckpt").toString))
     try {
       broker.append(0, "null", """{"k":1,"v":1.0}""")
-      val e = intercept[IllegalArgumentException] {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
         runner.run(
           s"""create table sh2_src (k BIGINT, v DOUBLE) with (
              |  'connector' = 'kafka', 'topic' = 'sh2_topic',
@@ -977,8 +987,9 @@ class DemoGateSpec extends SparkSpec {
              |WHERE f.k IN (SELECT f.k FROM sh2_src f WHERE f.v > 0);
              |""".stripMargin)
       }
-      assert(e.getMessage.contains("more than one FROM/JOIN"),
-        e.getMessage)
+      assert(e.getMessage.contains(
+        "INVALID_SUBQUERY_EXPRESSION.STREAMING_QUERY") &&
+        e.getMessage.contains("sh2_src"), e.getMessage)
     } finally { runner.close(); broker.stop() }
   }
 
@@ -1080,15 +1091,18 @@ class DemoGateSpec extends SparkSpec {
       val s = runner.keyedLookupStats("m_dim").get
       assert(s.probedKeys == 1000000L && s.fetchedKeys == 1000000L,
         s"stats: $s")
-      // structural proof of no driver materialization: the dim's view
-      // is the distributed slice plan — no LocalRelation of collected
-      // rows anywhere under it
-      val viewPlan = spark.table("m_dim").queryExecution.analyzed
-      val hasLocal = viewPlan.collectFirst {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-            if l.data.nonEmpty => l
+      // structural proof of no driver materialization: the sink's plan
+      // reads the dim through the distributed slice (a mapPartitions) —
+      // no LocalRelation of collected rows anywhere in it
+      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+        MapPartitions}
+      val sinkPlan = spark.table("m_sink_out").queryExecution.analyzed
+      assert(sinkPlan.collectFirst { case m: MapPartitions => m }.isDefined,
+        sinkPlan.toString.take(500))
+      val hasLocal = sinkPlan.collectFirst {
+        case l: LocalRelation if l.data.nonEmpty => l
       }.isDefined
-      assert(!hasLocal, viewPlan.toString.take(500))
+      assert(!hasLocal, sinkPlan.toString.take(500))
     } finally runner.close()
   }
 

@@ -177,4 +177,37 @@ class TableFunctionGateSpec extends graft.SparkSpec {
       .collect().toSeq == Seq(1L))
     assert(graftViews() == before)
   }
+
+  test("a SQL temporary view over a table function runs its builder " +
+    "once: the view holds its analyzed plan") {
+    import spark.implicits._
+    graft.multimodal.MediaFixture.phashTable(
+      graft.Tables.load(spark, sf, "documents").select($"doc_id").as[Long])
+      .createOrReplaceTempView("phash_once_imgs")
+    val runner = new ScriptRunner(spark, batchMode = true)
+    val functions = spark.sessionState.tableFunctionRegistry
+    val kernel = functions.lookupFunctionBuilder(
+      FunctionIdentifier("DEDUP_PHASH_PAIRS")).get
+    val calls = new AtomicInteger
+    functions.createOrReplaceTempFunction("DEDUP_PHASH_PAIRS",
+      args => { calls.incrementAndGet(); kernel(args) }, "scala_udf")
+    try {
+      // q_gate_phash_cluster's script
+      runner.run(
+        """CREATE OR REPLACE TEMPORARY VIEW phash_once_edges AS
+          |SELECT id_a, id_b FROM TABLE(DEDUP_PHASH_PAIRS(
+          |  TABLE phash_once_imgs, DESCRIPTOR(id),
+          |  DESCRIPTOR(media), 3));
+          |CREATE TABLE phash_once_sink (node BIGINT,
+          |  cluster BIGINT, is_keeper BOOLEAN)
+          |  WITH ('connector' = 'memory');
+          |INSERT INTO phash_once_sink
+          |SELECT node, cluster, is_keeper FROM TABLE(
+          |  CONNECTED_COMPONENTS(TABLE phash_once_edges, DESCRIPTOR(id_a),
+          |  DESCRIPTOR(id_b)));
+          |""".stripMargin)
+      assert(spark.table("phash_once_sink_out").count() > 0)
+      assert(calls.get == 1)
+    } finally FlinkSqlRewrite.register(spark)
+  }
 }
