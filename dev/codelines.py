@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
 """Count the code lines of Scala source files.
 
-Usage: python3 dev/codelines.py FILE.scala [FILE.scala ...]
+Usage: python3 dev/codelines.py PATH [PATH ...]
+
+Each PATH is a Scala file or a directory, which is searched recursively
+for `*.scala` files (in sorted order).
 
 A line counts when any of it is code or string literal; blank lines and
 lines that are only `//` comments, `/* */` / Scaladoc comments (nested,
@@ -10,6 +13,7 @@ triple-quoted ones spanning lines, count as code, so a `//` or `/*`
 inside a string starts no comment. Prints one `<count> <file>` line per
 file, then the total.
 """
+import os
 import sys
 
 
@@ -84,11 +88,22 @@ def code_lines(src):
     return len(counted)
 
 
-def main(paths):
-    if not paths:
+def scala_files(path):
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(d, f)
+                  for d, _, fs in os.walk(path)
+                  for f in fs if f.endswith('.scala'))
+
+
+def main(args):
+    if not args:
         sys.exit(__doc__)
+    if args[0] in ('-h', '--help'):
+        print(__doc__)
+        return
     total = 0
-    for p in paths:
+    for p in (f for a in args for f in scala_files(a)):
         with open(p, encoding='utf-8') as f:
             k = code_lines(f.read())
         total += k

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for bench runs beyond the shipped
@@ -29,15 +29,10 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: GenScale <srcSfDir> <dstDir> <copies>")
     val (src, dst, copies) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(
+      Runtime.getRuntime.availableProcessors().toString,
+      "spark.app.name" -> "graft-genscale",
+      "spark.sql.shuffle.partitions" -> "32")
 
     def read(t: String): DataFrame =
       spark.read.parquet(s"$src/$t.parquet")

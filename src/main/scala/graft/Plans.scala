@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round measurement tool (guide §1): dumps
   * `.explain("formatted")` for named queries to files and times each in
   * isolation through the noop sink (min of `reps` after one warm-up) so a
   * single query can be iterated on without paying for the whole bench
-  * sweep. Session config mirrors Bench exactly — a plan captured here is
-  * the plan the bench runs.
+  * sweep. The session is Bench's ([[Sessions.local]] on the same cores)
+  * — a plan captured here is the plan the bench runs.
   *
   * Usage: runMain graft.Plans <outDir> <suffix> <reps> <query ...|all>
   */
@@ -18,20 +17,10 @@ object Plans {
     val suffix = args(1)
     val reps = args(2).toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val names: Seq[String] =
       if (args.length == 4 && args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(3).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCores)
     new java.io.File(outDir).mkdirs()
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     names.foreach { name =>

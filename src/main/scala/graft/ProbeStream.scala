@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Optimization-round measurement tool for STREAMING queries (the
@@ -9,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * StreamingQueryProgress phase breakdown (queryPlanning / getBatch /
   * addBatch / walCommit / state commit) so per-batch compute can be
   * separated from streaming machinery. Measurement tooling only — no
-  * query surface change, session config mirrors Bench.
+  * query surface change; the session is Bench's ([[Sessions.local]]).
   *
   * Usage: runMain graft.ProbeStream <query ...>  (3 reps each), or
   *        runMain graft.ProbeStream ivfpq-direct  (kernel-level drain)
@@ -17,16 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object ProbeStream {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCores)
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit =

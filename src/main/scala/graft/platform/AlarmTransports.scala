@@ -6,11 +6,13 @@ import graft.platform.JobManager.AlarmEvent
 /** Alarm transports mirroring the reference's web-alarm module: a
   * DingDing text-message webhook (`DingDingAlarmImpl.java:25-70`) and a
   * generic HTTP form callback (`HttpAlarmImpl.java:31-62`), fanned out of
-  * `JobManager.addAlarmHandler`. As with [[graft.sqlgate.EsBulk]], the
-  * container ships no HTTP client, so the wire POST is a pluggable
-  * `post(url, contentType, body) => responseBody` function; payload
-  * construction and response interpretation — the actual alarm logic —
-  * are real and spec'd.
+  * `JobManager.addAlarmHandler`. Every send — the two fixed-URL
+  * handlers, the config-driven [[configuredHandler]] and the HTTP
+  * facade's test-fire verbs — goes through [[deliver]], which builds the
+  * payload, POSTs it, judges the reply and returns the [[Delivery]] row.
+  * The wire POST is a pluggable `post(url, contentType, body) =>
+  * responseBody` function ([[jdkPost]] by default) so specs can capture
+  * or fail it.
   */
 object AlarmTransports {
 
@@ -67,42 +69,49 @@ object AlarmTransports {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** An `addAlarmHandler`-ready DingDing sender. Transport failures and
-    * webhook rejections are logged, never thrown — alarm failure must not
-    * become job failure (JobManager.fireAlarm guards this too, but a
-    * handler shouldn't rely on it).
+  /** Transport names, as recorded in each [[Delivery]]. */
+  val DingDing = "DINGDING"
+  val Callback = "CALLBACK_URL"
+
+  /** The one alarm send: POST the transport's payload for `e` to `url`,
+    * judge the reply (DingDing by its errcode, a callback by not
+    * throwing) and return the delivery row, whose detail is the first
+    * 200 reply characters or the failure's message. Never throws —
+    * alarm failure must not become job failure — and logs a failed
+    * delivery.
     */
+  def deliver(transport: String, url: String, e: AlarmEvent,
+      post: (String, String, String) => String,
+      deployMode: String = "SPARK_LOCAL",
+      clock: () => java.time.Instant = () => java.time.Instant.now())
+      : Delivery = {
+    val (ok, detail) =
+      try {
+        val res =
+          if (transport == DingDing)
+            post(url, "application/json", dingTalkPayload(e, clock()))
+          else post(url, "application/x-www-form-urlencoded",
+            httpCallbackBody(e, deployMode))
+        (transport != DingDing || dingTalkAccepted(res), res.take(200))
+      } catch { case ex: Throwable => (false, String.valueOf(ex.getMessage)) }
+    if (!ok) log.warn(s"$transport alarm delivery failed for job ${e.jobId}: $detail")
+    Delivery(e.jobId, e.jobName, e.kind, transport, ok, detail)
+  }
+
+  /** An `addAlarmHandler`-ready DingDing sender for the [[DefaultKinds]]. */
   def dingTalkHandler(url: String,
       post: (String, String, String) => String,
-      kinds: Set[String] = DefaultKinds,
       clock: () => java.time.Instant = () => java.time.Instant.now())
       : AlarmEvent => Unit = e =>
-    if (kinds(e.kind)) {
-      try {
-        val res = post(url, "application/json", dingTalkPayload(e, clock()))
-        if (!dingTalkAccepted(res))
-          log.warn(s"DingDing webhook rejected alarm for job ${e.jobId}: $res")
-      } catch {
-        case ex: Throwable =>
-          log.warn(s"DingDing alarm send failed for job ${e.jobId}: $ex")
-      }
-    }
+    if (DefaultKinds(e.kind)) deliver(DingDing, url, e, post, clock = clock)
 
-  /** An `addAlarmHandler`-ready HTTP-callback sender; the pluggable post
-    * returns the response status line/body, any exception counts as
-    * delivery failure (the reference treats non-2xx the same way).
+  /** An `addAlarmHandler`-ready HTTP-callback sender for the
+    * [[DefaultKinds]]; any exception from the post counts as delivery
+    * failure (the reference treats non-2xx the same way).
     */
   def httpCallbackHandler(url: String, deployMode: String,
-      post: (String, String, String) => String,
-      kinds: Set[String] = DefaultKinds): AlarmEvent => Unit = e =>
-    if (kinds(e.kind)) {
-      try post(url, "application/x-www-form-urlencoded",
-        httpCallbackBody(e, deployMode))
-      catch {
-        case ex: Throwable =>
-          log.warn(s"HTTP callback alarm failed for job ${e.jobId}: $ex")
-      }
-    }
+      post: (String, String, String) => String): AlarmEvent => Unit = e =>
+    if (DefaultKinds(e.kind)) deliver(Callback, url, e, post, deployMode)
 
   /** Every kind JobManager fires today. */
   val DefaultKinds: Set[String] =
@@ -144,26 +153,12 @@ object AlarmTransports {
   def configuredHandler(cfg: SystemConfig, alarmLog: AlarmLog,
       post: (String, String, String) => String = jdkPost,
       deployMode: String = "SPARK_LOCAL",
-      kinds: Set[String] = DefaultKinds,
       clock: () => java.time.Instant = () => java.time.Instant.now())
       : AlarmEvent => Unit = e =>
-    if (kinds(e.kind)) {
-      cfg.get(SystemConfig.DingDingAlarmUrl).filter(_.nonEmpty).foreach { url =>
-        val (ok, detail) =
-          try {
-            val res = post(url, "application/json", dingTalkPayload(e, clock()))
-            (dingTalkAccepted(res), res.take(200))
-          } catch { case ex: Throwable => (false, String.valueOf(ex.getMessage)) }
-        alarmLog.add(Delivery(e.jobId, e.jobName, e.kind, "DINGDING", ok, detail))
-        if (!ok) log.warn(s"DingDing alarm delivery failed for ${e.jobId}: $detail")
-      }
-      cfg.get(SystemConfig.CallbackAlarmUrl).filter(_.nonEmpty).foreach { url =>
-        val (ok, detail) =
-          try { (true, post(url, "application/x-www-form-urlencoded",
-            httpCallbackBody(e, deployMode)).take(200)) }
-          catch { case ex: Throwable => (false, String.valueOf(ex.getMessage)) }
-        alarmLog.add(Delivery(e.jobId, e.jobName, e.kind, "CALLBACK_URL", ok, detail))
-        if (!ok) log.warn(s"HTTP callback alarm delivery failed for ${e.jobId}: $detail")
+    if (DefaultKinds(e.kind)) Seq(DingDing -> SystemConfig.DingDingAlarmUrl,
+      Callback -> SystemConfig.CallbackAlarmUrl).foreach { case (transport, key) =>
+      cfg.get(key).filter(_.nonEmpty).foreach { url =>
+        alarmLog.add(deliver(transport, url, e, post, deployMode, clock))
       }
     }
 }

@@ -129,6 +129,17 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
         throw new NoSuchElementException("user management not configured"))
       def cfgOrFail: SystemConfig = config.getOrElse(
         throw new NoSuchElementException("system config not configured"))
+      // fire a test alarm over one configured transport; the reply
+      // carries the delivery's verdict and detail
+      def testAlert(transport: String, key: String): Unit = {
+        val url = cfgOrFail.get(key).filter(_.nonEmpty).getOrElse(
+          throw new IllegalArgumentException(s"$key not configured"))
+        val d = AlarmTransports.deliver(transport, url,
+          JobManager.AlarmEvent("-", "test", "TEST", "this is a test message"),
+          alarmPost)
+        alarmLog.foreach(_.add(d))
+        reply(ex, 200, d.success, d.detail, "null")
+      }
       val verb = ex.getRequestURI.getPath.stripPrefix("/api/")
       // session token: the reference's session cookie, or a sessionId
       // param for cookie-less clients
@@ -252,33 +263,9 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
               s""","detail":${JsonUtil.str(d.detail)}}"""
           }.mkString("[", ",", "]"))
         case "testDingdingAlert" =>
-          val url = cfgOrFail.get(SystemConfig.DingDingAlarmUrl)
-            .filter(_.nonEmpty).getOrElse(throw new IllegalArgumentException(
-              s"${SystemConfig.DingDingAlarmUrl} not configured"))
-          val e = JobManager.AlarmEvent("-", "test", "TEST",
-            "this is a test message")
-          val (sent, detail) =
-            try {
-              val res = alarmPost(url, "application/json",
-                AlarmTransports.dingTalkPayload(e, java.time.Instant.now()))
-              (AlarmTransports.dingTalkAccepted(res), res.take(200))
-            } catch { case t: Throwable => (false, String.valueOf(t.getMessage)) }
-          alarmLog.foreach(_.add(AlarmTransports.Delivery("-", "test", "TEST",
-            "DINGDING", sent, detail)))
-          reply(ex, 200, sent, detail, "null")
+          testAlert(AlarmTransports.DingDing, SystemConfig.DingDingAlarmUrl)
         case "testHttpAlert" =>
-          val url = cfgOrFail.get(SystemConfig.CallbackAlarmUrl)
-            .filter(_.nonEmpty).getOrElse(throw new IllegalArgumentException(
-              s"${SystemConfig.CallbackAlarmUrl} not configured"))
-          val e = JobManager.AlarmEvent("-", "test", "TEST",
-            "this is a test message")
-          val (sent, detail) =
-            try (true, alarmPost(url, "application/x-www-form-urlencoded",
-              AlarmTransports.httpCallbackBody(e, "SPARK_LOCAL")).take(200))
-            catch { case t: Throwable => (false, String.valueOf(t.getMessage)) }
-          alarmLog.foreach(_.add(AlarmTransports.Delivery("-", "test", "TEST",
-            "CALLBACK_URL", sent, detail)))
-          reply(ex, 200, sent, detail, "null")
+          testAlert(AlarmTransports.Callback, SystemConfig.CallbackAlarmUrl)
         // HA introspection — the reference's ip_status page
         // (flink_web.sql:32-44 backs a web list of instances): live
         // instances within the heartbeat TTL plus the elected leader

@@ -1,6 +1,6 @@
 package graft.platform
 
-import java.sql.{Connection, DriverManager}
+import java.sql.Connection
 
 /** Multi-instance HA heartbeat + leader election over a shared registry
   * database — the reference's `ip_status` table
@@ -36,66 +36,38 @@ final class IpStatusService(url: String, val instanceIp: String,
 
   require(instanceIp.nonEmpty, "instanceIp required")
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
-
-  private val mysql = url.startsWith("jdbc:mysql")
+  private val db = new Jdbc(url, null, null)
+  private val mysql = db.mysql
 
   // the shared registry database's clock (unless a spec injected one):
   // comparing a writer-local stamp against a reader-local clock would
   // split-brain on skew > TTL
   private def nowOn(c: Connection): Long =
     if (clock != null) clock()
-    else {
-      val rs = c.createStatement().executeQuery(IpStatusSql.nowQuery(mysql))
-      rs.next()
-      if (mysql) rs.getLong(1)
-      else rs.getTimestamp(1).getTime
-    }
+    else Jdbc.select(c, IpStatusSql.nowQuery(mysql))(rs =>
+      if (mysql) rs.getLong(1) else rs.getTimestamp(1).getTime).head
 
-  withConn { c =>
-    try {
-      c.createStatement().execute(IpStatusSql.createTableDdl(mysql))
-      ()
-    } catch {
-      case e: java.sql.SQLException
-        if IpStatusSql.isTableExists(e, mysql) => ()
-    }
-  }
+  db.ensureTable(IpStatusSql.createTableDdl(mysql))
 
   /** Upsert this instance's row live (`registerIp`,
     * `IpStatusServiceImpl.java:32-50`). Re-registering after a `cancel`
     * flips the existing row back to live — the id (and so election
     * precedence) is assigned once, at first registration.
     */
-  def register(): Unit = withConn { c =>
+  def register(): Unit = db { c =>
     val now = nowOn(c)
-    val up = c.prepareStatement(
-      "UPDATE ip_status SET status = 1, last_time = ?, is_deleted = 0 " +
-        "WHERE ip = ?")
-    up.setLong(1, now); up.setString(2, instanceIp)
-    if (up.executeUpdate() == 0) {
-      try {
-        val ins = c.prepareStatement(
-          "INSERT INTO ip_status (ip, status, last_time, is_deleted) " +
-            "VALUES (?, 1, ?, 0)")
-        ins.setString(1, instanceIp); ins.setLong(2, now)
-        ins.executeUpdate()
-        ()
-      } catch {
+    val touch = "UPDATE ip_status SET status = 1, last_time = ?, " +
+      "is_deleted = 0 WHERE ip = ?"
+    if (Jdbc.execute(c, touch, now, instanceIp) == 0)
+      try Jdbc.execute(c, "INSERT INTO ip_status (ip, status, last_time, " +
+        "is_deleted) VALUES (?, 1, ?, 0)", instanceIp, now)
+      catch {
         // two instances racing the first insert of the same ip: the
         // unique key wins the race for one; the loser just updates
         case _: java.sql.SQLIntegrityConstraintViolationException =>
-          val up2 = c.prepareStatement(
-            "UPDATE ip_status SET status = 1, last_time = ?, is_deleted = 0 " +
-              "WHERE ip = ?")
-          up2.setLong(1, now); up2.setString(2, instanceIp)
-          up2.executeUpdate()
-          ()
+          Jdbc.execute(c, touch, now, instanceIp)
       }
-    }
+    ()
   }
 
   /** Refresh `last_time` (`updateHeartbeatBylocalIp` — the reference
@@ -106,13 +78,8 @@ final class IpStatusService(url: String, val instanceIp: String,
   /** Mark this instance stopped (`cancelIp`): `status=-1`, out of the
     * election immediately.
     */
-  def cancel(): Unit = withConn { c =>
-    val ps = c.prepareStatement(
-      "UPDATE ip_status SET status = -1 WHERE ip = ?")
-    ps.setString(1, instanceIp)
-    ps.executeUpdate()
-    ()
-  }
+  def cancel(): Unit =
+    db.update("UPDATE ip_status SET status = -1 WHERE ip = ?", instanceIp)
 
   /** The reference's `selectLastIp`: the live row with the highest id,
     * or None when every instance is stopped or stale. By construction
@@ -133,14 +100,10 @@ final class IpStatusService(url: String, val instanceIp: String,
     * order — id ascending, so the LAST element is the leader. For ops
     * introspection — the reference's web UI lists `ip_status` rows.
     */
-  def liveInstances(): Seq[String] = withConn { c =>
-    val ps = c.prepareStatement(
-      "SELECT ip FROM ip_status WHERE is_deleted = 0 AND status = 1 " +
-        "AND last_time >= ? ORDER BY id")
-    ps.setLong(1, nowOn(c) - ttlMs)
-    val rs = ps.executeQuery()
-    Iterator.continually(rs).takeWhile(_.next())
-      .map(_.getString(1)).toList
+  def liveInstances(): Seq[String] = db { c =>
+    Jdbc.select(c, "SELECT ip FROM ip_status WHERE is_deleted = 0 AND " +
+      "status = 1 AND last_time >= ? ORDER BY id", nowOn(c) - ttlMs)(
+      _.getString(1))
   }
 }
 
@@ -173,11 +136,13 @@ object IpStatusSql {
     if (mysql) "SELECT ROUND(UNIX_TIMESTAMP(NOW(3)) * 1000)"
     else "VALUES CURRENT_TIMESTAMP"
 
+  /** The clause that makes a BIGINT key column database-numbered. */
+  def identity(mysql: Boolean): String =
+    if (mysql) "AUTO_INCREMENT" else "GENERATED ALWAYS AS IDENTITY"
+
   def createTableDdl(mysql: Boolean): String =
     s"""CREATE TABLE ip_status (
-      |  id BIGINT ${
-        if (mysql) "AUTO_INCREMENT" else "GENERATED ALWAYS AS IDENTITY"
-      } PRIMARY KEY,
+      |  id BIGINT ${identity(mysql)} PRIMARY KEY,
       |  ip VARCHAR(64) NOT NULL UNIQUE,
       |  status INT NOT NULL,
       |  last_time BIGINT,

@@ -13,6 +13,14 @@ import scala.collection.concurrent.TrieMap
   * this SparkSession and `StreamingQuery.id` replaces the JobID scrape
   * (`CommandRpcClinetAdapterImpl.java:148-161`); a StreamingQueryListener
   * replaces REST polling (`SchedulerTask.java:47-128`).
+  *
+  * Every start — ad hoc ([[start]], which restores and auto-restarts
+  * also go through), or by config id ([[startConfig]]) — passes the
+  * same guard (dup-run, validation) and the same launch (run, then
+  * RUNNING, STOPPED or FAILED); manual and scheduled savepoints share
+  * one record step. Lifecycle mutations hold one lock; each state
+  * change bumps the job's optimistic-lock `version` and writes through
+  * to the [[JobRegistry]], when one is given.
   */
 class JobManager(spark: SparkSession, checkpointRoot: String,
     savepointRoot: String, vars: Map[String, String] = Map.empty,
@@ -30,8 +38,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   registry.foreach { reg =>
     reg.loadAll().foreach { st =>
       val adopted =
-        if (st.status == Running || st.status == Starting)
-          st.copy(status = Failed, version = st.version + 1)
+        if (isActive(st)) st.copy(status = Failed, version = st.version + 1)
         else st
       jobs(adopted.id) = adopted
       if (adopted ne st) {
@@ -81,49 +88,21 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   private val lifecycleLock = new Object
   private val restartCounter = new java.util.concurrent.atomic.AtomicLong
 
-  /** /api/start: validate → dup-run guard → optimistic-lock transition →
-    * run. Returns the job id.
+  /** /api/start: dup-run guard → validate → optimistic-lock transition
+    * → run. Returns the job id.
     */
   def start(name: String, script0: String, batchMode: Boolean = false,
       autoRestart: Boolean = false,
       restoreCheckpoint: Option[String] = None): String = {
     val script = substitute(script0)
-    val (id, runner) = lifecycleLock.synchronized {
-      // dup-run guard incl. Starting (JobStandaloneServerAOImpl.java:58-64)
-      if (jobs.values.exists(j => j.name == name &&
-        (j.status == Running || j.status == Starting)))
-        throw new IllegalStateException(s"job '$name' is already active")
-      val verdict = SqlValidator.validate(spark, script)
-      if (!verdict.ok)
-        throw new IllegalArgumentException(
-          s"validation failed: ${verdict.errors.mkString("; ")}")
+    launch(batchMode) {
+      admit(name, script)
       val id = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = restoreCheckpoint.getOrElse(s"$checkpointRoot/$id")
       jobs(id) = JobState(id, name, script, Starting, version = 1,
-        checkpointDir = ckpt, queries = Nil, autoRestart = autoRestart)
-      registry.foreach { r =>
-        r.save(jobs(id)); r.logRun(id, "START", name)
-      }
-      (id, new ScriptRunner(spark, Some(ckpt), batchMode))
-    }
-    try {
-      val res = runner.run(script)
-      lifecycleLock.synchronized {
-        res.queries.foreach(q => queryToJob(q.id) = id)
-        // a purely batch script has finished by now — a terminal state,
-        // not a phantom RUNNING that blocks tomorrow's run of this name
-        if (res.queries.isEmpty)
-          transition(id, Starting, Stopped)(identity)
-        else
-          transition(id, Starting, Running)(_.copy(queries = res.queries))
-      }
-      id
-    } catch {
-      case e: Throwable =>
-        lifecycleLock.synchronized {
-          transition(id, Starting, Failed)(identity)
-        }
-        throw e
+        checkpointDir = restoreCheckpoint.getOrElse(s"$checkpointRoot/$id"),
+        queries = Nil, autoRestart = autoRestart)
+      registry.foreach(_.save(jobs(id)))
+      jobs(id)
     }
   }
 
@@ -131,55 +110,75 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     * reference starts jobs by config id; the dup-run guard and validator
     * apply exactly as for ad-hoc starts).
     */
-  def startConfig(id: String, batchMode: Boolean = false): Unit = {
-    val runner = lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
+  def startConfig(id: String, batchMode: Boolean = false): Unit =
+    launch(batchMode) {
+      val st = job(id)
       require(st.enabled, s"job $id is closed; open it before start")
-      if (jobs.values.exists(j => j.name == st.name &&
-        (j.status == Running || j.status == Starting)))
-        throw new IllegalStateException(s"job '${st.name}' is already active")
-      val verdict = SqlValidator.validate(spark, st.script)
-      if (!verdict.ok)
-        throw new IllegalArgumentException(
-          s"validation failed: ${verdict.errors.mkString("; ")}")
+      admit(st.name, st.script)
       transition(id, st.status, Starting)(identity)
-      registry.foreach(_.logRun(id, "START", st.name))
-      new ScriptRunner(spark, Some(st.checkpointDir), batchMode)
+      jobs(id)
+    }
+
+  /** The start guard both entry points apply under the lock: no other
+    * job of this name is active (incl. STARTING,
+    * JobStandaloneServerAOImpl.java:58-64), and the script validates.
+    */
+  private def admit(name: String, script: String): Unit = {
+    if (jobs.values.exists(j => j.name == name && isActive(j)))
+      throw new IllegalStateException(s"job '$name' is already active")
+    val verdict = SqlValidator.validate(spark, script)
+    if (!verdict.ok)
+      throw new IllegalArgumentException(
+        s"validation failed: ${verdict.errors.mkString("; ")}")
+  }
+
+  /** The one launch: `enter` (under the lock) admits the job and puts it
+    * in STARTING; its script then runs outside the lock, and the job
+    * ends RUNNING, STOPPED (a purely batch script has finished by now —
+    * a terminal state, not a phantom RUNNING that blocks tomorrow's run
+    * of this name) or, when the run throws, FAILED.
+    */
+  private def launch(batchMode: Boolean)(enter: => JobState): String = {
+    val (st, runner) = lifecycleLock.synchronized {
+      val st = enter
+      registry.foreach(_.logRun(st.id, "START", st.name))
+      (st, new ScriptRunner(spark, Some(st.checkpointDir), batchMode))
     }
     try {
-      val res = runner.run(jobs(id).script)
+      val res = runner.run(st.script)
       lifecycleLock.synchronized {
-        res.queries.foreach(q => queryToJob(q.id) = id)
-        if (res.queries.isEmpty) transition(id, Starting, Stopped)(identity)
-        else transition(id, Starting, Running)(_.copy(queries = res.queries))
+        res.queries.foreach(q => queryToJob(q.id) = st.id)
+        if (res.queries.isEmpty) transition(st.id, Starting, Stopped)(identity)
+        else transition(st.id, Starting, Running)(_.copy(queries = res.queries))
       }
+      st.id
     } catch {
       case e: Throwable =>
         lifecycleLock.synchronized {
-          transition(id, Starting, Failed)(identity)
+          transition(st.id, Starting, Failed)(identity)
         }
         throw e
     }
   }
 
-  /** /api/stop (+ savepoint first if requested, §3.3). */
+  /** /api/stop (+ savepoint first if requested, §3.3). The job ends
+    * STOPPED even when the savepoint fails — its queries are gone by
+    * then — keeping its previous savepoint; the verb then rethrows the
+    * snapshot's error.
+    */
   def stop(id: String, withSavepoint: Boolean = true): Option[String] =
     lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
+      val st = job(id)
       require(st.status == Running, s"job $id is ${st.status}, not RUNNING")
       st.queries.foreach(_.stop())
       st.queries.foreach(q => queryToJob.remove(q.id))
-      val sp =
-        if (withSavepoint &&
-          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(st.checkpointDir)))
-          Some(Savepoints.snapshot(st.checkpointDir, savepointRoot, st.name))
-        else None
+      val sp = scala.util.Try(
+        if (withSavepoint && hasCheckpoint(st)) Some(snapshot(st)) else None)
+      val taken = sp.toOption.flatten
       transition(id, Running, Stopped)(s =>
-        s.copy(lastSavepoint = sp.orElse(s.lastSavepoint)))
-      registry.foreach(_.logRun(id, "STOP", sp.getOrElse("")))
-      sp
+        s.copy(lastSavepoint = taken.orElse(s.lastSavepoint)))
+      registry.foreach(_.logRun(id, "STOP", taken.getOrElse("")))
+      sp.get
     }
 
   /** /api/savepoint: snapshot a RUNNING job's live checkpoint on demand
@@ -188,27 +187,38 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     */
   def savepoint(id: String): String = {
     val st = lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
+      val st = job(id)
       require(st.status == Running, s"job $id is ${st.status}, not RUNNING")
-      require(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(st.checkpointDir)),
+      require(hasCheckpoint(st),
         s"job $id has no checkpoint data yet; retry after the first batch")
       st
     }
-    // snapshot outside the lock: copying a live checkpoint can take a
-    // while and must not block unrelated lifecycle verbs
-    val sp = Savepoints.snapshot(st.checkpointDir, savepointRoot, st.name)
+    savepointRunning(st, "SAVEPOINT")
+  }
+
+  /** Snapshot a running job's live checkpoint OUTSIDE the lock (copying
+    * can take a while and must not block unrelated lifecycle verbs),
+    * then record it as the job's restore point if the job is still
+    * RUNNING, and log it under `event`. Returns the savepoint path.
+    */
+  private def savepointRunning(st: JobState, event: String): String = {
+    val sp = snapshot(st)
     lifecycleLock.synchronized {
-      jobs.get(id).filter(_.status == Running).foreach { cur =>
-        jobs(id) = cur.copy(lastSavepoint = Some(sp),
+      jobs.get(st.id).filter(_.status == Running).foreach { cur =>
+        jobs(st.id) = cur.copy(lastSavepoint = Some(sp),
           version = cur.version + 1)
-        registry.foreach(_.save(jobs(id)))
+        registry.foreach(_.save(jobs(st.id)))
       }
     }
-    registry.foreach(_.logRun(id, "SAVEPOINT", sp))
+    registry.foreach(_.logRun(st.id, event, sp))
     sp
   }
+
+  private def snapshot(st: JobState): String =
+    Savepoints.snapshot(st.checkpointDir, savepointRoot, st.name)
+
+  private def hasCheckpoint(st: JobState): Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(st.checkpointDir))
 
   /** /api/addSavepoint: register an externally-created savepoint path as
     * the job's restore point (`SavepointApiController.java:41-60` lets
@@ -216,8 +226,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     */
   def addSavepoint(id: String, path: String): Unit =
     lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
+      val st = job(id)
       require(path.nonEmpty, "savepoint path required")
       jobs(id) = st.copy(lastSavepoint = Some(path), version = st.version + 1)
       registry.foreach { r => r.save(jobs(id)); r.logRun(id, "SAVEPOINT", path) }
@@ -229,8 +238,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     * their path).
     */
   def savepointList(id: String, limit: Int = 10): Seq[String] = {
-    val st = jobs.getOrElse(id,
-      throw new NoSuchElementException(s"unknown job $id"))
+    val st = job(id)
     registry match {
       case Some(r) => r.runLog(id).collect {
         case (ev, detail)
@@ -248,8 +256,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     * live checkpoint of the first.
     */
   def restartFromSavepoint(id: String, savepoint: Option[String] = None): String = {
-    val st = jobs.getOrElse(id,
-      throw new NoSuchElementException(s"unknown job $id"))
+    val st = job(id)
     val sp = savepoint.orElse(st.lastSavepoint).getOrElse(
       throw new IllegalStateException(s"job $id has no savepoint"))
     val newCkpt =
@@ -293,6 +300,19 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     }
   }
 
+  private def job(id: String): JobState =
+    jobs.getOrElse(id, throw new NoSuchElementException(s"unknown job $id"))
+
+  private def isActive(st: JobState): Boolean =
+    st.status == Running || st.status == Starting
+
+  /** A job that `verb` may change: it exists and is not active. */
+  private def inactiveJob(id: String, verb: String): JobState = {
+    val st = job(id)
+    require(!isActive(st), s"job $id is active; stop it before $verb")
+    st
+  }
+
   def status(id: String): Status = jobs(id).status
   def info(id: String): JobState = jobs(id)
   def list(): Seq[JobState] = jobs.values.toSeq.sortBy(_.name)
@@ -321,10 +341,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
 
   private def setEnabled(id: String, enabled: Boolean): Unit =
     lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
-      require(st.status != Running && st.status != Starting,
-        s"job $id is active; stop it before ${if (enabled) "open" else "close"}")
+      val st = inactiveJob(id, if (enabled) "open" else "close")
       jobs(id) = st.copy(enabled = enabled, version = st.version + 1)
       registry.foreach { r =>
         r.save(jobs(id))
@@ -334,10 +351,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
 
   /** /api/delete: remove a non-active config from manager + registry. */
   def delete(id: String): Unit = lifecycleLock.synchronized {
-    val st = jobs.getOrElse(id,
-      throw new NoSuchElementException(s"unknown job $id"))
-    require(st.status != Running && st.status != Starting,
-      s"job $id is active; stop it before delete")
+    val st = inactiveJob(id, "delete")
     jobs.remove(id)
     registry.foreach { r => r.delete(id); r.logRun(id, "DELETE", st.name) }
   }
@@ -347,10 +361,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     */
   def editConfig(id: String, newScript: String): Unit =
     lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
-      require(st.status != Running && st.status != Starting,
-        s"job $id is active; stop it before edit")
+      val st = inactiveJob(id, "edit")
       jobs(id) = st.copy(script = substitute(newScript),
         version = st.version + 1)
       registry.foreach { r => r.save(jobs(id)); r.logRun(id, "EDIT_CONFIG", "") }
@@ -361,8 +372,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     */
   def copyConfig(id: String, newName: String): String =
     lifecycleLock.synchronized {
-      val st = jobs.getOrElse(id,
-        throw new NoSuchElementException(s"unknown job $id"))
+      val st = job(id)
       addConfig(newName, st.script, st.autoRestart)
     }
 
@@ -472,20 +482,8 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
       jobs.values.filter(_.status == Running).toList
     }
     running.foreach { st =>
-      try {
-        if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(st.checkpointDir))) {
-          val sp = Savepoints.snapshot(st.checkpointDir, savepointRoot, st.name)
-          lifecycleLock.synchronized {
-            jobs.get(st.id).filter(_.status == Running).foreach { cur =>
-              jobs(st.id) = cur.copy(lastSavepoint = Some(sp),
-                version = cur.version + 1)
-              registry.foreach(_.save(jobs(st.id)))
-            }
-          }
-          registry.foreach(_.logRun(st.id, "AUTO_SAVEPOINT", sp))
-        }
-      } catch { case _: Throwable => () }
+      try if (hasCheckpoint(st)) savepointRunning(st, "AUTO_SAVEPOINT")
+      catch { case _: Throwable => () }
     }
   }
 }

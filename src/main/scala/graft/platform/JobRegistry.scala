@@ -1,7 +1,5 @@
 package graft.platform
 
-import java.sql.{Connection, DriverManager}
-
 /** Durable job registry — the reference persists every job definition and
   * lifecycle transition to MySQL (`docs/sql/flink_web.sql:50-77`
   * `job_config`, `:106-127` `job_run_log`) so the control plane survives
@@ -27,92 +25,52 @@ trait JobRegistry {
 /** JDBC implementation. Schema mirrors the reference's `job_config` +
   * `job_run_log` columns that matter to the engine (name, SQL, status,
   * optimistic-lock version, checkpoint/savepoint pointers, auto-restart
-  * policy). Tables are created on first use; Derby lacks CREATE TABLE IF
-  * NOT EXISTS, so the already-exists error is tolerated.
+  * policy). Tables are created on first use through [[Jdbc]]. The run
+  * log's order is an identity column the database numbers, so any
+  * number of registries on one database append in one order.
   */
 final class JdbcJobRegistry(url: String, user: String = "", pass: String = "")
     extends JobRegistry {
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url, user, pass)
-    try f(c) finally c.close()
-  }
+  private val db = new Jdbc(url, user, pass)
 
-  private def ensure(c: Connection, ddl: String): Unit =
-    try { c.createStatement().execute(ddl); () }
-    catch {
-      // Derby X0Y32 / MySQL 1050: table already exists
-      case e: java.sql.SQLException
-        if e.getSQLState == "X0Y32" || e.getErrorCode == 1050 => ()
-    }
+  db.ensureTable(
+    """CREATE TABLE job_config (
+      |  id VARCHAR(64) PRIMARY KEY,
+      |  job_name VARCHAR(255),
+      |  job_sql LONG VARCHAR,
+      |  status VARCHAR(16),
+      |  version INT,
+      |  checkpoint_dir VARCHAR(1024),
+      |  auto_restart SMALLINT,
+      |  last_savepoint VARCHAR(1024),
+      |  enabled SMALLINT)""".stripMargin)
+  db.ensureTable(
+    s"""CREATE TABLE job_run_log (
+      |  seq BIGINT ${IpStatusSql.identity(db.mysql)} PRIMARY KEY,
+      |  job_id VARCHAR(64),
+      |  event VARCHAR(64),
+      |  detail LONG VARCHAR)""".stripMargin)
 
-  withConn { c =>
-    ensure(c,
-      """CREATE TABLE job_config (
-        |  id VARCHAR(64) PRIMARY KEY,
-        |  job_name VARCHAR(255),
-        |  job_sql LONG VARCHAR,
-        |  status VARCHAR(16),
-        |  version INT,
-        |  checkpoint_dir VARCHAR(1024),
-        |  auto_restart SMALLINT,
-        |  last_savepoint VARCHAR(1024),
-        |  enabled SMALLINT)""".stripMargin)
-    ensure(c,
-      """CREATE TABLE job_run_log (
-        |  job_id VARCHAR(64),
-        |  seq BIGINT,
-        |  event VARCHAR(64),
-        |  detail LONG VARCHAR)""".stripMargin)
-  }
-
-  private val logSeq = new java.util.concurrent.atomic.AtomicLong(
-    withConn { c =>
-      val rs = c.createStatement()
-        .executeQuery("SELECT COALESCE(MAX(seq), 0) FROM job_run_log")
-      rs.next(); rs.getLong(1)
-    })
-
-  override def save(st: JobManager.JobState): Unit = withConn { c =>
-    val up = c.prepareStatement(
+  override def save(st: JobManager.JobState): Unit = {
+    val cols = Seq[Any](st.name, st.script, statusName(st.status), st.version,
+      st.checkpointDir, if (st.autoRestart) 1 else 0, st.lastSavepoint.orNull,
+      if (st.enabled) 1 else 0)
+    db.upsert(
       "UPDATE job_config SET job_name=?, job_sql=?, status=?, version=?, " +
         "checkpoint_dir=?, auto_restart=?, last_savepoint=?, enabled=? " +
-        "WHERE id=?")
-    up.setString(1, st.name); up.setString(2, st.script)
-    up.setString(3, statusName(st.status)); up.setInt(4, st.version)
-    up.setString(5, st.checkpointDir)
-    up.setInt(6, if (st.autoRestart) 1 else 0)
-    up.setString(7, st.lastSavepoint.orNull)
-    up.setInt(8, if (st.enabled) 1 else 0)
-    up.setString(9, st.id)
-    if (up.executeUpdate() == 0) {
-      val ins = c.prepareStatement(
-        "INSERT INTO job_config (id, job_name, job_sql, status, version, " +
-          "checkpoint_dir, auto_restart, last_savepoint, enabled) " +
-          "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)")
-      ins.setString(1, st.id); ins.setString(2, st.name)
-      ins.setString(3, st.script); ins.setString(4, statusName(st.status))
-      ins.setInt(5, st.version); ins.setString(6, st.checkpointDir)
-      ins.setInt(7, if (st.autoRestart) 1 else 0)
-      ins.setString(8, st.lastSavepoint.orNull)
-      ins.setInt(9, if (st.enabled) 1 else 0)
-      ins.executeUpdate()
-    }
-    ()
+        "WHERE id=?", cols :+ st.id,
+      "INSERT INTO job_config (job_name, job_sql, status, version, " +
+        "checkpoint_dir, auto_restart, last_savepoint, enabled, id) " +
+        "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)", cols :+ st.id)
   }
 
-  override def delete(id: String): Unit = withConn { c =>
-    val ps = c.prepareStatement("DELETE FROM job_config WHERE id = ?")
-    ps.setString(1, id)
-    ps.executeUpdate()
-    ()
-  }
+  override def delete(id: String): Unit =
+    db.update("DELETE FROM job_config WHERE id = ?", id)
 
-  override def loadAll(): Seq[JobManager.JobState] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      "SELECT id, job_name, job_sql, status, version, checkpoint_dir, " +
-        "auto_restart, last_savepoint, enabled FROM job_config")
-    Iterator.continually(rs).takeWhile(_.next()).map { r =>
+  override def loadAll(): Seq[JobManager.JobState] =
+    db.query("SELECT id, job_name, job_sql, status, version, checkpoint_dir, " +
+      "auto_restart, last_savepoint, enabled FROM job_config") { r =>
       JobManager.JobState(
         id = r.getString(1), name = r.getString(2), script = r.getString(3),
         status = statusOf(r.getString(4)), version = r.getInt(5),
@@ -120,27 +78,15 @@ final class JdbcJobRegistry(url: String, user: String = "", pass: String = "")
         autoRestart = r.getInt(7) == 1,
         lastSavepoint = Option(r.getString(8)),
         enabled = r.getInt(9) == 1)
-    }.toList
-  }
-
-  override def logRun(jobId: String, event: String, detail: String): Unit =
-    withConn { c =>
-      val ps = c.prepareStatement(
-        "INSERT INTO job_run_log (job_id, seq, event, detail) VALUES (?, ?, ?, ?)")
-      ps.setString(1, jobId); ps.setLong(2, logSeq.incrementAndGet())
-      ps.setString(3, event); ps.setString(4, detail)
-      ps.executeUpdate()
-      ()
     }
 
-  override def runLog(jobId: String): Seq[(String, String)] = withConn { c =>
-    val ps = c.prepareStatement(
-      "SELECT event, detail FROM job_run_log WHERE job_id = ? ORDER BY seq")
-    ps.setString(1, jobId)
-    val rs = ps.executeQuery()
-    Iterator.continually(rs).takeWhile(_.next())
-      .map(r => (r.getString(1), r.getString(2))).toList
-  }
+  override def logRun(jobId: String, event: String, detail: String): Unit =
+    db.update("INSERT INTO job_run_log (job_id, event, detail) VALUES (?, ?, ?)",
+      jobId, event, detail)
+
+  override def runLog(jobId: String): Seq[(String, String)] =
+    db.query("SELECT event, detail FROM job_run_log WHERE job_id = ? ORDER BY seq",
+      jobId)(r => (r.getString(1), r.getString(2)))
 
   private def statusName(s: JobManager.Status): String = s match {
     case JobManager.Starting => "STARTING"

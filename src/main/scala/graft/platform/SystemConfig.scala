@@ -29,62 +29,31 @@ final class InMemorySystemConfig extends SystemConfig {
   def all(): Seq[(String, String)] = m.toSeq.sortBy(_._1)
 }
 
-/** JDBC-backed store following [[JdbcJobRegistry]]'s pattern. */
+/** JDBC-backed store over the platform's shared [[Jdbc]] helper. */
 final class JdbcSystemConfig(url: String, user: String = "",
     pass: String = "") extends SystemConfig {
 
-  private def withConn[A](f: java.sql.Connection => A): A = {
-    val c = java.sql.DriverManager.getConnection(url, user, pass)
-    try f(c) finally c.close()
-  }
+  private val db = new Jdbc(url, user, pass)
 
-  withConn { c =>
-    try {
-      c.createStatement().execute(
-        """CREATE TABLE system_config (
-          |  cfg_key VARCHAR(128) PRIMARY KEY,
-          |  cfg_val VARCHAR(1024))""".stripMargin)
-      ()
-    } catch {
-      case e: java.sql.SQLException
-        if e.getSQLState == "X0Y32" || e.getErrorCode == 1050 => ()
-    }
-  }
+  db.ensureTable(
+    """CREATE TABLE system_config (
+      |  cfg_key VARCHAR(128) PRIMARY KEY,
+      |  cfg_val VARCHAR(1024))""".stripMargin)
 
-  def get(key: String): Option[String] = withConn { c =>
-    val ps = c.prepareStatement(
-      "SELECT cfg_val FROM system_config WHERE cfg_key = ?")
-    ps.setString(1, key)
-    val rs = ps.executeQuery()
-    if (rs.next()) Option(rs.getString(1)) else None
-  }
+  def get(key: String): Option[String] =
+    db.query("SELECT cfg_val FROM system_config WHERE cfg_key = ?", key)(
+      _.getString(1)).headOption.flatMap(Option(_))
 
-  def upsert(key: String, value: String): Unit = withConn { c =>
-    val upd = c.prepareStatement(
-      "UPDATE system_config SET cfg_val = ? WHERE cfg_key = ?")
-    upd.setString(1, value); upd.setString(2, key)
-    if (upd.executeUpdate() == 0) {
-      val ins = c.prepareStatement(
-        "INSERT INTO system_config (cfg_key, cfg_val) VALUES (?, ?)")
-      ins.setString(1, key); ins.setString(2, value)
-      ins.executeUpdate()
-    }
-    ()
-  }
+  def upsert(key: String, value: String): Unit =
+    db.upsert("UPDATE system_config SET cfg_val = ? WHERE cfg_key = ?",
+      Seq(value, key),
+      "INSERT INTO system_config (cfg_val, cfg_key) VALUES (?, ?)",
+      Seq(value, key))
 
-  def delete(key: String): Unit = withConn { c =>
-    val ps = c.prepareStatement(
-      "DELETE FROM system_config WHERE cfg_key = ?")
-    ps.setString(1, key)
-    ps.executeUpdate()
-    ()
-  }
+  def delete(key: String): Unit =
+    db.update("DELETE FROM system_config WHERE cfg_key = ?", key)
 
-  def all(): Seq[(String, String)] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      "SELECT cfg_key, cfg_val FROM system_config ORDER BY cfg_key")
-    val out = scala.collection.mutable.Buffer[(String, String)]()
-    while (rs.next()) out += (rs.getString(1) -> rs.getString(2))
-    out.toSeq
-  }
+  def all(): Seq[(String, String)] =
+    db.query("SELECT cfg_key, cfg_val FROM system_config ORDER BY cfg_key")(
+      r => r.getString(1) -> r.getString(2))
 }

@@ -90,70 +90,44 @@ final class InMemoryUserStore extends UserStore {
   def all(): Seq[Users.User] = m.values.toSeq.sortBy(_.id)
 }
 
-/** JDBC store following [[JdbcJobRegistry]]'s pattern (embedded Derby in
-  * tests, any JDBC in production); schema mirrors the reference's `user`
-  * table columns that matter to the engine.
+/** JDBC store over the platform's shared [[Jdbc]] helper (embedded
+  * Derby in tests, any JDBC in production); schema mirrors the
+  * reference's `user` table columns that matter to the engine.
   */
 final class JdbcUserStore(url: String, user: String = "", pass: String = "")
     extends UserStore {
 
-  private def withConn[A](f: java.sql.Connection => A): A = {
-    val c = java.sql.DriverManager.getConnection(url, user, pass)
-    try f(c) finally c.close()
+  private val db = new Jdbc(url, user, pass)
+
+  db.ensureTable(
+    """CREATE TABLE sys_user (
+      |  id INT PRIMARY KEY,
+      |  username VARCHAR(100) UNIQUE,
+      |  full_name VARCHAR(255),
+      |  password VARCHAR(255),
+      |  status SMALLINT)""".stripMargin)
+
+  private val Select =
+    "SELECT id, username, full_name, password, status FROM sys_user"
+
+  private def row(rs: java.sql.ResultSet): Users.User =
+    Users.User(rs.getInt(1), rs.getString(2), rs.getString(3),
+      rs.getString(4), rs.getShort(5) == 1)
+
+  def byName(username: String): Option[Users.User] =
+    db.query(s"$Select WHERE username = ?", username)(row).headOption
+
+  def save(u: Users.User): Unit = {
+    val cols = Seq[Any](u.fullname, u.password,
+      (if (u.enabled) 1 else 0).toShort, u.username)
+    db.upsert(
+      "UPDATE sys_user SET full_name = ?, password = ?, status = ? WHERE username = ?",
+      cols,
+      "INSERT INTO sys_user (full_name, password, status, username, id) VALUES (?,?,?,?,?)",
+      cols :+ u.id)
   }
 
-  withConn { c =>
-    try {
-      c.createStatement().execute(
-        """CREATE TABLE sys_user (
-          |  id INT PRIMARY KEY,
-          |  username VARCHAR(100) UNIQUE,
-          |  full_name VARCHAR(255),
-          |  password VARCHAR(255),
-          |  status SMALLINT)""".stripMargin)
-      ()
-    } catch {
-      case e: java.sql.SQLException
-        if e.getSQLState == "X0Y32" || e.getErrorCode == 1050 => ()
-    }
-  }
-
-  def byName(username: String): Option[Users.User] = withConn { c =>
-    val ps = c.prepareStatement(
-      "SELECT id, username, full_name, password, status FROM sys_user WHERE username = ?")
-    ps.setString(1, username)
-    val rs = ps.executeQuery()
-    if (rs.next())
-      Some(Users.User(rs.getInt(1), rs.getString(2), rs.getString(3),
-        rs.getString(4), rs.getShort(5) == 1))
-    else None
-  }
-
-  def save(u: Users.User): Unit = withConn { c =>
-    val upd = c.prepareStatement(
-      "UPDATE sys_user SET full_name = ?, password = ?, status = ? WHERE username = ?")
-    upd.setString(1, u.fullname); upd.setString(2, u.password)
-    upd.setShort(3, if (u.enabled) 1 else 0); upd.setString(4, u.username)
-    if (upd.executeUpdate() == 0) {
-      val ins = c.prepareStatement(
-        "INSERT INTO sys_user (id, username, full_name, password, status) VALUES (?,?,?,?,?)")
-      ins.setInt(1, u.id); ins.setString(2, u.username)
-      ins.setString(3, u.fullname); ins.setString(4, u.password)
-      ins.setShort(5, if (u.enabled) 1 else 0)
-      ins.executeUpdate()
-    }
-    ()
-  }
-
-  def all(): Seq[Users.User] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      "SELECT id, username, full_name, password, status FROM sys_user ORDER BY id")
-    val out = scala.collection.mutable.Buffer[Users.User]()
-    while (rs.next())
-      out += Users.User(rs.getInt(1), rs.getString(2), rs.getString(3),
-        rs.getString(4), rs.getShort(5) == 1)
-    out.toSeq
-  }
+  def all(): Seq[Users.User] = db.query(s"$Select ORDER BY id")(row)
 }
 
 /** The reference's user verbs with its exact credential semantics:

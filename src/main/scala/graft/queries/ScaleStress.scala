@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -29,18 +29,10 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = if (args.length > 1) args(1).toInt else 2
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/tmp/graft-stress-scratch")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      math.min(32, Runtime.getRuntime.availableProcessors()).toString,
+      "spark.app.name" -> "graft-scale-stress",
+      "spark.local.dir" -> "/tmp/graft-stress-scratch")
     Vec.ensureRegistered(spark)
 
     def emb(): DataFrame =

@@ -493,6 +493,93 @@ class JobManagerSpec extends SparkSpec {
     assert(e.getMessage.contains("not RUNNING"))
   }
 
+  test("a stop whose savepoint fails ends STOPPED, keeps the old " +
+    "savepoint, logs the stop, and frees the name") {
+    val spRoot = Files.createTempDirectory("spf_sp").toString
+    val reg = new JdbcJobRegistry("jdbc:derby:memory:jmspfail;create=true")
+    val m = new JobManager(spark,
+      Files.createTempDirectory("spf_ckpt").toString, spRoot,
+      registry = Some(reg))
+    val dir = srcDir()
+    val out = Files.createTempDirectory("spf_sink").toString
+    spark.range(0, 2).toDF("id").coalesce(1).write.mode("append").parquet(dir)
+    val fsScript =
+      s"""CREATE TABLE src (id BIGINT) WITH (
+         |  'connector' = 'filesystem', 'path' = '$dir',
+         |  'format' = 'parquet');
+         |CREATE TABLE spf_snk (id BIGINT) WITH (
+         |  'connector' = 'filesystem', 'path' = '$out',
+         |  'format' = 'parquet');
+         |INSERT INTO spf_snk SELECT id FROM src;
+         |""".stripMargin
+    val id = m.start("spf_job", fsScript)
+    m.info(id).queries.foreach(_.awaitTermination(60000))
+    // the savepoint directory's place is taken by a regular file
+    Files.write(java.nio.file.Paths.get(spRoot, "spf_job"), Array[Byte](1))
+    intercept[java.io.IOException] { m.stop(id) }
+    assert(m.status(id) == JobManager.Stopped)
+    assert(m.info(id).lastSavepoint.isEmpty)
+    assert(m.history(id).map(_._1) == Seq("START", "STOP"))
+    val id2 = m.start("spf_job", fsScript)
+    assert(m.status(id2) == JobManager.Running)
+    m.stop(id2, withSavepoint = false)
+  }
+
+  test("run log: two registries on one database append in one order") {
+    val url = "jdbc:derby:memory:jmseq;create=true"
+    val a = new JdbcJobRegistry(url)
+    val b = new JdbcJobRegistry(url)
+    a.logRun("j", "e1", "")
+    a.logRun("j", "e2", "")
+    b.logRun("j", "e3", "")
+    assert(a.runLog("j").map(_._1) == Seq("e1", "e2", "e3"))
+    assert(b.runLog("j").map(_._1) == Seq("e1", "e2", "e3"))
+  }
+
+  test("start and startConfig share one path: a script that fails " +
+    "analysis ends FAILED and frees the name; a good one ends RUNNING") {
+    import spark.implicits._
+    val reg = new JdbcJobRegistry("jdbc:derby:memory:jmpaths;create=true")
+    val m = new JobManager(spark,
+      Files.createTempDirectory("sp_ckpt").toString,
+      Files.createTempDirectory("sp_sp").toString, registry = Some(reg))
+    val dir = srcDir()
+    spark.range(0, 3).toDF("id").coalesce(1).write.mode("append").parquet(dir)
+    // validates (the gate checks syntax only), fails at analysis
+    def bad(sink: String) =
+      script(dir, sink).replace("SELECT id FROM src", "SELECT no_such_col FROM src")
+    def failsAnalysis(f: => Unit): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](f)
+      assert(e.getMessage.contains("no_such_col"))
+    }
+
+    // ad hoc: name + script
+    failsAnalysis { m.start("paths_adhoc", bad("paths_out_a")) }
+    val failedA = m.list().filter(_.name == "paths_adhoc")
+    assert(failedA.map(_.status) == Seq(JobManager.Failed))
+    val idA = m.start("paths_adhoc", script(dir, "paths_out_a"))
+
+    // by config id: addConfig, then editConfig to the good script
+    val idC = m.addConfig("paths_cfg", bad("paths_out_c"))
+    failsAnalysis { m.startConfig(idC) }
+    assert(m.status(idC) == JobManager.Failed)
+    m.editConfig(idC, script(dir, "paths_out_c"))
+    m.startConfig(idC)
+
+    for ((id, sink) <- Seq(idA -> "paths_out_a", idC -> "paths_out_c")) {
+      assert(m.status(id) == JobManager.Running)
+      m.info(id).queries.foreach(_.awaitTermination(60000))
+      assert(spark.table(sink).as[Long].collect().sorted.toSeq ==
+        (0L until 3L))
+      m.stop(id, withSavepoint = false)
+    }
+    val lifecycle = Set("START", "STOP", "FAILED")
+    val adhocLog = (failedA.map(_.id) :+ idA).flatMap(m.history)
+    assert(adhocLog.map(_._1) == Seq("START", "START", "STOP"))
+    assert(m.history(idC).map(_._1).filter(lifecycle) ==
+      adhocLog.map(_._1))
+  }
+
   test("ip_status election: newest live registration leads; cancel and " +
     "staleness hand leadership over") {
     val url = "jdbc:derby:memory:ipstat1;create=true"
