@@ -98,11 +98,9 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     launch(batchMode) {
       admit(name, script)
       val id = java.util.UUID.randomUUID().toString.take(8)
-      jobs(id) = JobState(id, name, script, Starting, version = 1,
+      put(JobState(id, name, script, Starting, version = 1,
         checkpointDir = restoreCheckpoint.getOrElse(s"$checkpointRoot/$id"),
-        queries = Nil, autoRestart = autoRestart)
-      registry.foreach(_.save(jobs(id)))
-      jobs(id)
+        queries = Nil, autoRestart = autoRestart))
     }
   }
 
@@ -124,13 +122,16 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     * JobStandaloneServerAOImpl.java:58-64), and the script validates.
     */
   private def admit(name: String, script: String): Unit = {
-    if (jobs.values.exists(j => j.name == name && isActive(j)))
-      throw new IllegalStateException(s"job '$name' is already active")
+    requireIdle(name)
     val verdict = SqlValidator.validate(spark, script)
     if (!verdict.ok)
       throw new IllegalArgumentException(
         s"validation failed: ${verdict.errors.mkString("; ")}")
   }
+
+  private def requireIdle(name: String): Unit =
+    if (jobs.values.exists(j => j.name == name && isActive(j)))
+      throw new IllegalStateException(s"job '$name' is already active")
 
   /** The one launch: `enter` (under the lock) admits the job and puts it
     * in STARTING; its script then runs outside the lock, and the job
@@ -205,9 +206,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     val sp = snapshot(st)
     lifecycleLock.synchronized {
       jobs.get(st.id).filter(_.status == Running).foreach { cur =>
-        jobs(st.id) = cur.copy(lastSavepoint = Some(sp),
-          version = cur.version + 1)
-        registry.foreach(_.save(jobs(st.id)))
+        put(cur.copy(lastSavepoint = Some(sp), version = cur.version + 1))
       }
     }
     registry.foreach(_.logRun(st.id, event, sp))
@@ -228,8 +227,8 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     lifecycleLock.synchronized {
       val st = job(id)
       require(path.nonEmpty, "savepoint path required")
-      jobs(id) = st.copy(lastSavepoint = Some(path), version = st.version + 1)
-      registry.foreach { r => r.save(jobs(id)); r.logRun(id, "SAVEPOINT", path) }
+      put(st.copy(lastSavepoint = Some(path), version = st.version + 1))
+      registry.foreach(_.logRun(id, "SAVEPOINT", path))
     }
 
   /** /api/querySavePointList10: the job's most recent savepoints, newest
@@ -253,17 +252,22 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   /** /api/start with -s <savepoint> (restore). Each restore materializes
     * into a FRESH uniquely-numbered checkpoint dir — deriving it from the
     * stopped job's frozen version would let a second restore wipe the
-    * live checkpoint of the first.
+    * live checkpoint of the first. A name that is already active is
+    * refused before the copy; a copy whose start fails is deleted.
     */
   def restartFromSavepoint(id: String, savepoint: Option[String] = None): String = {
     val st = job(id)
     val sp = savepoint.orElse(st.lastSavepoint).getOrElse(
       throw new IllegalStateException(s"job $id has no savepoint"))
+    lifecycleLock.synchronized(requireIdle(st.name))
     val newCkpt =
       s"$checkpointRoot/${st.id}-r${restartCounter.incrementAndGet()}"
     Savepoints.restore(sp, newCkpt)
-    start(st.name, st.script, autoRestart = st.autoRestart,
+    try start(st.name, st.script, autoRestart = st.autoRestart,
       restoreCheckpoint = Some(newCkpt))
+    catch {
+      case e: Throwable => Savepoints.discard(newCkpt); throw e
+    }
   }
 
   /** Monitor hook: stop surviving queries, mark FAILED, fire alarms,
@@ -325,9 +329,9 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   def addConfig(name: String, script: String,
       autoRestart: Boolean = false): String = lifecycleLock.synchronized {
     val id = java.util.UUID.randomUUID().toString.take(8)
-    jobs(id) = JobState(id, name, substitute(script), Stopped, version = 1,
-      checkpointDir = s"$checkpointRoot/$id", autoRestart = autoRestart)
-    registry.foreach { r => r.save(jobs(id)); r.logRun(id, "ADD_CONFIG", name) }
+    put(JobState(id, name, substitute(script), Stopped, version = 1,
+      checkpointDir = s"$checkpointRoot/$id", autoRestart = autoRestart))
+    registry.foreach(_.logRun(id, "ADD_CONFIG", name))
     id
   }
 
@@ -342,11 +346,8 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   private def setEnabled(id: String, enabled: Boolean): Unit =
     lifecycleLock.synchronized {
       val st = inactiveJob(id, if (enabled) "open" else "close")
-      jobs(id) = st.copy(enabled = enabled, version = st.version + 1)
-      registry.foreach { r =>
-        r.save(jobs(id))
-        r.logRun(id, if (enabled) "OPEN" else "CLOSE", "")
-      }
+      put(st.copy(enabled = enabled, version = st.version + 1))
+      registry.foreach(_.logRun(id, if (enabled) "OPEN" else "CLOSE", ""))
     }
 
   /** /api/delete: remove a non-active config from manager + registry. */
@@ -362,9 +363,8 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   def editConfig(id: String, newScript: String): Unit =
     lifecycleLock.synchronized {
       val st = inactiveJob(id, "edit")
-      jobs(id) = st.copy(script = substitute(newScript),
-        version = st.version + 1)
-      registry.foreach { r => r.save(jobs(id)); r.logRun(id, "EDIT_CONFIG", "") }
+      put(st.copy(script = substitute(newScript), version = st.version + 1))
+      registry.foreach(_.logRun(id, "EDIT_CONFIG", ""))
     }
 
   /** /api/copyConfig: duplicate a config under a new name (new id, fresh
@@ -390,8 +390,17 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     if (cur.status != from)
       throw new IllegalStateException(
         s"optimistic lock failure: job $id is ${cur.status}, expected $from")
-    jobs(id) = f(cur).copy(status = to, version = cur.version + 1)
-    registry.foreach(_.save(jobs(id)))
+    put(f(cur).copy(status = to, version = cur.version + 1))
+  }
+
+  /** Record a job's new state: the registry first, so a write another
+    * manager's newer row refuses (see [[JdbcJobRegistry.save]]) leaves
+    * this manager's view unchanged too. Returns the state.
+    */
+  private def put(st: JobState): JobState = {
+    registry.foreach(_.save(st))
+    jobs(st.id) = st
+    st
   }
 
   /** Periodic reconciliation + auto-savepoint — the reference's

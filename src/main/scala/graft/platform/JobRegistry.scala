@@ -8,7 +8,10 @@ package graft.platform
   * recovers the job list on construction.
   */
 trait JobRegistry {
-  /** Upsert the full row for a job (insert on first write). */
+  /** Write the full row for a job: over the row at `st.version - 1`, or
+    * inserted when the id has none. A row at another version throws
+    * IllegalStateException (the optimistic lock).
+    */
   def save(st: JobManager.JobState): Unit
   /** Remove a job's config row (run-log rows are kept, like the
     * reference's audit trail surviving config deletion).
@@ -52,17 +55,32 @@ final class JdbcJobRegistry(url: String, user: String = "", pass: String = "")
       |  event VARCHAR(64),
       |  detail LONG VARCHAR)""".stripMargin)
 
-  override def save(st: JobManager.JobState): Unit = {
+  /** Writes `st` over the row at `st.version - 1` (the optimistic lock's
+    * `WHERE version = ?`); inserts only when the id has no row. A row at
+    * any other version was written by another manager since this one
+    * read it: the write is refused with an IllegalStateException naming
+    * the id and both versions, and the row is left as it is.
+    */
+  override def save(st: JobManager.JobState): Unit = db { c =>
     val cols = Seq[Any](st.name, st.script, statusName(st.status), st.version,
       st.checkpointDir, if (st.autoRestart) 1 else 0, st.lastSavepoint.orNull,
       if (st.enabled) 1 else 0)
-    db.upsert(
+    val updated = Jdbc.execute(c,
       "UPDATE job_config SET job_name=?, job_sql=?, status=?, version=?, " +
         "checkpoint_dir=?, auto_restart=?, last_savepoint=?, enabled=? " +
-        "WHERE id=?", cols :+ st.id,
-      "INSERT INTO job_config (job_name, job_sql, status, version, " +
-        "checkpoint_dir, auto_restart, last_savepoint, enabled, id) " +
-        "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)", cols :+ st.id)
+        "WHERE id=? AND version=?", cols ++ Seq(st.id, st.version - 1): _*)
+    if (updated == 0) {
+      Jdbc.select(c, "SELECT version FROM job_config WHERE id = ?", st.id)(
+        _.getInt(1)).headOption.foreach { found =>
+        throw new IllegalStateException(
+          s"optimistic lock failure: job ${st.id} is at version $found " +
+            s"in the registry, expected ${st.version - 1}")
+      }
+      Jdbc.execute(c, "INSERT INTO job_config (job_name, job_sql, status, " +
+        "version, checkpoint_dir, auto_restart, last_savepoint, enabled, id) " +
+        "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)", cols :+ st.id: _*)
+    }
+    ()
   }
 
   override def delete(id: String): Unit =

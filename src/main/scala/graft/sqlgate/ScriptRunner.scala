@@ -44,6 +44,9 @@ class ScriptRunner(spark: SparkSession,
   graft.streaming.LocalCheckpointFs.install(spark)
   // the graft TVFs and MATCH_RECOGNIZE the rewritten statements call
   FlinkSqlRewrite.register(spark)
+  // every job's tasks on one executor class loader, so a restarted or
+  // restored job reuses its compiled classes (see ArtifactIsolation)
+  spark.conf.set(ScriptRunner.ArtifactIsolation, "false")
 
   val registry: mutable.Map[String, TableSpec] = mutable.LinkedHashMap()
   private val sourcesInstantiated = mutable.Set[String]()
@@ -886,6 +889,25 @@ class ScriptRunner(spark: SparkSession,
 }
 
 object ScriptRunner {
+  /** Spark's per-session artifact isolation, which every runner turns
+    * off (and `graft.Sessions.local` builds its sessions without). Each
+    * streaming query runs on a clone of its session; with isolation on
+    * (Spark 4.1's default) each clone gets its own artifact UUID, so the
+    * executors run that query's tasks under a new class loader.
+    * `CodeGenerator`'s cache is keyed by class loader and code, so every
+    * start and restore compiled all of the job's task-side classes again
+    * (whole-stage stages, state-store projections, row joiners, the
+    * `foreachBatch` deserializer), even when the code was byte-identical
+    * to the last run. Off, every job's tasks share the default executor
+    * loader and hit the cache. Isolation protects nothing here: the
+    * engine runs one shared session whose function registry is
+    * session-global (`Udx.guardBinding`/`commitBinding`), jar functions
+    * are shipped to every executor by `sparkContext.addJar`, and there
+    * are no Spark Connect clients. A clone copies the key when it is
+    * made, so it takes effect for every query started after it is set.
+    */
+  val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
   // Runners currently holding a lookup-dim cache + TTL scheduler. The
   // cache deliberately outlives a single run() (Flink's session lookup
   // cache spans statements — the long-TTL DemoGateSpec contract), so a

@@ -45,12 +45,19 @@ object Savepoints {
   def restore(savepointPath: String, newCheckpointDir: String): String = {
     val src = Paths.get(savepointPath)
     require(Files.isDirectory(src), s"no savepoint at $savepointPath")
-    val dst = Paths.get(newCheckpointDir)
-    if (Files.exists(dst))
-      Files.walkFileTree(dst, new TolerantWalk(_ => (),
-        Files.deleteIfExists(_), Files.deleteIfExists(_)))
-    copyTree(src, dst)
+    discard(newCheckpointDir)
+    copyTree(src, Paths.get(newCheckpointDir))
     newCheckpointDir
+  }
+
+  /** Delete a checkpoint dir and everything under it; a missing dir is
+    * left missing.
+    */
+  def discard(checkpointDir: String): Unit = {
+    val dir = Paths.get(checkpointDir)
+    if (Files.exists(dir))
+      Files.walkFileTree(dir, new TolerantWalk(_ => (),
+        Files.deleteIfExists(_), Files.deleteIfExists(_)))
   }
 
   /** List savepoints for a job name in numeric order, newest last

@@ -51,31 +51,39 @@ class UdxSpec extends SparkSpec {
     assert(out.toSeq == Seq(("mixed case", 1L)))
   }
 
-  test("gate: CREATE FUNCTION ... USING JAR ships and loads an external jar") {
-    import spark.implicits._
-    // build a real UDF jar at test time: compile a Function<String,String>
-    // implementation that is NOT on the test classpath, jar it
+  /** Build a real UDF jar `<cls>.jar` at test time: compile a
+    * Function<String,String> class `cls` (upper-cases its input and
+    * appends "!") that is NOT on the test classpath, and jar it.
+    */
+  private def upperJar(cls: String): java.nio.file.Path = {
     val work = java.nio.file.Files.createTempDirectory("udf_jar")
     val srcDir = work.resolve("src"); java.nio.file.Files.createDirectories(srcDir)
-    java.nio.file.Files.write(srcDir.resolve("ExtUpper.java"),
-      """public class ExtUpper implements java.util.function.Function<String, String> {
+    java.nio.file.Files.write(srcDir.resolve(s"$cls.java"),
+      s"""public class $cls implements java.util.function.Function<String, String> {
         |  public String apply(String s) {
         |    return s == null ? null : s.toUpperCase() + "!";
         |  }
         |}""".stripMargin.getBytes("UTF-8"))
     val javac = javax.tools.ToolProvider.getSystemJavaCompiler
     val rc = javac.run(null, null, null, "-d", work.toString,
-      srcDir.resolve("ExtUpper.java").toString)
+      srcDir.resolve(s"$cls.java").toString)
     assert(rc == 0, "javac failed")
-    val jarPath = work.resolve("ext_udf.jar")
+    // one jar name per class: Spark's file server refuses a second jar
+    // of the same file name (addJar only logs that), so it never ships
+    val jarPath = work.resolve(s"$cls.jar")
     val jos = new java.util.jar.JarOutputStream(
       java.nio.file.Files.newOutputStream(jarPath))
     try {
-      jos.putNextEntry(new java.util.zip.ZipEntry("ExtUpper.class"))
-      jos.write(java.nio.file.Files.readAllBytes(work.resolve("ExtUpper.class")))
+      jos.putNextEntry(new java.util.zip.ZipEntry(s"$cls.class"))
+      jos.write(java.nio.file.Files.readAllBytes(work.resolve(s"$cls.class")))
       jos.closeEntry()
     } finally jos.close()
+    jarPath
+  }
 
+  test("gate: CREATE FUNCTION ... USING JAR ships and loads an external jar") {
+    import spark.implicits._
+    val jarPath = upperJar("ExtUpper")
     val runner = new ScriptRunner(spark, batchMode = true)
     Seq(("hello", 1L)).toDF("txt", "k").createOrReplaceTempView("xj_src")
     runner.run(
@@ -87,6 +95,33 @@ class UdxSpec extends SparkSpec {
          |""".stripMargin)
     val out = spark.table("xj_snk_out").as[(String, Long)].collect()
     assert(out.toSeq == Seq(("HELLO!", 1L)))
+  }
+
+  test("gate: a USING JAR function runs in a streaming INSERT") {
+    import spark.implicits._
+    val jarPath = upperJar("ExtStreamUpper")
+    val dir = java.nio.file.Files.createTempDirectory("xs_src").toString
+    Seq(("hello", 1L), ("world", 2L)).toDF("txt", "k")
+      .coalesce(1).write.mode("append").parquet(dir)
+    val runner = new ScriptRunner(spark, checkpointRoot =
+      Some(java.nio.file.Files.createTempDirectory("xs_ckpt").toString))
+    val res = runner.run(
+      s"""CREATE FUNCTION ext_stream_upper AS 'ExtStreamUpper'
+         |  LANGUAGE JAVA USING JAR 'file://$jarPath';
+         |CREATE TABLE xs_src (txt VARCHAR, k BIGINT) WITH (
+         |  'connector' = 'filesystem', 'path' = '$dir',
+         |  'format' = 'parquet');
+         |CREATE TABLE xs_snk (t VARCHAR, k BIGINT)
+         |  WITH ('connector' = 'memory');
+         |INSERT INTO xs_snk SELECT ext_stream_upper(txt) AS t, k FROM xs_src;
+         |""".stripMargin)
+    assert(res.queries.size == 1)
+    res.queries.foreach { q =>
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty, q.exception.toString)
+    }
+    assert(spark.table("xs_snk").as[(String, Long)].collect().sorted.toSeq ==
+      Seq(("HELLO!", 1L), ("WORLD!", 2L)))
   }
 
   test("CREATE FUNCTION USING JAR with a missing jar fails fast") {

@@ -390,7 +390,9 @@ class JobManagerSpec extends SparkSpec {
     assert(m2.status(id) == JobManager.Failed)
     val log = reg2.runLog(id).map(_._1)
     assert(log.head == "START" && log.contains("RECOVERED_AS_FAILED"))
-    m1.stop(id, withSavepoint = false) // clean up the live query
+    // clean up the live query; m2 has moved the row on, so m1's write of
+    // the stop is refused (optimistic lock)
+    intercept[IllegalStateException](m1.stop(id, withSavepoint = false))
   }
 
   test("scheduler: periodic auto-savepoints accrue; wedged job reconciled to STOPPED") {
@@ -534,6 +536,71 @@ class JobManagerSpec extends SparkSpec {
     b.logRun("j", "e3", "")
     assert(a.runLog("j").map(_._1) == Seq("e1", "e2", "e3"))
     assert(b.runLog("j").map(_._1) == Seq("e1", "e2", "e3"))
+  }
+
+  test("optimistic lock: a manager cannot write over a row another " +
+    "manager has moved on") {
+    val url = "jdbc:derby:memory:jmlost;create=true"
+    val dir = srcDir()
+    spark.range(0, 2).toDF("id").coalesce(1).write.mode("append").parquet(dir)
+    def manager() = new JobManager(spark,
+      Files.createTempDirectory("lu_ckpt").toString,
+      Files.createTempDirectory("lu_sp").toString,
+      registry = Some(new JdbcJobRegistry(url)))
+    val m1 = manager()
+    val id = m1.start("lost_job", script(dir, "lost_out"))
+    assert(m1.status(id) == JobManager.Running && m1.info(id).version == 2)
+    // m2 adopts the job it finds RUNNING without live queries as FAILED
+    val m2 = manager()
+    assert(m2.status(id) == JobManager.Failed && m2.info(id).version == 3)
+    val e = intercept[IllegalStateException] {
+      m1.stop(id, withSavepoint = false)
+    }
+    assert(e.getMessage.contains(s"job $id is at version 3") &&
+      e.getMessage.contains("expected 2"), e.getMessage)
+    assert(m1.info(id).queries.forall(!_.isActive))
+    val row = new JdbcJobRegistry(url).loadAll().filter(_.id == id)
+    assert(row.map(r => (r.status, r.version)) == Seq((JobManager.Failed, 3)))
+  }
+
+  test("restore: an active name is refused before the savepoint copy; " +
+    "a copy whose start fails is deleted") {
+    val ckptRoot = Files.createTempDirectory("rl_ckpt")
+    @volatile var failStarts = false
+    val m = new JobManager(spark, ckptRoot.toString,
+      Files.createTempDirectory("rl_sp").toString) {
+      override def start(name: String, script0: String, batchMode: Boolean,
+          autoRestart: Boolean, restoreCheckpoint: Option[String]): String =
+        if (failStarts) throw new IllegalStateException("start refused")
+        else super.start(name, script0, batchMode, autoRestart,
+          restoreCheckpoint)
+    }
+    def ckpts() = ckptRoot.toFile.list().toSeq.sorted
+    val dir = srcDir()
+    val out = Files.createTempDirectory("rl_sink").toString
+    spark.range(0, 2).toDF("id").coalesce(1).write.mode("append").parquet(dir)
+    val fsScript =
+      s"""CREATE TABLE src (id BIGINT) WITH (
+         |  'connector' = 'filesystem', 'path' = '$dir',
+         |  'format' = 'parquet');
+         |CREATE TABLE rl_snk (id BIGINT) WITH (
+         |  'connector' = 'filesystem', 'path' = '$out',
+         |  'format' = 'parquet');
+         |INSERT INTO rl_snk SELECT id FROM src;
+         |""".stripMargin
+    val id = m.start("rl_job", fsScript)
+    m.info(id).queries.foreach(_.awaitTermination(60000))
+    assert(m.stop(id).isDefined)
+    val id1 = m.restartFromSavepoint(id)
+    assert(m.status(id1) == JobManager.Running)
+    val e = intercept[IllegalStateException](m.restartFromSavepoint(id))
+    assert(e.getMessage.contains("already active"))
+    assert(ckpts() == Seq(id, s"$id-r1"))
+    m.stop(id1, withSavepoint = false)
+    failStarts = true
+    val e2 = intercept[IllegalStateException](m.restartFromSavepoint(id))
+    assert(e2.getMessage == "start refused")
+    assert(ckpts() == Seq(id, s"$id-r1"))
   }
 
   test("start and startConfig share one path: a script that fails " +
