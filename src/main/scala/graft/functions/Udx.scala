@@ -162,16 +162,19 @@ object Udx {
   def registerFromJar(spark: SparkSession, name: String, className: String,
       jarUrl: String): Unit = {
     guardBinding(spark, name, className)
-    spark.sparkContext.addJar(jarUrl)
-    // driver-side eager load for fail-fast when the jar is local (addJar
-    // does not add to the DRIVER classloader in all deploy modes; fall
-    // back to a direct URLClassLoader child for immediate validation)
     val uri = new java.net.URI(jarUrl)
     val local = Option(uri.getScheme) match {
       case None => Some(java.nio.file.Paths.get(jarUrl))
       case Some("file") => Some(java.nio.file.Paths.get(uri))
       case _ => None // remote: executors fetch; driver resolves lazily
     }
+    val source = local.fold(jarUrl)(_.toAbsolutePath.normalize.toString)
+    guardJarName(spark, source)
+    spark.sparkContext.addJar(jarUrl)
+    jarSources(jarFileName(source)) = source
+    // driver-side eager load for fail-fast when the jar is local (addJar
+    // does not add to the DRIVER classloader in all deploy modes; fall
+    // back to a direct URLClassLoader child for immediate validation)
     local.foreach { p =>
       require(java.nio.file.Files.exists(p), s"jar not found: $jarUrl")
       val cl = new java.net.URLClassLoader(Array(p.toUri.toURL),
@@ -181,5 +184,31 @@ object Udx {
     }
     spark.udf.register(name, new JarFunction(className))
     commitBinding(spark, name, className)
+  }
+
+  // jar file name → the path (or remote URL) USING JAR added it from.
+  // Spark serves and fetches added jars by file name, so a second jar of
+  // a name already added from another path never reaches the executors
+  // (`addJar` only logs the clash) and its function would fail at task
+  // time with ClassNotFoundException.
+  private val jarSources = scala.collection.concurrent.TrieMap[String, String]()
+
+  private def jarFileName(source: String): String =
+    source.substring(source.lastIndexOf('/') + 1)
+
+  /** Refuse a jar whose file name the context already serves from
+    * another path; the same path again is fine. An entry of a stopped
+    * context (its `listJars` no longer holds the name) is stale.
+    */
+  private def guardJarName(spark: SparkSession, source: String): Unit = {
+    val file = jarFileName(source)
+    val served = spark.sparkContext.listJars().exists(jarFileName(_) == file)
+    jarSources.get(file).filter(prev => served && prev != source)
+      .foreach { prev =>
+        throw new IllegalArgumentException(
+          s"USING JAR '$source': a jar named $file was already added from " +
+            s"'$prev', and Spark ships jars by file name, so this one " +
+            "would never reach the executors. Rename the jar")
+      }
   }
 }

@@ -1,7 +1,7 @@
 package graft.platform
 
 import graft.sqlgate.{ScriptRunner, SqlValidator}
-import graft.streaming.Savepoints
+import graft.streaming.{Savepoints, StateStores}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import scala.collection.concurrent.TrieMap
@@ -171,8 +171,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     lifecycleLock.synchronized {
       val st = job(id)
       require(st.status == Running, s"job $id is ${st.status}, not RUNNING")
-      st.queries.foreach(_.stop())
-      st.queries.foreach(q => queryToJob.remove(q.id))
+      stopQueries(st.queries)
       val sp = scala.util.Try(
         if (withSavepoint && hasCheckpoint(st)) Some(snapshot(st)) else None)
       val taken = sp.toOption.flatten
@@ -181,6 +180,21 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
       registry.foreach(_.logRun(id, "STOP", taken.getOrElse("")))
       sp.get
     }
+
+  /** The one stop path of every verb: stop the queries, free their
+    * state-store providers ([[StateStores.stop]]) and forget the ones
+    * that stopped, then rethrow the first stop error. A query whose stop
+    * threw stays mapped, so a failure of its still-running thread
+    * reaches [[onJobFailure]]. The checkpoint is not touched, so a
+    * savepoint copied after it holds the same files as one copied
+    * without the release.
+    */
+  private def stopQueries(qs: Seq[StreamingQuery]): Unit = {
+    val failed = StateStores.stop(qs)
+    val stuck = failed.map(_._1).toSet
+    qs.filterNot(stuck).foreach(q => queryToJob.remove(q.id))
+    failed.headOption.foreach { case (_, e) => throw e }
+  }
 
   /** /api/savepoint: snapshot a RUNNING job's live checkpoint on demand
     * (the manual counterpart of the scheduler's [[autoSavepoint]] pass —
@@ -281,8 +295,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
         case Some(st) if st.status == Running =>
           // stop surviving sibling queries of a multi-query job — leaving
           // them running would double-write once the job restarts
-          st.queries.foreach(q => try q.stop() catch { case _: Throwable => () })
-          st.queries.foreach(q => queryToJob.remove(q.id))
+          try stopQueries(st.queries) catch { case _: Throwable => () }
           transition(id, Running, Failed)(identity)
           registry.foreach(_.logRun(id, "FAILED", reason))
           fireAlarm(AlarmEvent(id, st.name, "JOB_FAILED", reason))
@@ -471,7 +484,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   private[platform] def reconcile(): Unit = lifecycleLock.synchronized {
     jobs.values.filter(_.status == Running).foreach { st =>
       if (st.queries.nonEmpty && st.queries.forall(!_.isActive)) {
-        st.queries.foreach(q => queryToJob.remove(q.id))
+        stopQueries(st.queries)
         transition(st.id, Running, Stopped)(identity)
         registry.foreach(_.logRun(st.id, "RECONCILED",
           "status RUNNING but no live queries"))

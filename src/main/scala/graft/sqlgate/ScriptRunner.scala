@@ -248,7 +248,8 @@ class ScriptRunner(spark: SparkSession,
       case e: Throwable =>
         // statement-set atomicity: if the Nth INSERT fails to start, the
         // already-started siblings must not keep writing unmanaged
-        started.foreach(q => try q.stop() catch { case _: Throwable => () })
+        graft.streaming.StateStores.stop(started.toSeq)
+          .foreach { case (_, stopErr) => e.addSuppressed(stopErr) }
         throw e
     }
     RunResult(started.toSeq, shown.toSeq, confs.toMap)

@@ -55,7 +55,8 @@ class UdxSpec extends SparkSpec {
     * Function<String,String> class `cls` (upper-cases its input and
     * appends "!") that is NOT on the test classpath, and jar it.
     */
-  private def upperJar(cls: String): java.nio.file.Path = {
+  private def upperJar(cls: String,
+      jarName: String = ""): java.nio.file.Path = {
     val work = java.nio.file.Files.createTempDirectory("udf_jar")
     val srcDir = work.resolve("src"); java.nio.file.Files.createDirectories(srcDir)
     java.nio.file.Files.write(srcDir.resolve(s"$cls.java"),
@@ -70,7 +71,7 @@ class UdxSpec extends SparkSpec {
     assert(rc == 0, "javac failed")
     // one jar name per class: Spark's file server refuses a second jar
     // of the same file name (addJar only logs that), so it never ships
-    val jarPath = work.resolve(s"$cls.jar")
+    val jarPath = work.resolve(if (jarName.nonEmpty) jarName else s"$cls.jar")
     val jos = new java.util.jar.JarOutputStream(
       java.nio.file.Files.newOutputStream(jarPath))
     try {
@@ -130,6 +131,31 @@ class UdxSpec extends SparkSpec {
         "/nonexistent/path/ghost.jar")
     }
     assert(e.getMessage.contains("jar not found"))
+  }
+
+  test("USING JAR: a second jar of an added jar's file name from another " +
+    "path fails at CREATE FUNCTION; the same path again is fine") {
+    import spark.implicits._
+    val first = upperJar("ExtSameNameA", "ext_udf.jar")
+    val second = upperJar("ExtSameNameB", "ext_udf.jar")
+    assert(first.getParent != second.getParent)
+    val runner = new ScriptRunner(spark, batchMode = true)
+    def create(fn: String, cls: String, jar: java.nio.file.Path): Unit =
+      runner.run(s"CREATE FUNCTION $fn AS '$cls' LANGUAGE JAVA " +
+        s"USING JAR 'file://$jar';")
+    create("ext_same_a", "ExtSameNameA", first)
+    val e = intercept[IllegalArgumentException] {
+      create("ext_same_b", "ExtSameNameB", second)
+    }
+    assert(e.getMessage.contains(first.toString) &&
+      e.getMessage.contains(second.toString), e.getMessage)
+    assert(!spark.catalog.functionExists("ext_same_b"))
+    // the same path again (a plain path this time) registers and runs
+    runner.run(s"CREATE FUNCTION ext_same_a2 AS 'ExtSameNameA' " +
+      s"LANGUAGE JAVA USING JAR '$first';")
+    Seq("hi").toDF("txt").createOrReplaceTempView("xsn_src")
+    assert(spark.sql("SELECT ext_same_a(txt), ext_same_a2(txt) FROM xsn_src")
+      .as[(String, String)].collect().toSeq == Seq(("HI!", "HI!")))
   }
 
   test("LATERAL TABLE executes: multi-column inline + left-outer explode") {

@@ -527,6 +527,49 @@ class JobManagerSpec extends SparkSpec {
     m.stop(id2, withSavepoint = false)
   }
 
+  test("a stop that times out leaves the job RUNNING with its query " +
+    "monitored: the query's later failure still marks the job FAILED") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+    // a broker whose every request hangs until released and then fails:
+    // the query's thread waits in a socket read, which the stop's
+    // interrupt does not end, so the stop outlives its timeout
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val srv = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    srv.createContext("/", { ex: com.sun.net.httpserver.HttpExchange =>
+      entered.countDown()
+      release.await(30, TimeUnit.SECONDS)
+      ex.sendResponseHeaders(500, -1)
+      ex.close()
+    })
+    srv.start()
+    val stopTimeout = "spark.sql.streaming.stopTimeout"
+    spark.conf.set(stopTimeout, "200")
+    try {
+      val m = mgr()
+      val id = m.start("stuck_stop",
+        s"""CREATE TABLE src (id BIGINT) WITH (
+           |  'connector' = 'kafka', 'topic' = 'stuck',
+           |  'rest.endpoint' = 'http://127.0.0.1:${srv.getAddress.getPort}',
+           |  'format' = 'json');
+           |CREATE TABLE stuck_snk (id BIGINT) WITH ('connector' = 'blackhole');
+           |INSERT INTO stuck_snk SELECT id FROM src;
+           |""".stripMargin)
+      assert(entered.await(60, TimeUnit.SECONDS), "the query never polled")
+      intercept[TimeoutException] { m.stop(id, withSavepoint = false) }
+      assert(m.status(id) == JobManager.Running)
+      release.countDown()
+      assert(awaitCond(60000) { m.status(id) == JobManager.Failed },
+        "the failure of the query whose stop threw was not seen: " +
+          m.status(id))
+    } finally {
+      release.countDown()
+      spark.conf.unset(stopTimeout)
+      srv.stop(0)
+    }
+  }
+
   test("run log: two registries on one database append in one order") {
     val url = "jdbc:derby:memory:jmseq;create=true"
     val a = new JdbcJobRegistry(url)
