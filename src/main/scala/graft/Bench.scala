@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failures in the timed pass are recorded
@@ -63,14 +64,10 @@ object Bench {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) return Map.empty
     try {
-      val line = java.nio.file.Files.readString(p)
-      if (!line.contains(s""""sf":"$sfDir"""")) return Map.empty
-      val qStart = line.indexOf(""""queries":{""")
-      if (qStart < 0) return Map.empty
-      val body = line.substring(qStart + 11, line.indexOf('}', qStart))
-      val Pair = """"([^"]+)":(-?[\d.eE+-]+)""".r
-      Pair.findAllMatchIn(body).flatMap { m =>
-        m.group(2).toDoubleOption.map(m.group(1) -> _)
+      val bench = JsonUtil.tree(java.nio.file.Files.readString(p))
+      if (bench.path("sf").textValue != sfDir) Map.empty
+      else bench.path("queries").properties().asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.doubleValue
       }.toMap
     } catch { case _: Throwable => Map.empty }
   }

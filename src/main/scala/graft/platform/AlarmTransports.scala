@@ -44,16 +44,17 @@ object AlarmTransports {
     s"""{"msgtype": "text", "text": { "content": ${
       JsonUtil.str(s"${TsFmt.format(at)} ${message(e)}")} } }"""
 
-  /** DingDing accepts a webhook iff the response JSON carries
-    * `errcode: 0` (or no errcode at all) — `DingDingAlarmImpl.java:44-48`.
+  /** DingDing accepts a webhook iff the response is a JSON object whose
+    * `errcode` is 0 (number or string), null or absent —
+    * `DingDingAlarmImpl.java:44-48`. A reply that is not JSON is a
+    * failed delivery.
     */
   def dingTalkAccepted(responseBody: String): Boolean =
     responseBody != null && responseBody.nonEmpty &&
-      ("\"errcode\"\\s*:\\s*\"?(-?\\d+)".r.findFirstMatchIn(responseBody)
-        match {
-          case Some(m) => m.group(1) == "0"
-          case None => true
-        })
+      scala.util.Try(JsonUtil.tree(responseBody)).toOption.exists { n =>
+        val code = n.path("errcode")
+        n.isObject && (code.isMissingNode || code.isNull || code.asText == "0")
+      }
 
   /** HTTP-callback form body (`HttpAlarmImpl.java:40-47`): url-encoded
     * `appId`/`deployMode`/`jobName` — the CallbackDTO fields the

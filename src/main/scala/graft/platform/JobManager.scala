@@ -49,6 +49,8 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     }
   }
   private val queryToJob = TrieMap[java.util.UUID, String]()
+  // the runner of each RUNNING job, holding its snapshot lookup dims
+  private[platform] val runners = TrieMap[String, ScriptRunner]()
   // alarm fan-out (DingDing/HTTP callbacks of the reference's
   // web-alarm module → pluggable handlers here)
   private val alarmHandlers =
@@ -149,13 +151,19 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
       val res = runner.run(st.script)
       lifecycleLock.synchronized {
         res.queries.foreach(q => queryToJob(q.id) = st.id)
-        if (res.queries.isEmpty) transition(st.id, Starting, Stopped)(identity)
-        else transition(st.id, Starting, Running)(_.copy(queries = res.queries))
+        if (res.queries.isEmpty) {
+          runner.releaseSnapshotDims()
+          transition(st.id, Starting, Stopped)(identity)
+        } else {
+          runners(st.id) = runner
+          transition(st.id, Starting, Running)(_.copy(queries = res.queries))
+        }
       }
       st.id
     } catch {
       case e: Throwable =>
         lifecycleLock.synchronized {
+          runner.releaseSnapshotDims()
           transition(st.id, Starting, Failed)(identity)
         }
         throw e
@@ -171,7 +179,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
     lifecycleLock.synchronized {
       val st = job(id)
       require(st.status == Running, s"job $id is ${st.status}, not RUNNING")
-      stopQueries(st.queries)
+      stopQueries(st)
       val sp = scala.util.Try(
         if (withSavepoint && hasCheckpoint(st)) Some(snapshot(st)) else None)
       val taken = sp.toOption.flatten
@@ -181,18 +189,20 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
       sp.get
     }
 
-  /** The one stop path of every verb: stop the queries, free their
+  /** The one stop path of every verb: stop the job's queries, free their
     * state-store providers ([[StateStores.stop]]) and forget the ones
-    * that stopped, then rethrow the first stop error. A query whose stop
-    * threw stays mapped, so a failure of its still-running thread
-    * reaches [[onJobFailure]]. The checkpoint is not touched, so a
-    * savepoint copied after it holds the same files as one copied
-    * without the release.
+    * that stopped; once all stopped, release the run's snapshot lookup
+    * dims; then rethrow the first stop error. A query whose stop threw
+    * stays mapped, so a failure of its still-running thread reaches
+    * [[onJobFailure]]. The checkpoint is not touched, so a savepoint
+    * copied after it holds the same files as one copied without the
+    * release.
     */
-  private def stopQueries(qs: Seq[StreamingQuery]): Unit = {
-    val failed = StateStores.stop(qs)
+  private def stopQueries(st: JobState): Unit = {
+    val failed = StateStores.stop(st.queries)
     val stuck = failed.map(_._1).toSet
-    qs.filterNot(stuck).foreach(q => queryToJob.remove(q.id))
+    st.queries.filterNot(stuck).foreach(q => queryToJob.remove(q.id))
+    if (failed.isEmpty) runners.remove(st.id).foreach(_.releaseSnapshotDims())
     failed.headOption.foreach { case (_, e) => throw e }
   }
 
@@ -295,7 +305,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
         case Some(st) if st.status == Running =>
           // stop surviving sibling queries of a multi-query job — leaving
           // them running would double-write once the job restarts
-          try stopQueries(st.queries) catch { case _: Throwable => () }
+          try stopQueries(st) catch { case _: Throwable => () }
           transition(id, Running, Failed)(identity)
           registry.foreach(_.logRun(id, "FAILED", reason))
           fireAlarm(AlarmEvent(id, st.name, "JOB_FAILED", reason))
@@ -484,7 +494,7 @@ class JobManager(spark: SparkSession, checkpointRoot: String,
   private[platform] def reconcile(): Unit = lifecycleLock.synchronized {
     jobs.values.filter(_.status == Running).foreach { st =>
       if (st.queries.nonEmpty && st.queries.forall(!_.isActive)) {
-        stopQueries(st.queries)
+        stopQueries(st)
         transition(st.id, Running, Stopped)(identity)
         registry.foreach(_.logRun(st.id, "RECONCILED",
           "status RUNNING but no live queries"))

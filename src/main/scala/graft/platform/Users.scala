@@ -34,43 +34,16 @@ object Users {
         s""","password":${JsonUtil.str(s.password)}""" +
         s""","userid":${s.userid}}""").getBytes("UTF-8"))
 
-  /** Inverse of [[graft.JsonUtil.escape]] — captured string fields must
-    * be UNescaped or a username containing a quote/backslash round-trips
-    * into a session that can never validate.
-    */
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb += '\n'
-          case 'r' => sb += '\r'
-          case 't' => sb += '\t'
-          case 'u' if i + 5 < s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 4
-          case o => sb += o // covers \" and \\
-        }
-        i += 2
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
+  /** The session of a token, or None when it is not one. */
   def decodeSession(token: String): Option[Session] =
     try {
-      val json = new String(java.util.Base64.getDecoder.decode(token), "UTF-8")
-      def field(k: String): Option[String] =
-        (s""""$k"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-          .findFirstMatchIn(json).map(m => unescape(m.group(1)))
-      for {
-        name <- field("name")
-        pass <- field("password")
-        uid <- "\"userid\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(json)
-          .map(_.group(1).toInt)
-      } yield Session(uid, name, pass)
+      val n = JsonUtil.tree(
+        new String(java.util.Base64.getDecoder.decode(token), "UTF-8"))
+      val (name, pass, uid) =
+        (n.path("name"), n.path("password"), n.path("userid"))
+      if (name.isTextual && pass.isTextual && uid.isInt && uid.intValue >= 0)
+        Some(Session(uid.intValue, name.textValue, pass.textValue))
+      else None
     } catch { case _: Throwable => None }
 }
 

@@ -120,7 +120,7 @@ object Dedup extends QueryPack {
     // are possible on that path
     val kept = maxBucket match {
       case Some(cap) =>
-        ensureDropLogger(rows.sparkSession)
+        CapDrops.watch(rows.sparkSession)
         buckets
           .observe(metricName,
             sum(when(bsz > cap, 1).otherwise(0)).as("dropped_buckets"),
@@ -135,39 +135,6 @@ object Dedup extends QueryPack {
       .select(col("ida"), col("idb"))
       .distinct()
   }
-
-  /** Log hot-bucket drops after any action over a [[bucketPairs]] plan —
-    * observe() metrics cost nothing at runtime and surface here, so
-    * capped truncation is always visible in the driver log.
-    */
-  // weak keys: stopped sessions must not stay pinned by this static set
-  private val dropLoggerSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private def ensureDropLogger(s: SparkSession): Unit =
-    dropLoggerSessions.synchronized {
-      if (!dropLoggerSessions.contains(s)) {
-        dropLoggerSessions.add(s)
-        s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              // sums over an EMPTY bucket aggregation are NULL — guard
-              // before unboxing (same pitfall labelSum guards against)
-              if (name.endsWith("_buckets") && !row.isNullAt(0) &&
-                  row.getLong(0) > 0)
-                log.warn(s"$name hot-bucket cap dropped ${row.getLong(0)} " +
-                  s"buckets (${row.getLong(1)} member rows) — raise maxBucket " +
-                  "to trade skew safety for recall on these groups")
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-      }
-    }
 
   /** Probability-0.5 Jaccard detection threshold of an (bands, rows)
     * LSH config — the S-curve midpoint (1/b)^(1/r). More bands / fewer
@@ -272,7 +239,7 @@ object Dedup extends QueryPack {
     val bc = minhashBandRows(cor, k, bands, rowsPerBand)
       .groupBy(col("band"), col("bkey"))
       .agg(collect_list(col("doc_id")).as("cm"))
-    ensureDropLogger(s)
+    CapDrops.watch(s)
     val product = size(col("nm")).cast("long") * size(col("cm"))
     val joined = bn.join(bc, Seq("band", "bkey"))
       .observe("cross_lsh_buckets",
@@ -393,7 +360,7 @@ object Dedup extends QueryPack {
       StaticIndexCache.corpusKey(s, corpus, "cross_idx",
         idCol, textCol, bands, rowsPerBand, maxBucket)) {
       val dir = StaticIndexCache.newTmpDir("graft_cross_idx")
-      ensureDropLogger(s)
+      CapDrops.watch(s)
       rowLocalSig(graft.Par.spread(corpus), "idb", "ckeys", "sb")
         .write.parquet(s"$dir/meta")
       // keyed by idb for the per-batch meta join — see the idx comment

@@ -124,7 +124,7 @@ object Search extends QueryPack {
     val kept = dfCap match {
       case Some(cap) =>
         require(cap >= 1, s"TEXT_SEARCH_BM25: df cap must be >= 1, got $cap")
-        ensureCapLogger(corpus.sparkSession)
+        CapDrops.watch(corpus.sparkSession)
         withDf
           .observe("bm25_dfcap",
             sum(when(col("df") > cap, 1).otherwise(0))
@@ -137,40 +137,6 @@ object Search extends QueryPack {
     }
     kept.crossJoin(stats)
   }
-
-  /** Log df-cap drops after any action over a capped-index plan —
-    * observe() metrics cost nothing at runtime and surface here, so
-    * capped truncation is always visible in the driver log (same
-    * policy as [[Dedup]]'s hot-bucket cap logger).
-    */
-  // weak keys: stopped sessions must not stay pinned by this static set
-  private val capLoggerSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private def ensureCapLogger(s: SparkSession): Unit =
-    capLoggerSessions.synchronized {
-      if (!capLoggerSessions.contains(s)) {
-        capLoggerSessions.add(s)
-        s.listenerManager.register(
-          new org.apache.spark.sql.util.QueryExecutionListener {
-            override def onSuccess(funcName: String,
-                qe: org.apache.spark.sql.execution.QueryExecution,
-                durationNs: Long): Unit =
-              qe.observedMetrics.foreach { case (name, row) =>
-                // the sum over an EMPTY index is NULL — guard the unbox
-                if (name == "bm25_dfcap" && !row.isNullAt(0) &&
-                    row.getLong(0) > 0)
-                  log.warn(s"bm25 df cap dropped ${row.getLong(0)} posting " +
-                    "rows (stop-grade terms) — raise the cap to trade " +
-                    "probe fan-out for recall on those terms")
-              }
-            override def onFailure(funcName: String,
-                qe: org.apache.spark.sql.execution.QueryExecution,
-                exception: Exception): Unit = ()
-          })
-      }
-    }
 
   /** The log-free rational odds-ratio idf shared by both scorers —
     * `(2(N-df)+1)/(2df+1)`, the exact monotone stand-in for

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.JsonUtil
 import java.util
 import scala.jdk.CollectionConverters._
 
@@ -36,6 +37,10 @@ import scala.jdk.CollectionConverters._
   *   - `GET <endpoint>/topics/<t>/partitions/<p>/messages?offset=o&count=c`
   *     → `[{"key":…,"value":…,"offset":n},…]` (json-embedded records)
   *
+  * Every response and the checkpointed offsets are read with
+  * [[graft.JsonUtil]] (Jackson); a malformed body fails the read with
+  * its position.
+  *
   * Output schema mirrors the native source's consume columns (string
   * transport): `key STRING, value STRING, partition INT, offset LONG`;
   * the gate layer decodes `value` with `from_json` into the declared
@@ -43,8 +48,9 @@ import scala.jdk.CollectionConverters._
   *
   * Scale: one Spark input partition per Kafka partition — parallelism
   * is the topic's partition count, as with the native source; record
-  * fetches page in `fetch.count` chunks so a large backlog never
-  * materializes one giant response.
+  * fetches page in `fetch.count` chunks (at least 1, checked when the
+  * scan is planned) so a large backlog never materializes one giant
+  * response.
   */
 class KafkaRestSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -77,24 +83,47 @@ object KafkaRestSource {
     opts.getOrElse("topic", throw new IllegalArgumentException(
       "kafka-rest source needs 'topic'"))
 
-  def partitions(endpoint: String, topic: String): Seq[Int] = {
-    val body = graft.Http.get(s"$endpoint/topics/$topic/partitions")
-    val found = """"partition"\s*:\s*(\d+)""".r
-      .findAllMatchIn(body).map(_.group(1).toInt).toSeq
-    if (found.nonEmpty) found
-    // bare-int array spelling `[0,1,2]` accepted too
-    else """\d+""".r.findAllIn(body).map(_.toInt).toSeq
-  }
+  /** The partitions response: `[{"partition":0},…]` or bare `[0,1,…]`. */
+  def partitions(endpoint: String, topic: String): Seq[Int] =
+    JsonUtil.tree(graft.Http.get(s"$endpoint/topics/$topic/partitions"))
+      .elements().asScala.map { n =>
+        val p = if (n.isObject) n.path("partition") else n
+        JsonUtil.whole(p, "partitions response").toInt
+      }.toSeq
 
   /** (beginning, end) — end is the exclusive next-offset. */
   def offsetRange(endpoint: String, topic: String, p: Int): (Long, Long) = {
-    val body = graft.Http.get(s"$endpoint/topics/$topic/partitions/$p/offsets")
-    def f(name: String): Long =
-      s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(body).map(
-        _.group(1).toLong).getOrElse(throw new RuntimeException(
-        s"offsets response missing $name: ${body.take(120)}"))
+    val n = JsonUtil.tree(
+      graft.Http.get(s"$endpoint/topics/$topic/partitions/$p/offsets"))
+    def f(name: String) = JsonUtil.whole(n.path(name), s"offsets $name")
     (f("beginning_offset"), f("end_offset"))
   }
+
+  /** The records page size; a count below 1 would never advance a read. */
+  private[sources] def fetchCountOf(opts: Map[String, String]): Int = {
+    val raw = opts.getOrElse("fetch.count", "500")
+    raw.trim.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalArgumentException(
+        s"kafka-rest source: 'fetch.count' must be a whole number >= 1, " +
+          s"got '$raw'"))
+  }
+
+  final case class Record(key: Option[String], value: String, offset: Long,
+      partition: Option[Int])
+
+  /** A fetch response, a JSON array of record objects. `key` and `value`
+    * come back as column text: a JSON string is the payload itself, any
+    * other JSON stays raw text for `from_json` downstream, and a `null`
+    * key is no key.
+    */
+  def records(body: String): Seq[Record] =
+    JsonUtil.objectSlices(body).map { f =>
+      def col(name: String) = f.get(name).flatten
+      Record(col("key"), col("value").getOrElse("null"),
+        col("offset").getOrElse(throw new IllegalArgumentException(
+          "record missing offset")).toLong,
+        col("partition").map(_.toInt))
+    }
 }
 
 private[sources] class KafkaRestTable(opts: Map[String, String])
@@ -118,11 +147,11 @@ private[sources] class KafkaRestScan(opts: Map[String, String]) extends Scan {
   override def toBatch: Batch = new Batch {
     private val endpoint = KafkaRestSource.endpointOf(opts)
     private val topic = KafkaRestSource.topicOf(opts)
+    private val fetchCount = KafkaRestSource.fetchCountOf(opts)
     override def planInputPartitions(): Array[InputPartition] =
       KafkaRestSource.partitions(endpoint, topic).map { p =>
         val (b, e) = KafkaRestSource.offsetRange(endpoint, topic, p)
-        RestRange(endpoint, topic, p, b, e,
-          opts.getOrElse("fetch.count", "500").toInt,
+        RestRange(endpoint, topic, p, b, e, fetchCount,
           opts.getOrElse("fail.on.data.loss", "true").toBoolean)
           : InputPartition
       }.toArray
@@ -142,15 +171,16 @@ private[sources] case class RestOffsets(parts: Map[Int, Long]) extends Offset {
 
 private[sources] object RestOffsets {
   def fromJson(s: String): RestOffsets = RestOffsets(
-    """"(\d+)"\s*:\s*(\d+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap)
+    JsonUtil.tree(s).properties().asScala.map { e =>
+      e.getKey.toInt -> JsonUtil.whole(e.getValue, "offset")
+    }.toMap)
 }
 
 private[sources] class KafkaRestMicroBatchStream(opts: Map[String, String])
     extends MicroBatchStream {
   private val endpoint = KafkaRestSource.endpointOf(opts)
   private val topic = KafkaRestSource.topicOf(opts)
-  private val fetchCount = opts.getOrElse("fetch.count", "500").toInt
+  private val fetchCount = KafkaRestSource.fetchCountOf(opts)
   private val failOnDataLoss =
     opts.getOrElse("fail.on.data.loss", "true").toBoolean
   private val startLatest =
@@ -211,16 +241,16 @@ private[sources] class RestReaderFactory extends PartitionReaderFactory {
   */
 private[sources] class RestPartitionReader(r: RestRange)
     extends PartitionReader[InternalRow] {
-  private var buf: Iterator[MiniJson.Record] = Iterator.empty
+  private var buf: Iterator[KafkaRestSource.Record] = Iterator.empty
   private var nextOffset = r.start
-  private var cur: MiniJson.Record = _
+  private var cur: KafkaRestSource.Record = _
 
   override def next(): Boolean = {
     while (!buf.hasNext && nextOffset < r.end) {
       val count = math.min(r.fetchCount.toLong, r.end - nextOffset)
       val body = graft.Http.get(s"${r.endpoint}/topics/${r.topic}" +
         s"/partitions/${r.partition}/messages?offset=$nextOffset&count=$count")
-      val raw = MiniJson.records(body)
+      val raw = KafkaRestSource.records(body)
       val recs = raw.filter(rec =>
         rec.offset >= nextOffset && rec.offset < r.end)
       if (recs.nonEmpty) {

@@ -122,7 +122,7 @@ final class StubBroker(topic: String, nParts: Int) {
         // hanging until the client's read timeout with the real cause
         // buried in a server-side stack trace
         val recs =
-          try MiniJson.produceRecords(req)
+          try StubBroker.produceRecords(req)
           catch {
             case e: Exception =>
               val msg = """{"error_code":42201,""" +
@@ -155,4 +155,18 @@ final class StubBroker(topic: String, nParts: Int) {
   srv.start()
   val endpoint = s"http://127.0.0.1:${srv.getAddress.getPort}"
   def stop(): Unit = srv.stop(0)
+}
+
+object StubBroker {
+
+  /** A REST-proxy produce body `{"records":[{"key":K,"value":V},…]}` →
+    * the (key, value) JSON texts, exact slices of the body. A produced
+    * `null` value stays the text "null", the tombstone spelling of the
+    * consume side's log format; a missing field reads the same.
+    */
+  def produceRecords(body: String): Seq[(String, String)] =
+    graft.JsonUtil.objectSlices(body, Some("records"), raw = true).map { f =>
+      def text(name: String) = f.get(name).flatten.getOrElse("null")
+      (text("key"), text("value"))
+    }
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
+import graft.JsonUtil
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** In-process Elasticsearch-7 stand-in for the keyed bulk sink: accepts
   * the REST `_bulk` NDJSON wire on a live socket and materializes the
@@ -16,16 +18,11 @@ import scala.collection.mutable
   * store while reporting success. Unknown action kinds throw instead.
   */
 final class StubEs {
-  // keyed docs: (index, _id as the RAW escaped text from the action
-  // line) → doc. Raw-escaped keys stay unique because the sink's
-  // escaping is deterministic. Id-LESS index actions append to a
+  // keyed docs: (index, _id) → doc. Id-LESS index actions append to a
   // SEPARATE buffer — sharing the keyed namespace would let a client
   // _id spelled like a synthesized key overwrite an anonymous append.
   private val keyed = mutable.LinkedHashMap[(String, String), String]()
   private val anon = mutable.Buffer[(String, String)]() // (index, doc)
-  private val IdxRe = """"_index"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  private val IdRe = """"_id"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  private val ActionRe = """^\s*\{\s*"(\w+)"""".r
   private val srv = com.sun.net.httpserver.HttpServer.create(
     new java.net.InetSocketAddress("127.0.0.1", 0), 0)
 
@@ -46,15 +43,17 @@ final class StubEs {
           val anonBuf = mutable.Buffer[(String, String)]()
           lines.grouped(2).foreach {
             case Array(action, doc) =>
-              ActionRe.findFirstMatchIn(action).map(_.group(1)) match {
-                case Some("index") => ()
-                case other => throw new IllegalArgumentException(
-                  s"StubEs accepts only index actions, got: " +
-                    s"${other.getOrElse(action.take(40))}")
-              }
-              val idx = IdxRe.findFirstMatchIn(action)
-                .map(_.group(1)).getOrElse("")
-              IdRe.findFirstMatchIn(action).map(_.group(1)) match {
+              val a = JsonUtil.tree(action)
+              val meta = a.path("index")
+              if (a.size != 1 || !meta.isObject)
+                throw new IllegalArgumentException(
+                  "StubEs accepts only index actions, got: " +
+                    a.fieldNames.asScala.nextOption().getOrElse(action.take(40)))
+              if (!JsonUtil.tree(doc).isObject)
+                throw new IllegalArgumentException(
+                  s"bulk document is not a JSON object: ${doc.take(40)}")
+              val idx = Option(meta.path("_index").textValue).getOrElse("")
+              Option(meta.path("_id").textValue) match {
                 case Some(id) => keyedBuf += (((idx, id), doc))
                 case None => anonBuf += ((idx, doc))
               }
@@ -68,11 +67,10 @@ final class StubEs {
           }
           """{"took":1,"errors":false,"items":[]}"""
         } catch {
-          case e: IllegalArgumentException =>
+          case e: Exception =>
             val msg =
               """{"took":1,"errors":true,"items":[{"index":{"status":400,""" +
-                s""""error":"${e.getMessage.replace("\\", "\\\\")
-                  .replace("\"", "\\\"")}"}}]}"""
+                s""""error":${JsonUtil.str(String.valueOf(e.getMessage))}}}]}"""
             val b = msg.getBytes("UTF-8")
             ex.sendResponseHeaders(400, b.length.toLong)
             ex.getResponseBody.write(b)

@@ -1,5 +1,6 @@
 package graft.sqlgate
 
+import graft.JsonUtil
 import org.apache.spark.sql.{Dataset, Row}
 
 /** Elasticsearch-7 keyed-index sink (`demo_6.md:148-152`) as a
@@ -8,28 +9,9 @@ import org.apache.spark.sql.{Dataset, Row}
   * generation — the actual sink logic — is real and unit-tested. Each
   * row becomes an `index` action (idempotent upsert when `_id` is set
   * from the PK), matching the keyed-index semantics of the reference.
+  * Bodies are written, and replies read, with [[graft.JsonUtil]].
   */
 object EsBulk {
-
-  private[sqlgate] def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private[sqlgate] def jsonValue(v: Any): String = v match {
-    case null => "null"
-    case s: String => "\"" + jsonEscape(s) + "\""
-    case b: Boolean => b.toString
-    case n: java.lang.Number => n.toString
-    case ts: java.sql.Timestamp => "\"" + ts.toString + "\""
-    case d: java.sql.Date => "\"" + d.toString + "\""
-    case other => "\"" + jsonEscape(other.toString) + "\""
-  }
 
   /** NDJSON `_bulk` body for one batch: an `index` action line (with
     * `_id` from the PK columns when present → idempotent upsert) followed
@@ -45,12 +27,12 @@ object EsBulk {
           // encodeKey escapes the delimiter and preserves nulls, so
           // composite keys like ("a|b","c") and ("a","b|c") get distinct
           // _ids — same scheme as the keyed upsert store.
-          val id = jsonEscape(
+          val id = JsonUtil.str(
             graft.streaming.StreamOps.encodeKey(pkIdx.map(r.get)))
-          s"""{"index":{"_index":"${jsonEscape(index)}","_id":"$id"}}"""
-        } else s"""{"index":{"_index":"${jsonEscape(index)}"}}"""
+          s"""{"index":{"_index":${JsonUtil.str(index)},"_id":$id}}"""
+        } else s"""{"index":{"_index":${JsonUtil.str(index)}}}"""
       val doc = cols.zipWithIndex.map { case (c, i) =>
-        "\"" + jsonEscape(c) + "\":" + jsonValue(r.get(i))
+        JsonUtil.str(c) + ":" + JsonUtil.value(r.get(i))
       }.mkString("{", ",", "}")
       sb.append(action).append('\n').append(doc).append('\n')
     }
@@ -64,8 +46,9 @@ object EsBulk {
 
   /** Default wire transport: POST an NDJSON chunk to `<host>/_bulk` over
     * the JDK's HttpURLConnection (the ES-7 REST bulk endpoint the
-    * reference's sink targets, `demo_6.md:148-152`). An HTTP error OR a
-    * response with `"errors":true` (any per-item failure) throws — a
+    * reference's sink targets, `demo_6.md:148-152`). An HTTP error, a
+    * reply that is not JSON, OR a reply whose top-level `errors` is
+    * `true` (any per-item failure) throws — a
     * partially-applied bulk must fail the micro-batch so Spark retries
     * it, never silently drop documents. Serializable (captures only the
     * host string); runs on executors. Multiple semicolon-separated hosts:
@@ -77,7 +60,7 @@ object EsBulk {
     require(base.nonEmpty, "elasticsearch sink needs a non-empty 'hosts'")
     body => {
       val res = graft.Http.post(base + "/_bulk", "application/x-ndjson", body)
-      if ("\"errors\"\\s*:\\s*true".r.findFirstIn(res).isDefined)
+      if (JsonUtil.tree(res).path("errors").booleanValue)
         throw new RuntimeException(
           s"es _bulk reported item failures: ${res.take(200)}")
     }

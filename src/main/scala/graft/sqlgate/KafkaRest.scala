@@ -1,6 +1,8 @@
 package graft.sqlgate
 
+import graft.JsonUtil
 import org.apache.spark.sql.{Dataset, Row}
+import scala.jdk.CollectionConverters._
 
 /** `upsert-kafka` keyed changelog sink (`demo_6.md:206-226`: a keyed
   * aggregate materialized to a compacted topic as debezium-json) over a
@@ -13,7 +15,8 @@ import org.apache.spark.sql.{Dataset, Row}
   * "value":…}]}`), and the payload generation — the actual sink logic —
   * is unit-tested and driven over a live socket in KafkaRestSpec. On a
   * cluster with a broker the same records go through the native
-  * producer; the envelope bytes are identical.
+  * producer; the envelope bytes are identical. Bodies are written, and
+  * replies read, with [[graft.JsonUtil]].
   *
   * Each row becomes one record: `key` = the PRIMARY KEY columns as a
   * JSON object (the compaction key — same-key records supersede, which
@@ -25,8 +28,6 @@ import org.apache.spark.sql.{Dataset, Row}
   * idempotent under micro-batch retry, matching the keyed JDBC/ES sinks.
   */
 object KafkaRest {
-  import EsBulk.{jsonEscape, jsonValue}
-
   /** Max records per produce request — bounds request size independent
     * of partition size, like EsBulk.MaxDocsPerRequest.
     */
@@ -34,7 +35,7 @@ object KafkaRest {
 
   private def obj(cols: Seq[String], idx: Seq[Int], r: Row): String =
     cols.zip(idx).map { case (c, i) =>
-      "\"" + jsonEscape(c) + "\":" + jsonValue(r.get(i))
+      JsonUtil.str(c) + ":" + JsonUtil.value(r.get(i))
     }.mkString("{", ",", "}")
 
   /** Delete spellings accepted from an `op` column: debezium's `d`, a
@@ -71,7 +72,7 @@ object KafkaRest {
       val del = rawOp.exists(isDeleteOp)
       // a NULL op is an upsert, mirroring the native-producer encoding
       val op = if (del) "d" else rawOp.getOrElse("u")
-      val value = s"""{"op":"${jsonEscape(op)}",""" +
+      val value = s"""{"op":${JsonUtil.str(op)},""" +
         s""""before":${if (del) row else "null"},""" +
         s""""after":${if (del) "null" else row}}"""
       s"""{"key":$key,"value":$value}"""
@@ -80,8 +81,9 @@ object KafkaRest {
   }
 
   /** Default wire transport: POST a produce body to
-    * `<endpoint>/topics/<topic>`. An HTTP error or a per-record
-    * `error_code` in the response throws, so a partially-produced batch
+    * `<endpoint>/topics/<topic>`. An HTTP error, a reply that is not
+    * JSON, or a numeric `error_code` in the reply (top-level or on any
+    * entry of its `offsets`) throws, so a partially-produced batch
     * fails the micro-batch and Spark retries it (keyed records make the
     * retry idempotent on a compacted topic). Serializable; runs on
     * executors.
@@ -92,7 +94,9 @@ object KafkaRest {
     val url = s"$base/topics/$topic"
     body => {
       val res = graft.Http.post(url, "application/vnd.kafka.json.v2+json", body)
-      if ("\"error_code\"\\s*:\\s*[0-9]".r.findFirstIn(res).isDefined)
+      val reply = JsonUtil.tree(res)
+      if ((reply +: reply.path("offsets").asScala.toSeq)
+          .exists(_.path("error_code").isNumber))
         throw new RuntimeException(
           s"kafka produce reported record failures: ${res.take(200)}")
     }

@@ -856,16 +856,28 @@ class ScriptRunner(spark: SparkSession,
     }
   }
 
-  /** Release runner-held resources (lookup-dim cache + TTL scheduler).
+  /** The snapshot lookup dim registered under `name`, while held. */
+  private[graft] def snapshotDim(name: String)
+      : Option[graft.streaming.TtlCachedDim] = lookupDims.get(name)
+
+  /** Release the snapshot lookup dims: stop their TTL refresher and drop
+    * their cached blocks. Keyed dims' point-query caches are left to
+    * their TTL and LRU bounds.
+    */
+  def releaseSnapshotDims(): Unit = {
+    lookupRefresherOpt.foreach(_.shutdownNow())
+    lookupRefresherOpt = None
+    lookupDims.values.foreach(_.release())
+    lookupDims.clear()
+    ScriptRunner.dimHolders.remove(this)
+    ()
+  }
+
+  /** Release runner-held resources (lookup-dim caches + TTL scheduler).
     * Streaming queries started by [[run]] are unaffected.
     */
   def close(): Unit = {
-    if (lookupDims.nonEmpty) {
-      lookupRefresherOpt.foreach(_.shutdownNow())
-      lookupRefresherOpt = None
-      lookupDims.values.foreach(_.release())
-      lookupDims.clear()
-    }
+    releaseSnapshotDims()
     // keyed point-query caches live in ExecutorLookupCaches (per
     // executor JVM, LRU-bounded, connections per-fetch). Invalidate the
     // tuples THIS runner registered so a new runner against a rebuilt
@@ -880,7 +892,6 @@ class ScriptRunner(spark: SparkSession,
       }
     }
     keyedDims.clear()
-    ScriptRunner.dimHolders.remove(this)
   }
 
   /** print/blackhole/memory/jdbc-upsert tables can't be sources. */

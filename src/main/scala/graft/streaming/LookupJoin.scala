@@ -69,9 +69,11 @@ final class DimSnapshot(spark: SparkSession, loader: SparkSession => DataFrame,
   * semantics, so the cache bound IS a dim bound here; the keyed
   * point-query path for huge dims is [[JdbcKeyedLookup]]).
   */
-final class TtlCachedDim(df: DataFrame, ttlMs: Long, maxRows: Long) {
+final class TtlCachedDim(private[graft] val df: DataFrame, ttlMs: Long,
+    maxRows: Long) {
   @volatile private var loadedAt = System.currentTimeMillis()
   @volatile private var nRefreshes = 0L
+  @volatile private var released = false
 
   df.persist()
   private val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
@@ -91,8 +93,8 @@ final class TtlCachedDim(df: DataFrame, ttlMs: Long, maxRows: Long) {
     * so throwing here would vanish silently.
     */
   def maybeRefresh(): Unit =
-    if (System.currentTimeMillis() - loadedAt >= ttlMs) synchronized {
-      if (System.currentTimeMillis() - loadedAt >= ttlMs) {
+    if (!released && System.currentTimeMillis() - loadedAt >= ttlMs) synchronized {
+      if (!released && System.currentTimeMillis() - loadedAt >= ttlMs) {
         df.unpersist(blocking = false)
         if (df.limit(probe).count() > maxRows)
           refreshError = Some(
@@ -113,8 +115,14 @@ final class TtlCachedDim(df: DataFrame, ttlMs: Long, maxRows: Long) {
   /** Set when the last TTL refresh found the dim over the cache bound. */
   def lastRefreshError: Option[String] = refreshError
 
-  /** Release the cached blocks (runner shutdown). */
-  def release(): Unit = { df.unpersist(blocking = false); () }
+  /** Release the cached blocks for good (runner shutdown): a refresh
+    * already running finishes first, and none re-caches the dim after.
+    */
+  def release(): Unit = synchronized {
+    released = true
+    df.unpersist(blocking = false)
+    ()
+  }
 }
 
 /** Observable counters of a [[JdbcKeyedLookup]] — the spec's proof that

@@ -763,4 +763,46 @@ class JobManagerSpec extends SparkSpec {
         "surviving instance should take leadership and reconcile")
     } finally { schedA.close(); schedB.close() }
   }
+
+  test("stop releases the job's snapshot lookup dim: uncached, and no " +
+    "more TTL refreshes") {
+    import spark.implicits._
+    val url = "jdbc:derby:memory:jmdimrel;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      c.createStatement().execute(
+        "CREATE TABLE rel_dim (id BIGINT PRIMARY KEY, v VARCHAR(16))")
+      c.createStatement().execute("INSERT INTO rel_dim VALUES (1, 'A')")
+    } finally c.close()
+    val dir = srcDir()
+    Seq(1L, 2L).toDF("id").coalesce(1).write.mode("append").parquet(dir)
+    val ttlMs = 300L
+    val m = mgr()
+    val id = m.start("dim_release_job",
+      s"""CREATE TABLE rel_src (id BIGINT) WITH (
+         |  'connector' = 'filesystem', 'path' = '$dir',
+         |  'format' = 'parquet');
+         |CREATE TABLE rel_lk (id BIGINT, v VARCHAR) WITH (
+         |  'connector' = 'jdbc', 'url' = '$url', 'table-name' = 'rel_dim',
+         |  'lookup.cache.ttl' = '$ttlMs ms', 'lookup.cache.max-rows' = '100');
+         |CREATE TABLE rel_snk (id BIGINT, v STRING,
+         |  PRIMARY KEY (id) NOT ENFORCED) WITH ('connector' = 'memory');
+         |INSERT INTO rel_snk SELECT s.id, d.v FROM rel_src s
+         |LEFT JOIN rel_lk FOR SYSTEM_TIME AS OF s.id AS d ON s.id = d.id;
+         |""".stripMargin)
+    val dim = m.runners(id).snapshotDim("rel_lk").getOrElse(
+      fail("the job holds no snapshot dim 'rel_lk'"))
+    def cached = spark.sharedState.cacheManager.lookupCachedData(
+      dim.df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    // the refresher is live while the job runs; a refresh drops and
+    // re-arms the cache, so the dim reads uncached while one is running
+    assert(awaitCond(30000)(dim.refreshCount >= 1 && cached),
+      "no TTL refresh of a cached dim")
+    m.stop(id, withSavepoint = false)
+    val refreshes = dim.refreshCount
+    Thread.sleep(3 * ttlMs + 100)
+    assert(dim.refreshCount == refreshes, "the dim refreshed after stop")
+    assert(!cached, "a stopped job's dim is still cached")
+    assert(!m.runners.contains(id))
+  }
 }

@@ -15,7 +15,7 @@ class KafkaRestSourceSpec extends SparkSpec {
       """[ {"key":{"id":7},"value":{"id":7,"tags":["a","b"],"s":"x\"y"},"offset":0},
         |  {"key":null,"value":"plain A string","offset":1,"partition":3},
         |  {"key":"k2","value":{"nested":{"deep":[1,2,{"z":"}"}]}},"offset":2} ]""".stripMargin
-    val rs = MiniJson.records(body)
+    val rs = KafkaRestSource.records(body)
     assert(rs.map(_.offset) == Seq(0L, 1L, 2L))
     assert(rs(0).key.contains("""{"id":7}"""))
     assert(rs(0).value == """{"id":7,"tags":["a","b"],"s":"x\"y"}""")
@@ -240,12 +240,12 @@ class KafkaRestSourceSpec extends SparkSpec {
         Iterator(org.apache.spark.sql.Row(i.toLong, s)))
       // the produce parser must slice exactly the key/value texts the
       // encoder emitted
-      val Seq((kTxt, vTxt)) = MiniJson.produceRecords(body)
+      val Seq((kTxt, vTxt)) = StubBroker.produceRecords(body)
       assert(kTxt == s"""{"k":$i}""", s"seed $i: key slice $kTxt")
       // the fetch format wraps the same slices; the consume parser's
       // record must carry them verbatim (objects stay raw text)
       val fetch = s"""[{"key":$kTxt,"value":$vTxt,"offset":0}]"""
-      val rec = MiniJson.records(fetch).head
+      val rec = KafkaRestSource.records(fetch).head
       assert(rec.key.contains(kTxt) && rec.value == vTxt,
         s"seed $i: fetch round trip changed the payload for '$s'")
       (i.toLong, s, vTxt)
@@ -262,5 +262,42 @@ class KafkaRestSourceSpec extends SparkSpec {
     cases.foreach { case (i, s, _) =>
       assert(decoded(i) == s, s"seed $i: from_json decode changed '$s'")
     }
+  }
+
+  test("a 'fetch.count' below 1 is refused when the scan is planned, " +
+    "under either 'fail.on.data.loss'") {
+    // a count of 0 never advances a read: with 'fail.on.data.loss' =
+    // 'false' the reader fetched empty pages forever, with 'true' it
+    // failed with a misleading "offsets regressed"
+    val b = new StubBroker("t_fetch_count", 1)
+    def causes(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ causes(x.getCause))
+    def namesOption(t: Throwable) =
+      causes(t).exists(_.contains("'fetch.count' must be a whole number >= 1"))
+    try {
+      b.append(0, "null", """{"n":1}""")
+      for (loss <- Seq("true", "false"); count <- Seq("0", "-2")) {
+        val batch = intercept[Exception] {
+          spark.read.format(fmt).option("rest.endpoint", b.endpoint)
+            .option("topic", "t_fetch_count").option("fetch.count", count)
+            .option("fail.on.data.loss", loss).load().collect()
+        }
+        assert(namesOption(batch), s"batch, loss=$loss count=$count: $batch")
+        val ckpt = java.nio.file.Files.createTempDirectory("krest_fc").toString
+        val q = spark.readStream.format(fmt).option("rest.endpoint", b.endpoint)
+          .option("topic", "t_fetch_count").option("fetch.count", count)
+          .option("fail.on.data.loss", loss).load()
+          .writeStream.foreachBatch {
+            (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                _: Long) => ()
+          }
+          .option("checkpointLocation", ckpt).start()
+        try {
+          val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+            q.awaitTermination(60000))
+          assert(namesOption(e), s"stream, loss=$loss count=$count: $e")
+        } finally q.stop()
+      }
+    } finally b.stop()
   }
 }
