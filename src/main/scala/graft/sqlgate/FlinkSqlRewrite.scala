@@ -149,16 +149,27 @@ object FlinkSqlRewrite {
   def apply(sql: String): String =
     rewriteWindows(GraftTvfRewrite(MatchRecognizeRewrite(sql)))
 
+  // sessions already served by [[register]]; weak keys: stopped
+  // sessions must not stay pinned by this static set
+  private val registered = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
   /** Register, in `spark`, the session table functions the rewritten
     * text calls: one per graft TVF name plus `graft_match_recognize`.
     * Each builder runs its kernel when a statement calling it is
-    * analyzed. Re-registering replaces the previous builders.
+    * analyzed. Once per session: the builders close over `spark`, so a
+    * later call for the same session would only replace them with
+    * equal ones. The check is on the session, not on its registry: a
+    * cloned session's registry already holds its parent's builders,
+    * which close over the parent.
     */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.tableFunctionRegistry
-    (GraftTvfRewrite.functions(spark) :+ (MatchRecognizeRewrite.FunctionName ->
-      MatchRecognizeRewrite.function(spark) _)).foreach { case (name, build) =>
-      registry.createOrReplaceTempFunction(name, build, "scala_udf")
+  def register(spark: SparkSession): Unit = registered.synchronized {
+    if (registered.add(spark)) {
+      val registry = spark.sessionState.tableFunctionRegistry
+      (GraftTvfRewrite.functions(spark) :+ (MatchRecognizeRewrite.FunctionName ->
+        MatchRecognizeRewrite.function(spark) _)).foreach { case (name, build) =>
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
+      }
     }
   }
 

@@ -31,8 +31,10 @@ import scala.collection.mutable
   *   BEGIN STATEMENT SET/END→ no-op (sql-client compat)
   *
   * All INSERTs in one script form one statement set: built first, then
-  * started together (reference: `StatementSet.execute` single job). The
-  * returned queries are the in-process replacement for the JobID scrape
+  * started together (reference: `StatementSet.execute` single job), one
+  * streaming query per INSERT under its own checkpoint; if one fails to
+  * start, the ones already started are stopped. The returned queries
+  * are the in-process replacement for the JobID scrape
   * (`StreamingQuery.id` vs `CommandRpcClinetAdapterImpl.java:148-161`).
   */
 class ScriptRunner(spark: SparkSession,
@@ -43,6 +45,7 @@ class ScriptRunner(spark: SparkSession,
   // `file:` paths, write those checkpoints without forking chmod/readlink
   graft.streaming.LocalCheckpointFs.install(spark)
   // the graft TVFs and MATCH_RECOGNIZE the rewritten statements call
+  // (registered once per session)
   FlinkSqlRewrite.register(spark)
   // every job's tasks on one executor class loader, so a restarted or
   // restored job reuses its compiled classes (see ArtifactIsolation)
@@ -90,20 +93,17 @@ class ScriptRunner(spark: SparkSession,
       Some("spark.sql.shuffle.partitions")
     case "table.exec.source.cdc-events-duplicate" => None // dropDuplicates
     case s if s.startsWith("spark.") => Some(s)
-    // graft.* knobs (statement-set fusing is read from the script confs;
-    // operator knobs like the MATCH_RECOGNIZE step budget are read from
-    // the session conf by the table functions) pass through as-is
+    // graft.* knobs (operator knobs like the MATCH_RECOGNIZE step budget,
+    // read from the session conf by the table functions) pass through
     case s if s.startsWith("graft.") => Some(s)
     case _ => None // unknown knobs accepted+ignored, like Flink's tolerant SET
   }
 
   /** One INSERT of the statement set: sink, the built (possibly
-    * streaming) DataFrame, overwrite flag, and the rewritten SELECT +
-    * column list kept for the fused execution path, which must re-plan
-    * the query against each micro-batch.
+    * streaming) DataFrame and the overwrite flag.
     */
   private final case class Insert(sink: TableSpec, df: DataFrame,
-      overwrite: Boolean, query: String, colList: Option[Seq[String]])
+      overwrite: Boolean)
 
   def run(script: String): RunResult = {
     val stmts = SqlSplitter.parse(script)
@@ -156,9 +156,8 @@ class ScriptRunner(spark: SparkSession,
             .stripSuffix(")").split(",").map(_.trim.replace("`", "")).toSeq)
           registry.get(sinkName) match {
             case Some(sink) =>
-              val (query, df0) = prepare(m.group(4))
-              val df = renameForSink(df0, colList, sink)
-              inserts += Insert(sink, df, overwrite, query, colList)
+              val df = renameForSink(prepare(m.group(4)), colList, sink)
+              inserts += Insert(sink, df, overwrite)
             case None if spark.catalog.tableExists(sinkName) =>
               // catalog (managed/Hive) table sink. Over batch sources (the
               // batch runner, or batch-only sources) this is the
@@ -222,20 +221,15 @@ class ScriptRunner(spark: SparkSession,
     // Per-insert index disambiguates several INSERTs into one sink
     // (memory queryName / checkpoint subdir must be unique per query).
     val seen = mutable.Map[String, Int]()
-    val started = mutable.Buffer[org.apache.spark.sql.streaming.StreamingQuery]()
+    val started = mutable.Buffer[StreamingQuery]()
     try {
-      fusedSource(inserts.toSeq, confs) match {
-        case Some((srcName, plans)) =>
-          started += startFused(srcName, plans)
-        case None =>
-          inserts.foreach { ins =>
-            val n = seen.getOrElse(ins.sink.name, 0)
-            seen(ins.sink.name) = n + 1
-            val tag = if (n == 0) "" else s"_$n"
-            val ckpt = checkpointRoot.map(r => s"$r/${ins.sink.name}$tag")
-            Connectors.write(spark, ins.sink, ins.df, ckpt, trigger, tag,
-              ins.overwrite).foreach(started += _)
-          }
+      inserts.foreach { ins =>
+        val n = seen.getOrElse(ins.sink.name, 0)
+        seen(ins.sink.name) = n + 1
+        val tag = if (n == 0) "" else s"_$n"
+        val ckpt = checkpointRoot.map(r => s"$r/${ins.sink.name}$tag")
+        Connectors.write(spark, ins.sink, ins.df, ckpt, trigger, tag,
+          ins.overwrite).foreach(started += _)
       }
       catalogInserts.zipWithIndex.foreach { case ((tbl, df), i) =>
         val w0 = df.writeStream.queryName(s"catalog_${tbl}_$i")
@@ -258,13 +252,10 @@ class ScriptRunner(spark: SparkSession,
   /** The one query-preparation path: rewrite the query (graft TVFs and
     * MATCH_RECOGNIZE become session table function calls) and
     * [[analyze]] it. Only queries come here, so no statement ever runs
-    * over a keyed dim's unbound placeholder. Returns the text Spark
-    * analyzed and its bound DataFrame.
+    * over a keyed dim's unbound placeholder. Returns the bound DataFrame.
     */
-  private def prepare(query: String): (String, DataFrame) = {
-    val rewritten = FlinkSqlRewrite(query)
-    (rewritten, analyze(parse(rewritten)))
-  }
+  private def prepare(query: String): DataFrame =
+    analyze(parse(FlinkSqlRewrite(query)))
 
   private def parse(text: String): LogicalPlan =
     spark.sessionState.sqlParser.parsePlan(text)
@@ -311,265 +302,6 @@ class ScriptRunner(spark: SparkSession,
       if (declared.nonEmpty && declared.size == df0.columns.length)
         df0.toDF(declared: _*)
       else df0
-  }
-
-  /** Decide whether this statement set can run FUSED — one streaming
-    * read fanned out to every sink inside a single `foreachBatch`, the
-    * closer analog of the reference's single-DAG `StatementSet.execute`
-    * (`JobApplication.java:78-88`) than N independent queries each
-    * re-reading the source. Opt-in via
-    * `SET 'graft.exec.statement-set.fuse' = 'true'`, and only for the
-    * router shape where per-micro-batch re-planning is semantics-
-    * preserving: ≥2 streaming appends (no OVERWRITE), all STATELESS (an
-    * aggregate would lose cross-batch state under re-planning), reading
-    * exactly one common source table, into sinks whose batch write is an
-    * append/upsert (memory's batch path replaces per batch — excluded).
-    * Anything else falls back to the independent-queries path.
-    */
-  /** Merge recipe for an algebraic aggregate INSERT running fused:
-    * `keyCols` are the GROUP BY output columns (the sink's logical key);
-    * `mergeFns` maps every non-key output column to how two partial
-    * values combine (sum/count/min/max).
-    */
-  private final case class AggFusion(keyCols: Seq[String],
-      mergeFns: Seq[(String, String)])
-
-  /** Row-local plan-node whitelist shared by the stateless gate and the
-    * aggregate child check — see [[fusedSource]] for why a whitelist.
-    */
-  private def rowLocalNode(
-      n: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    n match {
-      case _: LeafNode | _: Project | _: Filter | _: Generate | _: Expand |
-           _: SubqueryAlias | _: View | _: Union | _: Repartition |
-           _: RepartitionByExpression | _: EventTimeWatermark => true
-      case _ => false
-    }
-  }
-
-  /** Classify an INSERT as a fusable algebraic aggregate: a single
-    * `Aggregate` over a row-local child whose aggregate functions are
-    * all self-mergeable from their own output — SUM (merge: +), COUNT
-    * (merge: +), MIN (merge: least), MAX (merge: greatest); no DISTINCT,
-    * no FILTER clause. AVG/stddev/collect/HAVING are NOT mergeable from
-    * their output alone and push the set to the unfused path. The sink
-    * must be keyed (the fused aggregate emits update-mode upserts,
-    * mirroring the unfused streaming-agg path).
-    */
-  private def classifyAgg(ins: Insert): Option[AggFusion] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-    import org.apache.spark.sql.catalyst.expressions.aggregate._
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project, SubqueryAlias}
-    if (ins.sink.primaryKey.isEmpty) return None
-    def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
-      case SubqueryAlias(_, c) => strip(c)
-      case other => other
-    }
-    // role of each Aggregate output, keyed by exprId ("key" | merge fn)
-    def roles(agg: Aggregate): Option[
-        Map[org.apache.spark.sql.catalyst.expressions.ExprId, String]] = {
-      if (agg.child.collectFirst {
-        case n if !rowLocalNode(n) => n
-      }.nonEmpty) return None
-      val out = agg.aggregateExpressions.map {
-        case a: Attribute
-            if agg.groupingExpressions.exists(_.semanticEquals(a)) =>
-          Some(a.exprId -> "key")
-        case al @ Alias(c, _)
-            if agg.groupingExpressions.exists(_.semanticEquals(c)) =>
-          Some(al.exprId -> "key")
-        case al @ Alias(AggregateExpression(fn, _, false, None, _), _) =>
-          fn match {
-            case _: Sum   => Some(al.exprId -> "sum")
-            case _: Count => Some(al.exprId -> "count")
-            case _: Min   => Some(al.exprId -> "min")
-            case _: Max   => Some(al.exprId -> "max")
-            case _ => None
-          }
-        case _ => None
-      }
-      if (out.exists(_.isEmpty)) None else Some(out.flatten.toMap)
-    }
-    // top plan is the Aggregate itself, or the pure rename Project that
-    // renameForSink lays over it — resolve final names through either
-    val classified = strip(ins.df.queryExecution.analyzed) match {
-      case agg: Aggregate =>
-        roles(agg).map(r => agg.aggregateExpressions.map(ne =>
-          ne.name -> r(ne.exprId)))
-      case Project(projList, agg: Aggregate) =>
-        roles(agg).flatMap { r =>
-          val named = projList.map {
-            case a: Attribute => r.get(a.exprId).map(a.name -> _)
-            case al @ Alias(a: Attribute, _) => r.get(a.exprId).map(al.name -> _)
-            case _ => None
-          }
-          if (named.exists(_.isEmpty)) None else Some(named.flatten)
-        }
-      case _ => None
-    }
-    classified.flatMap { cols =>
-      val keyCols = cols.collect { case (n, "key") => n }
-      val merges = cols.filterNot(_._2 == "key")
-      // the sink key must be exactly the grouping columns, or merged
-      // rows and the unfused streaming agg would key differently
-      if (keyCols.nonEmpty &&
-        ins.sink.primaryKey.map(_.toLowerCase(java.util.Locale.ROOT))
-          .toSet == keyCols.map(_.toLowerCase(java.util.Locale.ROOT)).toSet)
-        Some(AggFusion(keyCols.toSeq, merges.toSeq))
-      else None
-    }
-  }
-
-  private def fusedSource(ins: Seq[Insert],
-      confs: collection.Map[String, String])
-      : Option[(String, Seq[(Insert, Option[AggFusion])])] = {
-    if (confs.getOrElse("graft.exec.statement-set.fuse", "false") != "true")
-      return None
-    if (ins.size < 2 || ins.exists(i => !i.df.isStreaming || i.overwrite))
-      return None
-    val fusableSink = (s: TableSpec) => s.connector != "memory"
-    if (!ins.forall(i => fusableSink(i.sink))) return None
-    // WHITELIST of row-local plan nodes: fusion re-plans the SELECT per
-    // micro-batch, which is only semantics-preserving when every node
-    // processes rows independently of batch boundaries. A blocklist kept
-    // growing holes (Distinct, then LIMIT/ORDER BY/OFFSET — a fused
-    // `LIMIT 5` would emit 5 rows PER BATCH instead of the stateful
-    // StreamingGlobalLimit's 5 total), so anything not provably
-    // row-local falls back to independent queries. Algebraic aggregates
-    // are the one stateful exception: [[classifyAgg]] proves the state
-    // is reconstructible by merging per-batch partials, and
-    // [[startFused]] keeps that state durably under the shared
-    // checkpoint — which therefore must exist for aggregate fusion.
-    val plans = ins.map { i =>
-      val stateless = i.df.queryExecution.analyzed.collectFirst {
-        case n if !rowLocalNode(n) => n
-      }.isEmpty
-      if (stateless) Some(i -> None)
-      else if (checkpointRoot.isDefined) classifyAgg(i).map(f => i -> Some(f))
-      else None
-    }
-    if (plans.exists(_.isEmpty)) return None
-    val srcSets = ins.map(i => referencedTables(parse(i.query))
-      .filter(sourcesInstantiated.map(_.toLowerCase(java.util.Locale.ROOT))))
-    srcSets.flatten.distinct match {
-      case Seq(one) if srcSets.forall(_ == Set(one)) =>
-        Some(one -> plans.map(_.get))
-      case _ => None
-    }
-  }
-
-  /** Start the fused statement set: ONE streaming query over the shared
-    * source; each micro-batch is pinned (persist) and every INSERT's
-    * SELECT re-planned against it as a temp view, writing through the
-    * sinks' batch paths (append/upsert — idempotent under micro-batch
-    * retry for keyed sinks, exactly like the unfused foreachBatch
-    * sinks). One checkpoint governs the whole set, so the sinks advance
-    * in lockstep — the reference's single-job semantics.
-    *
-    * Algebraic-aggregate INSERTs ([[classifyAgg]]) run stateFULLY
-    * inside the same fused batch loop: the re-planned SELECT over the
-    * pinned batch yields a batch-local partial aggregate, which is
-    * merged (sum/+, count/+, min/least, max/greatest) into keyed state
-    * persisted as batch-id-addressed parquet under the shared
-    * checkpoint; only the keys the batch touched are upserted to the
-    * sink (update-mode parity with the unfused streaming agg). Resume
-    * is exactly-once by construction: state for batch N is derived
-    * solely from committed state N-1 plus the source-WAL-replayed batch
-    * N, state dirs older than N-1 are pruned only after N is written,
-    * and a replayed batch overwrites its own partially-written state
-    * before the idempotent keyed upsert re-emits the same rows.
-    */
-  private def startFused(srcName: String,
-      plans: Seq[(Insert, Option[AggFusion])]): StreamingQuery = {
-    val src = spark.table(srcName)
-    val ckpt = checkpointRoot.map(r => s"$r/__stmtset")
-    val stateRoot = checkpointRoot.map(r => s"$r/__stmtset_state")
-    val writer = src.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val s2 = batch.sparkSession
-        batch.persist()
-        try {
-          batch.createOrReplaceTempView(srcName)
-          plans.zipWithIndex.foreach {
-            case ((i, None), _) =>
-              val df = renameForSink(s2.sql(i.query), i.colList, i.sink)
-              Connectors.write(s2, i.sink, df, None, trigger)
-              ()
-            case ((i, Some(fusion)), idx) =>
-              val partial = renameForSink(s2.sql(i.query), i.colList, i.sink)
-              val dir = s"${stateRoot.get}/ins_$idx"
-              val merged = mergeAggState(s2, dir, batchId, partial, fusion)
-              Connectors.write(s2, i.sink, merged, None, trigger)
-              ()
-          }
-        } finally { batch.unpersist(); () }
-    }
-    ckpt.fold(writer)(d => writer.option("checkpointLocation", d))
-      .queryName(s"stmtset_$srcName")
-      .trigger(trigger)
-      .start()
-  }
-
-  /** One incremental-merge step for a fused aggregate: combine the
-    * previous committed state (the newest `b=<id>` dir with id strictly
-    * below this batch — a half-written dir from a crashed attempt of
-    * THIS batch id is thereby never read, only overwritten) with the
-    * batch partial via a null-safe full-outer join on the group keys,
-    * write the result as this batch's state, prune state two batches
-    * back, and return the merged rows for keys present in the partial —
-    * the update set the sink must see.
-    */
-  private def mergeAggState(s2: org.apache.spark.sql.SparkSession,
-      dir: String, batchId: Long, partial: DataFrame,
-      fusion: AggFusion): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val hconf = s2.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
-    val committed: Seq[Long] =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("b=")).map(_.stripPrefix("b=").toLong)
-    val prev = committed.filter(_ < batchId).sorted.lastOption
-      .map(b => s2.read.parquet(s"$dir/b=$b"))
-    val outCols = partial.columns.toSeq
-    val keys = fusion.keyCols
-    val merged = prev match {
-      case None => partial
-      case Some(old) =>
-        val joined = old.as("o").join(partial.as("n"),
-          keys.map(k => col(s"o.$k") <=> col(s"n.$k")).reduce(_ && _),
-          "full_outer")
-        val mergeOf = fusion.mergeFns.toMap
-        joined.select(outCols.map { c =>
-          val (o, n) = (col(s"o.$c"), col(s"n.$c"))
-          (if (keys.exists(_.equalsIgnoreCase(c))) coalesce(o, n)
-          else mergeOf(c) match {
-            // SUM: null means "no non-null input yet" on that side
-            case "sum" => coalesce(o + n, o, n)
-            // COUNT is never null per key; null here = key absent
-            case "count" => coalesce(o, lit(0L)) + coalesce(n, lit(0L))
-            // least/greatest skip nulls — exactly MIN/MAX merge
-            case "min" => least(o, n)
-            case "max" => greatest(o, n)
-          }).as(c)
-        }: _*)
-    }
-    merged.persist()
-    merged.write.mode("overwrite").parquet(s"$dir/b=$batchId")
-    committed.filter(_ < batchId - 1)
-      .foreach(b => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/b=$b"), true))
-    // re-read the committed state (decouples from the persist lifetime);
-    // emit only the keys this batch touched
-    merged.unpersist()
-    val state = s2.read.parquet(s"$dir/b=$batchId")
-    state.as("m").join(
-      partial.select(keys.map(col): _*).distinct().as("p"),
-      keys.map(k => col(s"m.$k") <=> col(s"p.$k")).reduce(_ && _),
-      "left_semi")
   }
 
   /** Exact table references of a parsed (not analyzed) query: the

@@ -1,60 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
-
-/** Processing-time temporal lookup join — the reference's
-  * `FOR SYSTEM_TIME AS OF a.proctime` against a JDBC dim table with
-  * `lookup.cache.max-rows` / cache TTL (`demo_3.md:66-109`). Spark
-  * restatement per SURVEY §2.3: each micro-batch joins against a
-  * periodically refreshed broadcast snapshot of the dimension — the
-  * micro-batch boundary IS the processing-time semantics (rows in one
-  * batch see one consistent dim version, refreshed per TTL).
-  *
-  * Scale notes: the snapshot is broadcast, so the stream side never
-  * shuffles; `maxRows` guards against broadcasting an unexpectedly large
-  * dim (fail fast rather than OOM executors) — the analog of the
-  * reference's bounded lookup cache.
-  */
-final class DimSnapshot(spark: SparkSession, loader: SparkSession => DataFrame,
-    ttlMs: Long, maxRows: Long = 1000000L) {
-
-  @volatile private var cache: Option[(DataFrame, Long)] = None
-
-  /** Current dim version: reloads (and re-caches) when the TTL lapsed. */
-  def current(): DataFrame = synchronized {
-    val now = System.currentTimeMillis()
-    cache match {
-      case Some((df, at)) if now - at < ttlMs => df
-      case _ =>
-        // Break lineage to the source: Spark recaches path-based caches
-        // when the path is overwritten, which would silently roll the dim
-        // forward mid-TTL. The dim is broadcast-bounded anyway, so a
-        // driver-side materialization IS the snapshot (and what the
-        // broadcast would ship regardless).
-        val fresh = loader(spark)
-        val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-        val rows = fresh.limit(probe).collect()
-        if (rows.length > maxRows)
-          throw new IllegalArgumentException(
-            s"dim snapshot exceeds lookup cache bound $maxRows rows")
-        val snapshot = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), fresh.schema)
-        cache = Some((snapshot, now))
-        snapshot
-    }
-  }
-
-  def invalidate(): Unit = synchronized { cache = None }
-}
 
 /** TTL-cached lookup dim for the SQL-gate path: the reference's
   * `'lookup.cache.ttl'` / `'lookup.cache.max-rows'` options on a JDBC
   * dim table (`/root/reference/docs/sql_demo/demo_3.md:66-78`), applied
-  * at the Spark-cache layer so they work in EVERY execution shape the
-  * gate has — batch statements, unfused streaming queries (whose plan is
-  * fixed at start), and the fused per-batch re-planning path.
+  * at the Spark-cache layer so they work in both execution shapes the
+  * gate has — batch statements and streaming queries (whose plan is
+  * fixed at start).
   *
   * Mechanism: the dim DataFrame is `persist()`ed, so micro-batches and
   * repeated statements read the cached snapshot instead of re-scanning
@@ -135,8 +89,7 @@ final case class LookupStats(probedKeys: Long, fetchedKeys: Long,
   * LRU + TTL cache — the reference's lookup-join contract
   * (`/root/reference/docs/sql_demo/demo_3.md:66-78`:
   * `lookup.cache.max-rows`, `lookup.cache.ttl`, `lookup.max-retries`),
-  * replacing [[DimSnapshot]]'s whole-table materialization for dims too
-  * large to snapshot (a 10⁹-row dim dies in `DimSnapshot`; here per
+  * serving dims too large for [[TtlCachedDim]]'s whole-table cache (per
   * micro-batch cost is O(distinct probe keys), independent of dim size).
   *
   * Per batch of probe keys: cache hits (within TTL) are served locally;
@@ -149,11 +102,11 @@ final case class LookupStats(probedKeys: Long, fetchedKeys: Long,
   * `max-rows` unit. Fetches retry `maxRetries` times with a fresh
   * connection, the `lookup.max-retries` behavior.
   *
-  * Scale: the cache lives on the calling JVM. Driven from `foreachBatch`
-  * (see [[LookupJoin.enrichKeyed]]) that is the driver, bounded by
-  * `maxKeysPerBatch` (fail fast, not OOM). On a 1000-executor cluster
-  * the same class runs inside `mapPartitions` for per-executor caches —
-  * the construction is identical; only the call site moves.
+  * Scale: the cache lives on the calling JVM. The gate's call sites
+  * ([[LookupJoin.enrichKeyedPartitions]], [[LookupJoin.dimSlice]]) run
+  * it inside `mapPartitions`, one shared instance per executor JVM
+  * ([[ExecutorLookupCaches]]), so probe keys never pass through the
+  * driver.
   */
 final class JdbcKeyedLookup(
     url: String,
@@ -571,73 +524,6 @@ object LookupJoin {
       }(org.apache.spark.sql.Encoders.row(dimSchema))
   }
 
-  /** foreachBatch wrapper: join each micro-batch against the snapshot's
-    * current version (broadcast), then hand the enriched batch to the
-    * sink function. Usage:
-    *   stream.writeStream.foreachBatch(
-    *     LookupJoin.enrich(snapshot, Seq("k"), "left")(batch => ...)).start()
-    */
-  def enrich(snapshot: DimSnapshot, usingCols: Seq[String], how: String)(
-      sink: DataFrame => Unit): (Dataset[Row], Long) => Unit =
-    (batch: Dataset[Row], _: Long) => {
-      val dim = snapshot.current()
-      sink(batch.join(broadcast(dim), usingCols, how))
-    }
-
-  /** Keyed-lookup variant of [[enrich]] for dims too large to snapshot:
-    * per micro-batch, the batch's DISTINCT join keys are collected
-    * (bounded by `maxKeysPerBatch` — fail fast, never OOM the driver),
-    * resolved through the [[JdbcKeyedLookup]] cache (only missing keys
-    * hit the database), and the resulting key-covering dim slice is
-    * broadcast-joined back onto the batch. The stream side never
-    * shuffles; the dim side's per-batch cost is O(cache misses), not
-    * O(|dim|) — the property that lets demo_3's shape survive a 10⁹-row
-    * dimension.
-    */
-  def enrichKeyed(lk: JdbcKeyedLookup, streamKey: String, dimKey: String,
-      dimSchema: StructType, how: String,
-      maxKeysPerBatch: Long = 5000000L)(
-      sink: DataFrame => Unit): (Dataset[Row], Long) => Unit = {
-    // only inner/left have keyed-slice semantics: the dim frame holds
-    // just the probed keys' rows, so right/full joins could never emit
-    // unmatched dim rows and would silently degrade — reject them
-    require(how == "inner" || how == "left" || how == "left_outer",
-      s"enrichKeyed supports inner/left joins, got '$how' (the dim " +
-        "slice only covers probed keys; unmatched dim rows cannot exist)")
-    // the lookup's own schema is the authority — Rows come back in ITS
-    // field order, and a divergent caller schema would relabel values
-    // under the wrong column names with no error
-    require(dimSchema == lk.schema,
-      s"enrichKeyed: dimSchema ${dimSchema.simpleString} must equal the " +
-        s"lookup's schema ${lk.schema.simpleString}")
-    require(dimKey == lk.keyCol,
-      s"enrichKeyed: dimKey '$dimKey' must be the lookup's key column " +
-        s"'${lk.keyCol}'")
-    val dimKeyType = lk.schema(lk.keyCol).dataType
-    (batch: Dataset[Row], _: Long) => {
-      val spark = batch.sparkSession
-      val probe = math.min(maxKeysPerBatch + 1, Int.MaxValue.toLong).toInt
-      // cast probe keys to the DIM key's type before collecting: an
-      // Integer probe key never equals the JDBC-read Long by runtime
-      // equality, so an uncast mismatch would miss (and negative-cache)
-      // every key and silently empty the join
-      val keys = batch
-        .select(batch(streamKey).cast(dimKeyType).as("__k"))
-        .where("__k IS NOT NULL")
-        .distinct().limit(probe).collect().map(_.get(0)).toSeq
-      if (keys.length > maxKeysPerBatch)
-        throw new IllegalArgumentException(
-          s"micro-batch exceeds $maxKeysPerBatch distinct lookup keys; " +
-            "raise maxKeysPerBatch or run the lookup per-partition")
-      val dimRows = lk.lookup(keys).values.flatten.toSeq
-      val dim = spark.createDataFrame(
-        java.util.Arrays.asList(dimRows: _*), dimSchema)
-      val joined = batch.join(broadcast(dim),
-        batch(streamKey).cast(dimKeyType) === dim(dimKey), how)
-      sink(if (streamKey == dimKey) joined.drop(dim(dimKey)) else joined)
-    }
-  }
-
   /** The PER-EXECUTOR keyed-lookup call site — the cluster shape
     * [[JdbcKeyedLookup]]'s scale note promises: the lookup runs inside
     * `mapPartitions`, each executor JVM holding its own bounded
@@ -646,10 +532,10 @@ object LookupJoin {
     * O(that executor's cache misses). Rows are processed in
     * `chunkKeys`-sized slices, one batched `IN (…)` resolve per slice.
     *
-    * Join semantics match [[enrichKeyed]]: 'inner' drops unmatched
-    * stream rows, 'left' null-extends them; a dim key colliding with
-    * the stream key name is emitted once (stream side wins). Usable on
-    * a batch DataFrame directly or per micro-batch in `foreachBatch`.
+    * Join semantics: 'inner' drops unmatched stream rows, 'left'
+    * null-extends them; a dim key colliding with the stream key name is
+    * emitted once (stream side wins). Usable on a batch DataFrame
+    * directly or per micro-batch in `foreachBatch`.
     */
   def enrichKeyedPartitions(
       url: String, connProps: Map[String, String], table: String,

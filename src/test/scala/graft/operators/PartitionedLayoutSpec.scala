@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * touch only the partitions their filter names. The spec pins BOTH
   * halves: the writer produces one directory per key, and the reader's
   * scan carries the predicate as a PartitionFilter (directory pruning)
-  * rather than a data filter over every file.
+  * rather than a data filter over every file. Bucketed tables pin the
+  * co-located join: no shuffle on either side.
   */
 class PartitionedLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -50,5 +51,23 @@ class PartitionedLayoutSpec extends SparkSpec {
     val p = rd.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters"), p)
     assert(p.contains("PushedFilters: [IsNotNull(event_type), EqualTo(event_type,purchase)]"), p)
+  }
+
+  test("bucketed tables join without a shuffle (co-located SMJ)") {
+    spark.sql("DROP TABLE IF EXISTS bko_a")
+    spark.sql("DROP TABLE IF EXISTS bko_b")
+    spark.range(1000).select($"id".as("k"), ($"id" * 2).as("va"))
+      .write.bucketBy(8, "k").sortBy("k").saveAsTable("bko_a")
+    spark.range(500).select($"id".as("k"), ($"id" * 3).as("vb"))
+      .write.bucketBy(8, "k").sortBy("k").saveAsTable("bko_b")
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = spark.table("bko_a").join(spark.table("bko_b"), "k")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"bucketed join must not shuffle:\n$plan")
+      assert(joined.count() == 500)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 }

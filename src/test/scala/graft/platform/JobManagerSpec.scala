@@ -149,18 +149,17 @@ class JobManagerSpec extends SparkSpec {
       s"restore diverged: got=${readOut("mrk_out")} expected=$expected")
   }
 
-  test("platform stop-with-savepoint → restore carries a FUSED " +
-    "statement set's AGGREGATE state (one query, three sinks, ONE " +
-    "savepoint; deleted source files make lost state unfakeable)") {
+  test("platform stop-with-savepoint → restore carries a statement " +
+    "set's AGGREGATE state (three queries, three sinks, ONE savepoint; " +
+    "deleted source files make lost state unfakeable)") {
     import spark.implicits._
-    // FusedFailoverSpec proves exactly-once resume of the fused set
-    // from its shared checkpoint; this composes the PLATFORM verb on a
-    // FULLY-fused multi-INSERT job: the two stateless inserts AND the
-    // algebraic aggregate fuse into ONE query (classifyAgg keeps the
-    // aggregate's keyed state batch-id-addressed under the shared
-    // checkpoint). stop-with-savepoint must capture source offsets AND
-    // the half-advanced aggregate state in one savepoint copy. The
-    // discriminator: phase-1 source files are DELETED after the stop,
+    // StatementSetFailoverSpec proves exactly-once resume of a statement
+    // set from its checkpoints; this composes the PLATFORM verb on a
+    // multi-INSERT job: two stateless inserts and an aggregate, one
+    // query each, the aggregate's keyed state in Spark's state store
+    // under its own checkpoint. stop-with-savepoint must capture every
+    // query's source offsets AND the aggregate state in one savepoint
+    // copy. The discriminator: phase-1 source files are DELETED after the stop,
     // so a restore that lost the aggregate state converges to the
     // wrong sums (2, phase-2 alone) while a correct restore reaches
     // the uninterrupted run's 3 — re-reading from scratch cannot fake
@@ -174,8 +173,7 @@ class JobManagerSpec extends SparkSpec {
     val outA = Files.createTempDirectory("jm_fa").toString
     val outB = Files.createTempDirectory("jm_fb").toString
     val setScript =
-      s"""SET 'graft.exec.statement-set.fuse' = 'true';
-         |CREATE TABLE fsrc (k INT, v INT) WITH (
+      s"""CREATE TABLE fsrc (k INT, v INT) WITH (
          |  'connector' = 'filesystem', 'path' = '$src',
          |  'format' = 'parquet');
          |CREATE TABLE pass_a (k INT, v INT) WITH (
@@ -210,24 +208,22 @@ class JobManagerSpec extends SparkSpec {
     val m = mgr()
     (0 to 3).map(k => (k, 1)).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(src)
-    val id1 = m.start("fused_agg_job", setScript)
-    // the fusion contract: ALL THREE inserts (incl. the algebraic
-    // aggregate) run as ONE fused query under the shared checkpoint
-    assert(m.info(id1).queries.size == 1,
-      s"statement set should run FULLY fused (aggregate included), " +
+    val id1 = m.start("set_agg_job", setScript)
+    assert(m.info(id1).queries.size == 3,
+      s"statement set should run one query per INSERT, " +
         s"got ${m.info(id1).queries.size} queries")
     m.info(id1).queries.foreach(_.awaitTermination(120000))
     assert(sums() == Map(0 -> 1L, 1 -> 1L, 2 -> 1L, 3 -> 1L))
 
-    // stop-with-savepoint: ONE savepoint covering both queries —
-    // offsets for the fused pair, state-store files for the aggregate
+    // stop-with-savepoint: ONE savepoint covering all three queries —
+    // offsets for each, state-store files for the aggregate
     val sp = m.stop(id1)
     assert(sp.isDefined, "stop must produce a savepoint")
     import scala.jdk.CollectionConverters._
     val spFiles = Files.walk(java.nio.file.Paths.get(sp.get))
       .iterator().asScala.filter(Files.isRegularFile(_)).toVector
-    assert(spFiles.exists(_.toString.contains("__stmtset_state")),
-      s"savepoint carries no fused-aggregate state: ${sp.get}")
+    assert(spFiles.exists(_.toString.contains("/agg_snk/state/")),
+      s"savepoint carries no aggregate state: ${sp.get}")
 
     // delete the committed phase-1 files: only carried state can now
     // produce the uninterrupted totals
@@ -242,7 +238,7 @@ class JobManagerSpec extends SparkSpec {
     // aggregate state carried: 1 (restored) + 2 (phase 2) = 3 per key
     assert(sums() == Map(0 -> 3L, 1 -> 3L, 2 -> 3L, 3 -> 3L),
       s"aggregate state lost across the platform savepoint: ${sums()}")
-    // fused siblings exactly-once: each phase's rows once, no replay
+    // pass-through siblings exactly-once: each phase's rows once, no replay
     assert(passRows(outA) == Seq((0, 1), (0, 2), (2, 1), (2, 2)),
       s"pass_a diverged: ${passRows(outA)}")
     assert(passRows(outB) == Seq((1, 1), (1, 2), (3, 1), (3, 2)),

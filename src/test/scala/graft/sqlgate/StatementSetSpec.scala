@@ -3,19 +3,17 @@ package graft.sqlgate
 import graft.SparkSpec
 import java.nio.file.Files
 
-/** Fused statement set: one streaming read fanned to all sinks in a
-  * single foreachBatch (the reference's single-DAG StatementSet
-  * semantics), with exactly-once resumption through the one shared
-  * checkpoint, and a conservative fallback to independent queries for
-  * stateful shapes.
+/** Statement set: every INSERT of a script starts as its own streaming
+  * query under its own checkpoint (`<root>/<sink>`), so each resumes
+  * exactly-once, keeps Spark's stateful semantics (a global LIMIT, an
+  * aggregate's state across restarts) and surfaces Spark's own
+  * unsupported-operation errors.
   */
-class FusedSetSpec extends SparkSpec {
+class StatementSetSpec extends SparkSpec {
   import spark.implicits._
 
-  private def script(src: String, outA: String, outB: String,
-      fuse: Boolean) =
-    s"""${if (fuse) "SET 'graft.exec.statement-set.fuse' = 'true';" else ""}
-       |CREATE TABLE src (id BIGINT) WITH (
+  private def script(src: String, outA: String, outB: String) =
+    s"""CREATE TABLE src (id BIGINT) WITH (
        |  'connector' = 'filesystem', 'path' = '$src',
        |  'format' = 'parquet');
        |CREATE TABLE snk_a (id BIGINT) WITH (
@@ -31,7 +29,8 @@ class FusedSetSpec extends SparkSpec {
   private def ids(dir: String): Seq[Long] =
     spark.read.parquet(dir).as[Long].collect().sorted.toSeq
 
-  test("fused: one query, two sinks, exactly-once across a restart") {
+  test("two INSERTs run as two queries; each resumes exactly-once " +
+    "across a restart") {
     val src = Files.createTempDirectory("fs_src").toString
     val outA = Files.createTempDirectory("fs_a").toString
     val outB = Files.createTempDirectory("fs_b").toString
@@ -39,45 +38,50 @@ class FusedSetSpec extends SparkSpec {
     spark.range(0, 6).toDF("id").coalesce(1).write.mode("append").parquet(src)
 
     val r1 = new ScriptRunner(spark, Some(ckpt))
-      .run(script(src, outA, outB, fuse = true))
-    // the WHOLE set is one streaming query — one source read per batch
-    assert(r1.queries.size == 1)
+      .run(script(src, outA, outB))
+    assert(r1.queries.size == 2)
     r1.queries.foreach(_.processAllAvailable())
     r1.queries.foreach(_.stop())
+    assert(Set("snk_a", "snk_b").forall(d =>
+      Files.isDirectory(java.nio.file.Paths.get(ckpt, d, "commits"))),
+      "each query checkpoints under <root>/<sink>")
     assert(ids(outA) == Seq(0L, 2L, 4L))
     assert(ids(outB) == Seq(1L, 3L, 5L))
 
-    // resume from the shared checkpoint: only the new file is processed
+    // resume from each query's checkpoint: only the new file is processed
     spark.range(6, 10).toDF("id").coalesce(1).write.mode("append").parquet(src)
     val r2 = new ScriptRunner(spark, Some(ckpt))
-      .run(script(src, outA, outB, fuse = true))
+      .run(script(src, outA, outB))
+    assert(r2.queries.size == 2)
     r2.queries.foreach(_.processAllAvailable())
     r2.queries.foreach(_.stop())
     assert(ids(outA) == Seq(0L, 2L, 4L, 6L, 8L))
     assert(ids(outB) == Seq(1L, 3L, 5L, 7L, 9L))
   }
 
-  test("without the flag the same script runs as independent queries") {
+  test("a script still setting the old fuse key runs as two queries") {
     val src = Files.createTempDirectory("fs_src2").toString
+    val outA = Files.createTempDirectory("fs_a2").toString
+    val outB = Files.createTempDirectory("fs_b2").toString
     spark.range(0, 4).toDF("id").coalesce(1).write.mode("append").parquet(src)
+    // graft.* keys pass through to the session conf; nothing reads this one
     val r = new ScriptRunner(spark,
       Some(Files.createTempDirectory("fs_ck2").toString))
-      .run(script(src, Files.createTempDirectory("fs_a2").toString,
-        Files.createTempDirectory("fs_b2").toString, fuse = false))
+      .run("SET 'graft.exec.statement-set.fuse' = 'true';\n" +
+        script(src, outA, outB))
     assert(r.queries.size == 2)
     r.queries.foreach(_.processAllAvailable())
     r.queries.foreach(_.stop())
+    assert(ids(outA) == Seq(0L, 2L))
+    assert(ids(outB) == Seq(1L, 3L))
   }
 
-  test("stateful inserts fall back to independent queries under the flag") {
+  test("a stateless and an aggregate INSERT start as two queries") {
     val src = Files.createTempDirectory("fs_src3").toString
     val out = Files.createTempDirectory("fs_o3").toString
     spark.range(0, 4).toDF("id").coalesce(1).write.mode("append").parquet(src)
-    // an aggregate would lose cross-batch state under per-batch
-    // re-planning — the fusion gate must refuse and start N queries
     val s =
-      s"""SET 'graft.exec.statement-set.fuse' = 'true';
-         |CREATE TABLE src (id BIGINT) WITH (
+      s"""CREATE TABLE src (id BIGINT) WITH (
          |  'connector' = 'filesystem', 'path' = '$src',
          |  'format' = 'parquet');
          |CREATE TABLE snk_c (id BIGINT) WITH (
@@ -95,15 +99,11 @@ class FusedSetSpec extends SparkSpec {
     r.queries.foreach(_.stop())
   }
 
-  test("DISTINCT (surface form of stateful agg) also refuses fusion") {
+  test("streaming DISTINCT fails with Spark's AnalysisException") {
     val src = Files.createTempDirectory("fs_src4").toString
     spark.range(0, 4).toDF("id").coalesce(1).write.mode("append").parquet(src)
-    // Distinct only lowers to Aggregate in the optimizer; the gate must
-    // still see it as stateful or fusion would silently swap Spark's
-    // unsupported-operation failure for per-micro-batch distinct.
     val s =
-      s"""SET 'graft.exec.statement-set.fuse' = 'true';
-         |CREATE TABLE src (id BIGINT) WITH (
+      s"""CREATE TABLE src (id BIGINT) WITH (
          |  'connector' = 'filesystem', 'path' = '$src',
          |  'format' = 'parquet');
          |CREATE TABLE snk_d (id BIGINT) WITH (
@@ -117,10 +117,9 @@ class FusedSetSpec extends SparkSpec {
          |INSERT INTO snk_d SELECT id FROM src;
          |INSERT INTO snk_e SELECT DISTINCT id FROM src;
          |""".stripMargin
-    // The unfused path surfaces Spark's real unsupported-operation error
-    // (streaming aggregation in append mode without watermark) at query
-    // start. A wrong fusion would instead start ONE query and "succeed"
-    // with per-micro-batch distinct — so success here is the failure.
+    // Spark's unsupported-operation error (streaming aggregation in
+    // append mode without watermark) surfaces at query start; a query
+    // that "succeeds" would be a per-micro-batch distinct.
     val outcome: Either[Throwable, Int] =
       try {
         val r = new ScriptRunner(spark,
@@ -130,22 +129,18 @@ class FusedSetSpec extends SparkSpec {
         Right(r.queries.size)
       } catch { case e: org.apache.spark.sql.AnalysisException => Left(e) }
     assert(outcome.isLeft,
-      s"streaming DISTINCT fused into $outcome instead of failing")
+      s"streaming DISTINCT ran as $outcome queries instead of failing")
   }
 
-  test("set-op surface forms (EXCEPT / INTERSECT) also refuse fusion") {
-    // Except/Intersect are stateful in streaming for the same reason as
-    // Distinct: they only lower to Aggregate/Join shapes downstream of
-    // the analyzer, so the whitelist gate must reject the logical nodes
-    // themselves. Unfused, Spark raises its real unsupported-operation
-    // error; a wrong fusion would "succeed" with per-batch set semantics.
+  test("streaming EXCEPT and INTERSECT fail with Spark's AnalysisException") {
+    // like DISTINCT: Spark raises its unsupported-operation error; a
+    // query that "succeeds" would apply per-batch set semantics
     for (op <- Seq("EXCEPT", "INTERSECT")) {
       val src = Files.createTempDirectory("fs_src6").toString
       spark.range(0, 4).toDF("id").coalesce(1).write.mode("append")
         .parquet(src)
       val s =
-        s"""SET 'graft.exec.statement-set.fuse' = 'true';
-           |CREATE TABLE src (id BIGINT) WITH (
+        s"""CREATE TABLE src (id BIGINT) WITH (
            |  'connector' = 'filesystem', 'path' = '$src',
            |  'format' = 'parquet');
            |CREATE TABLE snk_h (id BIGINT) WITH (
@@ -169,20 +164,19 @@ class FusedSetSpec extends SparkSpec {
           Right(r.queries.size)
         } catch { case e: org.apache.spark.sql.AnalysisException => Left(e) }
       assert(outcome.isLeft,
-        s"streaming $op fused into $outcome instead of failing")
+        s"streaming $op ran as $outcome queries instead of failing")
     }
   }
 
-  test("LIMIT (global-limit surface form) also refuses fusion") {
+  test("LIMIT stays one global limit: 5 rows in total") {
     val src = Files.createTempDirectory("fs_src5").toString
     val outA = Files.createTempDirectory("fs_o5a").toString
     val outB = Files.createTempDirectory("fs_o5b").toString
     spark.range(0, 8).toDF("id").coalesce(1).write.mode("append").parquet(src)
-    // unfused, Spark runs a stateful StreamingGlobalLimit (5 rows TOTAL
-    // across batches); a fused re-plan would emit 5 rows PER BATCH
+    // Spark runs a stateful StreamingGlobalLimit: 5 rows TOTAL across
+    // batches, never 5 per batch
     val s =
-      s"""SET 'graft.exec.statement-set.fuse' = 'true';
-         |CREATE TABLE src (id BIGINT) WITH (
+      s"""CREATE TABLE src (id BIGINT) WITH (
          |  'connector' = 'filesystem', 'path' = '$src',
          |  'format' = 'parquet');
          |CREATE TABLE snk_f (id BIGINT) WITH (
@@ -197,38 +191,37 @@ class FusedSetSpec extends SparkSpec {
     val r = new ScriptRunner(spark,
       Some(Files.createTempDirectory("fs_ck5").toString)).run(s)
     try {
-      assert(r.queries.size == 2, "LIMIT must not fuse") // unfused path
+      assert(r.queries.size == 2)
       r.queries.foreach(_.processAllAvailable())
     } finally r.queries.foreach(_.stop())
+    assert(spark.read.parquet(outA).count() == 8)
     assert(spark.read.parquet(outB).count() == 5)
   }
 
-  test("algebraic aggregate fuses statefully: one query, merged keyed " +
-    "state, exactly-once across a restart") {
+  test("SUM/COUNT/MIN/MAX aggregate: exact totals across a restart") {
     val src = Files.createTempDirectory("fs_src7").toString
     val out = Files.createTempDirectory("fs_o7").toString
     val ckpt = Files.createTempDirectory("fs_ck7").toString
-    val url = "jdbc:derby:memory:fusedagg;create=true"
+    val url = "jdbc:derby:memory:setagg;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try conn.createStatement().execute(
-      "CREATE TABLE agg_fused (k VARCHAR(16) PRIMARY KEY, s BIGINT, " +
+      "CREATE TABLE agg_set (k VARCHAR(16) PRIMARY KEY, s BIGINT, " +
         "c BIGINT, mn INT, mx INT)")
     finally conn.close()
 
     val s =
-      s"""SET 'graft.exec.statement-set.fuse' = 'true';
-         |CREATE TABLE src (k VARCHAR, v INT) WITH (
+      s"""CREATE TABLE src (k VARCHAR, v INT) WITH (
          |  'connector' = 'filesystem', 'path' = '$src',
          |  'format' = 'parquet');
          |CREATE TABLE raw_snk (k VARCHAR, v INT) WITH (
          |  'connector' = 'filesystem', 'path' = '$out',
          |  'format' = 'parquet');
-         |CREATE TABLE agg_fused (k VARCHAR, s BIGINT, c BIGINT,
+         |CREATE TABLE agg_set (k VARCHAR, s BIGINT, c BIGINT,
          |  mn INT, mx INT, PRIMARY KEY (k) NOT ENFORCED) WITH (
          |  'connector' = 'jdbc', 'url' = '$url',
-         |  'table-name' = 'agg_fused', 'dialect' = 'two-step');
+         |  'table-name' = 'agg_set', 'dialect' = 'two-step');
          |INSERT INTO raw_snk SELECT k, v FROM src;
-         |INSERT INTO agg_fused SELECT k, SUM(v) AS s, COUNT(*) AS c,
+         |INSERT INTO agg_set SELECT k, SUM(v) AS s, COUNT(*) AS c,
          |  MIN(v) AS mn, MAX(v) AS mx FROM src GROUP BY k;
          |""".stripMargin
 
@@ -236,7 +229,7 @@ class FusedSetSpec extends SparkSpec {
       val c = java.sql.DriverManager.getConnection(url)
       try {
         val rs = c.createStatement()
-          .executeQuery("SELECT k, s, c, mn, mx FROM agg_fused")
+          .executeQuery("SELECT k, s, c, mn, mx FROM agg_set")
         Iterator.continually(rs).takeWhile(_.next()).map(r =>
           r.getString(1) -> ((r.getLong(2), r.getLong(3),
             r.getInt(4), r.getInt(5)))).toMap
@@ -247,19 +240,18 @@ class FusedSetSpec extends SparkSpec {
     Seq(("a", 1), ("a", 2), ("b", 3)).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(src)
     val r1 = new ScriptRunner(spark, Some(ckpt)).run(s)
-    // stateless + mergeable aggregate fan-out = still ONE fused query
-    assert(r1.queries.size == 1, "mergeable aggregate should fuse")
+    assert(r1.queries.size == 2)
     r1.queries.foreach(_.processAllAvailable())
     r1.queries.foreach(_.stop())
     assert(aggRows() == Map("a" -> ((3L, 2L, 1, 2)), "b" -> ((3L, 1L, 3, 3))))
     assert(spark.read.parquet(out).count() == 3)
 
-    // restart from the shared checkpoint: new batch merges into the
-    // durable state — cross-restart sums/counts/min/max stay exact
+    // restart from the checkpoints: the aggregate's state store carries
+    // the totals — cross-restart sums/counts/min/max stay exact
     Seq(("a", 10), ("c", 5)).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(src)
     val r2 = new ScriptRunner(spark, Some(ckpt)).run(s)
-    assert(r2.queries.size == 1)
+    assert(r2.queries.size == 2)
     r2.queries.foreach(_.processAllAvailable())
     r2.queries.foreach(_.stop())
     assert(aggRows() == Map(
@@ -269,22 +261,18 @@ class FusedSetSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 5)
   }
 
-  test("non-mergeable aggregate (AVG) still refuses fusion") {
+  test("AVG aggregate: exact averages from its own query") {
     val src = Files.createTempDirectory("fs_src8").toString
     import spark.implicits._
-    Seq(("a", 1)).toDF("k", "v")
+    Seq(("a", 1), ("a", 2), ("b", 5)).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(src)
     val url = "jdbc:derby:memory:avgagg;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try conn.createStatement().execute(
       "CREATE TABLE avg_snk (k VARCHAR(16) PRIMARY KEY, a DOUBLE)")
     finally conn.close()
-    // AVG's output is not mergeable from itself — fusing it would
-    // silently average per batch; it must run unfused (stateful
-    // streaming agg path)
     val s =
-      s"""SET 'graft.exec.statement-set.fuse' = 'true';
-         |CREATE TABLE src (k VARCHAR, v INT) WITH (
+      s"""CREATE TABLE src (k VARCHAR, v INT) WITH (
          |  'connector' = 'filesystem', 'path' = '$src',
          |  'format' = 'parquet');
          |CREATE TABLE raw_snk2 (k VARCHAR, v INT) WITH (
@@ -301,8 +289,15 @@ class FusedSetSpec extends SparkSpec {
     val r = new ScriptRunner(spark,
       Some(Files.createTempDirectory("fs_ck8").toString)).run(s)
     try {
-      assert(r.queries.size == 2, "AVG must not fuse")
+      assert(r.queries.size == 2)
       r.queries.foreach(_.processAllAvailable())
     } finally r.queries.foreach(_.stop())
+    val c = java.sql.DriverManager.getConnection(url)
+    val avgs = try {
+      val rs = c.createStatement().executeQuery("SELECT k, a FROM avg_snk")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getString(1) -> r.getDouble(2)).toMap
+    } finally c.close()
+    assert(avgs == Map("a" -> 1.5, "b" -> 5.0))
   }
 }

@@ -122,7 +122,8 @@ class TableFunctionGateSpec extends graft.SparkSpec {
       assert(rows(spark.table("bq_catalog")) == rows(TextAnalysis
         .qualityOn(docs, "doc_id", "text").select("doc_id", "quality_score")))
     } finally {
-      FlinkSqlRewrite.register(spark)
+      functions.createOrReplaceTempFunction("TEXT_QUALITY", kernel,
+        "scala_udf")
       spark.sql("DROP TABLE IF EXISTS bq_catalog")
     }
   }
@@ -208,6 +209,7 @@ class TableFunctionGateSpec extends graft.SparkSpec {
           |""".stripMargin)
       assert(spark.table("phash_once_sink_out").count() > 0)
       assert(calls.get == 1)
-    } finally FlinkSqlRewrite.register(spark)
+    } finally functions.createOrReplaceTempFunction("DEDUP_PHASH_PAIRS",
+      kernel, "scala_udf")
   }
 }

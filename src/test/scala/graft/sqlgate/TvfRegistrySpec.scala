@@ -83,11 +83,28 @@ class TvfRegistrySpec extends graft.SparkSpec {
   }
 
   test("a runner registers every entry name as a session table function") {
-    val functions = spark.sessionState.tableFunctionRegistry
-    for (name <- Registry.map(_.name).distinct)
-      functions.dropFunction(FunctionIdentifier(name))
-    new ScriptRunner(spark)
+    // a session no runner has served yet
+    val session = spark.newSession()
+    val functions = session.sessionState.tableFunctionRegistry
+    for (e <- Registry)
+      assert(!functions.functionExists(FunctionIdentifier(e.name)), e.name)
+    new ScriptRunner(session)
     for (e <- Registry)
       assert(functions.functionExists(FunctionIdentifier(e.name)), e.name)
+  }
+
+  test("a second runner on one session re-registers no table function") {
+    val functions = spark.sessionState.tableFunctionRegistry
+    val names = Registry.map(_.name).distinct :+
+      MatchRecognizeRewrite.FunctionName
+    def builders() = names.map(n =>
+      functions.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    new ScriptRunner(spark)
+    val first = builders()
+    new ScriptRunner(spark)
+    new ScriptRunner(spark, batchMode = true)
+    builders().zip(first).zip(names).foreach { case ((now, was), n) =>
+      assert(now eq was, s"$n was registered again")
+    }
   }
 }

@@ -1,80 +1,15 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import java.sql.DriverManager
 import org.apache.spark.sql.functions.{concat, lit}
-import scala.collection.mutable
+import org.apache.spark.sql.types._
 
-final case class Click(k: Int, page: String)
-
-/** Temporal lookup join: per-micro-batch dim resolution, TTL-driven
-  * refresh, bounded cache (demo_3 lookup semantics).
+/** Temporal lookup join: the snapshot dim's cache bound, and the keyed
+  * point-query lookup (the large-dim path) with its bounded, TTL-driven
+  * per-executor cache (demo_3 lookup semantics).
   */
 class LookupJoinSpec extends SparkSpec {
-
-  test("micro-batches see the dim version current at processing time") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dimDir = java.nio.file.Files.createTempDirectory("dim").toString
-    Seq((1, "alpha"), (2, "beta")).toDF("k", "name")
-      .coalesce(1).write.mode("overwrite").parquet(dimDir)
-
-    // ttl=0 → every batch reloads (lookup.cache disabled, demo_3 default)
-    val snap = new DimSnapshot(spark, _.read.parquet(dimDir), ttlMs = 0L)
-    val out = mutable.Buffer[(Int, String, String)]()
-    val in = MemoryStream[Click]
-    val q = in.toDF().writeStream
-      .foreachBatch(LookupJoin.enrich(snap, Seq("k"), "left") { b =>
-        out.synchronized {
-          out ++= b.select("k", "page", "name")
-            .as[(Int, String, String)].collect()
-        }
-      })
-      .start()
-    try {
-      in.addData(Click(1, "/home"))
-      q.processAllAvailable()
-      assert(out.toSet == Set((1, "/home", "alpha")))
-
-      // dim updated between batches → next batch sees the new version
-      Seq((1, "ALPHA2"), (2, "beta")).toDF("k", "name")
-        .coalesce(1).write.mode("overwrite").parquet(dimDir)
-      in.addData(Click(1, "/again"), Click(3, "/miss"))
-      q.processAllAvailable()
-      assert(out.toSet == Set(
-        (1, "/home", "alpha"), (1, "/again", "ALPHA2"), (3, "/miss", null)))
-    } finally q.stop()
-  }
-
-  test("TTL caches the snapshot; invalidate forces refresh") {
-    import spark.implicits._
-    val dimDir = java.nio.file.Files.createTempDirectory("dim2").toString
-    Seq((1, "v1")).toDF("k", "name").coalesce(1)
-      .write.mode("overwrite").parquet(dimDir)
-    val snap = new DimSnapshot(spark, _.read.parquet(dimDir), ttlMs = 3600000L)
-    assert(snap.current().as[(Int, String)].collect().head == ((1, "v1")))
-    Seq((1, "v2")).toDF("k", "name").coalesce(1)
-      .write.mode("overwrite").parquet(dimDir)
-    // within TTL: still v1
-    assert(snap.current().as[(Int, String)].collect().head == ((1, "v1")))
-    snap.invalidate()
-    assert(snap.current().as[(Int, String)].collect().head == ((1, "v2")))
-  }
-
-  test("cache bound: oversized dim fails fast instead of broadcasting") {
-    import spark.implicits._
-    val dimDir = java.nio.file.Files.createTempDirectory("dim3").toString
-    spark.range(100).toDF("k").write.mode("overwrite").parquet(dimDir)
-    val snap = new DimSnapshot(spark, _.read.parquet(dimDir),
-      ttlMs = 0L, maxRows = 10L)
-    val e = intercept[IllegalArgumentException] { snap.current() }
-    assert(e.getMessage.contains("lookup cache bound"))
-  }
-
-  // --- keyed point-query lookup (the large-dim path) ---
-
-  import org.apache.spark.sql.types._
-  import java.sql.DriverManager
 
   private val dimSchema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType)))
@@ -94,6 +29,37 @@ class LookupJoinSpec extends SparkSpec {
       }
     } finally c.close()
     url
+  }
+
+  test("cache bound: oversized dim fails fast instead of broadcasting") {
+    // an explicit snapshot strategy keeps the whole dim in the cache, so
+    // a dim over 'lookup.cache.max-rows' fails when the script registers
+    // it instead of routing to point queries
+    val url = derbyDim("lkp_cap", (0L until 100L).map(i => i -> s"n$i"))
+    val facts = java.nio.file.Files.createTempDirectory("lkp_cap_src")
+    java.nio.file.Files.write(facts.resolve("part-0.json"),
+      """{"id": 7}""".getBytes("UTF-8"))
+    val runner = new graft.sqlgate.ScriptRunner(spark, batchMode = true)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        runner.run(
+          s"""CREATE TABLE cap_facts (id BIGINT) WITH (
+             |  'connector' = 'filesystem', 'path' = '$facts',
+             |  'format' = 'json');
+             |CREATE TABLE cap_dim (id BIGINT, name VARCHAR) WITH (
+             |  'connector' = 'jdbc', 'url' = '$url', 'table-name' = 'dim',
+             |  'lookup.cache.strategy' = 'snapshot',
+             |  'lookup.cache.max-rows' = '10');
+             |CREATE TABLE cap_sink (id BIGINT, name STRING)
+             |  WITH ('connector' = 'memory');
+             |INSERT INTO cap_sink SELECT f.id, d.name FROM cap_facts f
+             |JOIN cap_dim FOR SYSTEM_TIME AS OF f.id AS d ON f.id = d.id;
+             |""".stripMargin)
+      }
+      assert(e.getMessage.contains("'lookup.cache.max-rows' = 10"),
+        e.getMessage)
+      assert(runner.snapshotDim("cap_dim").isEmpty)
+    } finally runner.close()
   }
 
   test("keyed lookup fetches ONLY missing keys; hits and negatives cached") {
@@ -145,36 +111,6 @@ class LookupJoinSpec extends SparkSpec {
     assert(e.getMessage.contains("retries") && bad.stats.retries == 2)
   }
 
-  test("enrichKeyed: stream enrichment probes only batch keys end-to-end") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val url = derbyDim("lkp4", Seq(1L -> "alpha", 2L -> "beta"))
-    val lk = new JdbcKeyedLookup(url, Map.empty, "dim", "id", dimSchema,
-      cacheMaxRows = 100L, cacheTtlMs = 3600000L)
-    val out = mutable.Buffer[(Long, String, String)]()
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("id", "page").writeStream
-      .foreachBatch(LookupJoin.enrichKeyed(lk, "id", "id", dimSchema, "left") {
-        b =>
-          out.synchronized {
-            out ++= b.select("id", "page", "name")
-              .as[(Long, String, String)].collect()
-          }
-      })
-      .start()
-    try {
-      in.addData((1L, "/home"), (3L, "/miss"))
-      q.processAllAvailable()
-      assert(out.toSet == Set((1L, "/home", "alpha"), (3L, "/miss", null)))
-      assert(lk.stats.fetchedKeys == 2) // exactly the batch's distinct keys
-      in.addData((1L, "/again"), (2L, "/new"))
-      q.processAllAvailable()
-      assert(lk.stats.fetchedKeys == 3) // 1 was cached; only 2 fetched
-      assert(out.toSet == Set((1L, "/home", "alpha"), (3L, "/miss", null),
-        (1L, "/again", "alpha"), (2L, "/new", "beta")))
-    } finally q.stop()
-  }
-
   test("enrichKeyedPartitions: per-executor lookup, cache shared across partitions") {
     import spark.implicits._
     val url = derbyDim("lkp5",
@@ -209,37 +145,6 @@ class LookupJoinSpec extends SparkSpec {
     assert(st.fetchedKeys == 11, s"stats: $st")
     assert(st.probedKeys > 11, s"partitions must have re-probed: $st")
     assert(st.cacheHits == st.probedKeys - 11, s"stats: $st")
-  }
-
-  test("enrichKeyed casts INT stream keys to the dim key type; joins hit") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val url = derbyDim("lkp7", Seq(1L -> "one", 2L -> "two"))
-    val lk = new JdbcKeyedLookup(url, Map.empty, "dim", "id", dimSchema,
-      cacheMaxRows = 10L, cacheTtlMs = 3600000L)
-    val out = mutable.Buffer[(Int, String)]()
-    val in = MemoryStream[Int]
-    val q = in.toDF().select($"value".cast("int").as("k")).writeStream
-      .foreachBatch(LookupJoin.enrichKeyed(lk, "k", "id", dimSchema,
-        "inner") { b =>
-        out.synchronized {
-          out ++= b.select("k", "name").as[(Int, String)].collect()
-        }
-      })
-      .start()
-    try {
-      in.addData(1, 2, 3)
-      q.processAllAvailable()
-      // uncast Integer probes would miss the JDBC Longs, empty the join,
-      // and negative-cache every key — the cast makes them hit
-      assert(out.toSet == Set(1 -> "one", 2 -> "two"))
-      assert(lk.stats.fetchedKeys == 3)
-    } finally q.stop()
-    // right/full joins cannot have keyed-slice semantics — rejected
-    val e = intercept[IllegalArgumentException] {
-      LookupJoin.enrichKeyed(lk, "k", "id", dimSchema, "full_outer")(_ => ())
-    }
-    assert(e.getMessage.contains("inner/left"))
   }
 
   test("schema-qualified table-name works on the keyed point-query path") {

@@ -1,168 +1,154 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.sqlgate.ScriptRunner
+import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
-final case class Ev(user: Long, kind: String, ts: Timestamp, value: Double)
-
-/** Structured Streaming behavior specs driven by MemoryStream: windowed
-  * aggs with watermark + late-data drop, session windows, stream-stream
-  * interval join, within-watermark dedup, custom keyed state, foreachBatch
-  * upsert. These pin the semantics the batch Windows pack checks against
-  * DuckDB, on actual incremental execution.
+/** Structured Streaming behaviour on actual incremental execution:
+  * event-time windows with watermark and late-data drop, session
+  * windows, stream-stream interval joins (run as gate scripts over
+  * filesystem sources, each step one more file), the watermark-buffered
+  * streaming OVER window, and the composite-key encoding. These pin the
+  * semantics the batch Windows pack checks against DuckDB.
   */
 class StreamingSpec extends SparkSpec {
 
   private def t(minute: Int, sec: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:$sec%02d")
 
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Rows (uid, kind, ts, value) as one more parquet file of `dir`. */
+  private def append(dir: String,
+      rows: (Long, String, Timestamp, Double)*): Unit = {
+    import spark.implicits._
+    rows.toDF("uid", "kind", "ts", "value").coalesce(1)
+      .write.mode("append").parquet(dir)
+  }
+
+  /** DDL of an event table over `dir`, watermarked one minute behind. */
+  private def source(name: String, dir: String): String =
+    s"""CREATE TABLE $name (uid BIGINT, kind STRING, ts TIMESTAMP,
+       |  value DOUBLE, WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE
+       |) WITH ('connector' = 'filesystem', 'path' = '$dir',
+       |  'format' = 'parquet');
+       |""".stripMargin
+
+  /** DDL of a parquet sink table over `dir`. */
+  private def sink(name: String, cols: String, dir: String): String =
+    s"""CREATE TABLE $name ($cols) WITH ('connector' = 'filesystem',
+       |  'path' = '$dir', 'format' = 'parquet');
+       |""".stripMargin
+
+  /** Start `script`'s one INSERT on the gate as a continuous query. */
+  private def start(script: String): StreamingQuery = {
+    val qs = new ScriptRunner(spark, Some(tmp("ss_ckpt"))).run(
+      "SET table.exec.mini-batch.allow-latency = 100 ms;\n" + script).queries
+    assert(qs.size == 1)
+    qs.head
+  }
+
   test("tumbling window with watermark: closed windows emit, late rows drop") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamOps.tumblingAgg(in.toDF(), "ts", "1 minute",
-      "1 minute", Seq("kind"))
-    val q = out.writeStream.format("memory").queryName("tumble_t")
-      .outputMode("append").start()
+    val (src, out) = (tmp("tumble_src"), tmp("tumble_out"))
+    append(src, (1L, "a", t(0, 10), 1.0), (2L, "a", t(0, 50), 2.0),
+      (3L, "b", t(1, 10), 3.0))
+    val q = start(source("tumble_ev", src) +
+      sink("tumble_snk", "wstart TIMESTAMP(3), kind STRING, n BIGINT, " +
+        "sum_value DOUBLE", out) +
+      """INSERT INTO tumble_snk
+        |SELECT TUMBLE_START(ts, INTERVAL '1' MINUTE) AS wstart, kind,
+        |  COUNT(*) AS n, SUM(value) AS sum_value
+        |FROM tumble_ev GROUP BY TUMBLE(ts, INTERVAL '1' MINUTE), kind;
+        |""".stripMargin)
     try {
-      in.addData(Ev(1, "a", t(0, 10), 1.0), Ev(2, "a", t(0, 50), 2.0),
-        Ev(3, "b", t(1, 10), 3.0))
       q.processAllAvailable() // watermark ~10:00:10; nothing closed yet
-      in.addData(Ev(4, "a", t(5, 0), 4.0)) // advances watermark to 10:04
+      append(src, (4L, "a", t(5), 4.0)) // advances watermark to 10:04
       q.processAllAvailable() // closes 10:00 and 10:01 windows
-      val rows = spark.table("tumble_t")
-        .select($"wstart".cast("string"), $"kind", $"n", $"sum_value")
-        .as[(String, String, Long, Double)].collect().toSet
-      assert(rows == Set(
-        ("2024-01-01 10:00:00", "a", 2L, 3.0),
-        ("2024-01-01 10:01:00", "b", 1L, 3.0)))
+      val rows = spark.read.parquet(out)
+        .as[(Timestamp, String, Long, Double)].collect().toSet
+      assert(rows == Set((t(0), "a", 2L, 3.0), (t(1), "b", 1L, 3.0)))
       // late row inside an already-closed window: dropped
-      in.addData(Ev(5, "a", t(0, 30), 100.0))
+      append(src, (5L, "a", t(0, 30), 100.0))
       q.processAllAvailable()
-      assert(spark.table("tumble_t").count() == 2)
+      assert(spark.read.parquet(out).count() == 2)
     } finally q.stop()
   }
 
   test("session window merges within gap, splits past gap") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamOps.sessionAgg(in.toDF(), "ts", "1 minute",
-      "2 minutes", Seq("user"))
-    val q = out.writeStream.format("memory").queryName("sess_t")
-      .outputMode("append").start()
+    val (src, out) = (tmp("sess_src"), tmp("sess_out"))
+    // uid 1: events at 10:00, 10:01, 10:05 → sessions {00,01} and {05};
+    // uid 9 pushes the watermark past both
+    append(src, (1L, "a", t(0), 1.0), (1L, "a", t(1), 1.0),
+      (1L, "a", t(5), 1.0), (9L, "z", t(30), 0.0))
+    val q = start(source("sess_ev", src) +
+      sink("sess_snk", "wstart TIMESTAMP(3), uid BIGINT, n BIGINT", out) +
+      """INSERT INTO sess_snk
+        |SELECT SESSION_START(ts, INTERVAL '2' MINUTE) AS wstart, uid,
+        |  COUNT(*) AS n
+        |FROM sess_ev GROUP BY SESSION(ts, INTERVAL '2' MINUTE), uid;
+        |""".stripMargin)
     try {
-      // user 1: events at 10:00, 10:01, 10:05 → sessions {00,01} and {05}
-      in.addData(Ev(1, "a", t(0), 1.0), Ev(1, "a", t(1), 1.0),
-        Ev(1, "a", t(5), 1.0))
-      in.addData(Ev(9, "z", t(30), 0.0)) // watermark pusher
       q.processAllAvailable()
-      val rows = spark.table("sess_t")
-        .filter($"user" === 1)
-        .select($"wstart".cast("string"), $"n")
-        .as[(String, Long)].collect().toSet
-      assert(rows == Set(("2024-01-01 10:00:00", 2L),
-        ("2024-01-01 10:05:00", 1L)))
+      val rows = spark.read.parquet(out).where($"uid" === 1)
+        .select($"wstart", $"n").as[(Timestamp, Long)].collect().toSet
+      assert(rows == Set((t(0), 2L), (t(5), 1L)))
     } finally q.stop()
   }
 
+  /** Clicks joined to the buys of the same uid within 10 minutes after. */
+  private def intervalJoin(kind: String, clicks: String, buys: String,
+      out: String): String =
+    source(s"${kind}_clicks", clicks) + source(s"${kind}_buys", buys) +
+      sink(s"${kind}_snk", "uid BIGINT, b_uid BIGINT, value DOUBLE", out) +
+      s"""INSERT INTO ${kind}_snk
+         |SELECT c.uid, b.uid AS b_uid, b.value
+         |FROM ${kind}_clicks c $kind JOIN ${kind}_buys b
+         |  ON c.uid = b.uid AND b.ts >= c.ts
+         |  AND b.ts <= c.ts + INTERVAL '10' MINUTE;
+         |""".stripMargin
+
   test("stream-stream interval join (demo_2 dual-stream shape)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Ev]
-    val buys = MemoryStream[Ev]
-    val joined = StreamOps.intervalJoin(
-      clicks.toDF().select($"user", $"ts"),
-      buys.toDF().select($"user".as("r_user"), $"ts".as("bts"), $"value"),
-      "user", "ts", "bts", "1 minute", "'10' MINUTE")
-    val q = joined.writeStream.format("memory").queryName("join_t")
-      .outputMode("append").start()
+    val (clicks, buys, out) = (tmp("ij_c"), tmp("ij_b"), tmp("ij_out"))
+    append(clicks, (1L, "c", t(0), 0.0), (2L, "c", t(0), 0.0))
+    append(buys, (1L, "b", t(5), 9.5), // within 10 min of click → joins
+      (2L, "b", t(20), 7.0)) // outside → no join
+    val q = start(intervalJoin("inner", clicks, buys, out))
     try {
-      clicks.addData(Ev(1, "c", t(0), 0), Ev(2, "c", t(0), 0))
-      buys.addData(Ev(1, "b", t(5), 9.5), // within 10 min of click → joins
-        Ev(2, "b", t(20), 7.0)) // outside → no join
-      clicks.addData(Ev(9, "c", t(40), 0)) // watermark pushers
-      buys.addData(Ev(9, "b", t(40), 0))
       q.processAllAvailable()
-      val rows = spark.table("join_t").select($"user", $"value")
+      val rows = spark.read.parquet(out).select($"uid", $"value")
         .as[(Long, Double)].collect().toSet
-      // user 9 is the watermark pusher (joins with itself at t40);
-      // the real assertions: user 1 joined within bounds, user 2 did not.
-      assert(rows.filter(_._1 != 9L) == Set((1L, 9.5)))
+      assert(rows == Set((1L, 9.5)))
     } finally q.stop()
   }
 
   test("stream-stream LEFT OUTER interval join: unmatched left emits nulls " +
       "after the watermark closes its window") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Ev]
-    val buys = MemoryStream[Ev]
-    val joined = StreamOps.intervalJoin(
-      clicks.toDF().select($"user", $"ts"),
-      buys.toDF().select($"user".as("r_user"), $"ts".as("bts"), $"value"),
-      "user", "ts", "bts", "1 minute", "'10' MINUTE",
-      joinType = "left_outer")
-    val q = joined.writeStream.format("memory").queryName("ljoin_t")
-      .outputMode("append").start()
+    val (clicks, buys, out) = (tmp("lj_c"), tmp("lj_b"), tmp("lj_out"))
+    append(clicks, (1L, "c", t(0), 0.0), (2L, "c", t(0), 0.0))
+    append(buys, (1L, "b", t(5), 9.5)) // matches uid 1's window
+    val q = start(intervalJoin("left", clicks, buys, out))
+    def rows() = spark.read.parquet(out)
+      .as[(Long, Option[Long], Option[Double])].collect().toSet
+      .filter(_._1 != 9L)
     try {
-      clicks.addData(Ev(1, "c", t(0), 0), Ev(2, "c", t(0), 0))
-      buys.addData(Ev(1, "b", t(5), 9.5)) // matches user 1's window
       q.processAllAvailable()
+      // uid 2's window is still open: no null-extended row yet
+      assert(rows() == Set((1L, Some(1L), Some(9.5))))
       // push the watermark far past t(0)+10min+delay on BOTH sides so
-      // user 2's join window provably closes
-      clicks.addData(Ev(9, "c", t(60), 0))
-      buys.addData(Ev(9, "b", t(60), 0))
+      // uid 2's join window provably closes
+      append(clicks, (9L, "c", t(60), 0.0))
+      append(buys, (9L, "b", t(60), 0.0))
       q.processAllAvailable()
-      val rows = spark.table("ljoin_t")
-        .select($"user", $"r_user", $"value")
-        .as[(Long, Option[Long], Option[Double])].collect().toSet
-        .filter(_._1 != 9L)
-      // user 1 matched inside the interval; user 2 emitted exactly once,
-      // null-padded, only after the horizon passed
-      assert(rows == Set((1L, Some(1L), Some(9.5)),
-        (2L, None, None)))
-    } finally q.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark: replayed events collapse") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamOps.dedupWithinWatermark(in.toDF(), "ts", "10 minutes",
-      Seq("user", "kind"))
-    val q = out.writeStream.format("memory").queryName("dedup_t")
-      .outputMode("append").start()
-    try {
-      in.addData(Ev(1, "x", t(0), 1.0), Ev(1, "x", t(0, 30), 1.0),
-        Ev(2, "x", t(1), 2.0))
-      q.processAllAvailable()
-      in.addData(Ev(1, "x", t(2), 1.0)) // still a dup within watermark
-      q.processAllAvailable()
-      assert(spark.table("dedup_t").count() == 2) // (1,x) once + (2,x) once
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState: running totals update across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Double)]
-    val q = StreamOps.runningTotals(in.toDS())
-      .writeStream.format("memory").queryName("state_t")
-      .outputMode("update").start()
-    try {
-      in.addData(("a", 1.0), ("a", 2.0), ("b", 5.0))
-      q.processAllAvailable()
-      in.addData(("a", 4.0))
-      q.processAllAvailable()
-      val last = spark.table("state_t").groupBy($"key")
-        .agg(max(struct($"n", $"total")).as("s"))
-        .select($"key", $"s.n", $"s.total")
-        .as[(String, Long, Double)].collect().toSet
-      assert(last == Set(("a", 3L, 7.0), ("b", 1L, 5.0)))
+      // uid 2 emitted exactly once, null-padded, only after the horizon
+      assert(rows() == Set((1L, Some(1L), Some(9.5)), (2L, None, None)))
     } finally q.stop()
   }
 
@@ -223,35 +209,5 @@ class StreamingSpec extends SparkSpec {
     // ordinary keys keep their plain readable form (stable ES _ids)
     assert(StreamOps.encodeKey(Seq("solo")) == "solo")
     assert(StreamOps.encodeKey(Seq(42, "a")) == "42|a")
-  }
-
-  // NOTE: runningTotals' stateTtlMs path (ProcessingTimeTimeout) is not
-  // runtime-tested here: a processing-time timeout keeps the query
-  // scheduling timeout-evaluation batches, which never settles under
-  // MemoryStream + processAllAvailable. The no-TTL path (default) is
-  // covered above; the timeout branch is exercised in production-style
-  // continuous triggers only.
-
-  test("foreachBatch upsert sink: last write per key wins (demo_1 sink)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamOps.UpsertStore.clear("gmv")
-    val in = MemoryStream[Ev]
-    val agg = in.toDF().groupBy($"kind")
-      .agg(sum($"value").as("total"))
-    val q = agg.writeStream
-      .outputMode("update")
-      .foreachBatch(StreamOps.upsertBatch("gmv", Seq("kind")) _)
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      in.addData(Ev(1, "a", t(0), 10.0), Ev(2, "b", t(0), 5.0))
-      q.processAllAvailable()
-      in.addData(Ev(3, "a", t(1), 2.5))
-      q.processAllAvailable()
-      val t2 = StreamOps.UpsertStore.table("gmv")
-      assert(t2(StreamOps.encodeKey(Seq("a")))(1) == 12.5 &&
-        t2(StreamOps.encodeKey(Seq("b")))(1) == 5.0)
-    } finally q.stop()
   }
 }
