@@ -1,21 +1,41 @@
 package graft.platform
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.JsonUtil
 import graft.sqlgate.SqlValidator
+import io.netty.bootstrap.ServerBootstrap
+import io.netty.buffer.Unpooled
+import io.netty.channel.{Channel, ChannelFutureListener,
+  ChannelHandlerContext, ChannelInitializer, ChannelOption,
+  MultiThreadIoEventLoopGroup, SimpleChannelInboundHandler}
+import io.netty.channel.nio.NioIoHandler
+import io.netty.channel.socket.SocketChannel
+import io.netty.channel.socket.nio.NioServerSocketChannel
+import io.netty.handler.codec.http.{DefaultFullHttpResponse, FullHttpRequest,
+  HttpHeaderNames, HttpObjectAggregator, HttpResponseStatus, HttpServerCodec,
+  HttpUtil, QueryStringDecoder}
+import io.netty.util.concurrent.DefaultThreadFactory
 import org.apache.spark.sql.SparkSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.TimeUnit
+import scala.collection.mutable
 
 /** Thin HTTP facade over [[JobManager]] — the reference is a web
   * platform, and this is its REST verb surface
   * (`JobConfigApiController.java:89-415`: start/stop/savepoint/open/
   * close/delete/addConfig/editConfig/copyConfig/listTask/
   * jobConfigHistory*, plus `SqlValidationController.java:25-44`'s
-  * checkfSql) served by the JDK's built-in HttpServer — zero new
-  * dependencies, delegating every verb to the manager so the guards
+  * checkfSql), delegating every verb to the manager so the guards
   * (validation, dup-run, optimistic lock) are the same objects the
   * in-process API enforces.
+  *
+  * Transport: Netty's HTTP/1.1 codec (Spark's own RPC transport, so no
+  * new dependency) on one IO thread, with `TCP_NODELAY` on every
+  * accepted connection: a keep-alive client's next reply never waits
+  * for its delayed ACK (~40 ms per request behind Nagle's algorithm).
+  * Bodies are aggregated up to [[HttpApi.MaxBodyBytes]]; a larger one
+  * is answered 413. Verbs run on a small pool, one request per
+  * connection at a time, so pipelined requests are answered in order.
   *
   * Responses are the reference's RestResult JSON shape
   * (`RestResult.java:14-24`): `{"code","success","message","data"}`.
@@ -39,45 +59,122 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
     alarmPost: (String, String, String) => String = AlarmTransports.jdkPost,
     ipStatus: Option[IpStatusService] = None)
     extends AutoCloseable {
+  import HttpApi.Exchange
 
-  private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
   // small pool: a start() can block while a streaming query spins up and
   // must not wedge every other verb behind it
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
     (r: Runnable) => {
       val t = new Thread(r, "graft-http-api"); t.setDaemon(true); t
     })
-  server.setExecutor(pool)
-  server.createContext("/api", (ex: HttpExchange) => handle(ex))
-  // the reference's open routes outside the login interceptor
-  // (`InterceptorConfig.java:30-32` excludes /ok and /alarmCallback):
-  // a health probe and the test echo endpoint HTTP alarms can target
-  // (`ApiController.java:14-24`)
-  server.createContext("/ok", (ex: HttpExchange) =>
-    reply(ex, 200, success = true, "", "null"))
-  server.createContext("/alarmCallback", (ex: HttpExchange) =>
-    try {
-      val p = params(ex)
-      log.info(s"alarm callback received appId=${p.getOrElse("appId", "")} " +
-        s"jobName=${p.getOrElse("jobName", "")} " +
-        s"deployMode=${p.getOrElse("deployMode", "")}")
-      reply(ex, 200, success = true, "", "null")
-    } catch { case _: Throwable =>
-      reply(ex, 500, success = false, "callback error", "null")
-    })
-  server.start()
+  private val io = new MultiThreadIoEventLoopGroup(1,
+    new DefaultThreadFactory("graft-http-io", true), NioIoHandler.newFactory())
+  private val server: Channel =
+    try new ServerBootstrap().group(io)
+      .channel(classOf[NioServerSocketChannel])
+      .childOption[java.lang.Boolean](ChannelOption.TCP_NODELAY, true)
+      .childHandler(new ChannelInitializer[SocketChannel] {
+        override def initChannel(ch: SocketChannel): Unit =
+          ch.pipeline().addLast(new HttpServerCodec(),
+            new HttpObjectAggregator(HttpApi.MaxBodyBytes), new Connection)
+      })
+      .bind("127.0.0.1", bindPort).syncUninterruptibly().channel()
+    catch { case e: Throwable => shutdown(); throw e }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Bound port (ephemeral when constructed with bindPort = 0). */
-  def port: Int = server.getAddress.getPort
+  def port: Int = server.localAddress().asInstanceOf[InetSocketAddress].getPort
 
-  override def close(): Unit = { server.stop(0); pool.shutdownNow(); () }
+  override def close(): Unit = { server.close().syncUninterruptibly(); shutdown() }
+
+  private def shutdown(): Unit = {
+    io.shutdownGracefully(0, 1, TimeUnit.SECONDS).syncUninterruptibly()
+    pool.shutdownNow(); ()
+  }
 
   // --- request plumbing ---------------------------------------------------
 
-  private def params(ex: HttpExchange): Map[String, String] = {
+  /** The handler for a request path: prefix routes, like servlet
+    * contexts. `/ok` and `/alarmCallback` are the reference's open
+    * routes outside the login interceptor (`InterceptorConfig.java:30-32`):
+    * a health probe and the test echo endpoint HTTP alarms can target
+    * (`ApiController.java:14-24`).
+    */
+  private def route(path: String): Exchange => Unit =
+    if (path.startsWith("/api")) handle
+    else if (path.startsWith("/ok")) ok(_, "null")
+    else if (path.startsWith("/alarmCallback")) { ex =>
+      try {
+        val p = params(ex)
+        log.info(s"alarm callback received appId=${p.getOrElse("appId", "")} " +
+          s"jobName=${p.getOrElse("jobName", "")} " +
+          s"deployMode=${p.getOrElse("deployMode", "")}")
+        ok(ex, "null")
+      } catch { case _: Throwable =>
+        reply(ex, 500, success = false, "callback error", "null")
+      }
+    }
+    else reply(_, 404, success = false, s"no route for '$path'", "null")
+
+  /** One connection's requests. Each runs on the pool, and the next is
+    * taken only once its reply is written; reading pauses meanwhile.
+    * State is touched only on the connection's event loop.
+    */
+  private final class Connection
+      extends SimpleChannelInboundHandler[FullHttpRequest] {
+    private val pending = mutable.Queue[(Exchange, Exchange => Unit)]()
+    private var busy = false
+
+    override def channelRead0(ctx: ChannelHandlerContext,
+        req: FullHttpRequest): Unit = {
+      val ex = new Exchange(req)
+      val run: Exchange => Unit =
+        try {
+          if (!req.decoderResult().isSuccess)
+            throw new IllegalArgumentException(req.decoderResult().cause())
+          route(ex.path)
+        } catch { case _: IllegalArgumentException =>
+          ex.keepAlive = false
+          reply(_, 400, success = false, "malformed request", "null")
+        }
+      pending.enqueue(ex -> run)
+      ctx.channel().config().setAutoRead(false)
+      if (!busy) next(ctx)
+    }
+
+    private def next(ctx: ChannelHandlerContext): Unit =
+      if (!ctx.channel().isActive) pending.clear()
+      else if (pending.isEmpty) ctx.channel().config().setAutoRead(true)
+      else {
+        busy = true
+        val (ex, run) = pending.dequeue()
+        pool.execute { () =>
+          try run(ex)
+          finally ctx.executor().execute(() => respond(ctx, ex))
+        }
+      }
+
+    private def respond(ctx: ChannelHandlerContext, ex: Exchange): Unit = {
+      val res = new DefaultFullHttpResponse(ex.version,
+        HttpResponseStatus.valueOf(ex.status), Unpooled.wrappedBuffer(ex.body))
+      res.headers().set(HttpHeaderNames.CONTENT_TYPE, "application/json")
+      ex.setCookies.foreach(res.headers().add(HttpHeaderNames.SET_COOKIE, _))
+      HttpUtil.setContentLength(res, ex.body.length.toLong)
+      HttpUtil.setKeepAlive(res, ex.keepAlive)
+      busy = false
+      if (ex.keepAlive) { ctx.writeAndFlush(res); next(ctx) }
+      else {
+        pending.clear()
+        ctx.writeAndFlush(res).addListener(ChannelFutureListener.CLOSE)
+      }
+    }
+
+    override def exceptionCaught(ctx: ChannelHandlerContext,
+        cause: Throwable): Unit = { ctx.close(); () }
+  }
+
+  private def params(ex: Exchange): Map[String, String] = {
     def parse(s: String): Seq[(String, String)] =
       Option(s).toSeq.flatMap(_.split('&')).filter(_.nonEmpty).map { kv =>
         kv.split("=", 2) match {
@@ -87,25 +184,21 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
           case Array(k) => java.net.URLDecoder.decode(k, "UTF-8") -> ""
         }
       }
-    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
     // body wins over query string on duplicate keys (toMap keeps last)
-    (parse(ex.getRequestURI.getRawQuery) ++ parse(body)).toMap
+    (parse(ex.rawQuery) ++ parse(ex.requestBody)).toMap
   }
 
-  private def reply(ex: HttpExchange, status: Int, success: Boolean,
+  private def reply(ex: Exchange, status: Int, success: Boolean,
       message: String, data: String): Unit = {
-    val body =
+    ex.status = status
+    ex.body =
       (s"""{"code":${JsonUtil.str(status.toString)}""" +
         s""","success":$success""" +
         s""","message":${JsonUtil.str(message)}""" +
         s""","data":$data}""").getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, body.length)
-    ex.getResponseBody.write(body)
-    ex.close()
   }
 
-  private def ok(ex: HttpExchange, data: String, message: String = ""): Unit =
+  private def ok(ex: Exchange, data: String, message: String = ""): Unit =
     reply(ex, 200, success = true, message, data)
 
   private def jobJson(st: JobManager.JobState): String =
@@ -120,7 +213,7 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
     s"""{"id":${u.id},"username":${JsonUtil.str(u.username)}""" +
       s""","fullname":${JsonUtil.str(u.fullname)},"enabled":${u.enabled}}"""
 
-  private def handle(ex: HttpExchange): Unit =
+  private def handle(ex: Exchange): Unit =
     try {
       val p = params(ex)
       def req(k: String): String = p.getOrElse(k,
@@ -140,11 +233,11 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
         alarmLog.foreach(_.add(d))
         reply(ex, 200, d.success, d.detail, "null")
       }
-      val verb = ex.getRequestURI.getPath.stripPrefix("/api/")
+      val verb = ex.path.stripPrefix("/api/")
       // session token: the reference's session cookie, or a sessionId
       // param for cookie-less clients
       val token: Option[String] =
-        Option(ex.getRequestHeaders.getFirst("Cookie")).toSeq
+        ex.cookie.toSeq
           .flatMap(_.split(";\\s*"))
           .collectFirst {
             case c if c.startsWith(Users.SessionCookie + "=") =>
@@ -172,12 +265,12 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
                   Option(e.getMessage).getOrElse("login failed"), "null")
                 return
             }
-          ex.getResponseHeaders.add("Set-Cookie",
+          ex.setCookies += (
             s"${Users.SessionCookie}=$tok; Path=/; Max-Age=86400; " +
               "HttpOnly; SameSite=Lax")
           ok(ex, JsonUtil.str(tok), "login success")
         case "logout" =>
-          ex.getResponseHeaders.add("Set-Cookie",
+          ex.setCookies += (
             s"${Users.SessionCookie}=; Path=/; Max-Age=0; " +
               "HttpOnly; SameSite=Lax")
           ok(ex, "null", "logout success")
@@ -314,4 +407,28 @@ class HttpApi(mgr: JobManager, spark: SparkSession, bindPort: Int = 0,
         reply(ex, 500, success = false,
           Option(e.getMessage).getOrElse(e.getClass.getName), "null")
     }
+}
+
+object HttpApi {
+
+  /** Largest request body the facade reads, in bytes (16 MiB): a gate
+    * script is a few KiB, and a larger body is answered 413 before it
+    * fills the heap.
+    */
+  val MaxBodyBytes: Int = 16 << 20
+
+  /** One request as the verbs read it, and the reply they fill in. */
+  private final class Exchange(req: FullHttpRequest) {
+    private val uri = new QueryStringDecoder(req.uri())
+    val version = req.protocolVersion()
+    var keepAlive: Boolean = HttpUtil.isKeepAlive(req)
+    val cookie: Option[String] = Option(req.headers().get(HttpHeaderNames.COOKIE))
+    val requestBody: String = req.content().toString(UTF_8)
+    def path: String = uri.path()
+    def rawQuery: String = uri.rawQuery()
+
+    var status = 500
+    var body: Array[Byte] = Array.emptyByteArray
+    val setCookies = mutable.ArrayBuffer[String]()
+  }
 }

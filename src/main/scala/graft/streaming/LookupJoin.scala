@@ -31,8 +31,11 @@ final class TtlCachedDim(private[graft] val df: DataFrame, ttlMs: Long,
 
   df.persist()
   private val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-  require(df.limit(probe).count() <= maxRows,
+  // a dim that fails registration is never tracked by its runner, so
+  // its cache entry must go here or nothing ever releases it
+  try require(df.limit(probe).count() <= maxRows,
     s"lookup dim exceeds 'lookup.cache.max-rows' = $maxRows")
+  catch { case e: Throwable => df.unpersist(blocking = false); throw e }
 
   @volatile private var refreshError: Option[String] = None
 

@@ -31,6 +31,15 @@ class CodegenReuseSpec extends SparkSpec {
     }
   }
 
+  private def awaitIdle(q: StreamingQuery): Unit = {
+    val deadline = System.currentTimeMillis() + 30000
+    while (q.status.isTriggerActive) {
+      assert(q.isActive, s"query ended early: ${q.exception}")
+      assert(System.currentTimeMillis() < deadline, "trigger active for 30 s")
+      Thread.sleep(1)
+    }
+  }
+
   test("a keyed aggregation started again compiles nothing and runs its " +
     "tasks under the same class loader") {
     // the compile counter is JVM-wide: leave no other query running
@@ -57,8 +66,14 @@ class CodegenReuseSpec extends SparkSpec {
       CodegenReuseSpec.loaders.clear()
       val before = compiles
       val id = m.start(name, script)
-      try awaitBatches(m.info(id).queries.head, 3)
-      finally m.stop(id, withSavepoint = false)
+      try {
+        val q = m.info(id).queries.head
+        awaitBatches(q, 3)
+        // stop between triggers: a stop that aborts a batch mid-flight
+        // leaves that batch's compiles to land in the next run's count
+        awaitIdle(q)
+      } finally m.stop(id, withSavepoint = false)
+      graft.streaming.StateStores.awaitReleased()
       (CodegenReuseSpec.loaders.asScala.toSet, compiles - before)
     }
 

@@ -38,6 +38,36 @@ class HttpApiSpec extends SparkSpec {
     (status, out)
   }
 
+  /** Run `f` over one raw socket to the facade (10 s read timeout). */
+  private def withSocket[T](f: (java.io.OutputStream, java.io.InputStream) => T): T = {
+    val sock = new java.net.Socket("127.0.0.1", api.port)
+    try {
+      sock.setSoTimeout(10000)
+      f(sock.getOutputStream, new java.io.BufferedInputStream(sock.getInputStream))
+    } finally sock.close()
+  }
+
+  /** Read one HTTP/1.1 reply: (status, lower-cased headers, body). */
+  private def readReply(in: java.io.InputStream): (Int, Map[String, String], String) = {
+    def line(): String = {
+      val sb = new StringBuilder
+      var c = in.read()
+      while (c != '\n') {
+        assert(c >= 0, "connection closed mid-reply")
+        if (c != '\r') sb += c.toChar
+        c = in.read()
+      }
+      sb.toString
+    }
+    val status = line().split(" ")(1).toInt
+    val headers = Iterator.continually(line()).takeWhile(_.nonEmpty).map { h =>
+      val i = h.indexOf(':')
+      h.take(i).trim.toLowerCase -> h.drop(i + 1).trim
+    }.toMap
+    val n = headers.get("content-length").fold(0)(_.toInt)
+    (status, headers, new String(in.readNBytes(n), "UTF-8"))
+  }
+
   private def dataOf(body: String): String =
     "\"data\":\"([^\"]*)\"".r.findFirstMatchIn(body).map(_.group(1))
       .getOrElse(fail(s"no string data in $body"))
@@ -219,5 +249,72 @@ class HttpApiSpec extends SparkSpec {
     // returns the RestResult body through the post function
     handler(JobManager.AlarmEvent("ab12cd34", "orders_etl", "JOB_FAILED",
       "source exhausted"))
+  }
+
+  test("keep-alive: a reused connection answers without a delayed-ACK stall") {
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    // one HTTP/1.1 client: sequential requests share one pooled connection
+    val client = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    def medianMs(req: HttpRequest): Double = {
+      val ms = (1 to 15).map { _ =>
+        val t0 = System.nanoTime()
+        val res = client.send(req, HttpResponse.BodyHandlers.ofString())
+        assert(res.statusCode() == 200, res.body())
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      ms(ms.size / 2)
+    }
+    val list = medianMs(HttpRequest.newBuilder(java.net.URI.create(s"$base/listTask"))
+      .header("Content-Type", "application/x-www-form-urlencoded")
+      .POST(HttpRequest.BodyPublishers.ofString("")).build())
+    val probe = medianMs(HttpRequest.newBuilder(
+      java.net.URI.create(s"http://127.0.0.1:${api.port}/ok")).GET().build())
+    // a reply held back for the client's delayed ACK takes ~40 ms
+    assert(list < 20, s"median listTask round trip $list ms")
+    assert(probe < 20, s"median /ok round trip $probe ms")
+  }
+
+  test("pipelined requests on one connection are answered in order") {
+    withSocket { (out, in) =>
+      // the slower verb first: its reply must still come back first
+      val form = "flinkSql=" + java.net.URLEncoder.encode("SELEC broken FROM", "UTF-8")
+      out.write((
+        "POST /api/checkfSql HTTP/1.1\r\nHost: localhost\r\n" +
+          "Content-Type: application/x-www-form-urlencoded\r\n" +
+          s"Content-Length: ${form.length}\r\n\r\n$form" +
+          "GET /ok HTTP/1.1\r\nHost: localhost\r\n\r\n").getBytes("UTF-8"))
+      out.flush()
+      val (s1, _, b1) = readReply(in)
+      val (s2, _, b2) = readReply(in)
+      assert(s1 == 200 && b1.contains("\"success\":false"), b1)
+      assert(s2 == 200 && b2.contains("\"success\":true"), b2)
+    }
+  }
+
+  test("Connection: close gets its reply, then a closed connection") {
+    withSocket { (out, in) =>
+      out.write(("GET /ok HTTP/1.1\r\nHost: localhost\r\n" +
+        "Connection: close\r\n\r\n").getBytes("UTF-8"))
+      out.flush()
+      val (s, h, b) = readReply(in)
+      assert(s == 200 && b.contains("\"success\":true"), b)
+      assert(h.get("connection").contains("close"), h)
+      assert(in.read() == -1, "the connection stayed open")
+    }
+  }
+
+  test("a body over the cap is a 413 and other connections still answer") {
+    withSocket { (out, in) =>
+      // the declared length alone is over the cap: the reply comes
+      // before any of the body is sent
+      out.write(("POST /api/listTask HTTP/1.1\r\nHost: localhost\r\n" +
+        "Content-Type: application/x-www-form-urlencoded\r\n" +
+        s"Content-Length: ${HttpApi.MaxBodyBytes + 1L}\r\n\r\n").getBytes("UTF-8"))
+      out.flush()
+      assert(readReply(in)._1 == 413)
+    }
+    val (s, b) = post("listTask")
+    assert(s == 200, b)
   }
 }

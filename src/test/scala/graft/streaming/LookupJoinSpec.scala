@@ -62,6 +62,29 @@ class LookupJoinSpec extends SparkSpec {
     } finally runner.close()
   }
 
+  test("a dim that fails its max-rows check leaves no cached plan behind") {
+    val session = spark.newSession()
+    val cache = session.sharedState.cacheManager
+    // the cache manager is JVM-wide: start from an empty one
+    session.catalog.clearCache()
+    val url = derbyDim("lkp_leak", (0L until 20L).map(i => i -> s"n$i"))
+    val runner = new graft.sqlgate.ScriptRunner(session, batchMode = true)
+    try {
+      intercept[IllegalArgumentException] {
+        runner.run(
+          s"""CREATE TABLE leak_dim (id BIGINT, name VARCHAR) WITH (
+             |  'connector' = 'jdbc', 'url' = '$url', 'table-name' = 'dim',
+             |  'lookup.cache.strategy' = 'snapshot',
+             |  'lookup.cache.max-rows' = '5');
+             |CREATE TABLE leak_sink (id BIGINT, name STRING)
+             |  WITH ('connector' = 'memory');
+             |INSERT INTO leak_sink SELECT id, name FROM leak_dim;
+             |""".stripMargin)
+      }
+    } finally runner.close()
+    assert(cache.isEmpty, "the failed dim's plan is still cached")
+  }
+
   test("keyed lookup fetches ONLY missing keys; hits and negatives cached") {
     val url = derbyDim("lkp1", Seq(1L -> "a", 2L -> "b", 3L -> "c"))
     val lk = new JdbcKeyedLookup(url, Map.empty, "dim", "id", dimSchema,
